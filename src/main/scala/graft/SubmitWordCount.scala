@@ -26,8 +26,8 @@ object SubmitWordCount {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val counts = Engine.submitWordCount(spark, spec, outDir)
-    println(s"job complete: ${counts.count()} distinct words -> $outDir")
+    val distinct = Engine.submitWordCount(spark, spec, outDir)
+    println(s"job complete: $distinct distinct words -> $outDir")
     spark.stop()
   }
 }

@@ -27,6 +27,7 @@ class JobServerSpec extends SparkTestBase {
     val srv = new JobServer(spark, outRoot)
     val port = srv.start()
     val base = s"http://127.0.0.1:$port"
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     try {
       val client = HttpClient.newHttpClient()
       val spec =
@@ -58,6 +59,8 @@ class JobServerSpec extends SparkTestBase {
       assert(counts.toSeq === Seq("alpha 2", "beta 3", "gamma 1"))
       // list surface sees the job as terminal
       assert(get(client, s"$base/jobs").body().contains("\"status\":\"COMPLETED\""))
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore).isEmpty,
+        "a job must not leave cached RDDs behind")
     } finally srv.stop()
   }
 
@@ -137,6 +140,14 @@ class JobServerSpec extends SparkTestBase {
       val client = HttpClient.newHttpClient()
       assert(post(client, s"$base/jobs", "{not json").statusCode() === 400)
       assert(post(client, s"$base/jobs", """{"files": []}""").statusCode() === 400)
+      assert(post(client, s"$base/jobs", """{"reducer_count": 2}""").statusCode() === 400)
+      // out-of-range sizes would reach Spark as a non-positive split size or
+      // partition count: a negative split reads no rows and "completes"
+      for (bad <- Seq(""""shard_size": -1""", """"shard_size": 0""",
+          """"reducer_count": 0""", """"reducer_count": -2"""))
+        assert(post(client, s"$base/jobs", s"""{$bad, "files": ["/tmp/x.txt"]}""")
+          .statusCode() === 400, bad)
+      assert(get(client, s"$base/jobs").body() === "[]", "rejected specs are never queued")
       assert(get(client, s"$base/jobs/99").statusCode() === 404)
       assert(get(client, s"$base/nope").statusCode() === 404)
       // a FAILED job is isolated and reported, not thrown (missing input)
