@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place for the engine's session configuration — the settings every
-  * entry point (Verify, Bench, PlanAudit, tests) needs, and the list a
+  * entry point (Verify, Bench, tests) needs, and the list a
   * production deployment would port to its cluster conf.
   *
   * What is set and why:

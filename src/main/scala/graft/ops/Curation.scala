@@ -32,10 +32,11 @@ import graft.functions.CrossHash
   * audit ledger a curation run publishes (exact integers/booleans, so the
   * DuckDB oracle replays the entire funnel end to end; the per-stage
   * counts [[TextAnalysis.observedCurationCounters]] reports are exactly
-  * the column sums of this table). [[commitDailyBatch]] is the
-  * side-effecting half: survivors appended into the band index and merged
-  * into the corpus snapshot, with a failpoint window between the two so
-  * the crash-recovery contract is provable (CurationSpec), not asserted.
+  * the column sums of this table). [[commitStreamDailyBatch]] is the one
+  * side-effecting half: per micro-batch, the decision published as a
+  * ledger, survivors appended into the band index and merged into the
+  * next corpus snapshot, with failpoint windows between the steps so the
+  * crash-recovery contract is provable (CurationSpec), not asserted.
   *
   * Scale: stage 1 is a map-only scan of the BATCH; stage 2 shuffles only
   * the batch's bands (the index side is bucketed on the band key); stage
@@ -95,10 +96,11 @@ object Curation {
     * `seq_id`, `seq_offset`; null for rejected docs).
     *
     * `bandTable` must be a [[Dedup.buildBandIndex]] layout of the
-    * accumulated corpus. The decision sub-plan is persisted internally:
-    * it feeds both the output and the survivor-side packing walk, and a
-    * production run materializes its decision ledger before packing for
-    * exactly this reason. */
+    * accumulated corpus. The decision sub-plan is materialized once
+    * internally (a lazy local checkpoint, released with the returned
+    * plan): it feeds both the output and the survivor-side packing walk,
+    * and a production run materializes its decision ledger before packing
+    * for exactly this reason. */
   def dailyBatch(spark: SparkSession, all: DataFrame, bandTable: String,
       minQuality: Double = 0.6, lang: String = "en", maxDup2: Double = 0.05,
       nSpan: Int = 8, bloomDecontam: Boolean = false): DataFrame =
@@ -146,7 +148,7 @@ object Curation {
       .withColumn("survived",
         col("q_ok") && col("lang_ok") && col("rep_ok") &&
           col("dedup_ok") && col("clean_ok"))
-      .persist()
+      .localCheckpoint(eager = false)
     val packed = Packing.packGreedy(
         batch.join(flags.filter(col("survived")).select("doc_id"),
           Seq("doc_id"), "left_semi"))
@@ -154,71 +156,8 @@ object Curation {
     flags.join(packed, Seq("doc_id"), "left")
   }
 
-  /** The surviving batch documents (full rows), per [[dailyBatch]]'s
-    * verdicts — the input to [[commitDailyBatch]]'s artifact updates. */
-  def survivorsOf(spark: SparkSession, all: DataFrame, bandTable: String): DataFrame =
-    batchOf(all).join(
-      dailyBatch(spark, all, bandTable).filter(col("survived")).select("doc_id"),
-      Seq("doc_id"), "left_semi")
-
-  /** COMMIT the decided batch into the persisted corpus state:
-    *
-    *   0. the surviving batch documents PUBLISHED as a ledger table —
-    *      the decision must be durable BEFORE any artifact mutates,
-    *      because the survivor plan PROBES `bandTable` and step 1 writes
-    *      to it. (This is not just a crash concern: Spark invalidates
-    *      and lazily re-evaluates any cache that reads a written table,
-    *      so even a `persist()`-ed decision re-planned after the append
-    *      would see its own survivors in the index and flag every one a
-    *      near-dup of itself — the CurationSpec equality test caught
-    *      exactly this with a cached, non-ledgered first draft.)
-    *   1. the ledger's bands + signatures appended into the stored band
-    *      index ([[Dedup.appendToBandIndex]] — tomorrow's batch dedups
-    *      against today's survivors without any rebuild);
-    *   2. the ledger merged into the NEXT corpus snapshot as version-1
-    *      upserts ([[Snapshot.mergeSnapshot]], latest-version-wins).
-    *      Snapshots are immutable — each day's commit reads `prevSnap`
-    *      and writes `outSnap` (the table-format discipline; a snapshot
-    *      is never overwritten in place, so a torn write can never
-    *      corrupt yesterday's state).
-    *
-    * Crash contract (provable via the `daily.after_index_append`
-    * failpoint window between steps 1 and 2): a crash BETWEEN them
-    * leaves a valid index containing the survivors with the snapshot one
-    * merge behind — [[commitSnapshotOnly]] from the stored ledger
-    * completes the commit; a crash before step 1 re-runs from scratch
-    * (the ledger rewrite is idempotent while the index is unchanged);
-    * and the band-index append itself follows
-    * [[graft.sources.Formats.foldBuildMeta]]'s single-writer contract (a
-    * crash INSIDE the append requires an index rebuild, same as every
-    * other incremental index here). CurationSpec proves the composed
-    * recovery: inject the crash, recover, and the final index + snapshot
-    * are bit-identical to an uncrashed run. */
-  def commitDailyBatch(spark: SparkSession, all: DataFrame, bandTable: String,
-      prevSnap: Option[String], outSnap: String): Unit = {
-    val ledger = outSnap + "_ledger"
-    graft.sources.Formats.writeManaged(
-      survivorsOf(spark, all, bandTable), ledger)
-    val surv = spark.table(ledger)
-    Dedup.appendToBandIndex(surv, bandTable)
-    graft.sources.Formats.failIf("daily.after_index_append")
-    commitSnapshotOnly(spark, all, surv, prevSnap, outSnap)
-  }
-
-  /** Step 2 of [[commitDailyBatch]] alone — the recovery entry point for
-    * a crash in the window between index append and snapshot write;
-    * `surv` is the published ledger (`<outSnap>_ledger`). */
-  def commitSnapshotOnly(spark: SparkSession, all: DataFrame, surv: DataFrame,
-      prevSnap: Option[String], outSnap: String): Unit = {
-    val prev = prevSnap.map(t => readSnapshotAsMergeInput(spark, t))
-      .getOrElse(Snapshot.baseSnapshot(corpusOf(all)))
-    graft.sources.Formats.writeManaged(
-      Snapshot.mergeSnapshot(prev, snapshotChanges(surv)), outSnap)
-  }
-
   /** The version-1 upsert rows a committed survivor set contributes to
-    * the snapshot chain — shared by the batch and streaming commits so
-    * their final snapshots are bit-comparable. */
+    * the snapshot chain: version 1, fingerprint of `"v1:" + text`. */
   private def snapshotChanges(surv: DataFrame): DataFrame =
     surv.select(
       col("doc_id"), lit(1).as("version"), lit("upsert").as("op"),
@@ -238,13 +177,15 @@ object Curation {
     * batch N's survivors with no rebuild), its decision table published
     * as an audit ledger, its survivors appended into the band index and
     * merged into the next immutable snapshot. Fed the daily batch as ONE
-    * micro-batch, the committed state is equal to
-    * [[dailyBatch]]+[[commitDailyBatch]] (gate `stream_pipeline_daily`
+    * micro-batch, the decision table equals [[dailyBatch]]'s and the
+    * committed state equals a one-shot rebuild — the band index built
+    * over corpus ∪ survivors, the snapshot holding the corpus at version
+    * 0 and the survivors at version 1 (gate `stream_pipeline_daily`
     * oracle-replays the decision table; CurationSpec proves index +
     * snapshot equality and the multi-batch sequential semantics).
     *
     * Replay contract (foreachBatch is at-least-once after a failure;
-    * every step below is either idempotent or ledgered, the
+    * every step below is idempotent, ledgered or stamp-detected, the
     * [[graft.streaming.StreamOps.startExactlyOnceFileSink]] /
     * [[graft.streaming.StreamOps.absorbStagedBatches]] discipline):
     *
@@ -255,24 +196,22 @@ object Curation {
     *      recomputing — mandatory, not an optimization: after step 2 has
     *      run, a recomputed decision would probe an index already
     *      containing this batch's survivors and flag each a near-dup of
-    *      itself (the same self-observation hazard
-    *      [[commitDailyBatch]]'s ledger-first ordering exists for);
-    *   2. the band-index append is made replay-DETECTABLE (ADVICE r13):
-    *      an `_idxintent` row recording the index manifest's PRE-append
-    *      stamp commits BEFORE the append, and the `_idxledger` row
-    *      commits immediately after it. A replay landing in the
-    *      `sdaily.after_index_append` window (append complete, ledger
-    *      row still missing) recognizes the completed append because the
-    *      manifest stamp equals `intent ⊕ batch` and SKIPS it — a blind
+    *      itself (caching the decision would not help: Spark invalidates
+    *      and lazily re-evaluates any cache that reads a written table);
+    *   2. the band-index append is made replay-DETECTABLE by its manifest
+    *      stamp alone: an `_idxintent` row recording the manifest's
+    *      PRE-append stamp commits BEFORE the append, and every run
+    *      compares the current stamp against it. Equal to `intent ⊕
+    *      batch` (the append's meta fold ran — e.g. a replay from the
+    *      `sdaily.after_index_append` window) SKIPS the append: a blind
     *      re-append would duplicate band/sig rows and double-fold the
     *      manifest (xor fp cancels, n double-counts) while the commit
-    *      ledger then vouched for the corrupted index. A replay seeing
-    *      the intent's PRE stamp re-runs the append (the data append
-    *      never committed — the residual window INSIDE
-    *      [[graft.ops.Dedup.appendToBandIndex]] between its data append
-    *      and meta fold keeps that family's own single-writer
-    *      crash-means-rebuild contract); any OTHER stamp is a foreign
-    *      writer and fails loudly;
+    *      ledger then vouched for the corrupted index. Equal to the
+    *      intent's PRE stamp re-runs the append (it never committed —
+    *      the residual window INSIDE [[graft.ops.Dedup.appendToBandIndex]]
+    *      between its data append and meta fold keeps that family's own
+    *      single-writer crash-means-rebuild contract). Any OTHER stamp is
+    *      a foreign writer and fails loudly;
     *   3. the snapshot merge writes `<snapPrefix>_b<N>` — deterministic
     *      name, overwrite — so replaying it is idempotent; injectable at
     *      `sdaily.after_snapshot`;
@@ -292,7 +231,7 @@ object Curation {
     * itself. CurationSpec forgets a batch-N doc, re-delivers it in batch
     * N+1, and proves it reaches neither artifact.
     *
-    * At 100 TB this is [[commitDailyBatch]] amortized to arrival time:
+    * At 100 TB this is the daily commit amortized to arrival time:
     * per micro-batch cost is proportional to the batch (one signal scan,
     * banded probe against the bucketed index, broadcast-sized benchmark
     * semi-join, one packing shuffle, index append of the survivors), and
@@ -305,15 +244,13 @@ object Curation {
       retainSnapshots: Option[Int] = None): Unit = {
     import spark.implicits._
     val commitLedger = snapPrefix + "_ledger"
-    val idxLedger = snapPrefix + "_idxledger"
     // WATERMARK semantics (r15): foreachBatch ids are sequential and the
     // pipeline commits them in order, so "some committed id >= this one"
     // ⟺ "this batch committed" — which keeps replay detection correct
-    // AFTER [[applyRetention]] folds a ledger to its single watermark row
-    def ledgered(table: String): Boolean =
-      spark.catalog.tableExists(table) &&
-        !spark.table(table).filter(col("batch_id") >= batchId).isEmpty
-    if (ledgered(commitLedger)) return // full replay: exactly-once no-op
+    // AFTER [[applyRetention]] folds the ledger to its single watermark row
+    if (spark.catalog.tableExists(commitLedger) &&
+        !spark.table(commitLedger).filter(col("batch_id") >= batchId).isEmpty)
+      return // full replay: exactly-once no-op
     // 0b. takedown absorption — tombstoned docs never reach the decision,
     // the index, or a snapshot (see the TAKEDOWN paragraph above).
     // CONFIGURED means ENFORCED (ADVICE r14): a tombstone table that is
@@ -343,42 +280,38 @@ object Curation {
     val decision = spark.read.parquet(decDir)
     val surv = live.join(
       decision.filter(col("survived")).select("doc_id"), Seq("doc_id"), "left_semi")
-    // 2. band-index append, ledgered (tomorrow's arrivals dedup against
-    // today's survivors) — intent-first so a replay can TELL whether the
-    // append already completed (the replay contract's step 2)
-    if (!ledgered(idxLedger)) {
-      val intentTable = snapPrefix + "_idxintent"
-      val (bn, bfp) = graft.sources.Formats.corpusStamp(surv, "doc_id")
-      val cur = graft.sources.Formats.readBuildMeta(spark, bandTable)
-        .map(m => (m._1, m._2)).getOrElse((0L, 0L))
-      val intent =
-        if (spark.catalog.tableExists(intentTable))
-          spark.table(intentTable).filter(col("batch_id") === batchId)
-            .select("pre_n", "pre_fp").collect().headOption
-            .map(r => (r.getLong(0), r.getLong(1)))
-        else None
-      val alreadyAppended =
-        intent.exists { case (pn, pf) => cur == ((pn + bn, pf ^ bfp)) }
-      if (!alreadyAppended) {
-        intent match {
-          case Some((pn, pf)) =>
-            require(cur == ((pn, pf)),
-              s"band index '$bandTable' manifest stamp $cur matches neither " +
-                s"batch $batchId's pre-append intent ($pn,$pf) nor its " +
-                "post-append fold — a foreign writer touched the index " +
-                "mid-recovery; rebuild before resuming the stream")
-          case None =>
-            Seq((batchId, cur._1, cur._2)).toDF("batch_id", "pre_n", "pre_fp")
-              .write.mode(org.apache.spark.sql.SaveMode.Append)
-              .format("parquet").saveAsTable(intentTable)
-        }
-        Dedup.appendToBandIndex(surv, bandTable)
+    // 2. band-index append (tomorrow's arrivals dedup against today's
+    // survivors) — intent-first so a replay can TELL from the manifest
+    // stamp whether the append already completed (the replay contract's
+    // step 2)
+    val intentTable = snapPrefix + "_idxintent"
+    val (bn, bfp) = graft.sources.Formats.corpusStamp(surv, "doc_id")
+    val cur = graft.sources.Formats.readBuildMeta(spark, bandTable)
+      .map(m => (m._1, m._2)).getOrElse((0L, 0L))
+    val intent =
+      if (spark.catalog.tableExists(intentTable))
+        spark.table(intentTable).filter(col("batch_id") === batchId)
+          .select("pre_n", "pre_fp").collect().headOption
+          .map(r => (r.getLong(0), r.getLong(1)))
+      else None
+    val alreadyAppended =
+      intent.exists { case (pn, pf) => cur == ((pn + bn, pf ^ bfp)) }
+    if (!alreadyAppended) {
+      intent match {
+        case Some((pn, pf)) =>
+          require(cur == ((pn, pf)),
+            s"band index '$bandTable' manifest stamp $cur matches neither " +
+              s"batch $batchId's pre-append intent ($pn,$pf) nor its " +
+              "post-append fold — a foreign writer touched the index " +
+              "mid-recovery; rebuild before resuming the stream")
+        case None =>
+          Seq((batchId, cur._1, cur._2)).toDF("batch_id", "pre_n", "pre_fp")
+            .write.mode(org.apache.spark.sql.SaveMode.Append)
+            .format("parquet").saveAsTable(intentTable)
       }
-      graft.sources.Formats.failIf("sdaily.after_index_append")
-      Seq(batchId).toDF("batch_id").write
-        .mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(idxLedger)
+      Dedup.appendToBandIndex(surv, bandTable)
     }
+    graft.sources.Formats.failIf("sdaily.after_index_append")
     // 3. snapshot chain: previous = highest committed batch's snapshot
     // (foreachBatch delivers batches in order; the one-row max_by
     // aggregation keeps this restart-safe AND bounded — r15 replaced the
@@ -409,9 +342,9 @@ object Curation {
 
   /** RETENTION for the streaming daily pipeline's derived artifacts
     * (VERDICT r14 item 2 + item 7) — without it, N committed batches keep
-    * N full corpus-width snapshots, N commit-ledger rows, N `_idxledger`
-    * rows, and N `_idxintent` rows forever (real storage and listing cost
-    * within a quarter at daily cadence). One call bounds all four:
+    * N full corpus-width snapshots, N commit-ledger rows and N
+    * `_idxintent` rows forever (real storage and listing cost within a
+    * quarter at daily cadence). One call bounds all three:
     *
     *   1. snapshots: keep the NEWEST `keepSnapshots` immutable
     *      `<snapPrefix>_b<N>` tables, drop the rest (snapshots are
@@ -423,10 +356,10 @@ object Curation {
     *      sequential and committed in order, so `id <= watermark` ⟺
     *      committed, which is exactly the replay check
     *      [[commitStreamDailyBatch]] runs;
-    *   3. `_idxledger` folded to its watermark row, same argument;
-    *   4. committed `_idxintent` rows VACUUMED (an intent row's job ends
-    *      the moment its `_idxledger` row lands; only in-flight intents
-    *      survive — after a clean run, none).
+    *   3. committed `_idxintent` rows VACUUMED (an intent row's job ends
+    *      the moment its batch is at or below the commit-ledger
+    *      watermark; only in-flight intents survive — after a clean run,
+    *      none).
     *
     * Every fold runs through the crash-safe ping-pong rewrite
     * ([[graft.sources.Formats.rewritePlain]]), and the call sits AFTER
@@ -441,11 +374,9 @@ object Curation {
     * losing a byte. */
   def applyRetention(spark: SparkSession, snapPrefix: String,
       keepSnapshots: Int): Unit = {
-    import spark.implicits._
     require(keepSnapshots >= 1,
       "retention must keep at least the latest snapshot (the merge base)")
     val commitLedger = snapPrefix + "_ledger"
-    val idxLedger = snapPrefix + "_idxledger"
     val intentTable = snapPrefix + "_idxintent"
     if (!spark.catalog.tableExists(commitLedger)) return
     // 1. snapshot horizon: enumerate the chain from the catalog (bounded
@@ -460,22 +391,17 @@ object Curation {
       }).sorted
     snapIds.dropRight(keepSnapshots).foreach(n =>
       graft.sources.Formats.dropManaged(spark, s"${snapPrefix}_b$n"))
-    // 2. + 3. ledger folds — skip when already watermark-row-sized
-    def foldToWatermark(table: String)(row: DataFrame => DataFrame): Unit =
-      if (spark.catalog.tableExists(table) && spark.table(table).count() > 1)
-        graft.sources.Formats.rewritePlain(spark, table)(row)
-    foldToWatermark(commitLedger)(df =>
-      df.orderBy(col("batch_id").desc).limit(1))
-    foldToWatermark(idxLedger)(df =>
-      df.orderBy(col("batch_id").desc).limit(1))
-    // 4. intent vacuum: an intent is dead once its batch is idx-ledgered
-    if (spark.catalog.tableExists(intentTable) &&
-        spark.catalog.tableExists(idxLedger)) {
-      val idxW = Option(spark.table(idxLedger).agg(max("batch_id")).head().get(0))
+    // 2. ledger fold — skip when already watermark-row-sized
+    if (spark.table(commitLedger).count() > 1)
+      graft.sources.Formats.rewritePlain(spark, commitLedger)(
+        _.orderBy(col("batch_id").desc).limit(1))
+    // 3. intent vacuum: an intent is dead once its batch is committed
+    if (spark.catalog.tableExists(intentTable)) {
+      val w = Option(spark.table(commitLedger).agg(max("batch_id")).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(Long.MinValue)
-      if (!spark.table(intentTable).filter(col("batch_id") <= idxW).isEmpty)
+      if (!spark.table(intentTable).filter(col("batch_id") <= w).isEmpty)
         graft.sources.Formats.rewritePlain(spark, intentTable)(
-          _.filter(col("batch_id") > idxW))
+          _.filter(col("batch_id") > w))
     }
   }
 
@@ -638,7 +564,7 @@ object Curation {
           tombstones = tombstones, retainSnapshots = retainSnapshots))
       .start()
 
-  /** The FORGET composite — [[commitDailyBatch]]'s inverse: one takedown
+  /** The FORGET composite — [[commitStreamDailyBatch]]'s inverse: one takedown
     * request propagated through every persisted artifact the pipeline
     * keeps. Mirrors the commit's discipline:
     *

@@ -371,7 +371,7 @@ object Dedup {
   def nearDupPairsIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
       newBatch: DataFrame, minSigFrac: Double = 0.5): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
-    val sb = minHashSignatures(newBatch).persist()
+    val sb = minHashSignatures(newBatch).localCheckpoint(eager = false)
     val candidates = indexedCandidateJoin(spark, table, bandedFromSignatures(sb))
     scoreCandidates(candidates, spark.table(table + "_sigs"), sb, minSigFrac)
   }
@@ -901,7 +901,8 @@ object Dedup {
     * counts, all map-side partial-aggregated. */
   def contaminationStats(train: DataFrame, benchmark: DataFrame, n: Int = 8): DataFrame = {
     // feeds both the total count and the contaminated count
-    val sp = positionalSpans(train, n).select("doc_id", "sh").persist()
+    val sp = positionalSpans(train, n).select("doc_id", "sh")
+      .localCheckpoint(eager = false)
     val benchHashes = positionalSpans(benchmark, n).select("sh").distinct()
     contaminationTail(sp, sp.join(benchHashes, Seq("sh"), "left_semi"))
   }

@@ -336,9 +336,10 @@ object Formats {
     * window, so specs can kill mid-swap/mid-absorb and assert the
     * recovery contract instead of trusting the doc comments. Windows:
     * `compact.after_stage`, `compact.after_swap`,
-    * `absorb.after_append`, `daily.after_index_append` (fired from
-    * [[graft.ops.Curation.commitDailyBatch]]). Empty in production — one
-    * volatile read per window. */
+    * `absorb.after_append`, and `sdaily.after_index_append` /
+    * `sdaily.after_snapshot` (fired from
+    * [[graft.ops.Curation.commitStreamDailyBatch]]). Empty in production —
+    * one volatile read per window. */
   @volatile private[graft] var failpoint: String = ""
   private[graft] def failIf(point: String): Unit =
     if (failpoint == point)

@@ -1,25 +1,62 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.ops.{Curation, Dedup, SharedCorpus}
+import graft.functions.CrossHash
+import graft.ops.{Curation, Dedup, SharedCorpus, Snapshot}
 import graft.sources.{Formats, Tables}
 
-/** The daily-batch composite: decision-table invariants, the commit
-  * lifecycle (index append + snapshot merge equal their one-shot twins),
-  * and the failpoint-proven crash recovery between the two commit steps. */
+/** The daily-batch composite: decision-table invariants, and the one
+  * commit path (the streaming pipeline) — committed state equal to a
+  * one-shot rebuild, failpoint-proven crash recovery, the foreign-writer
+  * guard, retention, and no session-cache growth per micro-batch. */
 class CurationSpec extends SparkTestBase {
 
   private def all = Tables.documents(spark, sfDir)
+
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
+  private def rows(t: String): Seq[String] =
+    spark.table(t).collect().map(_.toString).toSeq.sorted
+
+  private def dropTables(ts: String*): Unit =
+    ts.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+
+  private def dropIdx(ts: String*): Unit =
+    ts.foreach(t => dropTables(t, t + "_sigs", t + "_meta"))
+
+  /** The band-index manifest's corpus stamp `(corpus_n, corpus_fp)`. */
+  private def metaStamp(t: String): (Long, Long) = {
+    val r = spark.table(t + "_meta").select("corpus_n", "corpus_fp").head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** The pre-stream base snapshot: every corpus doc at version 0. */
+  private def writeSnap0(name: String): Unit = Formats.writeManaged(
+    Snapshot.baseSnapshot(Curation.corpusOf(all))
+      .select(col("doc_id"), col("version"), col("fp")), name)
+
+  /** One `AvailableNow` run of the streaming pipeline over the staged
+    * parquet files, to completion. */
+  private def runStream(stage: String, band: String, ledger: String, s0: String,
+      prefix: String, ckpt: String, tomb: Option[String] = None,
+      filesPerTrigger: Option[Int] = None, retain: Option[Int] = None): Unit = {
+    val src = spark.readStream.schema(docSchema)
+    Curation.startStreamDailyPipeline(
+      filesPerTrigger.fold(src)(n => src.option("maxFilesPerTrigger", n.toLong))
+        .parquet(stage),
+      Curation.benchOf(all), band, ledger, s0, prefix, ckpt, tomb, retain)
+      .awaitTermination()
+  }
 
   private def withBandIndex[T](table: String)(body: => T): T =
     try {
       Dedup.buildBandIndex(Curation.corpusOf(all), table)
       body
-    } finally {
-      Seq(table, table + "_sigs", table + "_meta")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
+    } finally dropIdx(table)
 
   test("decision table: verdict conjunction and packing coordinates") {
     withBandIndex("graft_daily_spec") {
@@ -64,111 +101,54 @@ class CurationSpec extends SparkTestBase {
     }
   }
 
-  test("commit: index + snapshot equal their one-shot twins; crash between steps recovers") {
-    def tableRows(t: String): Seq[String] =
-      spark.table(t).collect().map(_.toString).toSeq.sorted
-    def dropAll(ts: String*): Unit = ts.foreach { t =>
-      Seq(t, t + "_sigs", t + "_meta").foreach(x =>
-        spark.sql(s"DROP TABLE IF EXISTS $x"))
-    }
-    try {
-      // ---- uncrashed run -------------------------------------------------
-      Dedup.buildBandIndex(Curation.corpusOf(all), "graft_daily_ok")
-      Curation.commitDailyBatch(spark, all, "graft_daily_ok",
-        prevSnap = None, outSnap = "graft_daily_snap_ok")
-      val okBands = tableRows("graft_daily_ok")
-      val okSigs = tableRows("graft_daily_ok_sigs")
-      val okSnap = tableRows("graft_daily_snap_ok")
-      // committed index == one-shot build over corpus ∪ survivors
-      val surv = Curation.batchOf(all).join(
-        spark.table("graft_daily_snap_ok").filter(col("version") === 1)
-          .select("doc_id"), Seq("doc_id"), "left_semi")
-      Dedup.buildBandIndex(Curation.corpusOf(all).unionByName(surv), "graft_daily_oneshot")
-      assert(okBands === tableRows("graft_daily_oneshot"))
-      assert(okSigs === tableRows("graft_daily_oneshot_sigs"))
-      // snapshot: every corpus doc at version 0 plus every survivor at 1
-      val snap = spark.table("graft_daily_snap_ok")
-      assert(snap.filter(col("version") === 0).count() ===
-        Curation.corpusOf(all).count())
-      assert(snap.filter(col("version") === 1).count() === surv.count())
-
-      // ---- crashed run: failpoint between index append and snapshot -----
-      Dedup.buildBandIndex(Curation.corpusOf(all), "graft_daily_cr")
-      Formats.failpoint = "daily.after_index_append"
-      val crash = intercept[RuntimeException] {
-        Curation.commitDailyBatch(spark, all, "graft_daily_cr",
-          prevSnap = None, outSnap = "graft_daily_snap_cr")
-      }
-      Formats.failpoint = ""
-      assert(crash.getMessage.contains("daily.after_index_append"))
-      // the crash window left the published ledger, a valid index
-      // (survivors in) and NO snapshot
-      assert(spark.catalog.tableExists("graft_daily_snap_cr_ledger"))
-      assert(!spark.catalog.tableExists("graft_daily_snap_cr"))
-      assert(tableRows("graft_daily_cr") === okBands)
-      // recovery = step 2 alone from the stored ledger
-      Curation.commitSnapshotOnly(spark, all,
-        spark.table("graft_daily_snap_cr_ledger"),
-        prevSnap = None, outSnap = "graft_daily_snap_cr")
-      assert(tableRows("graft_daily_snap_cr") === okSnap)
-      assert(tableRows("graft_daily_cr_sigs") === okSigs)
-    } finally {
-      Formats.failpoint = ""
-      dropAll("graft_daily_ok", "graft_daily_oneshot", "graft_daily_cr")
-      Seq("graft_daily_snap_ok", "graft_daily_snap_cr",
-          "graft_daily_snap_ok_ledger", "graft_daily_snap_cr_ledger")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
-  }
-
   test("streaming daily pipeline: one-batch == batch composite; replay no-op; " +
       "failpoint recovery; multi-batch sequential semantics") {
     import spark.implicits._
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val root = java.nio.file.Files.createTempDirectory("graft-sdaily").toString
-    def rows(t: String): Seq[String] =
-      spark.table(t).collect().map(_.toString).toSeq.sorted
-    def dropIdx(ts: String*): Unit = ts.foreach { t =>
-      Seq(t, t + "_sigs", t + "_meta").foreach(x =>
-        spark.sql(s"DROP TABLE IF EXISTS $x"))
-    }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
     val batch = Curation.batchOf(all).select("doc_id", "text")
-    val bench = Curation.benchOf(all)
     val decCols = Seq("doc_id", "n_tokens", "q_ok", "lang_ok", "rep_ok",
       "dedup_ok", "clean_ok", "survived", "bucket", "seq_id", "seq_offset")
     def decRows(dir: String): Seq[String] =
       spark.read.parquet(dir).select(decCols.map(col): _*)
         .collect().map(_.toString).toSeq.sorted
-    def snap0(name: String): Unit = Formats.writeManaged(
-      graft.ops.Snapshot.baseSnapshot(Curation.corpusOf(all))
-        .select(col("doc_id"), col("version"), col("fp")), name)
-    def runStream(stage: String, band: String, ledger: String, s0: String,
-        prefix: String, ckpt: String, tomb: Option[String] = None): Unit =
-      Curation.startStreamDailyPipeline(
-        spark.readStream.schema(schema).parquet(stage),
-        bench, band, ledger, s0, prefix, ckpt, tomb).awaitTermination()
     try {
-      // ---- references: the batch composite's decision + committed state
+      // ---- references: the batch composite's decision, and the ONE-SHOT
+      // rebuild of the state its survivors commit — the band index built
+      // over corpus ∪ survivors, the snapshot holding every corpus doc at
+      // version 0 and every survivor at version 1
       Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_refd")
-      val refDecision = Curation.dailyBatch(spark, all, "graft_sd_refd")
-        .select(decCols.map(col): _*).collect().map(_.toString).toSeq.sorted
-      Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_ref")
-      Curation.commitDailyBatch(spark, all, "graft_sd_ref", None, "graft_sd_ref_snap")
+      val refRows = Curation.dailyBatch(spark, all, "graft_sd_refd")
+        .select(decCols.map(col): _*).collect()
+      val refDecision = refRows.map(_.toString).toSeq.sorted
+      val refSurv = batch.join(
+        refRows.filter(_.getAs[Boolean]("survived"))
+          .map(_.getAs[Long]("doc_id")).toSeq.toDF("doc_id"),
+        Seq("doc_id"), "left_semi")
+      assert(!refSurv.isEmpty, "the reference batch must commit survivors")
+      Dedup.buildBandIndex(
+        Curation.corpusOf(all).select("doc_id", "text").unionByName(refSurv),
+        "graft_sd_ref")
+      val refSnap = Snapshot.baseSnapshot(Curation.corpusOf(all))
+        .select(col("doc_id"), col("version"), col("fp"))
+        .unionByName(refSurv.select(col("doc_id"), lit(1).as("version"),
+          CrossHash.h60(concat(lit("v1:"), col("text"))).as("fp")))
+        .collect().map(_.toString).toSeq.sorted
+      def assertCommitted(band: String, snap: String, why: String): Unit = {
+        assert(rows(band) === rows("graft_sd_ref"), s"band rows: $why")
+        assert(rows(band + "_sigs") === rows("graft_sd_ref_sigs"), s"sig rows: $why")
+        assert(metaStamp(band) === metaStamp("graft_sd_ref"), s"manifest stamp: $why")
+        assert(rows(snap) === refSnap, s"snapshot: $why")
+      }
 
       // ---- streaming run, the day as ONE micro-batch --------------------
       batch.coalesce(1).write.parquet(s"$root/stage1")
       Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_s1")
-      snap0("graft_sd_s1_snap0")
+      writeSnap0("graft_sd_s1_snap0")
       runStream(s"$root/stage1", "graft_sd_s1", s"$root/led1",
         "graft_sd_s1_snap0", "graft_sd_s1s", s"$root/ck1")
       // decision ledger == the batch composite's decision table
       assert(decRows(s"$root/led1") === refDecision)
-      // committed artifacts == the batch composite's
-      assert(rows("graft_sd_s1") === rows("graft_sd_ref"))
-      assert(rows("graft_sd_s1_sigs") === rows("graft_sd_ref_sigs"))
-      assert(rows("graft_sd_s1s_b0") === rows("graft_sd_ref_snap"))
+      assertCommitted("graft_sd_s1", "graft_sd_s1s_b0", "one batch == one-shot rebuild")
       assert(spark.table("graft_sd_s1s_ledger").count() === 1L)
       // same-checkpoint re-run: no new files, nothing changes
       runStream(s"$root/stage1", "graft_sd_s1", s"$root/led1",
@@ -178,19 +158,20 @@ class CurationSpec extends SparkTestBase {
       // the commit ledger makes it an exactly-once no-op (no double append)
       runStream(s"$root/stage1", "graft_sd_s1", s"$root/led1",
         "graft_sd_s1_snap0", "graft_sd_s1s", s"$root/ck1b")
-      assert(rows("graft_sd_s1") === rows("graft_sd_ref"),
-        "replayed batch must not re-append into the index")
+      assertCommitted("graft_sd_s1", "graft_sd_s1s_b0",
+        "a replayed batch must not re-append into the index")
       assert(spark.table("graft_sd_s1s_ledger").count() === 1L)
 
       // ---- failpoint: crash after the snapshot write, before the commit
       // ledger row — recovery replays the batch, REUSES the published
       // decision (a recompute would see the batch's own survivors in the
-      // appended index and flag each a self-dup), skips the ledgered
-      // index append, and lands bit-identical to the uncrashed run
+      // appended index and flag each a self-dup), detects the completed
+      // index append by its manifest stamp, and lands bit-identical to the
+      // one-shot rebuild
       Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_fp")
-      snap0("graft_sd_fp_snap0")
+      writeSnap0("graft_sd_fp_snap0")
       Formats.failpoint = "sdaily.after_snapshot"
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      intercept[StreamingQueryException] {
         runStream(s"$root/stage1", "graft_sd_fp", s"$root/ledfp",
           "graft_sd_fp_snap0", "graft_sd_fps", s"$root/ckfp")
       }
@@ -201,48 +182,40 @@ class CurationSpec extends SparkTestBase {
         "graft_sd_fp_snap0", "graft_sd_fps", s"$root/ckfp")
       assert(decRows(s"$root/ledfp") === refDecision,
         "recovered decision must be the published one, not a post-append recompute")
-      assert(rows("graft_sd_fp") === rows("graft_sd_ref"))
-      assert(rows("graft_sd_fps_b0") === rows("graft_sd_ref_snap"))
+      assertCommitted("graft_sd_fp", "graft_sd_fps_b0",
+        "crash-after-snapshot recovery, no double append or fold")
       assert(spark.table("graft_sd_fps_ledger").count() === 1L)
 
-      // ---- failpoint: crash AFTER the index append, before the
-      // _idxledger row (ADVICE r13) — recovery must DETECT the completed
-      // append through the _idxintent stamp and skip it; a blind
-      // re-append would duplicate band/sig rows and double-fold the
-      // manifest (xor fp cancels, n double-counts) while the commit
-      // ledger then vouched for the corrupted index
-      def metaStamp(t: String): (Long, Long) = {
-        val r = spark.table(t + "_meta").select("corpus_n", "corpus_fp").head()
-        (r.getLong(0), r.getLong(1))
-      }
+      // ---- failpoint: crash AFTER the index append, before the snapshot —
+      // recovery must DETECT the completed append through the _idxintent
+      // stamp and skip it; a blind re-append would duplicate band/sig rows
+      // and double-fold the manifest (xor fp cancels, n double-counts)
+      // while the commit ledger then vouched for the corrupted index
       Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_f2")
-      snap0("graft_sd_f2_snap0")
+      writeSnap0("graft_sd_f2_snap0")
       Formats.failpoint = "sdaily.after_index_append"
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      intercept[StreamingQueryException] {
         runStream(s"$root/stage1", "graft_sd_f2", s"$root/ledf2",
           "graft_sd_f2_snap0", "graft_sd_f2s", s"$root/ckf2")
       }
       Formats.failpoint = ""
-      assert(!spark.catalog.tableExists("graft_sd_f2s_idxledger"),
-        "nothing idx-ledgered before the crash point")
+      assert(metaStamp("graft_sd_f2") === metaStamp("graft_sd_ref"),
+        "the append's meta fold ran before the crash point")
+      assert(!spark.catalog.tableExists("graft_sd_f2s_b0"),
+        "no snapshot written before the crash point")
       assert(spark.catalog.tableExists("graft_sd_f2s_idxintent"),
         "the intent row must be durable before the append runs")
       runStream(s"$root/stage1", "graft_sd_f2", s"$root/ledf2",
         "graft_sd_f2_snap0", "graft_sd_f2s", s"$root/ckf2")
-      assert(rows("graft_sd_f2") === rows("graft_sd_ref"),
-        "replay must not duplicate band rows of the completed append")
-      assert(rows("graft_sd_f2_sigs") === rows("graft_sd_ref_sigs"),
-        "replay must not duplicate signature rows of the completed append")
-      assert(metaStamp("graft_sd_f2") === metaStamp("graft_sd_ref"),
-        "replay must not double-fold the manifest stamp")
-      assert(rows("graft_sd_f2s_b0") === rows("graft_sd_ref_snap"))
+      assertCommitted("graft_sd_f2", "graft_sd_f2s_b0",
+        "crash-after-append recovery, no double append or fold")
       assert(spark.table("graft_sd_f2s_ledger").count() === 1L)
 
       // ---- takedown absorption (VERDICT r13): forget a document, then
       // re-deliver it in a later batch — it must be rejected BEFORE the
       // decision and reach neither the band index nor a snapshot
       Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_t")
-      snap0("graft_sd_t_snap0")
+      writeSnap0("graft_sd_t_snap0")
       val victim = Curation.corpusOf(all).select("doc_id")
         .orderBy("doc_id").limit(1)
       val victimId = victim.head().getLong(0)
@@ -273,7 +246,7 @@ class CurationSpec extends SparkTestBase {
       val b1 = batch.filter(col("doc_id") % 8 === 1)
       val b2 = batch.filter(col("doc_id") % 8 =!= 1)
       Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_m")
-      snap0("graft_sd_m_snap0")
+      writeSnap0("graft_sd_m_snap0")
       b1.coalesce(1).write.parquet(s"$root/stagem")
       runStream(s"$root/stagem", "graft_sd_m", s"$root/ledm",
         "graft_sd_m_snap0", "graft_sd_ms", s"$root/ckm")
@@ -288,7 +261,7 @@ class CurationSpec extends SparkTestBase {
         Curation.corpusOf(all).select("doc_id", "text")
           .unionByName(b1.join(s1Surv, Seq("doc_id"), "left_semi")),
         "graft_sd_m_ref")
-      val refB2 = Curation.decideBatch(spark, b2, bench, "graft_sd_m_ref")
+      val refB2 = Curation.decideBatch(spark, b2, Curation.benchOf(all), "graft_sd_m_ref")
         .select(decCols.map(col): _*).collect().map(_.toString).toSeq.sorted
       assert(spark.read.parquet(s"$root/ledm/batch_id=1")
         .select(decCols.map(col): _*).collect().map(_.toString).toSeq.sorted
@@ -302,42 +275,94 @@ class CurationSpec extends SparkTestBase {
       Formats.failpoint = ""
       dropIdx("graft_sd_refd", "graft_sd_ref", "graft_sd_s1", "graft_sd_fp",
         "graft_sd_f2", "graft_sd_t", "graft_sd_m", "graft_sd_m_ref")
-      Seq("graft_sd_ref_snap", "graft_sd_ref_snap_ledger",
+      dropTables(
         "graft_sd_s1_snap0", "graft_sd_s1s_b0", "graft_sd_s1s_ledger",
-        "graft_sd_s1s_idxledger", "graft_sd_s1s_idxintent",
+        "graft_sd_s1s_idxintent",
         "graft_sd_fp_snap0", "graft_sd_fps_b0", "graft_sd_fps_ledger",
-        "graft_sd_fps_idxledger", "graft_sd_fps_idxintent",
+        "graft_sd_fps_idxintent",
         "graft_sd_f2_snap0", "graft_sd_f2s_b0", "graft_sd_f2s_ledger",
-        "graft_sd_f2s_idxledger", "graft_sd_f2s_idxintent",
+        "graft_sd_f2s_idxintent",
         "graft_sd_t_snap0", "graft_sd_t_snap0f", "graft_sd_t_tomb",
-        "graft_sd_ts_b0", "graft_sd_ts_ledger",
-        "graft_sd_ts_idxledger", "graft_sd_ts_idxintent",
+        "graft_sd_ts_b0", "graft_sd_ts_ledger", "graft_sd_ts_idxintent",
         "graft_sd_m_snap0", "graft_sd_ms_b0", "graft_sd_ms_b1",
-        "graft_sd_ms_ledger", "graft_sd_ms_idxledger", "graft_sd_ms_idxintent")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+        "graft_sd_ms_ledger", "graft_sd_ms_idxintent")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
+  }
+
+  test("a foreign append in the index-append crash window fails the replay " +
+      "loudly and leaves the band index untouched") {
+    val root = java.nio.file.Files.createTempDirectory("graft-sdfw").toString
+    try {
+      Curation.batchOf(all).select("doc_id", "text")
+        .coalesce(1).write.parquet(s"$root/stage")
+      Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_fw")
+      writeSnap0("graft_sd_fw_snap0")
+      def run(): Unit = runStream(s"$root/stage", "graft_sd_fw", s"$root/led",
+        "graft_sd_fw_snap0", "graft_sd_fws", s"$root/ck")
+      Formats.failpoint = "sdaily.after_index_append"
+      intercept[StreamingQueryException](run())
+      Formats.failpoint = ""
+      // a second writer appends a doc-disjoint batch (ids no corpus or
+      // batch doc carries) inside the crash window: the manifest stamp now
+      // matches neither the intent's pre-append stamp nor its fold
+      Dedup.appendToBandIndex(Curation.corpusOf(all).select("doc_id", "text")
+        .orderBy("doc_id").limit(5)
+        .withColumn("doc_id", col("doc_id") + 1000000000L), "graft_sd_fw")
+      val bandsBefore = rows("graft_sd_fw")
+      val sigsBefore = rows("graft_sd_fw_sigs")
+      val ex = intercept[StreamingQueryException](run())
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("matches neither")),
+        ex.getMessage)
+      assert(rows("graft_sd_fw") === bandsBefore, "the replay must not append")
+      assert(rows("graft_sd_fw_sigs") === sigsBefore, "the replay must not append")
+      assert(!spark.catalog.tableExists("graft_sd_fws_ledger"),
+        "a refused replay commits nothing")
+    } finally {
+      Formats.failpoint = ""
+      dropIdx("graft_sd_fw")
+      dropTables("graft_sd_fw_snap0", "graft_sd_fws_b0", "graft_sd_fws_ledger",
+        "graft_sd_fws_idxintent")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
+  }
+
+  test("streamed micro-batches leave no session-cache entries behind") {
+    val root = java.nio.file.Files.createTempDirectory("graft-sdcache").toString
+    val nBatches = 3
+    try {
+      val batch = Curation.batchOf(all).select("doc_id", "text")
+      (0 until nBatches).foreach { i =>
+        batch.filter(col("doc_id") % nBatches === i)
+          .coalesce(1).write.mode("append").parquet(s"$root/stage")
+      }
+      Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_c")
+      writeSnap0("graft_sd_c_snap0")
+      spark.catalog.clearCache()
+      runStream(s"$root/stage", "graft_sd_c", s"$root/led", "graft_sd_c_snap0",
+        "graft_sd_cs", s"$root/ck", filesPerTrigger = Some(1))
+      assert(spark.table("graft_sd_cs_ledger").count() === nBatches.toLong)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "a micro-batch must not leave cached plans in the session")
+    } finally {
+      dropIdx("graft_sd_c")
+      dropTables("graft_sd_c_snap0", "graft_sd_cs_ledger", "graft_sd_cs_idxintent")
+      dropTables((0 until nBatches).map(i => s"graft_sd_cs_b$i"): _*)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
   }
 
   test("retention: 20 micro-batches keep bounded artifacts, equal the " +
       "unretained final state, and a post-retention replay is exactly-once") {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val root = java.nio.file.Files.createTempDirectory("graft-sret").toString
-    def rows(t: String): Seq[String] =
-      spark.table(t).collect().map(_.toString).toSeq.sorted
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
     val batch = Curation.batchOf(all).select("doc_id", "text")
-    val bench = Curation.benchOf(all)
     val nBatches = 20
     val keep = 3
-    def runStream(band: String, snap0: String, prefix: String, ckpt: String,
+    def runDays(band: String, snap0: String, prefix: String, ckpt: String,
         retain: Option[Int]): Unit =
-      Curation.startStreamDailyPipeline(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$root/stage"),
-        bench, band, s"$root/led_$prefix", snap0, prefix,
-        s"$root/$ckpt", retainSnapshots = retain).awaitTermination()
+      runStream(s"$root/stage", band, s"$root/led_$prefix", snap0, prefix,
+        s"$root/$ckpt", filesPerTrigger = Some(1), retain = retain)
     def snapTables(prefix: String): Seq[String] =
       spark.catalog.listTables().collect().map(_.name).toSeq
         .filter(_.matches(java.util.regex.Pattern.quote(prefix) + "_b\\d+"))
@@ -350,11 +375,9 @@ class CurationSpec extends SparkTestBase {
           .coalesce(1).write.mode("append").parquet(s"$root/stage")
       }
       Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sr_s")
-      Formats.writeManaged(
-        graft.ops.Snapshot.baseSnapshot(Curation.corpusOf(all))
-          .select(col("doc_id"), col("version"), col("fp")), "graft_sr_s_snap0")
-      runStream("graft_sr_s", "graft_sr_s_snap0", "graft_sr_s_p", "cks", Some(keep))
-      // bounded: keep-last-K snapshots, watermark-row ledgers, zero
+      writeSnap0("graft_sr_s_snap0")
+      runDays("graft_sr_s", "graft_sr_s_snap0", "graft_sr_s_p", "cks", Some(keep))
+      // bounded: keep-last-K snapshots, a watermark-row ledger, zero
       // committed intents — regardless of 20 batches having run
       assert(snapTables("graft_sr_s_p").sorted ===
         (nBatches - keep until nBatches).map(n => s"graft_sr_s_p_b$n"),
@@ -364,18 +387,14 @@ class CurationSpec extends SparkTestBase {
       val wm = spark.table("graft_sr_s_p_ledger").head()
       assert(wm.getLong(0) === (nBatches - 1).toLong &&
         wm.getString(1) === s"graft_sr_s_p_b${nBatches - 1}")
-      assert(spark.table("graft_sr_s_p_idxledger").count() === 1,
-        "idx ledger folds to its watermark row")
       assert(spark.table("graft_sr_s_p_idxintent").count() === 0,
         "every committed batch's intent row is vacuumed")
       // the retained run's final state equals an UNRETAINED twin's over
       // the same staged files — retention must never change what the
       // pipeline computes, only what it keeps
       Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sr_u")
-      Formats.writeManaged(
-        graft.ops.Snapshot.baseSnapshot(Curation.corpusOf(all))
-          .select(col("doc_id"), col("version"), col("fp")), "graft_sr_u_snap0")
-      runStream("graft_sr_u", "graft_sr_u_snap0", "graft_sr_u_p", "cku", None)
+      writeSnap0("graft_sr_u_snap0")
+      runDays("graft_sr_u", "graft_sr_u_snap0", "graft_sr_u_p", "cku", None)
       assert(spark.table("graft_sr_u_p_ledger").count() === nBatches.toLong,
         "the unretained twin keeps every ledger row (the r14 baseline shape)")
       assert(rows(s"graft_sr_s_p_b${nBatches - 1}") ===
@@ -387,7 +406,7 @@ class CurationSpec extends SparkTestBase {
       // re-delivered, every one recognized as committed through the
       // WATERMARK row — exactly-once end state, artifacts still bounded
       val bandBefore = rows("graft_sr_s")
-      runStream("graft_sr_s", "graft_sr_s_snap0", "graft_sr_s_p", "cks2", Some(keep))
+      runDays("graft_sr_s", "graft_sr_s_snap0", "graft_sr_s_p", "cks2", Some(keep))
       assert(rows("graft_sr_s") === bandBefore,
         "a replayed batch must not re-append through a folded ledger")
       assert(spark.table("graft_sr_s_p_ledger").count() === 1)
@@ -447,15 +466,11 @@ class CurationSpec extends SparkTestBase {
       assert(audit() === auditBefore,
         "re-presenting a folded batch's dir must not duplicate audit rows")
     } finally {
-      Seq("graft_sr_s", "graft_sr_s_sigs", "graft_sr_s_meta",
-        "graft_sr_s_dec",
-        "graft_sr_u", "graft_sr_u_sigs", "graft_sr_u_meta",
-        "graft_sr_s_snap0", "graft_sr_u_snap0",
-        "graft_sr_s_p_ledger", "graft_sr_s_p_idxledger", "graft_sr_s_p_idxintent",
-        "graft_sr_u_p_ledger", "graft_sr_u_p_idxledger", "graft_sr_u_p_idxintent")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      (snapTables("graft_sr_s_p") ++ snapTables("graft_sr_u_p"))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      dropIdx("graft_sr_s", "graft_sr_u")
+      dropTables("graft_sr_s_dec", "graft_sr_s_snap0", "graft_sr_u_snap0",
+        "graft_sr_s_p_ledger", "graft_sr_s_p_idxintent",
+        "graft_sr_u_p_ledger", "graft_sr_u_p_idxintent")
+      dropTables(snapTables("graft_sr_s_p") ++ snapTables("graft_sr_u_p"): _*)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
   }
