@@ -731,7 +731,7 @@ object SparkEntry {
         val docs = SharedCorpus.docsTok(s, d)
         TextAnalysis.buildBm25Index(docs.filter(col("doc_id") % 2 === 0), "graft_bm25_cpt")
         TextAnalysis.appendToBm25Index(docs.filter(col("doc_id") % 2 =!= 0), "graft_bm25_cpt")
-        graft.sources.Formats.compactBucketed(s, "graft_bm25_cpt", Seq("word"), 8)
+        graft.sources.Formats.compactBucketed(s, "graft_bm25_cpt")
       }
       TextAnalysis.bm25SearchIndexed(s, "graft_bm25_cpt", Seq("spark", "window", "join"))
     }),
@@ -2189,10 +2189,10 @@ object SparkEntry {
     "fmt_bucketed_join" -> ((s, d) => {
       Formats.writeBucketed(
         Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"),
-        "graft_orders_bkt", "o_custkey", 8)
+        "graft_orders_bkt", Seq("o_custkey"), 8)
       Formats.writeBucketed(
         Tables.customer(s, d).select("c_custkey", "c_mktsegment"),
-        "graft_customer_bkt", "c_custkey", 8)
+        "graft_customer_bkt", Seq("c_custkey"), 8)
       s.table("graft_orders_bkt")
         .join(s.table("graft_customer_bkt"), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")

@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.StoredIndex
+import graft.sources.StoredIndex.{Family, Part}
+
 /** Byte-pair-encoding vocabulary training — the subword tokenizer builder
   * every LLM data pipeline runs before token counting means anything
   * (SURVEY §2c north-star extension; the deterministic-training-loop twin
@@ -169,11 +172,10 @@ object Bpe {
     require(merges.size == rounds,
       s"BPE training exhausted after ${merges.size} of $rounds rounds — " +
         "a fixed-round replay (the oracle's CTE chain) would diverge")
-    graft.sources.Formats.writeManaged(
-      mergeTableOf(docs.sparkSession, merges), table)
-    val (n, fp) = graft.sources.Formats.corpusStamp(docs, "doc_id")
-    graft.sources.Formats.writeBuildMeta(docs.sparkSession, table,
-      s"kind=bpe,rounds=$rounds", n, fp)
+    StoredIndex.build(Family(
+        _ => s"kind=bpe,rounds=$rounds", "doc_id", "",
+        Seq(Part("", Nil, 0))),
+      table, docs)(_ => mergeTableOf(docs.sparkSession, merges))
   }
 
   /** The stored merge sequence, round-ordered. */

@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.StoredIndex
+import graft.sources.StoredIndex.{Family, Part}
+
 /** Trained quality classification — the learned curation filter every
   * large-scale pretraining pipeline runs (the GPT-3/WebText pattern: fit a
   * simple classifier on quality labels, score the whole corpus with it).
@@ -138,11 +141,10 @@ object Classifier {
     val w = train(docs, iters, lr).last
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.sources.Formats.writeManaged(
-      w.zipWithIndex.map { case (v, j) => (j, v) }.toDF("j", "w"), table)
-    val (n, fp) = graft.sources.Formats.corpusStamp(docs, "doc_id")
-    graft.sources.Formats.writeBuildMeta(spark, table,
-      s"kind=clf,iters=$iters,lr=$lr", n, fp)
+    StoredIndex.build(Family(
+        _ => s"kind=clf,iters=$iters,lr=$lr", "doc_id", "",
+        Seq(Part("", Nil, 0))),
+      table, docs)(_ => w.zipWithIndex.map { case (v, j) => (j, v) }.toDF("j", "w"))
   }
 
   /** Read the stored weight vector (index-ordered). */

@@ -585,7 +585,7 @@ object Curation {
     * step 2 follows the purge's own contract. The request may be
     * over-broad (ids never ingested) — both steps ignore unknown ids. */
   def forgetBatch(spark: SparkSession, forgetIds: DataFrame, bandTable: String,
-      prevSnap: String, outSnap: String, numBuckets: Int = 8): Unit = {
+      prevSnap: String, outSnap: String): Unit = {
     val ids = forgetIds.select("doc_id").distinct()
     val changes = ids.select(col("doc_id"), lit(9).as("version"),
       lit("delete").as("op"), lit(null).cast("long").as("fp"))
@@ -593,7 +593,7 @@ object Curation {
       .select(col("doc_id"), col("version"), lit("upsert").as("op"), col("fp"))
     graft.sources.Formats.writeManaged(
       Snapshot.mergeSnapshot(prev, changes), outSnap)
-    Dedup.purgeFromBandIndex(spark, bandTable, ids, numBuckets)
+    Dedup.purgeFromBandIndex(spark, bandTable, ids)
   }
 
   /** The post-state AUDIT of a [[forgetBatch]] — the one-row evidence a

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossHash
+import graft.sources.StoredIndex
+import graft.sources.StoredIndex.{Family, Part}
 
 /** Deduplication operators for training-data curation at 100 TB
   * (north-star extensions — SURVEY §2c). The reference has no dedup at all;
@@ -278,16 +280,22 @@ object Dedup {
     * crawl; the stored layout is pre-hashed on the band key, so a new
     * batch's probe shuffles ONLY the batch side (or broadcasts it) and an
     * index⋈index self-mining join plans with zero exchanges. */
-  def buildBandIndex(docs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
+  def buildBandIndex(docs: DataFrame, table: String, numBuckets: Int = 8): Unit =
+    withBandRows(docs)(StoredIndex.build(bandIndex(numBuckets), table, docs))
+
+  /** The band index as a [[StoredIndex]] family: band rows bucketed on the
+    * probe key, one signature row per doc in `_sigs` (the id table). */
+  private def bandIndex(numBuckets: Int = 8) = Family(
+    n => s"kind=minhash_bands,buckets=$n", "doc_id", "_sigs",
+    Seq(Part("", Seq("band_idx", "band_hash"), numBuckets),
+      Part("_sigs", Seq("doc_id"), numBuckets)),
+    bootstrap = true)
+
+  /** Hand `write` the band-index rows of `docs` by part, signing once. */
+  private def withBandRows(docs: DataFrame)(write: (String => DataFrame) => Unit): Unit = {
     val sigs = minHashSignatures(docs).persist()
-    try {
-      graft.sources.Formats.writeBucketed(
-        bandedFromSignatures(sigs), table, Seq("band_idx", "band_hash"), numBuckets)
-      graft.sources.Formats.writeBucketed(sigs, table + "_sigs", Seq("doc_id"), numBuckets)
-    } finally sigs.unpersist()
-    val (n, fp) = graft.sources.Formats.corpusStamp(docs, "doc_id")
-    graft.sources.Formats.writeBuildMeta(docs.sparkSession, table,
-      s"kind=minhash_bands,buckets=$numBuckets", n, fp)
+    try write { case "" => bandedFromSignatures(sigs); case "_sigs" => sigs }
+    finally sigs.unpersist()
   }
 
   /** Incremental-ingest half: the NEW batch's band + signature rows
@@ -298,19 +306,8 @@ object Dedup {
     * two-batch index answers bit-identically to a one-shot build of the
     * union (gated under the same oracle as [[nearDupPairsIndexed]]).
     * Batches must be doc-disjoint, same contract as the ANN/BM25 appends. */
-  def appendToBandIndex(newDocs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
-    val fresh = !newDocs.sparkSession.catalog.tableExists(table)
-    val sigs = minHashSignatures(newDocs).persist()
-    try {
-      graft.sources.Formats.writeBucketedAppend(
-        bandedFromSignatures(sigs), table, Seq("band_idx", "band_hash"), numBuckets)
-      graft.sources.Formats.writeBucketedAppend(
-        sigs, table + "_sigs", Seq("doc_id"), numBuckets)
-    } finally sigs.unpersist()
-    val (n, fp) = graft.sources.Formats.corpusStamp(newDocs, "doc_id")
-    graft.sources.Formats.foldBuildMeta(newDocs.sparkSession, table,
-      s"kind=minhash_bands,buckets=$numBuckets", n, fp, bootstrap = fresh)
-  }
+  def appendToBandIndex(newDocs: DataFrame, table: String): Unit =
+    withBandRows(newDocs)(StoredIndex.append(bandIndex(), table, newDocs))
 
   /** Delete propagation — the FORGET half of the band-index lifecycle
     * (build → append xN → purge/compact → probe): every band and
@@ -322,30 +319,10 @@ object Dedup {
     * fold). After a purge, `isStaleFor(filtered corpus)` passes and the
     * index answers bit-identically to one REBUILT from the filtered
     * corpus — table contents AND manifest (PurgeSpec proves both).
-    *
-    * The folded stamp covers only `deleteIds ∩ stored ids` (read from the
-    * `_sigs` table before the rewrite), so an over-broad forget request —
-    * ids never indexed, or a re-issued request whose ids are already
-    * gone — cannot corrupt the manifest, and re-running a purge is a
-    * data-side no-op. Same HARD CONTRACT as the appends
-    * ([[graft.sources.Formats.foldBuildMeta]]): single writer, and a
-    * crash between the table rewrites and the meta fold means rebuild
-    * (each individual rewrite is ping-pong crash-safe; the cross-table
-    * window is not transactional). */
+    * Stamp, write order and crash contract: [[graft.sources.StoredIndex]]. */
   def purgeFromBandIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-      deleteIds: DataFrame, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.requireBuilt(spark, table)
-    val present = spark.table(table + "_sigs")
-      .join(broadcast(deleteIds.select("doc_id").distinct()), "doc_id")
-      .select("doc_id").distinct()
-    val (dn, dfp) = graft.sources.Formats.corpusStamp(present, "doc_id")
-    graft.sources.Formats.purgeBucketed(spark, table,
-      Seq("band_idx", "band_hash"), numBuckets, "doc_id", deleteIds)
-    graft.sources.Formats.purgeBucketed(spark, table + "_sigs",
-      Seq("doc_id"), numBuckets, "doc_id", deleteIds)
-    graft.sources.Formats.foldBuildMeta(spark, table,
-      s"kind=minhash_bands,buckets=$numBuckets", -dn, dfp)
-  }
+      deleteIds: DataFrame): Unit =
+    StoredIndex.purge(spark, bandIndex(), table, deleteIds)
 
   /** The candidate join of [[nearDupPairsIndexed]], exposed pre-scoring so
     * the spec can assert its plan: the index side reads the STORED banded
@@ -604,20 +581,24 @@ object Dedup {
     * [[mergeComponentsIncr]] consumes both and keeps both in sync. */
   def buildComponentsTable(docs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
     val pairs = minHashPairs(docs).select("doc_a", "doc_b").persist()
-    // the edge list is persisted alongside the labels: labels alone
-    // cannot answer a DELETE (removing a bridge vertex SPLITS its
-    // component — decremental connectivity needs the edges,
-    // [[purgeFromComponentsTable]]), and it is LSH-collision-sized,
-    // orders of magnitude under the corpus. Written first: the
-    // components solve below unpersists the pair cache when done.
-    graft.sources.Formats.writeBucketed(pairs, table + "_edges", Seq("doc_a"), numBuckets)
-    val labels = componentsFromEdges(docs.select(col("doc_id")), pairs)
-    graft.sources.Formats.writeBucketed(labels, table, Seq("doc_id"), numBuckets)
+    lazy val labels = componentsFromEdges(docs.select(col("doc_id")), pairs)
+    StoredIndex.build(componentsTable(numBuckets), table, docs) {
+      case "_edges" => pairs
+      case "" => labels
+    }
     labels.unpersist()
-    val (n, fp) = graft.sources.Formats.corpusStamp(docs, "doc_id")
-    graft.sources.Formats.writeBuildMeta(docs.sparkSession, table,
-      s"kind=components,buckets=$numBuckets", n, fp)
   }
+
+  /** The component table as a [[StoredIndex]] family. The edge list is
+    * stored alongside the labels: labels alone cannot answer a DELETE
+    * (removing a bridge vertex SPLITS its component — decremental
+    * connectivity needs the edges, [[purgeFromComponentsTable]]), and it
+    * is LSH-collision-sized, orders of magnitude under the corpus. Edges
+    * are written first: the components solve unpersists the pair cache
+    * when done. */
+  private def componentsTable(numBuckets: Int = 8) = Family(
+    n => s"kind=components,buckets=$n", "doc_id", "",
+    Seq(Part("_edges", Seq("doc_a"), numBuckets), Part("", Seq("doc_id"), numBuckets)))
 
   /** Incremental near-dup CLUSTERING — fold a new crawl batch into the
     * stored component assignment without re-clustering the corpus. The
@@ -655,7 +636,7 @@ object Dedup {
     * never re-read. */
   def mergeComponentsIncr(spark: org.apache.spark.sql.SparkSession,
       compTable: String, bandTable: String, newBatch: DataFrame,
-      numBuckets: Int = 8, minSigFrac: Double = 0.5,
+      minSigFrac: Double = 0.5,
       maxDriverEdges: Long = 4_000_000L): Unit = {
     graft.sources.Formats.requireBuilt(spark, compTable)
     graft.sources.Formats.requireBuilt(spark, bandTable)
@@ -680,7 +661,7 @@ object Dedup {
       least(col("doc_a"), col("doc_b")).as("doc_a"),
       greatest(col("doc_a"), col("doc_b")).as("doc_b"))
     graft.sources.Formats.writeBucketedAppend(
-      crossNorm.unionByName(intra), compTable + "_edges", Seq("doc_a"), numBuckets)
+      crossNorm.unionByName(intra), compTable + "_edges")
     val stored = spark.table(compTable)
     val crossL = cross.join(stored, cross("doc_a") === stored("doc_id"))
       .select(col("label").as("doc_a"), cross("doc_b")).distinct()
@@ -693,8 +674,7 @@ object Dedup {
     val relabel = delta.join(batchIds, Seq("doc_id"), "left_anti")
       .select(col("doc_id").as("old_label"), col("label").as("new_label"))
       .filter(col("old_label") =!= col("new_label"))
-    graft.sources.Formats.rewriteBucketed(spark, compTable,
-      Seq("doc_id"), numBuckets) { df =>
+    graft.sources.Formats.rewriteBucketed(spark, compTable) { df =>
       df.join(broadcast(relabel), df("label") === relabel("old_label"), "left")
         .select(df("doc_id"),
           coalesce(col("new_label"), df("label")).as("label"))
@@ -703,10 +683,9 @@ object Dedup {
     delta.unpersist()
     cross.unpersist()
     intra.unpersist()
-    val (bn, bfp) = graft.sources.Formats.corpusStamp(batch, "doc_id")
-    graft.sources.Formats.foldBuildMeta(spark, compTable,
-      s"kind=components,buckets=$numBuckets", bn, bfp)
-    appendToBandIndex(batch, bandTable, numBuckets)
+    StoredIndex.fold(spark, componentsTable(), compTable,
+      graft.sources.Formats.corpusStamp(batch, "doc_id"))
+    appendToBandIndex(batch, bandTable)
   }
 
   /** DECREMENTAL connectivity — delete propagation for the stored
@@ -731,16 +710,14 @@ object Dedup {
     * pair mining is pairwise-local (per-doc signatures, pairwise band
     * collisions), so the filtered corpus's edge set IS the stored set
     * minus deleted-incident edges, and unaffected components cannot
-    * change. Ids never indexed are ignored (stamp folds the
-    * intersection only). Same crash contract as the other purges. */
+    * change. Stamp, write order and crash contract:
+    * [[graft.sources.StoredIndex]]. */
   def purgeFromComponentsTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, deleteIds: DataFrame, numBuckets: Int = 8,
+      table: String, deleteIds: DataFrame,
       maxDriverEdges: Long = 4_000_000L): Unit = {
     graft.sources.Formats.requireBuilt(spark, table)
     val ids = deleteIds.select("doc_id").distinct()
     val stored = spark.table(table)
-    val present = stored.join(broadcast(ids), "doc_id").select("doc_id").distinct()
-    val (dn, dfp) = graft.sources.Formats.corpusStamp(present, "doc_id")
     val affLabels = stored.join(broadcast(ids), "doc_id").select("label").distinct()
     val survivors = stored.join(broadcast(affLabels), Seq("label"))
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
@@ -752,22 +729,16 @@ object Dedup {
       .select("doc_a", "doc_b")
     val delta = componentsFromEdges(survivors, affEdges, maxDriverEdges)
     val relabel = delta.select(col("doc_id"), col("label").as("new_label"))
-    graft.sources.Formats.rewriteBucketed(spark, table,
-      Seq("doc_id"), numBuckets) { df =>
-      df.join(broadcast(ids), Seq("doc_id"), "left_anti")
+    StoredIndex.purge(spark, componentsTable(), table, ids, rewrite = {
+      case "" => _.join(broadcast(ids), Seq("doc_id"), "left_anti")
         .join(broadcast(relabel), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("new_label"), col("label")).as("label"))
-    }
-    graft.sources.Formats.rewriteBucketed(spark, table + "_edges",
-      Seq("doc_a"), numBuckets) { df =>
-      df.join(broadcast(ids.select(col("doc_id").as("doc_a"))), Seq("doc_a"), "left_anti")
+        .select(col("doc_id"), coalesce(col("new_label"), col("label")).as("label"))
+      case "_edges" => _
+        .join(broadcast(ids.select(col("doc_id").as("doc_a"))), Seq("doc_a"), "left_anti")
         .join(broadcast(ids.select(col("doc_id").as("doc_b"))), Seq("doc_b"), "left_anti")
         .select("doc_a", "doc_b")
-    }
+    })
     delta.unpersist()
-    graft.sources.Formats.foldBuildMeta(spark, table,
-      s"kind=components,buckets=$numBuckets", -dn, dfp)
   }
 
   /** Resolve near-duplicate pairs into a deduplicated corpus: connected
@@ -934,12 +905,15 @@ object Dedup {
     * the corpus to roughly the truly-tainted ones. */
   def contaminationStatsBloom(train: DataFrame, benchmark: DataFrame, n: Int = 8,
       fpp: Double = 0.01): DataFrame = {
-    // distinct-hash persist: feeds the count, the sketch aggregate, and
-    // the exactness join
-    val benchHashes = positionalSpans(benchmark, n).select("sh").distinct().persist()
+    // distinct-hash checkpoint (materialized by the count): feeds the
+    // count, the sketch aggregate, and the exactness join — a local
+    // checkpoint, not a persist, so no session-cache entry outlives the call
+    val benchHashes = positionalSpans(benchmark, n).select("sh").distinct()
+      .localCheckpoint(eager = false)
     val bloom = benchHashes.stat.bloomFilter(
       "sh", math.max(benchHashes.count(), 1L), fpp)
-    val sp = positionalSpans(train, n).select("doc_id", "sh").persist()
+    val sp = positionalSpans(train, n).select("doc_id", "sh")
+      .localCheckpoint(eager = false)
     val tainted = sp
       .filter(graft.functions.BloomMightContain.mightContain(
         train.sparkSession, bloom, col("sh")))

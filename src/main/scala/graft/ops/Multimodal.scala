@@ -5,6 +5,9 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.StoredIndex
+import graft.sources.StoredIndex.{Family, Part}
+
 /** Multimodal column plumbing — north-star extension (SURVEY §2c): treat
   * image/audio/video payloads as opaque `BINARY` columns with typed
   * metadata, and run decode / feature-extraction as *batched
@@ -478,16 +481,20 @@ object Multimodal {
     * once; every new crawl batch probes the stored 8-byte codes. */
   def buildPhashIndex(blobs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
     val codes = dHash(blobs).persist()
-    try {
-      graft.sources.Formats.writeBucketed(
-        phashBands(codes.select("phash").distinct()),
-        table, Seq("band_idx", "band_val"), numBuckets)
-      graft.sources.Formats.writeBucketed(codes, table + "_codes", Seq("doc_id"), numBuckets)
+    try StoredIndex.build(phashIndex(numBuckets), table, blobs) {
+      case "" => phashBands(codes.select("phash").distinct())
+      case "_codes" => codes
     } finally codes.unpersist()
-    val (n, fp) = graft.sources.Formats.corpusStamp(blobs, "doc_id")
-    graft.sources.Formats.writeBuildMeta(blobs.sparkSession, table,
-      s"kind=phash_bands,buckets=$numBuckets", n, fp)
   }
+
+  /** The phash index as a [[StoredIndex]] family: band rows of distinct
+    * codes bucketed on the probe key, one code row per image in `_codes`
+    * (the id table). */
+  private def phashIndex(numBuckets: Int = 8) = Family(
+    n => s"kind=phash_bands,buckets=$n", "doc_id", "_codes",
+    Seq(Part("", Seq("band_idx", "band_val"), numBuckets),
+      Part("_codes", Seq("doc_id"), numBuckets)),
+    bootstrap = true)
 
   /** Incremental-ingest half: the new batch decoded, its code rows
     * appended, and band rows appended ONLY for codes the stored index has
@@ -498,25 +505,19 @@ object Multimodal {
     * and a two-batch index answers bit-identically to a one-shot build of
     * the union (MultimodalSpec). Batches must be doc-disjoint — the
     * standard append contract. */
-  def appendToPhashIndex(newBlobs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
+  def appendToPhashIndex(newBlobs: DataFrame, table: String): Unit = {
     val spark = newBlobs.sparkSession
-    val fresh = !spark.catalog.tableExists(table)
     val codes = dHash(newBlobs).persist()
-    try {
-      val batchCodes = codes.select("phash").distinct()
-      val newCodes =
-        if (fresh) batchCodes
-        else batchCodes.join(
-          spark.table(table).filter(col("band_idx") === 0).select("phash"),
-          Seq("phash"), "left_anti")
-      graft.sources.Formats.writeBucketedAppend(
-        phashBands(newCodes), table, Seq("band_idx", "band_val"), numBuckets)
-      graft.sources.Formats.writeBucketedAppend(
-        codes, table + "_codes", Seq("doc_id"), numBuckets)
+    try StoredIndex.append(phashIndex(), table, newBlobs) {
+      case "" =>
+        val batchCodes = codes.select("phash").distinct()
+        phashBands(
+          if (!spark.catalog.tableExists(table)) batchCodes
+          else batchCodes.join(
+            spark.table(table).filter(col("band_idx") === 0).select("phash"),
+            Seq("phash"), "left_anti"))
+      case "_codes" => codes
     } finally codes.unpersist()
-    val (n, fp) = graft.sources.Formats.corpusStamp(newBlobs, "doc_id")
-    graft.sources.Formats.foldBuildMeta(spark, table,
-      s"kind=phash_bands,buckets=$numBuckets", n, fp, bootstrap = fresh)
   }
 
   /** Delete propagation — the FORGET half of the phash-index lifecycle,
@@ -527,18 +528,13 @@ object Multimodal {
     * manifest folds the deleted ids out (xor is self-inverse) — no image
     * is ever re-decoded. After a purge the index answers bit-identically
     * to one rebuilt from the surviving blobs, manifest included
-    * (PurgeSpec). The folded stamp covers only `deleteIds ∩ stored code
-    * ids`, so over-broad or re-issued requests are safe no-ops. Same
-    * HARD CONTRACT as the appends: single writer, crash between the
-    * table rewrites and the meta fold means rebuild. */
+    * (PurgeSpec). Stamp, write order and crash contract:
+    * [[graft.sources.StoredIndex]]. */
   def purgeFromPhashIndex(spark: SparkSession, table: String,
-      deleteIds: DataFrame, numBuckets: Int = 8): Unit = {
+      deleteIds: DataFrame): Unit = {
     graft.sources.Formats.requireBuilt(spark, table)
     val del = deleteIds.select("doc_id").distinct()
     val codesTbl = spark.table(table + "_codes")
-    val present = codesTbl.join(broadcast(del), "doc_id")
-      .select("doc_id").distinct()
-    val (dn, dfp) = graft.sources.Formats.corpusStamp(present, "doc_id")
     // ORPHANED codes — every holder deleted — lose their band rows; a code
     // any survivor still holds keeps them. Collected eagerly BEFORE the
     // codes rewrite (the set it derives from is about to shrink); bounded
@@ -549,15 +545,10 @@ object Multimodal {
       .select("phash").distinct()
       .join(codesTbl.join(broadcast(del), Seq("doc_id"), "left_anti")
         .select("phash").distinct(), Seq("phash"), "left_anti")
-      .as[Long].collect()
-    graft.sources.Formats.purgeBucketed(spark, table + "_codes",
-      Seq("doc_id"), numBuckets, "doc_id", deleteIds)
-    if (orphans.nonEmpty)
-      graft.sources.Formats.purgeBucketed(spark, table,
-        Seq("band_idx", "band_val"), numBuckets, "phash",
-        orphans.toSeq.toDF("phash"))
-    graft.sources.Formats.foldBuildMeta(spark, table,
-      s"kind=phash_bands,buckets=$numBuckets", -dn, dfp)
+      .as[Long].collect().toSeq.toDF("phash")
+    StoredIndex.purge(spark, phashIndex(), table, del, rewrite = {
+      case "" => _.join(broadcast(orphans), Seq("phash"), "left_anti")
+    })
   }
 
   /** Query-many half: near-duplicate image pairs BETWEEN the stored

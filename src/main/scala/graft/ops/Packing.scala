@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossHash
+import graft.sources.StoredIndex
+import graft.sources.StoredIndex.{Family, Part}
 
 /** Training-batch assembly operators: deterministic corpus shuffling,
   * sequence packing into fixed token budgets, and token-budgeted corpus
@@ -395,11 +397,10 @@ object Packing {
   def buildShardPlan(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
       table: String, shards: Int = 8, seed: String = "epoch0",
       numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.writeBucketed(
-      shardShuffle(docs, shards, seed), table, Seq("shard"), numBuckets)
-    val (n, fp) = graft.sources.Formats.corpusStamp(docs, "doc_id")
-    graft.sources.Formats.writeBuildMeta(spark, table,
-      s"kind=shard_plan,shards=$shards,seed=$seed", n, fp)
+    StoredIndex.build(Family(
+        _ => s"kind=shard_plan,shards=$shards,seed=$seed", "doc_id", "",
+        Seq(Part("", Seq("shard"), numBuckets))),
+      table, docs)(_ => shardShuffle(docs, shards, seed))
   }
 
   /** Query half: one shard's assignments in stream order — the per-worker

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
+import graft.sources.{StoredIndex, Tables}
+import graft.sources.StoredIndex.{Family, Part}
 
 /** Relational completion operators (SURVEY.md §2b 🔶/❌ rows, §7.2 step 3).
   *
@@ -1113,9 +1114,12 @@ object Relational {
       .groupBy("grp", "bucket").agg(count(lit(1)).as("cnt"))
 
   /** Unique row id for the manifest stamp (lineitem's natural key). */
-  private def liStamp(li: DataFrame): (Long, Long) =
-    graft.sources.Formats.corpusStamp(
-      li.select(concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("rid")), "rid")
+  private def liIds(li: DataFrame): DataFrame =
+    li.select(concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("rid"))
+
+  /** The histogram as a [[StoredIndex]] family (fixed 4 buckets). */
+  private def histIndex(binWidth: Long) = Family(
+    _ => s"kind=hist,w=$binWidth", "rid", "", Seq(Part("", Seq("bucket"), 4)))
 
   /** The stored histogram's bin width, read back from its build
     * manifest — the artifact, not the binary, is the source of truth. */
@@ -1131,12 +1135,8 @@ object Relational {
     * fact table contributes one map-side-combined counting pass; the
     * artifact is KB-scale. */
   def buildHistIndex(li: DataFrame, table: String,
-      binWidth: Long = HistWidth): Unit = {
-    graft.sources.Formats.writeBucketed(histRows(li, binWidth), table, Seq("bucket"), 4)
-    val (n, fp) = liStamp(li)
-    graft.sources.Formats.writeBuildMeta(li.sparkSession, table,
-      s"kind=hist,w=$binWidth", n, fp)
-  }
+      binWidth: Long = HistWidth): Unit =
+    StoredIndex.build(histIndex(binWidth), table, liIds(li))(_ => histRows(li, binWidth))
 
   /** Ingest half: the batch's own counter rows appended as deltas (the
     * CMS/LM delta discipline — accumulated rows are neither read nor
@@ -1152,16 +1152,13 @@ object Relational {
       s"append declared histogram bin width ${expectWidth.getOrElse(w)} but " +
         s"'$table' was built with w=$w — appending rows binned at a different " +
         "width would silently corrupt every quantile; rebuild or drop the declaration")
-    graft.sources.Formats.writeBucketedAppend(histRows(newLi, w), table, Seq("bucket"), 4)
-    val (n, fp) = liStamp(newLi)
-    graft.sources.Formats.foldBuildMeta(newLi.sparkSession, table,
-      s"kind=hist,w=$w", n, fp)
+    StoredIndex.append(histIndex(w), table, liIds(newLi))(_ => histRows(newLi, w))
   }
 
   /** Collapse appended deltas to one row per `(grp, bucket)` — the
     * crash-safe bucketed ping-pong rewrite. */
   def compactHistIndex(spark: SparkSession, table: String): Unit =
-    graft.sources.Formats.rewriteBucketed(spark, table, Seq("bucket"), 4)(
+    graft.sources.Formats.rewriteBucketed(spark, table)(
       _.groupBy("grp", "bucket").agg(sum("cnt").as("cnt")))
 
   /** Quantile probe from the stored histogram: per group and percentile
@@ -1445,25 +1442,23 @@ object Relational {
     * join is output-sized at any corpus size — the property the gate's
     * brute-force oracle certifies. */
   def buildFuzzyIndex(df: DataFrame, idCol: String, strCol: String,
-      table: String, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.writeBucketed(
-      maskedKeys(df, idCol, strCol), table, Seq("k"), numBuckets)
-    val (cn, fp) = graft.sources.Formats.corpusStamp(df, idCol)
-    graft.sources.Formats.writeBuildMeta(df.sparkSession, table,
-      s"kind=fuzzy_masked,maxdist=1,buckets=$numBuckets", cn, fp)
-  }
+      table: String, numBuckets: Int = 8): Unit =
+    StoredIndex.build(fuzzyIndex(numBuckets), table, df.select(col(idCol).as("id")))(
+      _ => maskedKeys(df, idCol, strCol))
+
+  /** The fuzzy index as a [[StoredIndex]] family: masked keys bucketed on
+    * the key, ids stored as `id`. */
+  private def fuzzyIndex(numBuckets: Int = 8) = Family(
+    n => s"kind=fuzzy_masked,maxdist=1,buckets=$n", "id", "",
+    Seq(Part("", Seq("k"), numBuckets)))
 
   /** Ingest half: the batch's masked keys appended — the stored rows are
     * neither read nor rewritten, and (no global model) the result is
     * row-identical to a one-shot build of the union. */
   def appendToFuzzyIndex(newDf: DataFrame, idCol: String, strCol: String,
-      table: String, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.writeBucketedAppend(
-      maskedKeys(newDf, idCol, strCol), table, Seq("k"), numBuckets)
-    val (cn, fp) = graft.sources.Formats.corpusStamp(newDf, idCol)
-    graft.sources.Formats.foldBuildMeta(newDf.sparkSession, table,
-      s"kind=fuzzy_masked,maxdist=1,buckets=$numBuckets", cn, fp)
-  }
+      table: String): Unit =
+    StoredIndex.append(fuzzyIndex(), table, newDf.select(col(idCol).as("id")))(
+      _ => maskedKeys(newDf, idCol, strCol))
 
   /** FORGET half of the fuzzy-index lifecycle (the family-wide
     * delete-propagation contract — every stored index answers a
@@ -1474,17 +1469,8 @@ object Relational {
     * tables exist in this family, so purge == rebuild-from-filtered
     * exactly, row for row. */
   def purgeFromFuzzyIndex(spark: SparkSession, table: String,
-      deleteIds: DataFrame, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.requireBuilt(spark, table)
-    val present = spark.table(table)
-      .join(broadcast(deleteIds.select("id").distinct()), "id")
-      .select("id").distinct()
-    val (dn, dfp) = graft.sources.Formats.corpusStamp(present, "id")
-    graft.sources.Formats.purgeBucketed(spark, table,
-      Seq("k"), numBuckets, "id", deleteIds)
-    graft.sources.Formats.foldBuildMeta(spark, table,
-      s"kind=fuzzy_masked,maxdist=1,buckets=$numBuckets", -dn, dfp)
-  }
+      deleteIds: DataFrame): Unit =
+    StoredIndex.purge(spark, fuzzyIndex(), table, deleteIds)
 
   /** Probe: all (probe, master) pairs within distance 1 — the batch's
     * masked keys join the stored index bucket-locally, exact
@@ -1580,22 +1566,16 @@ object Relational {
     * (every statistic chosen to be MERGEABLE, which is the entire design:
     * profiling a 100 TB table that grows daily must scan only the new
     * batch and fold, never re-profile the accumulated corpus). */
-  def buildProfileIndex(t: DataFrame, table: String, lgK: Int = 12): Unit = {
-    graft.sources.Formats.writeBucketed(
-      profileBatchRows(t, lgK), table, Seq("col_name"), 4)
-    val (n, fp) = graft.sources.Formats.corpusStamp(t, "o_orderkey")
-    graft.sources.Formats.writeBuildMeta(t.sparkSession, table,
-      s"kind=profile,lgk=$lgK", n, fp)
-  }
+  def buildProfileIndex(t: DataFrame, table: String, lgK: Int = 12): Unit =
+    StoredIndex.build(profileIndex(lgK), table, t)(_ => profileBatchRows(t, lgK))
 
   /** Ingest half: the batch's own profile rows appended as deltas. */
-  def appendToProfileIndex(newT: DataFrame, table: String, lgK: Int = 12): Unit = {
-    graft.sources.Formats.writeBucketedAppend(
-      profileBatchRows(newT, lgK), table, Seq("col_name"), 4)
-    val (n, fp) = graft.sources.Formats.corpusStamp(newT, "o_orderkey")
-    graft.sources.Formats.foldBuildMeta(newT.sparkSession, table,
-      s"kind=profile,lgk=$lgK", n, fp)
-  }
+  def appendToProfileIndex(newT: DataFrame, table: String, lgK: Int = 12): Unit =
+    StoredIndex.append(profileIndex(lgK), table, newT)(_ => profileBatchRows(newT, lgK))
+
+  /** The profile as a [[StoredIndex]] family (fixed 4 buckets). */
+  private def profileIndex(lgK: Int) = Family(
+    _ => s"kind=profile,lgk=$lgK", "o_orderkey", "", Seq(Part("", Seq("col_name"), 4)))
 
   /** Probe: the full-table profile folded from the stored batch rows —
     * columns-count-sized work, no corpus access. `exactFor` is scanned
@@ -1841,26 +1821,21 @@ object Relational {
     * This is [[eventAnomalyDays]]'s deployment form: that gate scores
     * days against their own population; production scores TODAY against
     * the STORED baseline. */
-  def buildAnomalyBaseline(events: DataFrame, table: String): Unit = {
-    val m = dailyCounts(events).groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum("x").as("s"),
-        sum(col("x") * col("x")).as("q"))
-    graft.sources.Formats.writeBucketed(m, table, Seq("event_type"), 4)
-    val (n, fp) = graft.sources.Formats.corpusStamp(events, "event_id")
-    graft.sources.Formats.writeBuildMeta(events.sparkSession, table,
-      "kind=anomaly_baseline", n, fp)
-  }
+  def buildAnomalyBaseline(events: DataFrame, table: String): Unit =
+    StoredIndex.build(anomalyBaseline, table, events)(_ => baselineMoments(events))
 
   /** Ingest half: a day-disjoint batch's moment deltas appended. */
-  def appendToAnomalyBaseline(newEvents: DataFrame, table: String): Unit = {
-    val m = dailyCounts(newEvents).groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum("x").as("s"),
-        sum(col("x") * col("x")).as("q"))
-    graft.sources.Formats.writeBucketedAppend(m, table, Seq("event_type"), 4)
-    val (n, fp) = graft.sources.Formats.corpusStamp(newEvents, "event_id")
-    graft.sources.Formats.foldBuildMeta(newEvents.sparkSession, table,
-      "kind=anomaly_baseline", n, fp)
-  }
+  def appendToAnomalyBaseline(newEvents: DataFrame, table: String): Unit =
+    StoredIndex.append(anomalyBaseline, table, newEvents)(_ => baselineMoments(newEvents))
+
+  /** The baseline as a [[StoredIndex]] family (fixed 4 buckets). */
+  private val anomalyBaseline = Family(
+    _ => "kind=anomaly_baseline", "event_id", "", Seq(Part("", Seq("event_type"), 4)))
+
+  /** Per-type (n days, Σx, Σx²) of `events`' daily counts. */
+  private def baselineMoments(events: DataFrame): DataFrame =
+    dailyCounts(events).groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum("x").as("s"), sum(col("x") * col("x")).as("q"))
 
   /** The 3σ verdict of `x` against folded baseline moments — exact
     * integer cross-multiplication ([[eventAnomalyDays]]'s discipline). */

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.StoredIndex
+import graft.sources.StoredIndex.{Family, Part}
+
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`) — north-star
   * extension (SURVEY §2c). The reference has nothing comparable; this is
   * the approximate-nearest-neighbor surface a training-data pipeline needs
@@ -526,23 +529,18 @@ object Similarity {
     * (its lever is bytes-per-row, not rows-touched) — so the "index" is
     * the quantization pass run once instead of per query: every probe
     * reads 1-byte codes off disk and never touches the float corpus. */
-  def buildSqCodes(emb: DataFrame, table: String): Unit = {
-    graft.sources.Formats.writeManaged(quantizeInt8(emb), table)
-    val (n, fp) = graft.sources.Formats.corpusStamp(emb, "vec_id")
-    graft.sources.Formats.writeBuildMeta(emb.sparkSession, table, "kind=sq", n, fp)
-  }
+  def buildSqCodes(emb: DataFrame, table: String): Unit =
+    StoredIndex.build(sqCodes, table, emb)(_ => quantizeInt8(emb))
 
   /** Per-doc-independent codes → append-only ingest, same contract as the
     * other index appends: a two-batch build answers bit-identically to a
     * one-shot build of the union. */
-  def appendToSqCodes(newEmb: DataFrame, table: String): Unit = {
-    val fresh = !newEmb.sparkSession.catalog.tableExists(table)
-    quantizeInt8(newEmb).write.mode(org.apache.spark.sql.SaveMode.Append)
-      .format("parquet").saveAsTable(table)
-    val (n, fp) = graft.sources.Formats.corpusStamp(newEmb, "vec_id")
-    graft.sources.Formats.foldBuildMeta(newEmb.sparkSession, table, "kind=sq", n, fp,
-      bootstrap = fresh)
-  }
+  def appendToSqCodes(newEmb: DataFrame, table: String): Unit =
+    StoredIndex.append(sqCodes, table, newEmb)(_ => quantizeInt8(newEmb))
+
+  /** The SQ codes as a [[StoredIndex]] family: one plain code table. */
+  private val sqCodes = Family(_ => "kind=sq", "vec_id", "",
+    Seq(Part("", Nil, 0)), bootstrap = true)
 
   /** Query-many half: [[sqTopK]] semantics (same oracle) over the STORED
     * codes — the quantization pass is read, not recomputed. */
@@ -661,12 +659,14 @@ object Similarity {
     * at all (asserted in SimilaritySpec). */
   def buildLshIndex(emb: DataFrame, table: String, numBuckets: Int = 8): Unit = {
     graft.functions.FloatDot.register(emb.sparkSession)
-    graft.sources.Formats.writeBucketed(
-      bandedSignatures(emb), table, Seq("band_idx", "band_val"), numBuckets)
-    val (n, fp) = graft.sources.Formats.corpusStamp(emb, "vec_id")
-    graft.sources.Formats.writeBuildMeta(emb.sparkSession, table,
-      s"kind=lsh,buckets=$numBuckets", n, fp)
+    StoredIndex.build(lshIndex(numBuckets), table, emb)(_ => bandedSignatures(emb))
   }
+
+  /** The LSH index as a [[StoredIndex]] family: one band table bucketed
+    * on the probe key. */
+  private def lshIndex(numBuckets: Int = 8) = Family(
+    n => s"kind=lsh,buckets=$n", "vec_id", "",
+    Seq(Part("", Seq("band_idx", "band_val"), numBuckets)), bootstrap = true)
 
   /** Incremental-ingest half of the LSH build/query split: band the NEW
     * batch's signatures and append them into the stored index layout.
@@ -675,14 +675,9 @@ object Similarity {
     * the new batch (16 hyperplane dots per vector) plus one bucketed
     * append; a two-batch build is bit-identical to a one-shot build of the
     * union (gated under the same oracle as [[lshTopKIndexed]]). */
-  def appendToLshIndex(newEmb: DataFrame, table: String, numBuckets: Int = 8): Unit = {
+  def appendToLshIndex(newEmb: DataFrame, table: String): Unit = {
     graft.functions.FloatDot.register(newEmb.sparkSession)
-    val fresh = !newEmb.sparkSession.catalog.tableExists(table)
-    graft.sources.Formats.writeBucketedAppend(
-      bandedSignatures(newEmb), table, Seq("band_idx", "band_val"), numBuckets)
-    val (n, fp) = graft.sources.Formats.corpusStamp(newEmb, "vec_id")
-    graft.sources.Formats.foldBuildMeta(newEmb.sparkSession, table,
-      s"kind=lsh,buckets=$numBuckets", n, fp, bootstrap = fresh)
+    StoredIndex.append(lshIndex(), table, newEmb)(_ => bandedSignatures(newEmb))
   }
 
   /** Delete propagation for the stored LSH index — the embedding twin of
@@ -691,22 +686,11 @@ object Similarity {
     * manifest folds the deleted ids out (xor is self-inverse). Signatures
     * are per-vector independent, so a purged index is BIT-IDENTICAL to
     * one rebuilt from the surviving vectors, manifest included
-    * (PurgeSpec). The folded stamp covers only `deleteIds ∩ stored ids`
-    * (over-broad / re-issued requests are safe no-ops). Same HARD
-    * CONTRACT as the appends: single writer, crash between rewrite and
-    * fold means rebuild. */
+    * (PurgeSpec). Stamp, write order and crash contract:
+    * [[graft.sources.StoredIndex]]. */
   def purgeFromLshIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-      deleteIds: DataFrame, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.requireBuilt(spark, table)
-    val present = spark.table(table)
-      .join(broadcast(deleteIds.select("vec_id").distinct()), "vec_id")
-      .select("vec_id").distinct()
-    val (dn, dfp) = graft.sources.Formats.corpusStamp(present, "vec_id")
-    graft.sources.Formats.purgeBucketed(spark, table,
-      Seq("band_idx", "band_val"), numBuckets, "vec_id", deleteIds)
-    graft.sources.Formats.foldBuildMeta(spark, table,
-      s"kind=lsh,buckets=$numBuckets", -dn, dfp)
-  }
+      deleteIds: DataFrame): Unit =
+    StoredIndex.purge(spark, lshIndex(), table, deleteIds)
 
   /** Delete propagation for the stored IVF index: the deleted vectors'
     * cell-assignment rows are removed and the manifest folds their ids
@@ -720,49 +704,23 @@ object Similarity {
     * training on the BUILD corpus with the probe restricted to
     * survivors. Same contracts as [[purgeFromLshIndex]] otherwise. */
   def purgeFromIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-      deleteIds: DataFrame, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.requireBuilt(spark, table)
-    val present = spark.table(table)
-      .join(broadcast(deleteIds.select("vec_id").distinct()), "vec_id")
-      .select("vec_id").distinct()
-    val (dn, dfp) = graft.sources.Formats.corpusStamp(present, "vec_id")
-    graft.sources.Formats.purgeBucketed(spark, table,
-      Seq("cell"), numBuckets, "vec_id", deleteIds)
-    graft.sources.Formats.foldBuildMeta(spark, table, "kind=ivf", -dn, dfp)
-  }
+      deleteIds: DataFrame): Unit =
+    StoredIndex.purge(spark, ivfIndex(), table, deleteIds)
 
   /** Delete propagation for the composed IVF×PQ index — same model-kept
     * contract as [[purgeFromIvfIndex]] (pivots AND codebooks stay; the
     * deleted vectors' (cell, codes) rows go, the manifest folds their
     * ids out). */
   def purgeFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-      deleteIds: DataFrame, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.requireBuilt(spark, table)
-    val present = spark.table(table)
-      .join(broadcast(deleteIds.select("vec_id").distinct()), "vec_id")
-      .select("vec_id").distinct()
-    val (dn, dfp) = graft.sources.Formats.corpusStamp(present, "vec_id")
-    graft.sources.Formats.purgePartitionedTable(spark, table,
-      "cell", numBuckets, "vec_id", deleteIds)
-    graft.sources.Formats.foldBuildMeta(spark, table,
-      s"kind=ivfpq,buckets=$numBuckets", -dn, dfp)
-  }
+      deleteIds: DataFrame): Unit =
+    StoredIndex.purge(spark, ivfPqIndex(), table, deleteIds)
 
   /** Delete propagation for the id-keyed full-precision vector store —
     * the refine tier's half of a takedown (a forgotten vector must leave
     * BOTH the compressed index and the re-rank store). */
   def purgeFromVectorStore(spark: org.apache.spark.sql.SparkSession, table: String,
-      deleteIds: DataFrame, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.requireBuilt(spark, table)
-    val present = spark.table(table)
-      .join(broadcast(deleteIds.select("vec_id").distinct()), "vec_id")
-      .select("vec_id").distinct()
-    val (dn, dfp) = graft.sources.Formats.corpusStamp(present, "vec_id")
-    graft.sources.Formats.purgeBucketed(spark, table,
-      Seq("vec_id"), numBuckets, "vec_id", deleteIds)
-    graft.sources.Formats.foldBuildMeta(spark, table,
-      s"kind=vecstore,buckets=$numBuckets", -dn, dfp)
-  }
+      deleteIds: DataFrame): Unit =
+    StoredIndex.purge(spark, vectorStore(), table, deleteIds)
 
   /** The probe join of [[lshTopKIndexed]], exposed pre-rank so the spec
     * can assert its plan: both sides read the STORED index (no signature
@@ -1031,13 +989,18 @@ object Similarity {
   def buildIvfIndex(emb: DataFrame, table: String, kClusters: Int = NumPivots,
       iters: Int = KmeansIters, numBuckets: Int = 8): Unit = {
     val piv = trainPivots(emb, kClusters, iters)
-    graft.sources.Formats.writeBucketed(
-      assignCells(emb, piv), table, Seq("cell"), numBuckets)
-    graft.sources.Formats.writeBucketed(piv, s"${table}_pivots", Seq("pid"), 1)
-    val (n, fp) = graft.sources.Formats.corpusStamp(emb, "vec_id")
-    graft.sources.Formats.writeBuildMeta(emb.sparkSession, table,
-      s"kind=ivf,k=$kClusters,iters=$iters,buckets=$numBuckets", n, fp)
+    StoredIndex.build(ivfIndex(numBuckets, s",k=$kClusters,iters=$iters"), table, emb,
+      graft.sources.Formats.writeBucketed(piv, s"${table}_pivots", Seq("pid"), 1)
+    )(_ => assignCells(emb, piv))
   }
+
+  /** The IVF index as a [[StoredIndex]] family: the cell assignment
+    * bucketed on `cell`. The `_pivots` model table is the family's own
+    * side table. `training` carries the build's `k`/`iters` fields into
+    * the manifest; appends and purges do not restate them. */
+  private def ivfIndex(numBuckets: Int = 8, training: String = "") = Family(
+    n => s"kind=ivf$training,buckets=$n", "vec_id", "",
+    Seq(Part("", Seq("cell"), numBuckets)))
 
   /** Train and store ONLY the pivot half of the IVF index — the starting
     * point of the incremental-build path: pivots are trained once over the
@@ -1070,12 +1033,8 @@ object Similarity {
     * so N appended batches equal one bulk [[assignCells]] of their union —
     * which is why the two-batch gate shares [[ivfTopKIndexed]]'s oracle. */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, newEmb: DataFrame,
-      table: String, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.writeBucketedAppend(
-      assignCellsIndexed(spark, newEmb, table), table, Seq("cell"), numBuckets)
-    val (n, fp) = graft.sources.Formats.corpusStamp(newEmb, "vec_id")
-    graft.sources.Formats.foldBuildMeta(spark, table, "kind=ivf", n, fp)
-  }
+      table: String): Unit =
+    StoredIndex.append(ivfIndex(), table, newEmb)(_ => assignCellsIndexed(spark, newEmb, table))
 
   /** Query-many half: [[ivfTopKKmeans]] semantics (same oracle) against a
     * stored [[buildIvfIndex]] table pair. Only the query rows' pivot
@@ -1345,24 +1304,24 @@ object Similarity {
     val subs = subVectors(emb).localCheckpoint(eager = false)
     val books = trainPqCodebooksOn(emb, subs)
     graft.sources.Formats.writeBucketed(books, s"${table}_books", Seq("m"), 1)
-    graft.sources.Formats.writeManaged(pqEncodeOn(subs, books), table)
-    val (n, fp) = graft.sources.Formats.corpusStamp(emb, "vec_id")
-    graft.sources.Formats.writeBuildMeta(emb.sparkSession, table,
-      s"kind=pq,k=$PqCodes,iters=$PqIters", n, fp)
+    StoredIndex.build(pqIndex(s",k=$PqCodes,iters=$PqIters"), table, emb)(
+      _ => pqEncodeOn(subs, books))
   }
+
+  /** The PQ index as a [[StoredIndex]] family: one plain code table (no
+    * probe key to bucket on). The `_books` model table is the family's
+    * own; `training` as for [[ivfIndex]]. */
+  private def pqIndex(training: String = "") = Family(
+    _ => s"kind=pq$training", "vec_id", "", Seq(Part("", Nil, 0)))
 
   /** Incremental-ingest half: encode the new batch against the STORED
     * books and append. Encoding is per-vector independent given fixed
     * books, so N appended batches equal one bulk encode of their union —
     * which is why the two-batch gate shares [[pqTopK]]'s oracle. */
   def appendToPqIndex(spark: org.apache.spark.sql.SparkSession, newEmb: DataFrame,
-      table: String): Unit = {
-    pqEncode(newEmb, spark.table(s"${table}_books"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .format("parquet").saveAsTable(table)
-    val (n, fp) = graft.sources.Formats.corpusStamp(newEmb, "vec_id")
-    graft.sources.Formats.foldBuildMeta(spark, table, "kind=pq", n, fp)
-  }
+      table: String): Unit =
+    StoredIndex.append(pqIndex(), table, newEmb)(
+      _ => pqEncode(newEmb, spark.table(s"${table}_books")))
 
   /** Query-many half: [[pqTopK]] semantics (same oracle) against a stored
     * [[buildPqIndex]] table pair. The caller supplies the query vectors in
@@ -1397,15 +1356,19 @@ object Similarity {
     val books = trainPqCodebooksOn(emb, subs, pqCodes, pqIters)
     graft.sources.Formats.writeBucketed(piv, s"${table}_pivots", Seq("pid"), 1)
     graft.sources.Formats.writeBucketed(books, s"${table}_books", Seq("m"), 1)
-    graft.sources.Formats.writePartitionedTable(
-      assignCells(emb, piv).select(col("vec_id"), col("cell"))
+    StoredIndex.build(ivfPqIndex(numBuckets, s",k=$kClusters,iters=$iters"), table, emb)(
+      _ => assignCells(emb, piv).select(col("vec_id"), col("cell"))
         .join(pqEncodeOn(subs, books), Seq("vec_id"))
-        .select(col("vec_id"), col("cell"), col("codes")),
-      table, "cell", numBuckets)
-    val (n, fp) = graft.sources.Formats.corpusStamp(emb, "vec_id")
-    graft.sources.Formats.writeBuildMeta(emb.sparkSession, table,
-      s"kind=ivfpq,k=$kClusters,iters=$iters,buckets=$numBuckets", n, fp)
+        .select(col("vec_id"), col("cell"), col("codes")))
   }
+
+  /** The IVF×PQ index as a [[StoredIndex]] family: the (cell, codes) table
+    * directory-partitioned on `cell`, so its task count lives in the
+    * manifest's `buckets` field. `_pivots` and `_books` are the family's
+    * own model tables; `training` as for [[ivfIndex]]. */
+  private def ivfPqIndex(numBuckets: Int = 8, training: String = "") = Family(
+    n => s"kind=ivfpq$training,buckets=$n", "vec_id", "",
+    Seq(Part("", Seq("cell"), numBuckets, partitioned = true)))
 
   /** Train and store ONLY the two model tables of the IVF×PQ index — the
     * starting point of its incremental-ingest path, mirroring
@@ -1434,17 +1397,13 @@ object Similarity {
     * only the batch and the two tiny model tables (broadcast); the
     * accumulated code table is never rewritten. */
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession, newEmb: DataFrame,
-      table: String, numBuckets: Int = 8): Unit = {
+      table: String): Unit = {
     val piv = spark.table(s"${table}_pivots")
     val books = spark.table(s"${table}_books")
-    graft.sources.Formats.appendPartitionedTable(
-      assignCells(newEmb, piv).select(col("vec_id"), col("cell"))
+    StoredIndex.append(ivfPqIndex(), table, newEmb)(
+      _ => assignCells(newEmb, piv).select(col("vec_id"), col("cell"))
         .join(pqEncode(newEmb, books), Seq("vec_id"))
-        .select(col("vec_id"), col("cell"), col("codes")),
-      table, "cell", numBuckets)
-    val (n, fp) = graft.sources.Formats.corpusStamp(newEmb, "vec_id")
-    graft.sources.Formats.foldBuildMeta(spark, table,
-      s"kind=ivfpq,buckets=$numBuckets", n, fp)
+        .select(col("vec_id"), col("cell"), col("codes")))
   }
 
   /** Query half of the IVF×PQ index: nprobe coarse-cell prune, then
@@ -1526,13 +1485,15 @@ object Similarity {
     * Bucketing on the fetch key makes the candidate join bucket-local on
     * the store side (the big side never shuffles — only the
     * candidate-list side moves). */
-  def buildVectorStore(emb: DataFrame, table: String, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.writeBucketed(
-      emb.select(col("vec_id"), col("embedding")), table, Seq("vec_id"), numBuckets)
-    val (n, fp) = graft.sources.Formats.corpusStamp(emb, "vec_id")
-    graft.sources.Formats.writeBuildMeta(emb.sparkSession, table,
-      s"kind=vecstore,buckets=$numBuckets", n, fp)
-  }
+  def buildVectorStore(emb: DataFrame, table: String, numBuckets: Int = 8): Unit =
+    StoredIndex.build(vectorStore(numBuckets), table, emb)(
+      _ => emb.select(col("vec_id"), col("embedding")))
+
+  /** The vector store as a [[StoredIndex]] family: bucketed on its own
+    * fetch key. */
+  private def vectorStore(numBuckets: Int = 8) = Family(
+    n => s"kind=vecstore,buckets=$n", "vec_id", "",
+    Seq(Part("", Seq("vec_id"), numBuckets)))
 
   /** Two-stage retrieval — the production serving shape for compressed
     * indexes: stage 1 ranks `candidates` approximate neighbors per query

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossHash
+import graft.sources.StoredIndex
+import graft.sources.StoredIndex.{Family, Part}
 
 /** Text-analysis operators for a large-scale training-data pipeline
   * (north-star extensions beyond the reference's word count — SURVEY §2c).
@@ -465,15 +467,33 @@ object TextAnalysis {
     * df is NOT stored: a probe derives each query term's df by counting
     * that term's postings — the rows it already reads — so appends never
     * rewrite global state beyond the stats row. */
-  def buildBm25Index(docs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.writeBucketed(bm25Postings(docs), table, Seq("word"), numBuckets)
+  def buildBm25Index(docs: DataFrame, table: String, numBuckets: Int = 8): Unit =
+    StoredIndex.build(bm25Index(numBuckets), table, docs,
+      graft.sources.Formats.writeManaged(
+        docStats(docs.sparkSession.table(table)), table + "_stats")
+    )(_ => bm25Postings(docs))
+
+  /** The BM25 index as a [[StoredIndex]] family: postings bucketed on
+    * `word`. The one-row `_stats` table is the family's own side table. */
+  private def bm25Index(numBuckets: Int = 8) = Family(
+    n => s"kind=bm25,buckets=$n", "doc_id", "",
+    Seq(Part("", Seq("word"), numBuckets)))
+
+  /** (n_docs, total_dl) over the distinct docs of a posting frame. */
+  private def docStats(postings: DataFrame): DataFrame =
+    postings.select("doc_id", "dl").distinct()
+      .agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl"))
+
+  /** Shift the one-row `_stats` table by an exact integer delta. */
+  private def shiftStats(spark: org.apache.spark.sql.SparkSession, table: String,
+      d: org.apache.spark.sql.Row, sign: Long): Unit = {
+    val old = spark.table(table + "_stats").collect()(0)
+    import spark.implicits._
     graft.sources.Formats.writeManaged(
-      docs.sparkSession.table(table).select("doc_id", "dl").distinct()
-        .agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl")),
+      Seq((old.getLong(0) + sign * d.getLong(0),
+        old.getLong(1) + sign * (if (d.isNullAt(1)) 0L else d.getLong(1))))
+        .toDF("n_docs", "total_dl"),
       table + "_stats")
-    val (n, fp) = graft.sources.Formats.corpusStamp(docs, "doc_id")
-    graft.sources.Formats.writeBuildMeta(docs.sparkSession, table,
-      s"kind=bm25,buckets=$numBuckets", n, fp)
   }
 
   /** Incremental-ingest half: posting rows of the NEW batch appended into
@@ -484,28 +504,13 @@ object TextAnalysis {
     * probe-derived and the stats math is exact integer sums, a two-batch
     * index answers bit-identically to a one-shot build of the union.
     *
-    * Crash contract: the append is NOT atomic across (postings, stats
-    * row, manifest) — a mid-append crash leaves the family inconsistent,
-    * and naively re-running would double-append the postings half.
-    * Recovery is a rebuild, or routing ingest through the ledgered
-    * [[graft.streaming.StreamOps.absorbStagedBatches]] path, whose
-    * batch-granular ledger makes the replay window explicit (and whose
-    * crash recovery is failpoint-proven in StreamOpsSpec). */
-  def appendToBm25Index(newDocs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
-    val spark = newDocs.sparkSession
+    * Write order and crash contract: [[graft.sources.StoredIndex]]; the
+    * ledgered [[graft.streaming.StreamOps.absorbStagedBatches]] path
+    * makes the replay window explicit. */
+  def appendToBm25Index(newDocs: DataFrame, table: String): Unit = {
     val p = bm25Postings(newDocs)
-    graft.sources.Formats.writeBucketedAppend(p, table, Seq("word"), numBuckets)
-    val add = p.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl")).collect()(0)
-    val old = spark.table(table + "_stats").collect()(0)
-    import spark.implicits._
-    graft.sources.Formats.writeManaged(
-      Seq((old.getLong(0) + add.getLong(0), old.getLong(1) + add.getLong(1)))
-        .toDF("n_docs", "total_dl"),
-      table + "_stats")
-    val (bn, bfp) = graft.sources.Formats.corpusStamp(newDocs, "doc_id")
-    graft.sources.Formats.foldBuildMeta(spark, table,
-      s"kind=bm25,buckets=$numBuckets", bn, bfp)
+    StoredIndex.append(bm25Index(), table, newDocs,
+      shiftStats(newDocs.sparkSession, table, docStats(p).collect()(0), 1L))(_ => p)
   }
 
   /** Delete propagation — the FORGET half of the BM25 index lifecycle:
@@ -526,27 +531,14 @@ object TextAnalysis {
     * tokens has no posting rows, so purging its id folds nothing — its
     * build-time stamp contribution stays in the manifest until a
     * rebuild (it never affects scoring; scoring reads postings only).
-    * Same HARD CONTRACT as the appends: single writer, crash between
-    * the rewrites and the meta fold means rebuild. */
+    * Write order and crash contract: [[graft.sources.StoredIndex]]. */
   def purgeFromBm25Index(spark: org.apache.spark.sql.SparkSession, table: String,
-      deleteIds: DataFrame, numBuckets: Int = 8): Unit = {
+      deleteIds: DataFrame): Unit = {
     graft.sources.Formats.requireBuilt(spark, table)
     val ids = deleteIds.select("doc_id").distinct()
-    val present = spark.table(table)
-      .join(broadcast(ids), "doc_id").select("doc_id", "dl").distinct()
-    val del = present.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl")).collect()(0)
-    val (dn, dfp) = graft.sources.Formats.corpusStamp(present.select("doc_id"), "doc_id")
-    graft.sources.Formats.purgeBucketed(spark, table,
-      Seq("word"), numBuckets, "doc_id", ids)
-    val old = spark.table(table + "_stats").collect()(0)
-    import spark.implicits._
-    graft.sources.Formats.writeManaged(
-      Seq((old.getLong(0) - del.getLong(0),
-        old.getLong(1) - (if (del.isNullAt(1)) 0L else del.getLong(1))))
-        .toDF("n_docs", "total_dl"),
-      table + "_stats")
-    graft.sources.Formats.foldBuildMeta(spark, table,
-      s"kind=bm25,buckets=$numBuckets", -dn, dfp)
+    val del = docStats(spark.table(table).join(broadcast(ids), "doc_id")).collect()(0)
+    StoredIndex.purge(spark, bm25Index(), table, ids,
+      sides = shiftStats(spark, table, del, -1L))
   }
 
   /** Query-many half: [[bm25Search]] semantics (and the same oracle)
@@ -645,21 +637,27 @@ object TextAnalysis {
     * bit-for-bit. [[graft.sources.Formats.compactBucketed]]-style
     * maintenance (aggregate + rewrite) applies when the delta count
     * grows. */
-  def buildLmModel(docs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
-    val c12 = lmBigrams(docs).groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    graft.sources.Formats.writeBucketed(c12, table, Seq("w1"), numBuckets)
-    val spark = docs.sparkSession
-    graft.sources.Formats.writeBucketed(
-      spark.table(table).groupBy("w1").agg(sum("c12").as("c1")),
-      s"${table}_c1", Seq("w1"), numBuckets)
-    graft.sources.Formats.writeBucketed(
-      docs.select(SharedCorpus.alnumOf(docs).as("a"))
-        .select(explode(col("a")).as("w")).distinct(),
-      s"${table}_vocab", Seq("w"), numBuckets)
-    val (n, fp) = graft.sources.Formats.corpusStamp(docs, "doc_id")
-    graft.sources.Formats.writeBuildMeta(docs.sparkSession, table,
-      s"kind=lm2,buckets=$numBuckets", n, fp)
-  }
+  def buildLmModel(docs: DataFrame, table: String, numBuckets: Int = 8): Unit =
+    StoredIndex.build(lmModel(numBuckets), table, docs) {
+      case "" => lmBigrams(docs).groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+      case "_c1" => c1Of(docs.sparkSession.table(table))
+      case "_vocab" => vocabOf(docs, "w")
+    }
+
+  /** The LM as a [[StoredIndex]] family: three delta tables, each
+    * bucketed on its fold key. */
+  private def lmModel(numBuckets: Int = 8) = Family(
+    n => s"kind=lm2,buckets=$n", "doc_id", "",
+    Seq(Part("", Seq("w1"), numBuckets), Part("_c1", Seq("w1"), numBuckets),
+      Part("_vocab", Seq("w"), numBuckets)))
+
+  private def c1Of(c12: DataFrame): DataFrame =
+    c12.groupBy("w1").agg(sum("c12").as("c1"))
+
+  /** The distinct alnum tokens of `docs`, as column `name`. */
+  private def vocabOf(docs: DataFrame, name: String): DataFrame =
+    docs.select(SharedCorpus.alnumOf(docs).as("a"))
+      .select(explode(col("a")).as(name)).distinct()
 
   /** Incremental-ingest half: the NEW batch's count deltas and distinct
     * unigrams appended into the bucketed layouts — the accumulated model
@@ -667,20 +665,13 @@ object TextAnalysis {
     * probe's per-bucket fold makes an N-batch model answer bit-identically
     * to a one-shot build of the union (same oracle). Batches must be
     * doc-disjoint, the family-wide append contract. */
-  def appendToLmModel(newDocs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
-    val bi = lmBigrams(newDocs)
-    val c12 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    graft.sources.Formats.writeBucketedAppend(c12, table, Seq("w1"), numBuckets)
-    graft.sources.Formats.writeBucketedAppend(
-      c12.groupBy("w1").agg(sum("c12").as("c1")),
-      s"${table}_c1", Seq("w1"), numBuckets)
-    graft.sources.Formats.writeBucketedAppend(
-      newDocs.select(SharedCorpus.alnumOf(newDocs).as("a"))
-        .select(explode(col("a")).as("w")).distinct(),
-      s"${table}_vocab", Seq("w"), numBuckets)
-    val (n, fp) = graft.sources.Formats.corpusStamp(newDocs, "doc_id")
-    graft.sources.Formats.foldBuildMeta(newDocs.sparkSession, table,
-      s"kind=lm2,buckets=$numBuckets", n, fp)
+  def appendToLmModel(newDocs: DataFrame, table: String): Unit = {
+    val c12 = lmBigrams(newDocs).groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+    StoredIndex.append(lmModel(), table, newDocs) {
+      case "" => c12
+      case "_c1" => c1Of(c12)
+      case "_vocab" => vocabOf(newDocs, "w")
+    }
   }
 
   /** Maintenance half of the LM delta design: fold the accumulated
@@ -691,14 +682,10 @@ object TextAnalysis {
     * ([[graft.sources.Formats.compactDeltaTable]]), so every crash
     * window recovers by re-running; scores are identical before and
     * after (the probe's fold is exactly what this materializes once). */
-  def compactLmModel(spark: org.apache.spark.sql.SparkSession, table: String,
-      numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.compactDeltaTable(spark, table,
-      Seq("w1", "w2"), Seq("c12"), Seq("w1"), numBuckets)
-    graft.sources.Formats.compactDeltaTable(spark, s"${table}_c1",
-      Seq("w1"), Seq("c1"), Seq("w1"), numBuckets)
-    graft.sources.Formats.compactDeltaTable(spark, s"${table}_vocab",
-      Seq("w"), Seq.empty, Seq("w"), numBuckets)
+  def compactLmModel(spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
+    graft.sources.Formats.compactDeltaTable(spark, table, Seq("w1", "w2"), Seq("c12"))
+    graft.sources.Formats.compactDeltaTable(spark, s"${table}_c1", Seq("w1"), Seq("c1"))
+    graft.sources.Formats.compactDeltaTable(spark, s"${table}_vocab", Seq("w"), Nil)
   }
 
   /** Score half: [[lmScore]] semantics (same oracle) against a stored
@@ -821,16 +808,18 @@ object TextAnalysis {
     * would not), stamped with the build manifest. The corpus-scale bigram
     * extraction runs here; ranking then iterates over the vocab-scale
     * graph without ever rescanning the corpus. */
-  def buildTextRankEdges(docs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.writeBucketed(
-      textRankEdgeDeltas(docs), table, Seq("src"), numBuckets)
-    graft.sources.Formats.writeBucketed(
-      docs.select(SharedCorpus.alnumOf(docs).as("a"))
-        .select(explode(col("a")).as("word")).distinct(),
-      s"${table}_nodes", Seq("word"), numBuckets)
-    val (n, fp) = graft.sources.Formats.corpusStamp(docs, "doc_id")
-    graft.sources.Formats.writeBuildMeta(docs.sparkSession, table,
-      s"kind=textrank_edges,buckets=$numBuckets", n, fp)
+  def buildTextRankEdges(docs: DataFrame, table: String, numBuckets: Int = 8): Unit =
+    StoredIndex.build(textRankGraph(numBuckets), table, docs)(textRankRows(docs))
+
+  /** The TextRank graph as a [[StoredIndex]] family: edge deltas bucketed
+    * on `src`, the node set on `word`. */
+  private def textRankGraph(numBuckets: Int = 8) = Family(
+    n => s"kind=textrank_edges,buckets=$n", "doc_id", "",
+    Seq(Part("", Seq("src"), numBuckets), Part("_nodes", Seq("word"), numBuckets)))
+
+  private def textRankRows(docs: DataFrame): String => DataFrame = {
+    case "" => textRankEdgeDeltas(docs)
+    case "_nodes" => vocabOf(docs, "word")
   }
 
   /** Incremental-ingest half: the NEW batch's edge deltas and node rows
@@ -838,29 +827,16 @@ object TextAnalysis {
     * within-doc adjacency counts are exactly additive across doc-disjoint
     * batches, so N appended batches fold to the one-shot extraction
     * bit-for-bit (the gate shares [[textRank]]'s oracle). */
-  def appendToTextRankEdges(newDocs: DataFrame, table: String,
-      numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.writeBucketedAppend(
-      textRankEdgeDeltas(newDocs), table, Seq("src"), numBuckets)
-    graft.sources.Formats.writeBucketedAppend(
-      newDocs.select(SharedCorpus.alnumOf(newDocs).as("a"))
-        .select(explode(col("a")).as("word")).distinct(),
-      s"${table}_nodes", Seq("word"), numBuckets)
-    val (n, fp) = graft.sources.Formats.corpusStamp(newDocs, "doc_id")
-    graft.sources.Formats.foldBuildMeta(newDocs.sparkSession, table,
-      s"kind=textrank_edges,buckets=$numBuckets", n, fp)
-  }
+  def appendToTextRankEdges(newDocs: DataFrame, table: String): Unit =
+    StoredIndex.append(textRankGraph(), table, newDocs)(textRankRows(newDocs))
 
   /** Maintenance: fold the accumulated edge deltas back to one row per
     * (src, dst) and the node set to one row per word — same crash-safe
     * merging rewrite and same rationale as [[compactLmModel]]; ranks are
     * identical before and after. */
-  def compactTextRankEdges(spark: org.apache.spark.sql.SparkSession,
-      table: String, numBuckets: Int = 8): Unit = {
-    graft.sources.Formats.compactDeltaTable(spark, table,
-      Seq("src", "dst"), Seq("w"), Seq("src"), numBuckets)
-    graft.sources.Formats.compactDeltaTable(spark, s"${table}_nodes",
-      Seq("word"), Seq.empty, Seq("word"), numBuckets)
+  def compactTextRankEdges(spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
+    graft.sources.Formats.compactDeltaTable(spark, table, Seq("src", "dst"), Seq("w"))
+    graft.sources.Formats.compactDeltaTable(spark, s"${table}_nodes", Seq("word"), Nil)
   }
 
   /** Rank from the STORED graph: fold the edge deltas (exchange-free on
@@ -976,16 +952,17 @@ object TextAnalysis {
     * SketchSpec pins union-of-batches == one-shot to the bit). That is
     * the only way a 100 TB pipeline tracks corpus-lifetime distinct
     * counts: the corpus is scanned once per batch, state is KB-sized. */
-  def buildHllIndex(docs: DataFrame, table: String, lgK: Int = 12): Unit = {
-    val sk = docs
-      .select(col("source"), explode(SharedCorpus.alnumOf(docs)).as("word"))
+  def buildHllIndex(docs: DataFrame, table: String, lgK: Int = 12): Unit =
+    StoredIndex.build(hllIndex(lgK), table, docs)(_ => hllRows(docs, lgK))
+
+  /** The HLL sketch table as a [[StoredIndex]] family (fixed 4 buckets). */
+  private def hllIndex(lgK: Int) = Family(
+    _ => s"kind=hll,lgk=$lgK", "doc_id", "", Seq(Part("", Seq("source"), 4)))
+
+  private def hllRows(docs: DataFrame, lgK: Int): DataFrame =
+    docs.select(col("source"), explode(SharedCorpus.alnumOf(docs)).as("word"))
       .groupBy("source")
       .agg(expr(s"hll_sketch_agg(word, $lgK)").as("sketch"))
-    graft.sources.Formats.writeBucketed(sk, table, Seq("source"), 4)
-    val (n, fp) = graft.sources.Formats.corpusStamp(docs, "doc_id")
-    graft.sources.Formats.writeBuildMeta(docs.sparkSession, table,
-      s"kind=hll,lgk=$lgK", n, fp)
-  }
 
   /** Ingest half: the batch's own sketch rows appended as DELTAS (same
     * delta-table discipline as the LM counts — the accumulated sketches
@@ -994,16 +971,8 @@ object TextAnalysis {
     * re-inserted values (register max), so overlapping batches stay
     * CORRECT for the estimate — only the manifest stamp keeps the
     * family-wide disjointness convention. */
-  def appendToHllIndex(newDocs: DataFrame, table: String, lgK: Int = 12): Unit = {
-    val sk = newDocs
-      .select(col("source"), explode(SharedCorpus.alnumOf(newDocs)).as("word"))
-      .groupBy("source")
-      .agg(expr(s"hll_sketch_agg(word, $lgK)").as("sketch"))
-    graft.sources.Formats.writeBucketedAppend(sk, table, Seq("source"), 4)
-    val (n, fp) = graft.sources.Formats.corpusStamp(newDocs, "doc_id")
-    graft.sources.Formats.foldBuildMeta(newDocs.sparkSession, table,
-      s"kind=hll,lgk=$lgK", n, fp)
-  }
+  def appendToHllIndex(newDocs: DataFrame, table: String, lgK: Int = 12): Unit =
+    StoredIndex.append(hllIndex(lgK), table, newDocs)(_ => hllRows(newDocs, lgK))
 
   /** Probe: per-source estimate from the UNION of stored sketch rows —
     * KB-scale, no corpus access. */
@@ -1137,12 +1106,12 @@ object TextAnalysis {
     * KB-scale (width is a BUILD choice — size it to the vocabulary's
     * ε·N error budget here, not at compile time). */
   def buildCmsIndex(docs: DataFrame, table: String,
-      depth: Int = CmsDepth, width: Int = CmsWidth): Unit = {
-    graft.sources.Formats.writeBucketed(cmsRows(docs, depth, width), table, Seq("slot"), 4)
-    val (n, fp) = graft.sources.Formats.corpusStamp(docs, "doc_id")
-    graft.sources.Formats.writeBuildMeta(docs.sparkSession, table,
-      s"kind=cms,d=$depth,w=$width", n, fp)
-  }
+      depth: Int = CmsDepth, width: Int = CmsWidth): Unit =
+    StoredIndex.build(cmsIndex(depth, width), table, docs)(_ => cmsRows(docs, depth, width))
+
+  /** The CMS counter table as a [[StoredIndex]] family (fixed 4 buckets). */
+  private def cmsIndex(depth: Int, width: Int) = Family(
+    _ => s"kind=cms,d=$depth,w=$width", "doc_id", "", Seq(Part("", Seq("slot"), 4)))
 
   /** Ingest half: the batch's OWN counter rows appended as deltas (the
     * accumulated sketch is neither read nor rewritten — the LM-counts
@@ -1168,10 +1137,7 @@ object TextAnalysis {
         s"w=${expectWidth.getOrElse(w)} but '$table' was built with d=$d,w=$w — " +
         "appending rows hashed at a different geometry would silently corrupt " +
         "every estimate; rebuild or drop the declaration")
-    graft.sources.Formats.writeBucketedAppend(cmsRows(newDocs, d, w), table, Seq("slot"), 4)
-    val (n, fp) = graft.sources.Formats.corpusStamp(newDocs, "doc_id")
-    graft.sources.Formats.foldBuildMeta(newDocs.sparkSession, table,
-      s"kind=cms,d=$d,w=$w", n, fp)
+    StoredIndex.append(cmsIndex(d, w), table, newDocs)(_ => cmsRows(newDocs, d, w))
   }
 
   /** Collapse appended delta rows to one row per `(d, slot)` — rides the
@@ -1179,7 +1145,7 @@ object TextAnalysis {
     * so the rewrite must restage bucketed files — the plain rewrite
     * would leave a bucketed catalog entry pointing at unbucketed files). */
   def compactCmsIndex(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
-    graft.sources.Formats.rewriteBucketed(spark, table, Seq("slot"), 4)(
+    graft.sources.Formats.rewriteBucketed(spark, table)(
       _.groupBy("d", "slot").agg(sum("cnt").as("cnt")))
 
   /** Point-frequency estimates for `queries` (a one-column `word` frame)

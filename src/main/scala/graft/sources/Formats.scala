@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTable}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, lit, max, min, shiftleft, shiftright, sum}
 import org.apache.spark.sql.types.StructType
 
@@ -125,12 +126,6 @@ object Formats {
       max(col(keyCol)).as(s"max_$keyCol"))
   }
 
-  /** Bucketed + sorted managed table (bucketing requires the table
-    * catalog). Joins/aggregations keyed on `bucketCol` against another
-    * table bucketed the same way run shuffle-free. */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String, numBuckets: Int): Unit =
-    writeBucketed(df, table, Seq(bucketCol), numBuckets)
-
   /** Overwrite only replaces a table THIS session's catalog knows about; a
     * managed location left by a previous session still blocks the create
     * (LOCATION_ALREADY_EXISTS). Drop both the catalog entry and any stale
@@ -154,17 +149,45 @@ object Formats {
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
-  /** Multi-column variant: the bucket key is the column tuple (hash of all
-    * of them), for tables probed on composite keys — e.g. an LSH signature
-    * index bucketed on (band_idx, band_val). */
+  /** Bucketed + sorted managed table (bucketing requires the table
+    * catalog). Joins/aggregations keyed on `bucketCols` against another
+    * table bucketed the same way run shuffle-free. The bucket key is the
+    * column tuple (hash of all of them), so tables probed on composite
+    * keys bucket on the tuple — e.g. an LSH signature index on
+    * (band_idx, band_val). This is the only writer that CHOOSES a layout:
+    * every later append and rewrite of the table reads it back from the
+    * catalog ([[bucketSpec]]). */
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String], numBuckets: Int): Unit = {
     dropForOverwrite(df.sparkSession, table)
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
+    inLayout(df, BucketSpec(numBuckets, bucketCols, bucketCols))
+      .mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
   }
+
+  /** The table's catalog entry — a metadata lookup, not a Spark job. */
+  private def catalogTable(spark: SparkSession, table: String): CatalogTable =
+    spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+
+  /** The bucket layout a table was CREATED with, as the catalog records
+    * it (None for a plain or partitioned table). Appends and rewrites
+    * take their layout from here, never from a caller's argument: the
+    * ping-pong swap moves only the table's location, so a rewrite hashed
+    * any other way would leave files the catalog's spec mis-describes. */
+  def bucketSpec(spark: SparkSession, table: String): Option[BucketSpec] =
+    catalogTable(spark, table).bucketSpec
+
+  /** `df`'s writer in `spec`'s bucketed + per-bucket-sorted layout. */
+  private def inLayout(df: DataFrame, spec: BucketSpec): DataFrameWriter[Row] = {
+    val w = df.write.bucketBy(spec.numBuckets,
+      spec.bucketColumnNames.head, spec.bucketColumnNames.tail.toSeq: _*)
+    if (spec.sortColumnNames.isEmpty) w
+    else w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail.toSeq: _*)
+  }
+
+  /** The stored bucket layout of `table`; loud when it has none. */
+  private def storedSpec(spark: SparkSession, table: String): BucketSpec =
+    bucketSpec(spark, table).getOrElse(throw new IllegalArgumentException(
+      s"'$table' is not a bucketed table — its layout cannot be kept"))
 
   /** Plain (unbucketed) managed-table overwrite with the same
     * cross-session idempotence as [[writeBucketed]] — for the small
@@ -249,22 +272,17 @@ object Formats {
         .saveAsTable(staging)
     }
 
-  /** Append a batch into a bucketed table's layout (creating the table on
-    * first use) — the incremental-ingest half of the bucketed-table story.
-    * Spark bucketing is per-file: each appended batch writes its own
-    * bucket-hashed, per-bucket-sorted files, so readers keep the
-    * exchange-free join/aggregation plan over the union, and ONLY the new
-    * batch is scanned or written (the existing data is never touched).
-    * Each append adds up to one file per bucket; [[compactParquet]]-style
-    * maintenance applies when the file count grows. The bucket spec must
-    * match the existing table's (Spark enforces this). */
-  def writeBucketedAppend(df: DataFrame, table: String, bucketCols: Seq[String],
-      numBuckets: Int): Unit =
-    df.write.mode(SaveMode.Append)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
+  /** Append a batch into an existing bucketed table's layout — the
+    * incremental-ingest half of the bucketed-table story. Spark bucketing
+    * is per-file: each appended batch writes its own bucket-hashed,
+    * per-bucket-sorted files, so readers keep the exchange-free
+    * join/aggregation plan over the union, and ONLY the new batch is
+    * scanned or written (the existing data is never touched). Each append
+    * adds up to one file per bucket; [[compactBucketed]] bounds the file
+    * count again. The layout is the table's own ([[bucketSpec]]). */
+  def writeBucketedAppend(df: DataFrame, table: String): Unit =
+    inLayout(df, storedSpec(df.sparkSession, table))
+      .mode(SaveMode.Append).format("parquet").saveAsTable(table)
 
   /** Managed table DIRECTORY-PARTITIONED on `partCol` — the layout for
     * derived tables probed on a low-cardinality key (e.g. an IVF cell id)
@@ -387,9 +405,8 @@ object Formats {
     * (same rows, same layout contract — the compacted gate shares its
     * uncompacted twin's oracle). Returns the table's parquet file count
     * after compaction. */
-  def compactBucketed(spark: SparkSession, table: String, bucketCols: Seq[String],
-      numBuckets: Int): Int =
-    rewriteBucketed(spark, table, bucketCols, numBuckets)(identity)
+  def compactBucketed(spark: SparkSession, table: String): Int =
+    rewriteBucketed(spark, table)(identity)
 
   /** Merging compaction for DELTA tables (the LM count-model design):
     * fold the accumulated per-batch delta rows back to ONE aggregated row
@@ -401,8 +418,8 @@ object Formats {
     * and after — the fold they run per query is exactly the fold this
     * materializes once. */
   def compactDeltaTable(spark: SparkSession, table: String, keyCols: Seq[String],
-      sumCols: Seq[String], bucketCols: Seq[String], numBuckets: Int): Int =
-    rewriteBucketed(spark, table, bucketCols, numBuckets) { df =>
+      sumCols: Seq[String]): Int =
+    rewriteBucketed(spark, table) { df =>
       if (sumCols.isEmpty) df.select(keyCols.map(col): _*).distinct()
       else df.groupBy(keyCols.map(col): _*)
         .agg(sum(sumCols.head).as(sumCols.head),
@@ -421,14 +438,12 @@ object Formats {
     * PHYSICAL delete must pay — at 100 TB forget requests are batched
     * and that pass amortized across them, which is exactly the API shape
     * here (one DataFrame of ids per purge, not one rewrite per id).
-    * Family-level wrappers ([[graft.ops.Dedup.purgeFromBandIndex]],
-    * [[graft.ops.TextAnalysis.purgeFromBm25Index]],
-    * [[graft.ops.Multimodal.purgeFromPhashIndex]]) compose this over
-    * every table of an index family and fold the deleted ids OUT of the
-    * build manifest. Returns the table's file count after the rewrite. */
-  def purgeBucketed(spark: SparkSession, table: String, bucketCols: Seq[String],
-      numBuckets: Int, idCol: String, deleteIds: DataFrame): Int =
-    rewriteBucketed(spark, table, bucketCols, numBuckets) { df =>
+    * [[StoredIndex.purge]] composes this over every table of an index
+    * family and folds the deleted ids OUT of the build manifest. Returns
+    * the table's file count after the rewrite. */
+  def purgeBucketed(spark: SparkSession, table: String, idCol: String,
+      deleteIds: DataFrame): Int =
+    rewriteBucketed(spark, table) { df =>
       df.join(broadcast(deleteIds.select(col(idCol)).distinct()),
         Seq(idCol), "left_anti")
     }
@@ -438,10 +453,12 @@ object Formats {
     * [[graft.ops.Dedup.mergeComponentsIncr]]: read the table's files,
     * apply `xform`, rewrite into the ping-pong location, swap visibility
     * with one ALTER. See [[compactBucketed]] for the full
-    * recovery-contract rationale. */
-  private[graft] def rewriteBucketed(spark: SparkSession, table: String,
-      bucketCols: Seq[String], numBuckets: Int)(
+    * recovery-contract rationale. The new generation is written in the
+    * table's own catalog layout ([[bucketSpec]]), so the swapped-in files
+    * always match the spec the catalog keeps declaring. */
+  private[graft] def rewriteBucketed(spark: SparkSession, table: String)(
       xform: DataFrame => DataFrame): Int = {
+    val spec = storedSpec(spark, table)
     // read the table's FILES as plain parquet, not `spark.table`: the
     // bucketed scan advertises HashPartitioning(numBuckets), so Catalyst
     // would elide the repartition as redundant — and then the
@@ -451,27 +468,16 @@ object Formats {
     // bucket. A raw file scan carries no partitioning claim, so the
     // shuffle survives and every task holds exactly one bucket's rows.
     pingPongRewrite(spark, table) { (oldPath, newPath, staging) =>
-      xform(spark.read.parquet(oldPath))
-        .repartition(numBuckets, bucketCols.map(col): _*)
-        .write.mode(SaveMode.Overwrite)
+      inLayout(xform(spark.read.parquet(oldPath))
+          .repartition(spec.numBuckets, spec.bucketColumnNames.map(col).toSeq: _*), spec)
+        .mode(SaveMode.Overwrite)
         .option("path", newPath) // external: drops never delete data
-        .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(bucketCols.head, bucketCols.tail: _*)
         .format("parquet")
         .saveAsTable(staging)
     }
     bucketedFileCount(spark, table)
   }
 
-  /** The ping-pong swap choreography shared by every crash-safe table
-    * rewrite ([[compactBucketed]], [[compactDeltaTable]],
-    * [[rezorderTable]]): recover any crashed predecessor's staging entry,
-    * derive the alternate location from the table's ACTUAL catalog
-    * location, clear it, let `stage(oldPath, newPath, stagingTable)`
-    * write the new generation as an EXTERNAL table at `newPath`, then
-    * swap visibility with one ALTER and reclaim the old directory. The
-    * `compact.after_stage` / `compact.after_swap` failpoint windows fire
-    * here, so every caller inherits the proven recovery contract. */
   /** Crash-safe whole-table rewrite for a PLAIN managed parquet table —
     * the un-bucketed twin of [[rewriteBucketed]], riding the same
     * ping-pong swap (and its proven failpoint windows): the ledger/intent
@@ -489,11 +495,21 @@ object Formats {
         .format("parquet").saveAsTable(staging)
     }
 
+  /** The ping-pong swap choreography shared by every crash-safe table
+    * rewrite ([[compactBucketed]], [[compactDeltaTable]],
+    * [[rezorderTable]]): recover any crashed predecessor's staging entry,
+    * derive the alternate location from the table's ACTUAL catalog
+    * location (a catalog lookup, not a query), clear it, let
+    * `stage(oldPath, newPath, stagingTable)` write the new generation as
+    * an EXTERNAL table at `newPath`, then swap visibility with one ALTER
+    * and reclaim the old directory. The
+    * `compact.after_stage` / `compact.after_swap` failpoint windows fire
+    * here, so every caller inherits the proven recovery contract. */
   private def pingPongRewrite(spark: SparkSession, table: String)(
       stage: (String, String, String) => Unit): Unit = {
     val staging = table + "__compacting"
     val conf = spark.sparkContext.hadoopConfiguration
-    val oldLoc = qualified(spark, tableLocation(spark, table))
+    val oldLoc = qualified(spark, tableLocation(spark, table).toString)
     // recover any staging ENTRY a crashed predecessor left: never a
     // managed drop (its location may BE the live data after a post-swap
     // crash) — external entries drop without touching files, and any
@@ -528,23 +544,21 @@ object Formats {
 
   // ---- Build manifests: index/model lifecycle metadata -----------------
   //
-  // Every build*Index/build*Model family stores derived state (codes,
-  // bands, postings, pivots, books, stats) whose validity is relative to
-  // ONE corpus generation and ONE parameter set — but the tables
-  // themselves carry neither (VERDICT r10 item 2: a reader cannot tell
-  // which generation an index was trained on, so a stale or
-  // foreign-parameter index ranks garbage silently). The manifest is the
-  // one-row `<table>_meta` answer: corpus row count + order-independent
+  // Every stored family's derived state (codes, bands, postings, pivots,
+  // books, stats) is valid for ONE corpus generation and ONE parameter
+  // set, but the tables themselves carry neither — a reader cannot tell
+  // which generation an index was built from, so a stale or
+  // foreign-parameter index would rank garbage silently. The manifest is
+  // the one-row `<table>_meta` answer: corpus row count + order-independent
   // fingerprint, the build's parameter string, an append counter, and the
-  // build wall-clock. Contract split by cost:
-  //   - builds WRITE it (one extra single-column aggregate per build);
-  //   - appends REQUIRE param compatibility and FOLD the batch's stamp in
-  //     (xor/add — no corpus reread, using the same batch-disjointness
-  //     the appends already demand);
-  //   - probes run [[requireBuilt]] — a catalog existence check only
-  //     (no job, no scan), so the per-query overhead is nil;
-  //   - [[isStaleFor]] is the opt-in deep check (one corpus scan) for
-  //     maintenance jobs and specs.
+  // build wall-clock. [[StoredIndex]] writes it for every family: last on
+  // build, and folded (xor/add, no corpus reread) after the data steps of
+  // every append and purge. Readers pay by need:
+  //   - probes run [[requireBuilt]] — a catalog existence check only (no
+  //     job, no scan), so the per-query overhead is nil;
+  //   - [[metaParams]] recovers the stored sketch/index parameters;
+  //   - [[isStaleFor]] is the opt-in deep check (one corpus scan) and
+  //     [[stampAudit]] the detector for torn or overlapping appends.
 
   /** Manifest table of a stored index/model family. */
   def metaTable(table: String): String = table + "_meta"
@@ -632,38 +646,25 @@ object Formats {
     fields(declared).forall { case (k, v) => b.get(k).forall(_ == v) }
   }
 
-  /** Append-side gate + stamp fold: requires the manifest exists and the
-    * append's declared params are compatible with the build's, then
-    * rewrites the row with the batch's stamp folded in.
-    *
-    * HARD CONTRACT — single writer PER PROCESS-SET, crash means rebuild
-    * (ADVICE r11): this is a read-modify-write of the one-row meta
-    * table, and every append* path runs it AFTER its data append. A
-    * crash in the window between the two leaves index rows committed
-    * with no stamp folded (the manifest understates the corpus) —
-    * [[stampAudit]] is the detector. WITHIN one JVM the fold is
-    * serialized on a per-table lock (r14, ADVICE r11's concurrent-append
-    * refusal): two same-session appenders — e.g. a streaming foreachBatch
-    * racing a maintenance job — can no longer interleave the
-    * read-modify-write and silently lose one batch's stamp; FormatsSpec
-    * hammers the fold from many threads and proves the manifest equals
-    * the full sum/xor. ACROSS processes no lock exists (there is no
-    * external coordinator in this engine): run at most one appender
-    * process per index family at a time, and treat any append that
-    * crashed mid-way as index corruption: rebuild (the same recovery the
-    * bucketed-append data path itself requires — Spark's
-    * `SaveMode.Append` is not transactional either).
-    *
-    * `bootstrap` covers the one legitimate manifest-less append: families
-    * whose derivation is stateless per document (SQ codes, LSH bands,
-    * MinHash bands) may START by appending — the first append creates
-    * the table, so it also creates the manifest from (0, 0). Callers pass
-    * bootstrap = "the main table did not exist before this append";
-    * a missing manifest NEXT TO an existing table stays a loud failure
-    * (that is the partially-deleted / foreign-index case). */
   private val metaLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  /** The manifest fold behind [[StoredIndex]]'s append and purge: requires
+    * the manifest exists and the declared params are compatible with the
+    * build's ([[paramsCompatible]]), then rewrites the row with the stamp
+    * folded in (a purge folds a negated count). The fold is a
+    * read-modify-write of the one-row table, serialized on a per-table
+    * lock within one JVM — two same-session writers (a streaming
+    * foreachBatch racing a maintenance job) cannot lose a stamp, and
+    * FormatsSpec hammers it from many threads. Across processes no lock
+    * exists: one writer process per family, the crash contract
+    * [[StoredIndex]] states.
+    *
+    * `bootstrap` covers the one legitimate manifest-less append: a family
+    * whose derivation is stateless per row may START by appending, so the
+    * append that created its tables also creates the manifest from
+    * (0, 0). A missing manifest NEXT TO an existing table stays a loud
+    * failure (the partially-deleted / foreign-index case). */
   def foldBuildMeta(spark: SparkSession, table: String, params: String,
       batchN: Long, batchFp: Long, bootstrap: Boolean = false): Unit = {
     val lock = metaLocks.computeIfAbsent(metaTable(table), _ => new Object)
@@ -779,15 +780,15 @@ object Formats {
     stale
   }
 
-  private def tableLocation(spark: SparkSession, table: String): String =
-    spark.sql(s"DESCRIBE TABLE EXTENDED `$table`")
-      .filter(col("col_name") === "Location").select("data_type")
-      .collect()(0).getString(0)
+  /** The table's location as the catalog records it — a metadata
+    * lookup, not a `DESCRIBE` query. */
+  private def tableLocation(spark: SparkSession, table: String): java.net.URI =
+    catalogTable(spark, table).location
 
   /** Number of parquet data files under a managed table's location — the
     * quantity compaction exists to bound. */
   def bucketedFileCount(spark: SparkSession, table: String): Int = {
-    val loc = new org.apache.hadoop.fs.Path(new java.net.URI(tableLocation(spark, table)))
+    val loc = new org.apache.hadoop.fs.Path(tableLocation(spark, table))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val it = fs.listFiles(loc, true)
     var n = 0

@@ -353,6 +353,16 @@ class CurationSpec extends SparkTestBase {
     }
   }
 
+  test("the Bloom-decontaminated daily batch leaves no session-cache entries behind") {
+    withBandIndex("graft_daily_bloom_cache") {
+      spark.catalog.clearCache()
+      Curation.dailyBatch(spark, all, "graft_daily_bloom_cache", bloomDecontam = true)
+        .collect()
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "contaminationStatsBloom must not leave cached plans in the session")
+    }
+  }
+
   test("retention: 20 micro-batches keep bounded artifacts, equal the " +
       "unretained final state, and a post-retention replay is exactly-once") {
     val root = java.nio.file.Files.createTempDirectory("graft-sret").toString

@@ -144,12 +144,12 @@ class FormatsSpec extends SparkTestBase {
       // build + three appends: each batch writes its own per-bucket files
       Formats.writeBucketed(o.filter(col("o_orderkey") % 4 === 0), "orders_cpt", Seq("o_custkey"), 8)
       (1 to 3).foreach(i =>
-        Formats.writeBucketedAppend(o.filter(col("o_orderkey") % 4 === i), "orders_cpt", Seq("o_custkey"), 8))
+        Formats.writeBucketedAppend(o.filter(col("o_orderkey") % 4 === i), "orders_cpt"))
       val before = Formats.bucketedFileCount(spark, "orders_cpt")
       assert(before > 8, s"appends must accumulate files past one per bucket: $before")
       val rows = spark.table("orders_cpt").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-      val after = Formats.compactBucketed(spark, "orders_cpt", Seq("o_custkey"), 8)
+      val after = Formats.compactBucketed(spark, "orders_cpt")
       // exactly one file per non-empty bucket, and the helper agrees with
       // the filesystem
       assert(after <= 8, s"compaction must yield at most one file per bucket: $after")
@@ -180,7 +180,7 @@ class FormatsSpec extends SparkTestBase {
     val o = Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey")
     try {
       Formats.writeBucketed(o.filter(col("o_orderkey") % 2 === 0), "orders_swp", Seq("o_custkey"), 4)
-      Formats.writeBucketedAppend(o.filter(col("o_orderkey") % 2 === 1), "orders_swp", Seq("o_custkey"), 4)
+      Formats.writeBucketedAppend(o.filter(col("o_orderkey") % 2 === 1), "orders_swp")
       val expected = o.count()
       // hammer the table by NAME from another thread for the whole swap:
       // every resolution must find a complete table (the old drop→rename
@@ -208,7 +208,7 @@ class FormatsSpec extends SparkTestBase {
         }
       })
       reader.start()
-      try Formats.compactBucketed(spark, "orders_swp", Seq("o_custkey"), 4)
+      try Formats.compactBucketed(spark, "orders_swp")
       finally { stop = true; reader.join(30000) }
       assert(failures.isEmpty, s"concurrent reader failed: ${failures.peek()}")
       assert(reads.get() > 0, "reader must have resolved the table during the swap")
@@ -227,11 +227,11 @@ class FormatsSpec extends SparkTestBase {
     val o = Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey")
     try {
       Formats.writeBucketed(o.filter(col("o_orderkey") % 2 === 0), "orders_rpt", Seq("o_custkey"), 4)
-      Formats.writeBucketedAppend(o.filter(col("o_orderkey") % 2 === 1), "orders_rpt", Seq("o_custkey"), 4)
+      Formats.writeBucketedAppend(o.filter(col("o_orderkey") % 2 === 1), "orders_rpt")
       val rows = spark.table("orders_rpt").collect()
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
       (1 to 3).foreach { i =>
-        val files = Formats.compactBucketed(spark, "orders_rpt", Seq("o_custkey"), 4)
+        val files = Formats.compactBucketed(spark, "orders_rpt")
         assert(files <= 4, s"round $i: $files files")
         val now = spark.table("orders_rpt").collect()
           .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
@@ -249,34 +249,34 @@ class FormatsSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     try {
       Formats.writeBucketed(o.filter(col("o_orderkey") % 2 === 0), "orders_fip", Seq("o_custkey"), 4)
-      Formats.writeBucketedAppend(o.filter(col("o_orderkey") % 2 === 1), "orders_fip", Seq("o_custkey"), 4)
+      Formats.writeBucketedAppend(o.filter(col("o_orderkey") % 2 === 1), "orders_fip")
       val expected = rowsOf
 
       // window 1: die AFTER the rewrite, BEFORE the visibility swap —
       // the live table must still serve the old complete generation
       Formats.failpoint = "compact.after_stage"
       intercept[RuntimeException](
-        Formats.compactBucketed(spark, "orders_fip", Seq("o_custkey"), 4))
+        Formats.compactBucketed(spark, "orders_fip"))
       Formats.failpoint = ""
       assert(rowsOf === expected, "pre-swap crash must leave live data untouched")
       // ...and a plain re-run converges to the compacted layout
-      assert(Formats.compactBucketed(spark, "orders_fip", Seq("o_custkey"), 4) <= 4)
+      assert(Formats.compactBucketed(spark, "orders_fip") <= 4)
       assert(rowsOf === expected)
 
       // window 2: die AFTER the swap, BEFORE cleanup — the live table is
       // already complete at the new location; the old generation is the
       // documented orphan
-      Formats.writeBucketedAppend(o.limit(0), "orders_fip", Seq("o_custkey"), 4)
+      Formats.writeBucketedAppend(o.limit(0), "orders_fip")
       Formats.failpoint = "compact.after_swap"
       intercept[RuntimeException](
-        Formats.compactBucketed(spark, "orders_fip", Seq("o_custkey"), 4))
+        Formats.compactBucketed(spark, "orders_fip"))
       Formats.failpoint = ""
       assert(rowsOf === expected, "post-swap crash must leave the table complete")
       assert(spark.catalog.tableExists("orders_fip__compacting"),
         "post-swap crash leaves the staging entry (recovered on re-run)")
       // the re-run reclaims the orphan and converges; afterwards exactly
       // ONE of the ping-pong directories exists (no leaked generation)
-      assert(Formats.compactBucketed(spark, "orders_fip", Seq("o_custkey"), 4) <= 4)
+      assert(Formats.compactBucketed(spark, "orders_fip") <= 4)
       assert(rowsOf === expected)
       assert(!spark.catalog.tableExists("orders_fip__compacting"))
       val wh = spark.conf.get("spark.sql.warehouse.dir")
@@ -297,8 +297,8 @@ class FormatsSpec extends SparkTestBase {
     val wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     val o = Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey", "o_totalprice")
     val c = Tables.customer(spark, sfDir).select("c_custkey", "c_mktsegment")
-    Formats.writeBucketed(o, "orders_b", "o_custkey", 8)
-    Formats.writeBucketed(c, "customer_b", "c_custkey", 8)
+    Formats.writeBucketed(o, "orders_b", Seq("o_custkey"), 8)
+    Formats.writeBucketed(c, "customer_b", Seq("c_custkey"), 8)
     try {
       // disable broadcast so only bucketing can avoid the shuffle
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -350,12 +350,7 @@ class FormatsSpec extends SparkTestBase {
       assert((n1, fp1) === Formats.corpusStamp(emb, "vec_id"))
       assert(a1 === 1L)
       assert(!Formats.isStaleFor(spark, "t_meta_spec", emb, "vec_id"))
-      // appending with a DIFFERENT bucket spec: Spark's own bucketed-append
-      // enforcement rejects the main-table write before our gate runs
-      intercept[org.apache.spark.sql.AnalysisException] {
-        Similarity.appendToLshIndex(rest, "t_meta_spec", numBuckets = 4)
-      }
-      // ... and the manifest gate covers the specs Spark CANNOT see (model
+      // the manifest gate covers the specs the catalog CANNOT see (model
       // params, index kind): declaring a different kind fails loudly
       val ex = intercept[IllegalArgumentException] {
         Formats.foldBuildMeta(spark, "t_meta_spec", "kind=ivf", 1L, 1L)
@@ -375,6 +370,57 @@ class FormatsSpec extends SparkTestBase {
       }
     } finally {
       Seq("t_meta_spec", "t_meta_spec_meta")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
+  test("stored-index lifecycle keeps the build's bucket layout through append, purge and compact") {
+    import graft.ops.{Dedup, TextAnalysis}
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    val docs = Tables.documents(spark, sfDir)
+    val probe = docs.filter(col("doc_id") % 5 === 0)
+    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
+    val forget = corpus.filter(col("doc_id") % 7 === 3).select("doc_id")
+    val terms = Seq("spark", "window", "join")
+    val tables = Seq("t_lay_band", "t_lay_band_sigs", "t_lay_bm25")
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    try {
+      Dedup.buildBandIndex(corpus.filter(col("doc_id") % 2 === 0), "t_lay_band", numBuckets = 4)
+      TextAnalysis.buildBm25Index(corpus.filter(col("doc_id") % 2 === 0), "t_lay_bm25",
+        numBuckets = 4)
+      val built = tables.map(t => t -> Formats.bucketSpec(spark, t).get).toMap
+      assert(built.values.forall(_.numBuckets == 4), s"build must write 4 buckets: $built")
+      // after every step: the catalog spec is the build's, every file sits
+      // in one of its 4 buckets, and probes equal a one-shot 4-bucket
+      // build of the rows the index now holds
+      def check(step: String, rows: org.apache.spark.sql.DataFrame): Unit = {
+        tables.foreach { t =>
+          assert(Formats.bucketSpec(spark, t).get === built(t), s"$step changed $t's spec")
+          val ids = spark.table(t).inputFiles.toSeq
+            .map(f => BucketingUtils.getBucketId(new org.apache.hadoop.fs.Path(f).getName))
+          assert(ids.nonEmpty && ids.forall(_.exists(_ < 4)),
+            s"$step left files outside 4 buckets in $t: $ids")
+        }
+        Dedup.buildBandIndex(rows, "t_lay_ref_band", numBuckets = 4)
+        TextAnalysis.buildBm25Index(rows, "t_lay_ref_bm25", numBuckets = 4)
+        assert(sorted(Dedup.nearDupPairsIndexed(spark, "t_lay_band", probe)) ===
+          sorted(Dedup.nearDupPairsIndexed(spark, "t_lay_ref_band", probe)), step)
+        assert(sorted(TextAnalysis.bm25SearchIndexed(spark, "t_lay_bm25", terms)) ===
+          sorted(TextAnalysis.bm25SearchIndexed(spark, "t_lay_ref_bm25", terms)), step)
+      }
+      check("build", corpus.filter(col("doc_id") % 2 === 0))
+      Dedup.appendToBandIndex(corpus.filter(col("doc_id") % 2 =!= 0), "t_lay_band")
+      TextAnalysis.appendToBm25Index(corpus.filter(col("doc_id") % 2 =!= 0), "t_lay_bm25")
+      check("append", corpus)
+      val kept = corpus.join(forget, Seq("doc_id"), "left_anti")
+      Dedup.purgeFromBandIndex(spark, "t_lay_band", forget)
+      TextAnalysis.purgeFromBm25Index(spark, "t_lay_bm25", forget)
+      check("purge", kept)
+      tables.foreach(t => Formats.compactBucketed(spark, t))
+      check("compact", kept)
+    } finally {
+      Seq("t_lay_band", "t_lay_bm25", "t_lay_ref_band", "t_lay_ref_bm25")
+        .flatMap(t => Seq(t, t + "_sigs", t + "_stats", t + "_meta"))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
