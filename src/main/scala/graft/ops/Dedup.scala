@@ -281,7 +281,8 @@ object Dedup {
     * batch's probe shuffles ONLY the batch side (or broadcasts it) and an
     * index⋈index self-mining join plans with zero exchanges. */
   def buildBandIndex(docs: DataFrame, table: String, numBuckets: Int = 8): Unit =
-    withBandRows(docs)(StoredIndex.build(bandIndex(numBuckets), table, docs))
+    withSignatureRows(minHashSignatures(docs))(
+      StoredIndex.build(bandIndex(numBuckets), table, docs))
 
   /** The band index as a [[StoredIndex]] family: band rows bucketed on the
     * probe key, one signature row per doc in `_sigs` (the id table). */
@@ -291,9 +292,10 @@ object Dedup {
       Part("_sigs", Seq("doc_id"), numBuckets)),
     bootstrap = true)
 
-  /** Hand `write` the band-index rows of `docs` by part, signing once. */
-  private def withBandRows(docs: DataFrame)(write: (String => DataFrame) => Unit): Unit = {
-    val sigs = minHashSignatures(docs).persist()
+  /** Hand `write` the band-index rows of signatures `sigs` by part; `sigs`
+    * feeds both parts, so it is held for the duration of the write. */
+  private def withSignatureRows(sigs0: DataFrame)(write: (String => DataFrame) => Unit): Unit = {
+    val sigs = sigs0.persist()
     try write { case "" => bandedFromSignatures(sigs); case "_sigs" => sigs }
     finally sigs.unpersist()
   }
@@ -307,7 +309,18 @@ object Dedup {
     * union (gated under the same oracle as [[nearDupPairsIndexed]]).
     * Batches must be doc-disjoint, same contract as the ANN/BM25 appends. */
   def appendToBandIndex(newDocs: DataFrame, table: String): Unit =
-    withBandRows(newDocs)(StoredIndex.append(bandIndex(), table, newDocs))
+    appendSignaturesToBandIndex(minHashSignatures(newDocs), table,
+      graft.sources.Formats.corpusStamp(newDocs, "doc_id"))
+
+  /** [[appendToBandIndex]] for a batch whose [[minHashSignatures]] and
+    * corpus stamp the caller already holds — e.g. the signatures its
+    * [[probeBandIndex]] ran with — so nothing is re-shingled or re-counted.
+    * `stamp` is taken after the data steps, where [[StoredIndex.append]]
+    * takes it. */
+  def appendSignaturesToBandIndex(sigs: DataFrame, table: String,
+      stamp: => (Long, Long)): Unit =
+    withSignatureRows(sigs)(
+      StoredIndex.appendStamped(bandIndex(), table, sigs.sparkSession, stamp))
 
   /** Delete propagation — the FORGET half of the band-index lifecycle
     * (build → append xN → purge/compact → probe): every band and
@@ -346,11 +359,19 @@ object Dedup {
     * Candidate verification joins the (collision-sized) pair list against
     * the stored `_sigs` table on its bucketed key. */
   def nearDupPairsIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
-      newBatch: DataFrame, minSigFrac: Double = 0.5): DataFrame = {
+      newBatch: DataFrame, minSigFrac: Double = 0.5): DataFrame =
+    probeBandIndex(spark, table,
+      minHashSignatures(newBatch).localCheckpoint(eager = false), minSigFrac)
+
+  /** [[nearDupPairsIndexed]] for a batch already signed: `sigs` is the
+    * batch's [[minHashSignatures]] table. It feeds the banding and the
+    * verification side, so pass it materialized (a lazy local checkpoint)
+    * when its plan is not a cheap read. */
+  def probeBandIndex(spark: org.apache.spark.sql.SparkSession, table: String,
+      sigs: DataFrame, minSigFrac: Double = 0.5): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
-    val sb = minHashSignatures(newBatch).localCheckpoint(eager = false)
-    val candidates = indexedCandidateJoin(spark, table, bandedFromSignatures(sb))
-    scoreCandidates(candidates, spark.table(table + "_sigs"), sb, minSigFrac)
+    val candidates = indexedCandidateJoin(spark, table, bandedFromSignatures(sigs))
+    scoreCandidates(candidates, spark.table(table + "_sigs"), sigs, minSigFrac)
   }
 
   /** Per-document 32-bit SimHash over whitespace tokens (with
@@ -870,11 +891,23 @@ object Dedup {
     * broadcastable); the training side is the one [[positionalSpans]]
     * scan, a semi-join against the benchmark hashes, and two per-doc
     * counts, all map-side partial-aggregated. */
-  def contaminationStats(train: DataFrame, benchmark: DataFrame, n: Int = 8): DataFrame = {
+  def contaminationStats(train: DataFrame, benchmark: DataFrame, n: Int = 8): DataFrame =
+    contaminationStatsAgainst(train, benchSpanHashes(benchmark, n), n)
+
+  /** The benchmark side of the decontamination scanners: the DISTINCT
+    * n-token span hashes of `benchmark` (one column, `sh`). A caller that
+    * scans many training batches against one benchmark reduces it once and
+    * passes the set to [[contaminationStatsAgainst]]. */
+  def benchSpanHashes(benchmark: DataFrame, n: Int = 8): DataFrame =
+    positionalSpans(benchmark, n).select("sh").distinct()
+
+  /** [[contaminationStats]] against a benchmark already reduced to its
+    * span-hash set ([[benchSpanHashes]] with the same `n`). */
+  def contaminationStatsAgainst(train: DataFrame, benchHashes: DataFrame,
+      n: Int = 8): DataFrame = {
     // feeds both the total count and the contaminated count
     val sp = positionalSpans(train, n).select("doc_id", "sh")
       .localCheckpoint(eager = false)
-    val benchHashes = positionalSpans(benchmark, n).select("sh").distinct()
     contaminationTail(sp, sp.join(benchHashes, Seq("sh"), "left_semi"))
   }
 
@@ -908,8 +941,7 @@ object Dedup {
     // distinct-hash checkpoint (materialized by the count): feeds the
     // count, the sketch aggregate, and the exactness join — a local
     // checkpoint, not a persist, so no session-cache entry outlives the call
-    val benchHashes = positionalSpans(benchmark, n).select("sh").distinct()
-      .localCheckpoint(eager = false)
+    val benchHashes = benchSpanHashes(benchmark, n).localCheckpoint(eager = false)
     val bloom = benchHashes.stat.bloomFilter(
       "sh", math.max(benchHashes.count(), 1L), fpp)
     val sp = positionalSpans(train, n).select("doc_id", "sh")

@@ -213,11 +213,18 @@ object Engine {
   }
 
   /** A session of the job's own whose input-split target is the job's
-    * shard size. Spark reads `spark.sql.files.maxPartitionBytes` when the
-    * scan is planned, so concurrent jobs must not share the conf. */
+    * shard size and whose shuffle partition count is its reducer count.
+    * Spark reads both when the query is planned, so concurrent jobs must
+    * not share the conf. With `reducerCount` shuffle partitions the word
+    * count's aggregation exchange hash-partitions on `word` into exactly
+    * the reducers, so it is the job's one shuffle. AQE partition
+    * coalescing stays off here: it would merge the reducers of a small
+    * job into one task and write one file instead of `reducerCount`. */
   def jobSession(spark: SparkSession, spec: JobSpec): SparkSession = {
     val job = spark.newSession()
     job.conf.set("spark.sql.files.maxPartitionBytes", spec.shardSize)
+    job.conf.set("spark.sql.shuffle.partitions", spec.reducerCount.toLong)
+    job.conf.set("spark.sql.adaptive.coalescePartitions.enabled", false)
     job
   }
 
@@ -231,14 +238,22 @@ object Engine {
     * a [[jobSession]] as one query; the distinct-key count it returns is
     * observed on the written plan, not counted by a second query. */
   def submitWordCount(spark: SparkSession, spec: JobSpec, outDir: String): Long = {
-    val job = jobSession(spark, spec)
     val keys = Observation()
-    TextOps.wordCount(readText(job, spec).withColumnRenamed("value", "text"))
-      .observe(keys, count(lit(1)).as("n"))
-      .repartition(spec.reducerCount, col("word"))
-      .sortWithinPartitions("word")
-      .select(concat_ws(" ", col("word"), col("cnt")))
+    wordCountLines(jobSession(spark, spec), spec, keys)
       .write.mode(SaveMode.Overwrite).text(outDir)
     keys.get("n").asInstanceOf[Long]
   }
+
+  /** The job's output rows in `job` (a [[jobSession]]): one `word count`
+    * line per distinct word, hash-partitioned on the word into
+    * `reducerCount` partitions by the aggregation's own exchange (the
+    * partitioning `repartition(reducerCount, word)` would produce, without
+    * a second shuffle), each sorted by word; `keys` observes the
+    * distinct-word count. */
+  private[graft] def wordCountLines(job: SparkSession, spec: JobSpec,
+      keys: Observation): DataFrame =
+    TextOps.wordCount(readText(job, spec).withColumnRenamed("value", "text"))
+      .observe(keys, count(lit(1)).as("n"))
+      .sortWithinPartitions("word")
+      .select(concat_ws(" ", col("word"), col("cnt")))
 }

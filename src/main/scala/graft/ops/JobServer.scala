@@ -47,7 +47,15 @@ final class JobServer(spark: SparkSession, outRoot: String, maxParallel: Int = 4
   private val ids = new java.util.concurrent.atomic.AtomicInteger(0)
   private val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Engine.JobHandle]()
   private val queue = new Engine.JobQueue(spark, maxParallel)
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+  private val server = {
+    // the JDK server writes a response's headers and body separately, so
+    // with Nagle on the body waits for the client's delayed ACK (~40 ms
+    // per request on loopback). The server reads this once per JVM, on
+    // its first create; a value the deployment already set is kept.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+  }
   server.createContext("/jobs", (ex: HttpExchange) => handle(ex))
 
   /** Start listening; returns the bound (ephemeral) port. */

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTable}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, lit, max, min, shiftleft, shiftright, sum}
+import org.apache.spark.sql.functions.{bit_xor, broadcast, coalesce, col, count, expr, lit, max, min, shiftleft, shiftright, sum, when}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink format surface beyond the reference's text blobs (SURVEY
@@ -484,16 +484,20 @@ object Formats {
     * compactions of the streaming daily pipeline's retention policy run
     * through here. `xform`'s result is written as ONE file (these tables
     * are watermark-row-sized by contract), and an EMPTY result still
-    * lands one footer-bearing part file so the table stays readable. */
+    * lands one footer-bearing part file so the table stays readable. The
+    * old generation is read with the catalog's schema, so no job infers
+    * it from the parquet footers. */
   private[graft] def rewritePlain(spark: SparkSession, table: String)(
-      xform: DataFrame => DataFrame): Unit =
+      xform: DataFrame => DataFrame): Unit = {
+    val schema = catalogTable(spark, table).schema
     pingPongRewrite(spark, table) { (oldPath, newPath, staging) =>
-      xform(spark.read.parquet(oldPath))
+      xform(spark.read.schema(schema).parquet(oldPath))
         .repartition(1)
         .write.mode(SaveMode.Overwrite)
         .option("path", newPath) // external: drops never delete data
         .format("parquet").saveAsTable(staging)
     }
+  }
 
   /** The ping-pong swap choreography shared by every crash-safe table
     * rewrite ([[compactBucketed]], [[compactDeltaTable]],
@@ -579,11 +583,24 @@ object Formats {
     * production appenders must enforce id-disjointness upstream (all of
     * this engine's appenders derive batches from disjoint id splits). */
   def corpusStamp(df: DataFrame, idCol: String): (Long, Long) = {
-    val h = graft.functions.CrossHash.h60(col(idCol).cast("string"))
-    val r = df.select(h.as("h"))
-      .agg(count(lit(1)).as("n"), org.apache.spark.sql.functions.expr("bit_xor(h)").as("fp"))
-      .head()
+    val aggs = stampAggs(idCol)
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  /** [[corpusStamp]]'s two aggregates, `n` and `fp`, over the rows where
+    * `keep` holds — the one stamp formula, also attachable as an
+    * [[org.apache.spark.sql.Observation]] to a write that already scans
+    * the rows ([[observedStamp]] reads it back). */
+  def stampAggs(idCol: String, keep: Column = lit(true)): Seq[Column] = Seq(
+    count(when(keep, lit(1))).as("n"),
+    bit_xor(when(keep, graft.functions.CrossHash.h60(col(idCol).cast("string")))).as("fp"))
+
+  /** The stamp an [[org.apache.spark.sql.Observation]] of [[stampAggs]]
+    * collected (blocks until the observed query has run). */
+  def observedStamp(obs: org.apache.spark.sql.Observation): (Long, Long) = {
+    val m = obs.get
+    (m("n").asInstanceOf[Long], Option(m("fp")).fold(0L)(_.asInstanceOf[Long]))
   }
 
   /** Write the family's one-row manifest (build side). */

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions.broadcast
   *  - the write order: data parts first (in declaration order), the
   *    family's own side tables next (`sides`), the manifest last;
   *  - the stamp: [[Formats.corpusStamp]] of the input on build and
-  *    append, and of the ids actually present in the id table on purge
-  *    (so over-broad or re-issued forget requests fold nothing);
+  *    append (or one the caller already holds, [[appendStamped]]), and
+  *    of the ids actually present in the id table on purge (so
+  *    over-broad or re-issued forget requests fold nothing);
   *  - the manifest: written on build, folded on append and purge
   *    ([[Formats.foldBuildMeta]] — the `paramsCompatible` gate, the
   *    per-table fold lock and the bootstrap rule);
@@ -73,8 +74,16 @@ object StoredIndex {
     * layout (a part that does not exist yet is created in the declared
     * one), then `sides`, then the batch stamp folded into the manifest. */
   def append(family: Family, table: String, input: DataFrame, sides: => Unit = ())(
-      rows: String => DataFrame): Unit = {
-    val spark = input.sparkSession
+      rows: String => DataFrame): Unit =
+    appendStamped(family, table, input.sparkSession,
+      Formats.corpusStamp(input, family.idCol), sides)(rows)
+
+  /** [[append]] with the batch stamp supplied by the caller — one that
+    * already holds it (e.g. observed on an earlier write of the batch)
+    * folds it without a second count. `stamp` is evaluated after the data
+    * steps and `sides`, right before the fold. */
+  def appendStamped(family: Family, table: String, spark: SparkSession,
+      stamp: => (Long, Long), sides: => Unit = ())(rows: String => DataFrame): Unit = {
     val fresh = !spark.catalog.tableExists(table + family.parts.head.suffix)
     val buckets = storedBuckets(spark, family, table)
     family.parts.foreach { p =>
@@ -87,7 +96,7 @@ object StoredIndex {
       else Formats.writeBucketedAppend(df, t)
     }
     sides
-    val (n, fp) = Formats.corpusStamp(input, family.idCol)
+    val (n, fp) = stamp
     Formats.foldBuildMeta(spark, table, family.params(buckets), n, fp,
       bootstrap = fresh && family.bootstrap)
   }

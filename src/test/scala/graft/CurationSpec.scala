@@ -485,13 +485,66 @@ class CurationSpec extends SparkTestBase {
     }
   }
 
+  test("one streamed micro-batch stays within its Spark job and SQL execution budget") {
+    val root = java.nio.file.Files.createTempDirectory("graft-sdbudget").toString
+    val batch = Curation.batchOf(all).select("doc_id", "text")
+    // counts every job of micro-batch 1 and every SQL execution started
+    // while its run is under way; a marker job drains the (FIFO) bus
+    final class Counter extends org.apache.spark.scheduler.SparkListener {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val sqls = new java.util.concurrent.atomic.AtomicInteger()
+      @volatile var marked = false
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("streaming.sql.batchId") == "1")) jobs.incrementAndGet()
+        if (p.exists(_.getProperty("spark.jobGroup.id") == "graft-budget-marker")) marked = true
+      }
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          sqls.incrementAndGet()
+        case _ =>
+      }
+    }
+    val counter = new Counter
+    try {
+      Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_bud")
+      writeSnap0("graft_sd_bud_snap0")
+      def day(i: Int): Unit = {
+        batch.filter(col("doc_id") % 2 === i).coalesce(1)
+          .write.mode("append").parquet(s"$root/stage")
+        runStream(s"$root/stage", "graft_sd_bud", s"$root/led", "graft_sd_bud_snap0",
+          "graft_sd_buds", s"$root/ck", retain = Some(1))
+      }
+      day(0) // batch 0 creates the ledgers; batch 1 is the steady state
+      spark.sparkContext.addSparkListener(counter)
+      day(1)
+      spark.sparkContext.setJobGroup("graft-budget-marker", "drain")
+      try spark.sparkContext.parallelize(Seq(1)).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!counter.marked && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(counter.marked, "listener bus did not drain")
+      assert(spark.table("graft_sd_buds_ledger").head().getLong(0) === 1L)
+      // measured on this suite's corpus (local[4]): 38 Spark jobs and 45
+      // SQL executions, where recomputing each per-batch fact took 55 and 50
+      assert(counter.jobs.get <= 38 && counter.sqls.get <= 45,
+        s"${counter.jobs.get} Spark jobs and ${counter.sqls.get} SQL executions in one micro-batch")
+    } finally {
+      spark.sparkContext.removeSparkListener(counter)
+      dropIdx("graft_sd_bud")
+      dropTables("graft_sd_bud_snap0", "graft_sd_buds_ledger", "graft_sd_buds_idxintent",
+        "graft_sd_buds_b0", "graft_sd_buds_b1")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
+  }
+
   test("a configured-but-missing tombstone table fails loudly (no silent no-op)") {
     // ADVICE r14: a typo'd takedown-list name must never degrade the
     // compliance path to "admit everything" — configured means enforced
     val ex = intercept[IllegalArgumentException] {
       Curation.commitStreamDailyBatch(spark,
         Curation.batchOf(all).select("doc_id", "text"), 0L,
-        Curation.benchOf(all), "graft_sr_nonexistent_band",
+        Dedup.benchSpanHashes(Curation.benchOf(all)), "graft_sr_nonexistent_band",
         "/tmp/graft-sr-noled", "graft_sr_nosnap", "graft_sr_noprefix",
         tombstones = Some("graft_sr_no_such_tombstone_table"))
     }

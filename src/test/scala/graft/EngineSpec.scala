@@ -2,10 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 import graft.ops.Engine
 import graft.ops.Engine.JobSpec
 
-class EngineSpec extends SparkTestBase {
+class EngineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("submitWordCount: text in -> reducerCount sorted 'word count' text files out") {
     val in = Files.createTempDirectory("graft_in")
@@ -30,6 +34,25 @@ class EngineSpec extends SparkTestBase {
       val keys = ws.map(_._2).toSeq
       assert(keys == keys.sorted)
     }
+  }
+
+  test("a job shuffles once and writes exactly reducerCount files, however small") {
+    // 300 distinct words in ~3 KB: far below AQE's coalescing target, so a
+    // coalescing planner would merge the reducers into one task and file
+    val in = Files.createTempDirectory("graft_wc_once")
+    Files.writeString(in.resolve("a.txt"),
+      (0 until 300).map(i => s"w$i w$i v$i").grouped(10).map(_.mkString(" ")).mkString("\n"))
+    val spec = JobSpec(Seq(in.resolve("a.txt").toString), reducerCount = 4)
+    val out = Files.createTempDirectory("graft_wc_once_out").resolve("j")
+    assert(Engine.submitWordCount(spark, spec, out.toString) === 600)
+    val parts = Files.list(out).toArray.map(_.toString).filter(_.matches(".*part-.*\\.txt$"))
+    assert(parts.length === 4, parts.mkString(", "))
+    // the aggregation's exchange is the reducer shuffle: no second one
+    val lines = Engine.wordCountLines(Engine.jobSession(spark, spec), spec, Observation())
+    assert(lines.collect().length === 600)
+    val plan = lines.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.size === 1, plan.toString)
+    assert(lines.rdd.getNumPartitions === 4)
   }
 
   test("jobSession honors shardSize as input-split size and leaves the caller's conf alone") {

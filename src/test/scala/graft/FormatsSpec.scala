@@ -593,27 +593,45 @@ class FormatsSpec extends SparkTestBase {
   test("z-order lifecycle: append decays skipping, rezorder restores it, crashes recover") {
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
-    def rowsScanned(t: String): Long = {
-      val df = spark.table(t).filter(
-        col("l_partkey").between(16, 47) && col("l_suppkey").between(2, 5))
-      df.collect()
-      df.queryExecution.executedPlan.collectLeaves()
-        .head.metrics("numOutputRows").value
-    }
+    // Judged by each data file's key ranges, which its contents fix, not
+    // by a query's scanned rows, which move with the range partitioner's
+    // sampled file boundaries (seeded by RDD id, so by test order).
+    // `boxFiles`: the files a (16..47, 2..5) box query cannot skip — their
+    // l_partkey AND l_suppkey ranges both overlap the box.
+    def boxFiles(t: String): Set[String] =
+      spark.table(t).groupBy(input_file_name().as("f"))
+        .agg(min("l_partkey").as("p0"), max("l_partkey").as("p1"),
+          min("l_suppkey").as("s0"), max("l_suppkey").as("s1"))
+        .filter(col("p0") <= 47 && col("p1") >= 16 && col("s0") <= 5 && col("s1") >= 2)
+        .collect().map(_.getString(0)).toSet
+    // one clustered generation: no two files' Z-key ranges overlap, so a
+    // box reads only the files its own Z span crosses
+    def zDisjoint(t: String): Boolean =
+      spark.table(t)
+        .select(input_file_name().as("f"),
+          Formats.zOrderKey(col("l_partkey").cast("long"), col("l_suppkey").cast("long")).as("z"))
+        .groupBy("f").agg(min("z").as("z0"), max("z").as("z1"))
+        .orderBy("z0").collect().map(r => (r.getLong(1), r.getLong(2)))
+        .sliding(2).forall { case Array(a, b) => a._2 < b._1; case _ => true }
     try {
       // one-generation reference layout over the SAME content
       Formats.writeZOrdered(li, "graft_zl_ref", "l_partkey", "l_suppkey")
-      val clustered = rowsScanned("graft_zl_ref")
+      assert(zDisjoint("graft_zl_ref"), "a fresh Z-ordered write is one generation")
       // build two-thirds, append the rest as its own mini-generation
       Formats.writeZOrdered(
         li.filter(col("l_orderkey") % 3 =!= 0), "graft_zl", "l_partkey", "l_suppkey")
+      val built = boxFiles("graft_zl")
       Formats.appendZOrdered(
         li.filter(col("l_orderkey") % 3 === 0), "graft_zl", "l_partkey", "l_suppkey")
-      val appended = rowsScanned("graft_zl")
+      val appended = boxFiles("graft_zl")
       assert(spark.table("graft_zl").exceptAll(spark.table("graft_zl_ref")).count() === 0,
         "append must not change content")
-      assert(appended > clustered,
-        s"appended layout scanned $appended rows vs one-generation $clustered — decay not visible")
+      // decay: the built files are all still read, plus appended ones whose
+      // ranges overlap the old generation's
+      assert(built.subsetOf(appended) && appended.size > built.size,
+        s"the box reads ${appended.size} files after the append, ${built.size} before — " +
+          "decay not visible")
+      assert(!zDisjoint("graft_zl"), "the appended generation overlaps the built one")
       // crash in BOTH rewrite windows: each re-run restores a working table
       for (window <- Seq("compact.after_stage", "compact.after_swap")) {
         Formats.failpoint = window
@@ -625,13 +643,11 @@ class FormatsSpec extends SparkTestBase {
         assert(spark.table("graft_zl").exceptAll(spark.table("graft_zl_ref")).count() === 0,
           s"content diverged after crash in $window")
       }
-      // and the re-clustered table skips like the one-generation reference
-      // (range-partitioner boundary sampling shifts file edges a little
-      // between independent builds, so "like" means within 20% of the
-      // reference AND strictly below the decayed appended level)
-      val restored = rowsScanned("graft_zl")
-      assert(restored <= clustered * 12 / 10 && restored < appended,
-        s"rezorder left $restored rows scanned (reference $clustered, appended $appended)")
+      // and the re-clustered table is one generation again, like the
+      // reference, with none of the files the append left behind
+      assert(zDisjoint("graft_zl"), "rezorder must restore one clustered generation")
+      assert(boxFiles("graft_zl").intersect(appended).isEmpty,
+        "rezorder must rewrite every file the box read")
     } finally {
       Formats.failpoint = ""
       Seq("graft_zl", "graft_zl_ref", "graft_zl__compacting")

@@ -131,6 +131,29 @@ class JobServerSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
+  test("a status poll is answered at once, not after a delayed-ACK stall") {
+    val in = Files.createTempDirectory("graft_http_in4")
+    Files.writeString(in.resolve("a.txt"), "alpha beta")
+    val srv = new JobServer(spark, Files.createTempDirectory("graft_http_out4").toString)
+    val base = s"http://127.0.0.1:${srv.start()}"
+    try {
+      val client = HttpClient.newHttpClient()
+      assert(post(client, s"$base/jobs", s"""{"files": ["${in.resolve("a.txt")}"]}""")
+        .statusCode() === 200)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (statusOf(get(client, s"$base/jobs/0").body()) != "COMPLETED" &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      // 20 round trips on one kept-alive connection; Nagle plus the
+      // client's delayed ACK would hold each body back ~40 ms
+      val ms = (0 until 20).map { _ =>
+        val t0 = System.nanoTime()
+        assert(get(client, s"$base/jobs/0").statusCode() === 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(10) < 20.0, s"median GET round trip ${ms(10)} ms: ${ms.mkString(", ")}")
+    } finally srv.stop()
+  }
+
   test("facade rejects malformed submissions and unknown ids") {
     val outRoot = Files.createTempDirectory("graft_http_out2").toString
     val srv = new JobServer(spark, outRoot)
