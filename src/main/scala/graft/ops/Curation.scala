@@ -41,9 +41,11 @@ import graft.functions.CrossHash
   * Scale: stage 1 is a map-only scan of the BATCH; stage 2 shuffles only
   * the batch's bands (the index side is bucketed on the band key); stage
   * 3 semi-joins batch spans against the (broadcast-sized) benchmark span
-  * set; stage 4 is one hash shuffle of the survivors. Nothing touches the
-  * accumulated corpus beyond the pre-built index reads — the daily cost
-  * is proportional to the batch, which is the whole point. */
+  * set; stage 4 is one hash shuffle of the survivors. The DECISION touches
+  * the accumulated corpus only through the pre-built index reads, so its
+  * cost is proportional to the batch. The COMMIT is not: its snapshot
+  * step reads the previous corpus-width snapshot and writes a full new
+  * copy per batch (see [[commitStreamDailyBatch]]). */
 object Curation {
 
   /** Batch split used by the gate: documents with `doc_id % 4 == 1` play
@@ -218,15 +220,19 @@ object Curation {
     *      Either way the survivors are read back from the dir, with the
     *      two columns' known schema;
     *   2. the band-index append is made replay-DETECTABLE by its manifest
-    *      stamp alone: an `_idxintent` row recording the manifest's
-    *      PRE-append stamp commits BEFORE the append, and every run
-    *      compares the current stamp against it. Equal to `intent ⊕
-    *      batch` (the append's meta fold ran — e.g. a replay from the
-    *      `sdaily.after_index_append` window) SKIPS the append: a blind
-    *      re-append would duplicate band/sig rows and double-fold the
-    *      manifest (xor fp cancels, n double-counts) while the commit
-    *      ledger then vouched for the corrupted index. Equal to the
-    *      intent's PRE stamp re-runs the append (it never committed —
+    *      stamp alone: the manifest's PRE-append stamp is kept with the
+    *      batch's decision, as an empty marker file
+    *      `ledgerDir/batch_id=N/_idxpre_<n>_<fp>` created BEFORE the
+    *      append (the stamp is in the name, so a crash never leaves a torn
+    *      value; parquet readers skip `_`-prefixed names, and
+    *      [[compactDecisionLedger]] deletes it with the dir once the batch
+    *      has committed). Every run compares the current stamp against
+    *      it. Equal to `pre ⊕ batch` (the append's meta fold ran — e.g. a
+    *      replay from the `sdaily.after_index_append` window) SKIPS the
+    *      append: a blind re-append would duplicate band/sig rows and
+    *      double-fold the manifest (xor fp cancels, n double-counts) while
+    *      the commit ledger then vouched for the corrupted index. Equal to
+    *      the PRE stamp re-runs the append (it never committed —
     *      the residual window INSIDE [[graft.ops.Dedup.appendToBandIndex]]
     *      between its data append and meta fold keeps that family's own
     *      single-writer crash-means-rebuild contract). Any OTHER stamp is
@@ -255,11 +261,14 @@ object Curation {
     * itself. CurationSpec forgets a batch-N doc, re-delivers it in batch
     * N+1, and proves it reaches neither artifact.
     *
-    * At 100 TB this is the daily commit amortized to arrival time:
-    * per micro-batch cost is proportional to the batch (one signal scan,
-    * banded probe against the bucketed index, broadcast-sized benchmark
-    * semi-join, one packing shuffle, index append of the survivors), and
-    * the corpus is never re-read. */
+    * Cost per micro-batch: the decision and the index append are
+    * proportional to the batch (one signal scan, banded probe against the
+    * bucketed index, broadcast-sized benchmark semi-join, one packing
+    * shuffle, index append of the survivors), but step 3 is proportional
+    * to the CORPUS: it reads the whole previous snapshot and writes a full
+    * new copy, so bytes written per batch grow with the accumulated
+    * corpus. Committing each batch as a delta instead is ROADMAP
+    * direction 1. */
   def commitStreamDailyBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, benchHashes: DataFrame, bandTable: String,
       ledgerDir: String, snap0: String, snapPrefix: String,
@@ -299,10 +308,9 @@ object Curation {
     }
     // 1. decision ledger — publish-or-reuse (see the replay contract)
     val decDir = s"$ledgerDir/batch_id=$batchId"
-    val fs = new org.apache.hadoop.fs.Path(decDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val published = fs.exists(
-      new org.apache.hadoop.fs.Path(decDir + "/_SUCCESS"))
+    val decPath = new org.apache.hadoop.fs.Path(decDir)
+    val fs = decPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val published = fs.exists(new org.apache.hadoop.fs.Path(decPath, "_SUCCESS"))
     // signed once: the decision's probe and the step-2 append share it
     lazy val sigs = Dedup.minHashSignatures(live).localCheckpoint(eager = false)
     val survObs = org.apache.spark.sql.Observation()
@@ -321,32 +329,27 @@ object Curation {
       if (published) graft.sources.Formats.corpusStamp(surv, "doc_id")
       else graft.sources.Formats.observedStamp(survObs)
     // 2. band-index append (tomorrow's arrivals dedup against today's
-    // survivors) — intent-first so a replay can TELL from the manifest
-    // stamp whether the append already completed (the replay contract's
-    // step 2)
-    val intentTable = snapPrefix + "_idxintent"
+    // survivors) — pre-append stamp first, so a replay can TELL from the
+    // manifest stamp whether the append already completed (the replay
+    // contract's step 2)
     val cur = graft.sources.Formats.readBuildMeta(spark, bandTable)
       .map(m => (m._1, m._2)).getOrElse((0L, 0L))
-    val intent =
-      if (spark.catalog.tableExists(intentTable))
-        spark.table(intentTable).filter(col("batch_id") === batchId)
-          .select("pre_n", "pre_fp").collect().headOption
-          .map(r => (r.getLong(0), r.getLong(1)))
-      else None
+    val pre = fs.listStatus(decPath).map(_.getPath.getName).collectFirst {
+      case PreAppendStamp(n, f) => (n.toLong, f.toLong)
+    }
     val alreadyAppended =
-      intent.exists { case (pn, pf) => cur == ((pn + bn, pf ^ bfp)) }
+      pre.exists { case (pn, pf) => cur == ((pn + bn, pf ^ bfp)) }
     if (!alreadyAppended) {
-      intent match {
+      pre match {
         case Some((pn, pf)) =>
           require(cur == ((pn, pf)),
             s"band index '$bandTable' manifest stamp $cur matches neither " +
-              s"batch $batchId's pre-append intent ($pn,$pf) nor its " +
+              s"batch $batchId's pre-append stamp ($pn,$pf) nor its " +
               "post-append fold — a foreign writer touched the index " +
               "mid-recovery; rebuild before resuming the stream")
         case None =>
-          Seq((batchId, cur._1, cur._2)).toDF("batch_id", "pre_n", "pre_fp")
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .format("parquet").saveAsTable(intentTable)
+          fs.createNewFile(
+            new org.apache.hadoop.fs.Path(decPath, s"_idxpre_${cur._1}_${cur._2}"))
       }
       Dedup.appendSignaturesToBandIndex(
         sigs.join(survivors, Seq("doc_id"), "left_semi"), bandTable, (bn, bfp))
@@ -370,14 +373,17 @@ object Curation {
     // retention leaves a fully committed batch behind it; every retention
     // step recovers by re-running (the next batch's retention catches up).
     retainSnapshots.foreach(applyRetention(spark, snapPrefix, _,
-      watermark = batchId, foldLedger = watermark.isDefined))
+      foldLedger = watermark.isDefined))
   }
 
+  /** The name of step 2's pre-append stamp marker in a decision dir:
+    * `_idxpre_<corpus_n>_<corpus_fp>`. */
+  private val PreAppendStamp = "_idxpre_(\\d+)_(-?\\d+)".r
+
   /** RETENTION for the streaming daily pipeline's derived artifacts —
-    * without it, N committed batches keep N full corpus-width snapshots,
-    * N commit-ledger rows and N `_idxintent` rows forever (real storage
-    * and listing cost within a quarter at daily cadence). One call bounds
-    * all three:
+    * without it, N committed batches keep N full corpus-width snapshots
+    * and N commit-ledger rows forever (real storage and listing cost
+    * within a quarter at daily cadence). One call bounds both:
     *
     *   1. snapshots: keep the NEWEST `keepSnapshots` immutable
     *      `<snapPrefix>_b<N>` tables, drop the rest (snapshots are
@@ -388,32 +394,26 @@ object Curation {
     *      batch_id + its snapshot name) — sound because batch ids are
     *      sequential and committed in order, so `id <= watermark` ⟺
     *      committed, which is exactly the replay check
-    *      [[commitStreamDailyBatch]] runs;
-    *   3. committed `_idxintent` rows VACUUMED (an intent row's job ends
-    *      the moment its batch is at or below the commit-ledger
-    *      watermark; only in-flight intents survive — after a clean run,
-    *      none).
+    *      [[commitStreamDailyBatch]] runs.
     *
     * The caller is the batch that just committed, and it tells retention
     * what it already knows instead of letting retention query for it:
-    * `watermark` is that batch's id (the ledger's highest), `foldLedger`
-    * says the ledger held a row before this batch (so it now holds more
-    * than the watermark row), and the batch's own intent row always
-    * exists at this point, so the intent vacuum always has a row to drop.
+    * `foldLedger` says the ledger held a row before this batch (so it now
+    * holds more than the watermark row).
     *
-    * Every fold runs through the crash-safe ping-pong rewrite
+    * The ledger fold runs through the crash-safe ping-pong rewrite
     * ([[graft.sources.Formats.rewritePlain]]), and the call sits AFTER
     * the batch's commit row, so a crash anywhere in retention recovers by
     * re-running retention (each step is idempotent). The per-batch
-    * DECISION ledger (`ledgerDir/batch_id=N`) is deliberately NOT
-    * retained away: it is the pipeline's audit/compliance record — the
-    * product, not derived state; its growth is one decision-table per
-    * batch, not a corpus-width copy. Its LISTING cost is bounded
-    * separately by the yearly [[compactDecisionLedger]] fold, which
-    * moves committed batches' rows into one partitioned table without
-    * losing a byte. */
+    * DECISION ledger (`ledgerDir/batch_id=N`, with its pre-append stamp
+    * marker) is deliberately NOT retained away: it is the pipeline's
+    * audit/compliance record — the product, not derived state; its growth
+    * is one decision-table per batch, not a corpus-width copy. Its
+    * LISTING cost is bounded separately by the yearly
+    * [[compactDecisionLedger]] fold, which moves committed batches' rows
+    * into one partitioned table without losing a byte. */
   private def applyRetention(spark: SparkSession, snapPrefix: String,
-      keepSnapshots: Int, watermark: Long, foldLedger: Boolean): Unit = {
+      keepSnapshots: Int, foldLedger: Boolean): Unit = {
     require(keepSnapshots >= 1,
       "retention must keep at least the latest snapshot (the merge base)")
     // 1. snapshot horizon: enumerate the chain from the catalog (bounded
@@ -432,9 +432,6 @@ object Curation {
     if (foldLedger)
       graft.sources.Formats.rewritePlain(spark, snapPrefix + "_ledger")(
         _.orderBy(col("batch_id").desc).limit(1))
-    // 3. intent vacuum: an intent is dead once its batch is committed
-    graft.sources.Formats.rewritePlain(spark, snapPrefix + "_idxintent")(
-      _.filter(col("batch_id") > watermark))
   }
 
   /** PERIODIC FOLD of the per-batch DECISION ledger: [[applyRetention]]
@@ -455,7 +452,9 @@ object Curation {
     *     window) is repaired by a dynamic single-partition overwrite
     *     before its dir is deleted;
     *   - deletion is always LAST, after the batch's rows are re-counted
-    *     in the table, so no crash point loses an audit row.
+    *     in the table, so no crash point loses an audit row. It also
+    *     removes the dir's pre-append stamp marker, which is dead once
+    *     the batch has committed.
     *
     * The fold NEVER passes the pipeline's COMMIT watermark (enforced
     * here, not by a caller convention): `commitLedger` is

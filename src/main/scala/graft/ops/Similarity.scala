@@ -1542,8 +1542,8 @@ object Similarity {
     * corpus (the documented worst case, where recall ≈ coverage because
     * neighbors have no cell affinity) that lower bound transfers to
     * recall, while clustered corpora concentrate true neighbors in the
-    * probed (nearest) cells and land ABOVE it — both measured by
-    * `graft.RecallSweep`. Returns one row per requested target:
+    * probed (nearest) cells and land ABOVE it — both measured in
+    * BASELINE.md's recall-target table. Returns one row per requested target:
     * (recall_target, nprobe, coverage_lb), where nprobe is the smallest
     * width whose worst-case coverage meets the target and coverage_lb is
     * that width's guaranteed fraction.
@@ -1668,7 +1668,7 @@ object Similarity {
     * (~0.02 at t=0.8 over 320 pairs), so held-out queries from the same
     * distribution can land that far below the sample curve; calibrating
     * to `t + margin` (default ≈2σ for a 64-query sample) buys the
-    * transfer back (measured in `graft.RecallSweep`'s CELLS256 table).
+    * transfer back (measured in BASELINE.md's CELLS256 table).
     * Pass margin = 0 for the exact-on-sample minimal width. */
   def calibrateNprobe(spark: org.apache.spark.sql.SparkSession, table: String,
       samplePred: Column, recallTarget: Double, k: Int = 5,

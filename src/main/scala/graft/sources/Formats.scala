@@ -109,8 +109,8 @@ object Formats {
     * bucketed tables need V1, so the V2 reader is scoped to an ISOLATED
     * child session (shares the SparkContext and catalog, owns its
     * SQLConf): flipping `useV1SourceList` there cannot race a concurrent
-    * query on the caller's session into the V2 reader (ADVICE r7 — the
-    * previous set/restore around `load()` left that window open). The
+    * query on the caller's session into the V2 reader (a set/restore
+    * around `load()` would leave that window open). The
     * returned frame stays bound to the child session, which keeps the V2
     * resolution stable however late the caller executes it.
     * FormatsSpec asserts `PushedAggregation` lands in the scan. */
@@ -317,7 +317,7 @@ object Formats {
     * needs: the catalog tracks each partition's OWN location, so after
     * the swap the partition entries are re-synced against the new
     * directory. The stale entries are DROPPED EXPLICITLY before the
-    * `MSCK … SYNC PARTITIONS` (ADVICE r14): Spark's repair adds missing
+    * `MSCK … SYNC PARTITIONS`: Spark's repair adds missing
     * specs (ignoreIfExists) BEFORE dropping specs whose location is
     * gone, so on a catalog that resolves partition paths through the
     * stored entries, a surviving partition value whose stale entry still
@@ -349,10 +349,10 @@ object Formats {
     spark.catalog.refreshTable(table)
   }
 
-  /** Test-only failure injection for the maintenance paths (VERDICT r10
-    * item 3): when set to a window name, the operation throws AT that
-    * window, so specs can kill mid-swap/mid-absorb and assert the
-    * recovery contract instead of trusting the doc comments. Windows:
+  /** Test-only failure injection for the maintenance paths: when set
+    * to a window name, the operation throws AT that window, so specs can
+    * kill mid-swap/mid-absorb and assert the recovery contract instead
+    * of trusting the doc comments. Windows:
     * `compact.after_stage`, `compact.after_swap`,
     * `absorb.after_append`, and `sdaily.after_index_append` /
     * `sdaily.after_snapshot` (fired from
@@ -480,8 +480,8 @@ object Formats {
 
   /** Crash-safe whole-table rewrite for a PLAIN managed parquet table —
     * the un-bucketed twin of [[rewriteBucketed]], riding the same
-    * ping-pong swap (and its proven failpoint windows): the ledger/intent
-    * compactions of the streaming daily pipeline's retention policy run
+    * ping-pong swap (and its proven failpoint windows): the commit-ledger
+    * fold of the streaming daily pipeline's retention policy runs
     * through here. `xform`'s result is written as ONE file (these tables
     * are watermark-row-sized by contract), and an EMPTY result still
     * lands one footer-bearing part file so the table stays readable. The
@@ -524,7 +524,7 @@ object Formats {
     }
     // ping-pong target: never rewrite into the directory being read. The
     // pair is derived from the table's ACTUAL catalog location — strip or
-    // append a `__pong` suffix on it (ADVICE r11: reconstructing the
+    // append a `__pong` suffix on it (reconstructing the
     // default managed path `warehouse/<table>` here would silently
     // relocate — and then delete — a table living anywhere else, e.g. in
     // a non-default database or at an explicit external location)
@@ -574,7 +574,7 @@ object Formats {
     * corpus: stamp(union) = (n_a + n_b, fp_a XOR fp_b).
     *
     * Batch DISJOINTNESS is a correctness precondition, not just a
-    * performance contract (ADVICE r11): xor is self-cancelling, so a
+    * performance contract: xor is self-cancelling, so a
     * batch that overlaps the indexed corpus folds the duplicate ids
     * AWAY — the stamp can then equal that of a smaller corpus and
     * [[isStaleFor]] would vouch for a silently corrupted index. The
@@ -625,8 +625,8 @@ object Formats {
   /** The build's `k=v` param fields as a map — how a probe or append
     * recovers the STORED sketch/index parameters (CMS depth×width,
     * histogram bin width, …) instead of trusting compile-time constants
-    * (VERDICT r15 missing #2: a 100 TB build must choose its own sketch
-    * widths, so the artifact — not the binary — is the source of truth).
+    * (a 100 TB build must choose its own sketch widths, so the
+    * artifact — not the binary — is the source of truth).
     * Loud when the family has no manifest: sizing a probe from a guessed
     * width would silently hash every query to the wrong slots. */
   def metaParams(spark: SparkSession, table: String): Map[String, String] =
@@ -639,7 +639,7 @@ object Formats {
         params.split(",").iterator.map(_.trim).filter(_.nonEmpty)
           .map { f =>
             val i = f.indexOf('=')
-            // loud on a field with no '=' (ADVICE r16): a silent
+            // loud on a field with no '=': a silent
             // ("" -> field) entry would break the 'loud when wrong'
             // parameter-recovery contract
             require(i > 0, s"malformed manifest field '$f' in '$table'")
@@ -703,7 +703,7 @@ object Formats {
     }
   }
 
-  /** DEBUG COMPANION of the xor corpus stamp (r14, ADVICE r11): the
+  /** DEBUG COMPANION of the xor corpus stamp: the
     * disjointness precondition is what makes the fold sound — xor is
     * self-cancelling, so a batch that overlaps the indexed corpus folds
     * the duplicate ids AWAY and the manifest can come to vouch for a
@@ -718,7 +718,7 @@ object Formats {
     * the contract forbids — without this row the failure mode is
     * invisible until [[isStaleFor]] lies.
     *
-    * `rowsPerId` (r15, ADVICE r14) closes the one blind spot of the
+    * `rowsPerId` closes the one blind spot of the
     * distinct recount: an append whose DATA committed but whose meta
     * fold did not (the residual crash window inside every append*) gets
     * blindly RE-RUN by a pre-stamp replay, duplicating every physical

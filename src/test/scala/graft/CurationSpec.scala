@@ -187,8 +187,8 @@ class CurationSpec extends SparkTestBase {
       assert(spark.table("graft_sd_fps_ledger").count() === 1L)
 
       // ---- failpoint: crash AFTER the index append, before the snapshot —
-      // recovery must DETECT the completed append through the _idxintent
-      // stamp and skip it; a blind re-append would duplicate band/sig rows
+      // recovery must DETECT the completed append through the pre-append
+      // stamp marker and skip it; a blind re-append would duplicate band/sig rows
       // and double-fold the manifest (xor fp cancels, n double-counts)
       // while the commit ledger then vouched for the corrupted index
       Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_f2")
@@ -203,15 +203,17 @@ class CurationSpec extends SparkTestBase {
         "the append's meta fold ran before the crash point")
       assert(!spark.catalog.tableExists("graft_sd_f2s_b0"),
         "no snapshot written before the crash point")
-      assert(spark.catalog.tableExists("graft_sd_f2s_idxintent"),
-        "the intent row must be durable before the append runs")
+      val (preN, preFp) = metaStamp("graft_sd_refd")
+      assert(new java.io.File(s"$root/ledf2/batch_id=0").list().toSeq
+        .filter(_.startsWith("_idxpre_")) === Seq(s"_idxpre_${preN}_$preFp"),
+        "the pre-append stamp must be durable before the append runs")
       runStream(s"$root/stage1", "graft_sd_f2", s"$root/ledf2",
         "graft_sd_f2_snap0", "graft_sd_f2s", s"$root/ckf2")
       assertCommitted("graft_sd_f2", "graft_sd_f2s_b0",
         "crash-after-append recovery, no double append or fold")
       assert(spark.table("graft_sd_f2s_ledger").count() === 1L)
 
-      // ---- takedown absorption (VERDICT r13): forget a document, then
+      // ---- takedown absorption: forget a document, then
       // re-deliver it in a later batch — it must be rejected BEFORE the
       // decision and reach neither the band index nor a snapshot
       Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sd_t")
@@ -277,15 +279,12 @@ class CurationSpec extends SparkTestBase {
         "graft_sd_f2", "graft_sd_t", "graft_sd_m", "graft_sd_m_ref")
       dropTables(
         "graft_sd_s1_snap0", "graft_sd_s1s_b0", "graft_sd_s1s_ledger",
-        "graft_sd_s1s_idxintent",
         "graft_sd_fp_snap0", "graft_sd_fps_b0", "graft_sd_fps_ledger",
-        "graft_sd_fps_idxintent",
         "graft_sd_f2_snap0", "graft_sd_f2s_b0", "graft_sd_f2s_ledger",
-        "graft_sd_f2s_idxintent",
         "graft_sd_t_snap0", "graft_sd_t_snap0f", "graft_sd_t_tomb",
-        "graft_sd_ts_b0", "graft_sd_ts_ledger", "graft_sd_ts_idxintent",
+        "graft_sd_ts_b0", "graft_sd_ts_ledger",
         "graft_sd_m_snap0", "graft_sd_ms_b0", "graft_sd_ms_b1",
-        "graft_sd_ms_ledger", "graft_sd_ms_idxintent")
+        "graft_sd_ms_ledger")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
   }
@@ -305,7 +304,7 @@ class CurationSpec extends SparkTestBase {
       Formats.failpoint = ""
       // a second writer appends a doc-disjoint batch (ids no corpus or
       // batch doc carries) inside the crash window: the manifest stamp now
-      // matches neither the intent's pre-append stamp nor its fold
+      // matches neither the marker's pre-append stamp nor its fold
       Dedup.appendToBandIndex(Curation.corpusOf(all).select("doc_id", "text")
         .orderBy("doc_id").limit(5)
         .withColumn("doc_id", col("doc_id") + 1000000000L), "graft_sd_fw")
@@ -322,8 +321,7 @@ class CurationSpec extends SparkTestBase {
     } finally {
       Formats.failpoint = ""
       dropIdx("graft_sd_fw")
-      dropTables("graft_sd_fw_snap0", "graft_sd_fws_b0", "graft_sd_fws_ledger",
-        "graft_sd_fws_idxintent")
+      dropTables("graft_sd_fw_snap0", "graft_sd_fws_b0", "graft_sd_fws_ledger")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
   }
@@ -347,7 +345,7 @@ class CurationSpec extends SparkTestBase {
         "a micro-batch must not leave cached plans in the session")
     } finally {
       dropIdx("graft_sd_c")
-      dropTables("graft_sd_c_snap0", "graft_sd_cs_ledger", "graft_sd_cs_idxintent")
+      dropTables("graft_sd_c_snap0", "graft_sd_cs_ledger")
       dropTables((0 until nBatches).map(i => s"graft_sd_cs_b$i"): _*)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
@@ -363,11 +361,11 @@ class CurationSpec extends SparkTestBase {
     }
   }
 
-  test("retention: 20 micro-batches keep bounded artifacts, equal the " +
+  test("retention: 8 micro-batches keep bounded artifacts, equal the " +
       "unretained final state, and a post-retention replay is exactly-once") {
     val root = java.nio.file.Files.createTempDirectory("graft-sret").toString
     val batch = Curation.batchOf(all).select("doc_id", "text")
-    val nBatches = 20
+    val nBatches = 8
     val keep = 3
     def runDays(band: String, snap0: String, prefix: String, ckpt: String,
         retain: Option[Int]): Unit =
@@ -377,9 +375,10 @@ class CurationSpec extends SparkTestBase {
       spark.catalog.listTables().collect().map(_.name).toSeq
         .filter(_.matches(java.util.regex.Pattern.quote(prefix) + "_b\\d+"))
     try {
-      // one file per day: maxFilesPerTrigger=1 turns them into 20
-      // sequential micro-batches (some slices empty — the empty-batch
-      // path rides along)
+      // one file per day: maxFilesPerTrigger=1 turns them into 8
+      // sequential micro-batches; batch docs all have doc_id % 4 == 1, so
+      // only slices 1 and 5 hold documents and the empty-batch path
+      // rides along
       (0 until nBatches).foreach { i =>
         batch.filter(col("doc_id") % nBatches === i)
           .coalesce(1).write.mode("append").parquet(s"$root/stage")
@@ -387,8 +386,8 @@ class CurationSpec extends SparkTestBase {
       Dedup.buildBandIndex(Curation.corpusOf(all), "graft_sr_s")
       writeSnap0("graft_sr_s_snap0")
       runDays("graft_sr_s", "graft_sr_s_snap0", "graft_sr_s_p", "cks", Some(keep))
-      // bounded: keep-last-K snapshots, a watermark-row ledger, zero
-      // committed intents — regardless of 20 batches having run
+      // bounded: keep-last-K snapshots and a watermark-row ledger —
+      // regardless of more than K batches having run
       assert(snapTables("graft_sr_s_p").sorted ===
         (nBatches - keep until nBatches).map(n => s"graft_sr_s_p_b$n"),
         "exactly the newest K snapshots survive retention")
@@ -397,8 +396,6 @@ class CurationSpec extends SparkTestBase {
       val wm = spark.table("graft_sr_s_p_ledger").head()
       assert(wm.getLong(0) === (nBatches - 1).toLong &&
         wm.getString(1) === s"graft_sr_s_p_b${nBatches - 1}")
-      assert(spark.table("graft_sr_s_p_idxintent").count() === 0,
-        "every committed batch's intent row is vacuumed")
       // the retained run's final state equals an UNRETAINED twin's over
       // the same staged files — retention must never change what the
       // pipeline computes, only what it keeps
@@ -406,13 +403,13 @@ class CurationSpec extends SparkTestBase {
       writeSnap0("graft_sr_u_snap0")
       runDays("graft_sr_u", "graft_sr_u_snap0", "graft_sr_u_p", "cku", None)
       assert(spark.table("graft_sr_u_p_ledger").count() === nBatches.toLong,
-        "the unretained twin keeps every ledger row (the r14 baseline shape)")
+        "the unretained twin keeps every ledger row")
       assert(rows(s"graft_sr_s_p_b${nBatches - 1}") ===
         rows(s"graft_sr_u_p_b${nBatches - 1}"),
         "final snapshot is bit-identical with and without retention")
       assert(rows("graft_sr_s") === rows("graft_sr_u"))
       assert(rows("graft_sr_s_sigs") === rows("graft_sr_u_sigs"))
-      // post-retention replay from a FRESH checkpoint: all 20 batches
+      // post-retention replay from a FRESH checkpoint: all 8 batches
       // re-delivered, every one recognized as committed through the
       // WATERMARK row — exactly-once end state, artifacts still bounded
       val bandBefore = rows("graft_sr_s")
@@ -421,10 +418,9 @@ class CurationSpec extends SparkTestBase {
         "a replayed batch must not re-append through a folded ledger")
       assert(spark.table("graft_sr_s_p_ledger").count() === 1)
       assert(snapTables("graft_sr_s_p").length === keep)
-      assert(spark.table("graft_sr_s_p_idxintent").count() === 0)
-      // decision-ledger FOLD (r16, VERDICT r15 missing #5): the yearly
-      // compaction that bounds the ledger-root listing — every audit row
-      // must survive byte-for-byte through any fold sequence
+      // decision-ledger FOLD: the yearly compaction that bounds the
+      // ledger-root listing — every audit row must survive byte-for-byte
+      // through any fold sequence
       val ledDir = s"$root/led_graft_sr_s_p"
       val decTable = "graft_sr_s_dec"
       def audit(): Seq[String] =
@@ -434,13 +430,13 @@ class CurationSpec extends SparkTestBase {
       assert(auditBefore.nonEmpty)
       val commitLed = "graft_sr_s_p_ledger"
       // two-step fold: the resume-after-partial-pass shape
-      assert(Curation.compactDecisionLedger(spark, ledDir, decTable, 9L,
+      assert(Curation.compactDecisionLedger(spark, ledDir, decTable, 3L,
         commitLed) > 0L)
       assert(audit() === auditBefore, "audit rows must survive a partial fold")
-      // the commit-watermark cap is ENFORCED, not a caller convention
-      // (ADVICE r16): a published-but-uncommitted dir past the watermark
-      // — the decide-then-crash window — must survive every fold for the
-      // crash replay to reuse, however large upToBatchId is
+      // the commit-watermark cap is ENFORCED, not a caller convention: a
+      // published-but-uncommitted dir past the watermark — the
+      // decide-then-crash window — must survive every fold for the crash
+      // replay to reuse, however large upToBatchId is
       val orphanId = nBatches + 79
       spark.table(decTable).filter(col("batch_id") === 1L).drop("batch_id")
         .write.mode("overwrite").parquet(s"$ledDir/batch_id=$orphanId")
@@ -478,8 +474,7 @@ class CurationSpec extends SparkTestBase {
     } finally {
       dropIdx("graft_sr_s", "graft_sr_u")
       dropTables("graft_sr_s_dec", "graft_sr_s_snap0", "graft_sr_u_snap0",
-        "graft_sr_s_p_ledger", "graft_sr_s_p_idxintent",
-        "graft_sr_u_p_ledger", "graft_sr_u_p_idxintent")
+        "graft_sr_s_p_ledger", "graft_sr_u_p_ledger")
       dropTables(snapTables("graft_sr_s_p") ++ snapTables("graft_sr_u_p"): _*)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
@@ -525,21 +520,21 @@ class CurationSpec extends SparkTestBase {
       while (!counter.marked && System.nanoTime() < deadline) Thread.sleep(10)
       assert(counter.marked, "listener bus did not drain")
       assert(spark.table("graft_sd_buds_ledger").head().getLong(0) === 1L)
-      // measured on this suite's corpus (local[4]): 38 Spark jobs and 45
-      // SQL executions, where recomputing each per-batch fact took 55 and 50
-      assert(counter.jobs.get <= 38 && counter.sqls.get <= 45,
+      // measured on this suite's corpus (local[4]): 34 Spark jobs and 36
+      // SQL executions
+      assert(counter.jobs.get <= 34 && counter.sqls.get <= 36,
         s"${counter.jobs.get} Spark jobs and ${counter.sqls.get} SQL executions in one micro-batch")
     } finally {
       spark.sparkContext.removeSparkListener(counter)
       dropIdx("graft_sd_bud")
-      dropTables("graft_sd_bud_snap0", "graft_sd_buds_ledger", "graft_sd_buds_idxintent",
+      dropTables("graft_sd_bud_snap0", "graft_sd_buds_ledger",
         "graft_sd_buds_b0", "graft_sd_buds_b1")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
   }
 
   test("a configured-but-missing tombstone table fails loudly (no silent no-op)") {
-    // ADVICE r14: a typo'd takedown-list name must never degrade the
+    // a typo'd takedown-list name must never degrade the
     // compliance path to "admit everything" — configured means enforced
     val ex = intercept[IllegalArgumentException] {
       Curation.commitStreamDailyBatch(spark,
@@ -580,15 +575,15 @@ class CurationSpec extends SparkTestBase {
         "https://example.com/CaseSensitive/Path?id=2"),
       // non-default port survives
       ("https://example.com:8443/x", "https://example.com:8443/x"),
-      // ADVICE r12: a param NAME containing utm_ is not a tracking param
+      // a param NAME containing utm_ is not a tracking param
       ("https://example.com/x?xutm_a=1&id=2",
         "https://example.com/x?xutm_a=1&id=2"),
-      // ADVICE r12: consecutive utm params both stripped (the unanchored
+      // consecutive utm params both stripped (the unanchored
       // single-pass regex skipped the second — replaceAll resumes AFTER
       // each replacement)
       ("https://example.com/x?utm_a=1&utm_b=2&id=3",
         "https://example.com/x?id=3"),
-      // ADVICE r12: default-port drop is scheme-aware — :443 on http and
+      // default-port drop is scheme-aware — :443 on http and
       // :80 on https are NOT default ports and survive
       ("http://example.com:443/x", "http://example.com:443/x"),
       ("https://example.com:80/x", "https://example.com:80/x"),

@@ -932,8 +932,8 @@ class SimilaritySpec extends SparkTestBase {
       "prunes hard where neighbors have cell affinity") {
     val cells = 64
     val sample = col("vec_id") >= 10 && col("vec_id") < 42
-    // clustered synthetic (RecallSweep's production shape): vectors mixed
-    // 9:1 toward one of 8 anchor directions — neighbors share cells
+    // clustered synthetic (the shape production embeddings have): vectors
+    // mixed 9:1 toward one of 8 anchor directions — neighbors share cells
     val anchors = emb.filter(col("vec_id") < 8)
       .orderBy("vec_id").select("embedding")
       .collect().map(_.getSeq[Float](0))
@@ -978,6 +978,24 @@ class SimilaritySpec extends SparkTestBase {
           assert(cal < cells / 2,
             s"clustered t=$t: no pruning power ($cal of $cells cells)")
       }
+      // recall-target mode: the refine tier served with recallTarget = t
+      // meets t against the exact scan on this corpus shape
+      val (pq, vecs) = (tbl + "_pq", tbl + "_vecs")
+      try {
+        Similarity.buildIvfPqIndex(corpus, pq)
+        Similarity.buildVectorStore(corpus, vecs)
+        val queries = col("vec_id") < 10
+        val truth = Similarity.bruteForceTopK(corpus, queries)
+        for (t <- Seq(0.8, 0.9)) {
+          val rec = Similarity.recallAtK(
+              Similarity.ivfPqRefineTopKIndexed(spark, pq, vecs,
+                corpus.filter(queries), recallTarget = Some(t)), truth)
+            .agg(avg("recall")).head().getDouble(0)
+          assert(rec >= t, s"$shape: refine at recallTarget=$t serves recall $rec")
+        }
+      } finally
+        Seq(pq, pq + "_pivots", pq + "_books", vecs)
+          .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
     }
   }
 
