@@ -120,15 +120,12 @@ object Bench {
       graft.ops.SharedCorpus.resetTouched()
       val ts = (1 to n).map(_ => timeOne(fn, shared = false))
       // shared map = STEADY-STATE of the tokenize-once mode, min of 2 runs
-      // — symmetric with the raw steady's min-of-n semantics. Cleanup runs
-      // only BETWEEN queries, so raw runs 2..n reuse run 1's persisted
-      // intermediates (each operator's internal persist() hits the
-      // CacheManager by plan equality); the shared-mode plan reads the
-      // snapshot instead of the raw scan, so it can never hit those
-      // entries — a single shared run would time an honest cold run
-      // against a cache-warm raw min (r12: that asymmetry, not the data
-      // path, was most of the residual "shared slower than raw" after the
-      // columnar pin fix — shared COLD ≈ raw COLD on every gate).
+      // — symmetric with the raw steady's min-of-n semantics. No operator
+      // leaves a session-cache entry behind (an intermediate is released by
+      // the function that persisted it, or is a local checkpoint of that
+      // run's own plan), so raw runs 2..n recompute every intermediate;
+      // what they may reuse from run 1 is per-session memoized training,
+      // tables a gate builds once, and warm JVM/file caches.
       val sharedRun =
         if (withShared && pinOk && graft.ops.SharedCorpus.wasTouched) {
           val runs2 = (1 to 2).map(_ => timeOne(fn, shared = true))

@@ -173,8 +173,8 @@ object SparkEntry {
     java.util.concurrent.ConcurrentHashMap[String, Seq[graft.ops.Bpe.Merge]]]()
   private def bpeModel(s: SparkSession, d: String): (Seq[graft.ops.Bpe.Merge], DataFrame) = {
     val merges = sessionMemo(bpeMerges, s, d) {
-      val (m, state) = graft.ops.Bpe.train(Tables.documents(s, d))
-      state.unpersist() // the memo keeps only the merges — see stateOf
+      // the memo keeps only the merges — see stateOf
+      val m = graft.ops.Bpe.train(Tables.documents(s, d))._1
       // loud guard (ADVICE r6): the fixed-round DuckDB oracle's CTE chain
       // always runs DefaultRounds rounds — if training exhausts the corpus
       // early, the oracle's replace() NULLs every segmentation and the

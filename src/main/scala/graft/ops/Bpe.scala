@@ -61,7 +61,10 @@ object Bpe {
   final case class Merge(round: Int, pair: String, merged: String, cnt: Long)
 
   /** Run `rounds` merge rounds; returns the merge table and the final
-    * per-word segmentation state (word, cnt, s).
+    * per-word segmentation state (word, cnt, s). Each round's state is a
+    * lazy local checkpoint that the next round's best-pair collect
+    * materializes, so the returned state holds no session-cache entry and
+    * needs no release.
     *
     * Stops early if no adjacent pair remains (every word fully merged) —
     * reachable only when `rounds` approaches the total character count of
@@ -69,7 +72,7 @@ object Bpe {
     * fixed-round CTE chain assumes the loop runs to `rounds`, which holds
     * for every gate corpus by construction. */
   def train(docs: DataFrame, rounds: Int = DefaultRounds): (Seq[Merge], DataFrame) = {
-    var state = initState(wordCounts(docs)).cache()
+    var state = initState(wordCounts(docs)).localCheckpoint(eager = false)
     val merges = Seq.newBuilder[Merge]
     var r = 1
     var done = false
@@ -88,10 +91,7 @@ object Bpe {
         val cnt = best(0).getLong(1)
         val merged = pair.replace(Sep, "")
         merges += Merge(r, pair.replace(Sep, " "), merged, cnt)
-        val next = applyMerge(state, pair, merged).cache()
-        next.count() // materialize before dropping the parent cache
-        state.unpersist()
-        state = next
+        state = applyMerge(state, pair, merged).localCheckpoint(eager = false)
         r += 1
       }
     }
@@ -124,11 +124,8 @@ object Bpe {
     }
 
   /** The learned merge table — gate `ta_bpe_merges`. */
-  def mergeTable(docs: DataFrame, rounds: Int = DefaultRounds): DataFrame = {
-    val (merges, state) = train(docs, rounds)
-    state.unpersist()
-    mergeTableOf(docs.sparkSession, merges)
-  }
+  def mergeTable(docs: DataFrame, rounds: Int = DefaultRounds): DataFrame =
+    mergeTableOf(docs.sparkSession, train(docs, rounds)._1)
 
   /** The merge table of an already-trained model. */
   def mergeTableOf(spark: org.apache.spark.sql.SparkSession,
@@ -147,17 +144,8 @@ object Bpe {
     * join is a broadcast hash join (no corpus shuffle); the per-doc
     * aggregation is map-side combined. Training covers every corpus word
     * by construction, so the inner join is lossless. */
-  def tokenizeWithVocab(docs: DataFrame, rounds: Int = DefaultRounds): DataFrame = {
-    val state = train(docs, rounds)._2
-    val out = tokenizeWithVocabOf(docs, state)
-    // drop the training cache before returning (ADVICE r6: this overload
-    // used to leak one persisted table per call). The returned plan still
-    // evaluates fine: the state's merges are embedded literals (see
-    // [[segmentsOf]]), so re-evaluation recomputes the chained replaces
-    // without ever re-running a training action.
-    state.unpersist()
-    out
-  }
+  def tokenizeWithVocab(docs: DataFrame, rounds: Int = DefaultRounds): DataFrame =
+    tokenizeWithVocabOf(docs, train(docs, rounds)._2)
 
   /** Build-once half of the BPE train/apply split that PERSISTS across
     * processes (the session memo in SparkEntry shares one training per
@@ -167,8 +155,7 @@ object Bpe {
     * the expensive half — exactly the classifier/LM lifecycle. */
   def buildBpeModel(docs: DataFrame, table: String,
       rounds: Int = DefaultRounds): Unit = {
-    val (merges, state) = train(docs, rounds)
-    state.unpersist()
+    val merges = train(docs, rounds)._1
     require(merges.size == rounds,
       s"BPE training exhausted after ${merges.size} of $rounds rounds — " +
         "a fixed-round replay (the oracle's CTE chain) would diverge")
@@ -213,10 +200,9 @@ object Bpe {
   def segments(docs: DataFrame, rounds: Int = DefaultRounds, k: Int = 100): DataFrame =
     segmentsOf(train(docs, rounds)._2, k)
 
-  /** [[segments]] against an already-trained segmentation state.
-    * The state plan re-evaluates fine even if the harness has cleared its
-    * cache — the learned merges are embedded literals, so no re-training
-    * action ever runs. */
+  /** [[segments]] against an already-trained segmentation state. The
+    * learned merges are embedded literals in the state plan, so evaluating
+    * it never re-runs a training action. */
   def segmentsOf(state: DataFrame, k: Int = 100): DataFrame =
     state
       .select(col("word"), col("cnt"),

@@ -664,14 +664,15 @@ object Curation {
     * The ratio is a single division of exact longs.
     *
     * The corpus is TOKENIZED ONCE: the shared projection columns are
-    * attached (or passed through if the input already carries them) and
-    * persisted, so the three component scans share one tokenize pass
+    * attached (or passed through if the input already carries them) as a
+    * lazy local checkpoint, so the component scans share one tokenize pass
     * instead of re-splitting the text each (measured 6.0 → 1.2 s raw at
-    * sf0.1). Persist lifecycle: caller-clears, as for the pair miners. */
+    * sf0.1). The checkpoint is reclaimed with the returned plan; nothing is
+    * left for the caller to release. */
   def corpusReport(docs: DataFrame): DataFrame = {
     val base = docs.select(col("doc_id"),
       SharedCorpus.wsOf(docs).as("toks_ws"),
-      SharedCorpus.alnumOf(docs).as("toks_alnum")).persist()
+      SharedCorpus.alnumOf(docs).as("toks_alnum")).localCheckpoint(eager = false)
     val n = base.agg(count(lit(1)).as("n_docs"))
     val g = Dedup.exactDedup(base).agg(count(lit(1)).as("n_exact_groups"))
     val sp = Dedup.duplicateSpans(base).agg(

@@ -34,15 +34,14 @@ import graft.sources.StoredIndex.{Family, Part}
   * signatures, bands, candidate pairs — is bit-reproducible in DuckDB for
   * the oracle gate.
   *
-  * Cache lifecycle: the pair-mining operators persist small intermediate
-  * tables (signatures, shingles) that feed multiple branches of the plan
-  * they return. Those blocks stay cached until evicted (LRU) because the
-  * caller owns the terminal action; a memory-constrained caller running
-  * many jobs in one session should `spark.catalog.clearCache()` between
-  * them. [[nearDupSurvivors]] frees its own intermediates — its loop
-  * materializes internally and unpersists every working table before
-  * returning; only its (small, already-materialized) survivor result stays
-  * cached for the caller.
+  * Materialization: every intermediate has one owner. A table only the
+  * operator's own actions read is persisted and released before it
+  * returns. A table the returned plan reads more than once (signatures,
+  * shingles, span hashes feeding several branches) is a lazy local
+  * checkpoint, whose blocks Spark's ContextCleaner reclaims once that plan
+  * is unreachable. A table the returned plan reads once stays lazy. No
+  * operator leaves a session-cache entry behind, so a caller has nothing
+  * to release.
   */
 object Dedup {
 
@@ -118,7 +117,8 @@ object Dedup {
   /** Exact dedup: keep the lowest doc_id per normalized-content
     * fingerprint. The corpus has no byte-identical texts, so the key is the
     * sorted distinct-token set — "same vocabulary" duplicates — which
-    * exercises real collision groups (ADVICE r1: no vacuous operators).
+    * exercises real collision groups (an operator that finds none would be
+    * vacuous).
     * At scale this is one shuffle on a 60-bit key as a plain hash
     * aggregation: `min(doc_id)` partial-aggregates map-side, so each
     * partition sends one row per local key and nothing is ever sorted
@@ -131,10 +131,10 @@ object Dedup {
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), col("dup_key"))
   }
-  // NOTE (r18): final presentational `orderBy`s are removed from this file's
-  // pair/stat miners. The driver's correctness gate sorts rows before
-  // hashing (proven by mapreduce_wordcount, green since r1 with
-  // non-ORDER-BY row order), so the sorts only added a range exchange plus
+  // NOTE: this file's pair/stat miners have no final presentational
+  // `orderBy`. The driver's correctness gate sorts rows before hashing
+  // (mapreduce_wordcount passes with non-ORDER-BY row order), so a sort
+  // would only add a range exchange plus
   // a bound-sampling pass that re-executes the final stage (guide §2.4) —
   // and at 100 TB a global sort of a corpus-sized result is a full extra
   // shuffle no downstream consumer of these tables needs.
@@ -193,7 +193,7 @@ object Dedup {
     * `minSigFrac` ≈ estimated Jaccard threshold (E[matching components] =
     * J * NumHashes). Only hash-colliding pairs are ever materialized.
     *
-    * Hot-bucket audit (VERDICT r10 item 1): a duplicate-saturated band
+    * Hot-bucket audit: a duplicate-saturated band
     * bucket makes this join's OUTPUT quadratic in the bucket size — that
     * is semantic, not a plan defect (every pair in a saturated bucket IS
     * a near-duplicate pair this miner exists to report; the paired
@@ -210,11 +210,11 @@ object Dedup {
     * equality. */
   def minHashPairs(docs: DataFrame, minSigFrac: Double = 0.5): DataFrame = {
     // The signature table is tiny (one 16-long row per doc) but feeds three
-    // plan branches (banding + both verification sides); without an explicit
-    // persist Spark recomputes the shingle explode + md5 aggregation per
+    // plan branches (banding + both verification sides); without a
+    // checkpoint Spark recomputes the shingle explode + md5 aggregation per
     // branch. At production scale this is the "checkpoint signatures before
     // pair mining" step.
-    val sigs = minHashSignatures(docs).persist()
+    val sigs = minHashSignatures(docs).localCheckpoint(eager = false)
     val bandedLong = bandedFromSignatures(sigs)
     val candidates = bandedLong.as("a")
       .join(bandedLong.as("b"),
@@ -258,8 +258,8 @@ object Dedup {
     * never shuffles at all. */
   def crossCorpusNearDups(a: DataFrame, b: DataFrame,
       minSigFrac: Double = 0.5): DataFrame = {
-    val sa = minHashSignatures(a).persist()
-    val sb = minHashSignatures(b).persist()
+    val sa = minHashSignatures(a).localCheckpoint(eager = false)
+    val sb = minHashSignatures(b).localCheckpoint(eager = false)
     val candidates = bandedFromSignatures(sa).as("x")
       .join(bandedFromSignatures(sb).as("y"),
         col("x.band_idx") === col("y.band_idx") &&
@@ -403,7 +403,8 @@ object Dedup {
     * the fingerprint, then exact bit_count verification. The band join
     * keeps this off the n² cross product at scale. */
   def simHashPairs(docs: DataFrame, maxHamming: Int = DefaultMaxHamming): DataFrame = {
-    val sh = simHash(docs).persist() // one 2-long row per doc; feeds 3 branches
+    // one 2-long row per doc; feeds 3 branches
+    val sh = simHash(docs).localCheckpoint(eager = false)
     val banded = sh.select(
       col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(b =>
@@ -440,7 +441,8 @@ object Dedup {
     * verified-candidate set. */
   def simHashTopK(docs: DataFrame, queryPred: Column, k: Int = 5,
       maxHamming: Int = DefaultMaxHamming): DataFrame = {
-    val sh = simHash(docs).persist() // feeds the query and candidate sides
+    // feeds the query and candidate sides
+    val sh = simHash(docs).localCheckpoint(eager = false)
     val banded = sh.select(
       col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(b =>
@@ -477,17 +479,16 @@ object Dedup {
     *    primitive open-addressing [[LongLongMap]] (two long arrays,
     *    16 B/slot at ≤60% load), ≲250 MB at the 4M-edge default's 8M-
     *    endpoint worst case — the same small-side-to-driver contract as a
-    *    broadcast join (the boxed mutable.HashMap it replaces was ~100 B
-    *    per entry, VERDICT r8 item 6).
+    *    broadcast join (a boxed mutable.HashMap costs ~100 B per entry).
     *  - above it, distributed min-label propagation with pointer jumping
     *    (O(log diameter) rounds, each one hash-shuffle join) — scales with
     *    the edge list, never the corpus square.
     * Both paths produce identical labels (component minimum); DedupSpec
     * runs the distributed path against union-find ground truth.
     *
-    * The returned labels are persisted and materialized, with every
-    * internal working table already dropped; the CALLER unpersists the
-    * result when done (both survivor policies do). */
+    * The returned labels are a lazy local checkpoint (reclaimed with the
+    * plan that reads them); every internal working table is released
+    * before the call returns, so the caller has nothing to release. */
   def nearDupComponents(docs: DataFrame, minSigFrac: Double = 0.5,
       maxDriverEdges: Long = 4_000_000L): DataFrame =
     componentsFromEdges(docs.select(col("doc_id")),
@@ -503,96 +504,103 @@ object Dedup {
     * jumping above it. */
   private[graft] def componentsFromEdges(vertices: DataFrame, pairs0: DataFrame,
       maxDriverEdges: Long = 4_000_000L): DataFrame = {
-    // persist the pair list itself — every consumer below references it
-    // more than once, and without the cache each branch re-runs the whole
-    // upstream join
+    // the pair list is read by the size gate and by the solve below; held
+    // for this call only
     val pairs = pairs0.persist()
-    if (pairs.count() <= maxDriverEdges) {
-      val spark = vertices.sparkSession
-      import spark.implicits._
-      // union-find with path halving over the collected edge list
-      val parent = new LongLongMap()
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrElse(x, x)
-        while (p != x) {
-          val gp = parent.getOrElse(p, p)
-          parent.put(x, gp) // path halving
-          x = gp
-          p = parent.getOrElse(x, x)
-        }
-        x
+    try {
+      if (pairs.count() <= maxDriverEdges) driverComponents(vertices, pairs)
+      else distributedComponents(vertices, pairs)
+    } finally pairs.unpersist()
+  }
+
+  /** Driver tier of [[componentsFromEdges]]: union-find over the streamed
+    * edge list, labels joined back by broadcast. */
+  private def driverComponents(vertices: DataFrame, pairs: DataFrame): DataFrame = {
+    val spark = vertices.sparkSession
+    import spark.implicits._
+    // union-find with path halving over the collected edge list
+    val parent = new LongLongMap()
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrElse(x, x)
+      while (p != x) {
+        val gp = parent.getOrElse(p, p)
+        parent.put(x, gp) // path halving
+        x = gp
+        p = parent.getOrElse(x, x)
       }
-      // toLocalIterator over a typed Dataset: one partition of primitive
-      // pairs resident at a time (the pair list is already persisted, so no
-      // recompute per partition), instead of collect()'s full boxed-Row
-      // array (ADVICE r3). Coalesced first (r18): toLocalIterator runs ONE
-      // sequential driver job PER PARTITION, and the pair list arrives in
-      // shuffle.partitions pieces — 32 tiny round-trips (~1 s of pure
-      // scheduling) for an edge list that is orders of magnitude under the
-      // corpus. 4 partitions keeps the resident slice bounded at
-      // maxDriverEdges/4 rows while costing 4 round-trips; union-find's
-      // min-root-wins outcome is edge-order-independent, so the result is
-      // unchanged.
-      import scala.jdk.CollectionConverters._
-      pairs.as[(Long, Long)].coalesce(4).toLocalIterator().asScala.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { // smaller root wins, so the root IS the component min
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      // snapshot keys first: find() path-halves (mutates values) mid-scan;
-      // only edge endpoints are in the map — everything else labels itself
-      val endpointKeys = scala.collection.mutable.ArrayBuffer[Long]()
-      parent.foreachKey(endpointKeys += _)
-      val endpointLabels = endpointKeys.map(d => (d, find(d))).toSeq
-      val out = vertices
-        .join(broadcast(endpointLabels.toDF("doc_id", "lbl")), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("label"))
-        .persist()
-      out.count()
-      pairs.unpersist()
-      return out
+      x
     }
+    // toLocalIterator over a typed Dataset: one partition of primitive
+    // pairs resident at a time (the pair list is already persisted, so no
+    // recompute per partition), instead of collect()'s full boxed-Row
+    // array. Coalesced first: toLocalIterator runs ONE
+    // sequential driver job PER PARTITION, and the pair list arrives in
+    // shuffle.partitions pieces — 32 tiny round-trips (~1 s of pure
+    // scheduling) for an edge list that is orders of magnitude under the
+    // corpus. 4 partitions keeps the resident slice bounded at
+    // maxDriverEdges/4 rows while costing 4 round-trips; union-find's
+    // min-root-wins outcome is edge-order-independent, so the result is
+    // unchanged.
+    import scala.jdk.CollectionConverters._
+    pairs.as[(Long, Long)].coalesce(4).toLocalIterator().asScala.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { // smaller root wins, so the root IS the component min
+        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    // snapshot keys first: find() path-halves (mutates values) mid-scan;
+    // only edge endpoints are in the map — everything else labels itself
+    val endpointKeys = scala.collection.mutable.ArrayBuffer[Long]()
+    parent.foreachKey(endpointKeys += _)
+    val endpointLabels = endpointKeys.map(d => (d, find(d))).toSeq
+    vertices
+      .join(broadcast(endpointLabels.toDF("doc_id", "lbl")), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("label"))
+      .localCheckpoint(eager = false)
+  }
+
+  /** Distributed tier of [[componentsFromEdges]]: min-label propagation
+    * with pointer jumping. Each round's labels are a lazy local checkpoint
+    * that the round's convergence aggregate materializes, so the returned
+    * labels no longer read the edge list. */
+  private def distributedComponents(vertices: DataFrame, pairs: DataFrame): DataFrame = {
+    // the symmetric edge list is read by every round's own action
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist()
-    var labels = vertices.select(col("doc_id"), col("doc_id").as("label")).persist()
-    // Convergence check: labels only ever DECREASE under min-propagation,
-    // so the label-sum is strictly monotone and "sum unchanged" ⟺ "no
-    // label changed" — one aggregate per round instead of a full
-    // old-vs-new join (the aggregate also materializes `next`, which the
-    // unpersist of the previous round requires anyway).
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")), // empty corpus: sum is null
-        lit(0).cast("decimal(38,0)"))).collect()(0).getDecimal(0)
-    var prevSum = labelSum(labels)
-    var iterations = 0
-    var converged = false
-    while (!converged && iterations < 20) {
-      val viaNeighbor = edges.join(labels, edges("dst") === labels("doc_id"))
-        .select(col("src").as("doc_id"), col("label"))
-      // pointer jumping: also adopt the label OF my current label — halves
-      // the effective component diameter every round, so convergence takes
-      // O(log diameter) joins instead of O(diameter)
-      val viaPointer = labels.as("l1")
-        .join(labels.as("l2"), col("l1.label") === col("l2.doc_id"))
-        .select(col("l1.doc_id").as("doc_id"), col("l2.label").as("label"))
-      val next = labels.select("doc_id", "label").union(viaNeighbor).union(viaPointer)
-        .groupBy("doc_id").agg(min("label").as("label")).persist()
-      val nextSum = labelSum(next)
-      labels.unpersist()
-      labels = next
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      iterations += 1
-    }
-    // the converged labels are already fully materialized (the convergence
-    // aggregate scanned every partition into the persist); drop the
-    // working tables and hand the labels to the caller
-    pairs.unpersist()
-    edges.unpersist()
-    labels
+    try {
+      var labels = vertices.select(col("doc_id"), col("doc_id").as("label"))
+        .localCheckpoint(eager = false)
+      // Convergence check: labels only ever DECREASE under min-propagation,
+      // so the label-sum is strictly monotone and "sum unchanged" ⟺ "no
+      // label changed" — one aggregate per round instead of a full
+      // old-vs-new join (the aggregate also materializes the round's
+      // checkpoint, which cuts its lineage to the previous round).
+      def labelSum(df: DataFrame): java.math.BigDecimal =
+        df.agg(coalesce(sum(col("label").cast("decimal(38,0)")), // empty corpus: sum is null
+          lit(0).cast("decimal(38,0)"))).collect()(0).getDecimal(0)
+      var prevSum = labelSum(labels)
+      var iterations = 0
+      var converged = false
+      while (!converged && iterations < 20) {
+        val viaNeighbor = edges.join(labels, edges("dst") === labels("doc_id"))
+          .select(col("src").as("doc_id"), col("label"))
+        // pointer jumping: also adopt the label OF my current label — halves
+        // the effective component diameter every round, so convergence takes
+        // O(log diameter) joins instead of O(diameter)
+        val viaPointer = labels.as("l1")
+          .join(labels.as("l2"), col("l1.label") === col("l2.doc_id"))
+          .select(col("l1.doc_id").as("doc_id"), col("l2.label").as("label"))
+        labels = labels.select("doc_id", "label").union(viaNeighbor).union(viaPointer)
+          .groupBy("doc_id").agg(min("label").as("label")).localCheckpoint(eager = false)
+        val nextSum = labelSum(labels)
+        converged = nextSum.compareTo(prevSum) == 0
+        prevSum = nextSum
+        iterations += 1
+      }
+      labels
+    } finally edges.unpersist()
   }
 
   /** Build-once half of the INCREMENTAL clustering lifecycle: the
@@ -600,23 +608,20 @@ object Dedup {
     * as a `(doc_id, label)` table bucketed on `doc_id`, with a build
     * manifest. Pairs with [[buildBandIndex]] over the SAME corpus —
     * [[mergeComponentsIncr]] consumes both and keeps both in sync. */
-  def buildComponentsTable(docs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
-    val pairs = minHashPairs(docs).select("doc_a", "doc_b").persist()
-    lazy val labels = componentsFromEdges(docs.select(col("doc_id")), pairs)
+  def buildComponentsTable(docs: DataFrame, table: String, numBuckets: Int = 8): Unit =
     StoredIndex.build(componentsTable(numBuckets), table, docs) {
-      case "_edges" => pairs
-      case "" => labels
+      case "_edges" => minHashPairs(docs).select("doc_a", "doc_b")
+      case "" => componentsFromEdges(docs.select(col("doc_id")),
+        docs.sparkSession.table(table + "_edges"))
     }
-    labels.unpersist()
-  }
 
   /** The component table as a [[StoredIndex]] family. The edge list is
     * stored alongside the labels: labels alone cannot answer a DELETE
     * (removing a bridge vertex SPLITS its component — decremental
     * connectivity needs the edges, [[purgeFromComponentsTable]]), and it
     * is LSH-collision-sized, orders of magnitude under the corpus. Edges
-    * are written first: the components solve unpersists the pair cache
-    * when done. */
+    * are written first, so the build solves the labels from the stored
+    * edge list instead of mining the pairs twice. */
   private def componentsTable(numBuckets: Int = 8) = Family(
     n => s"kind=components,buckets=$n", "doc_id", "",
     Seq(Part("_edges", Seq("doc_a"), numBuckets), Part("", Seq("doc_id"), numBuckets)))
@@ -667,43 +672,43 @@ object Dedup {
       s"component table '$compTable' and band index '$bandTable' describe " +
         "different corpus generations — rebuild or re-sync before merging")
     val batch = newBatch
-    // delta edges: stored×batch collisions via the index, plus intra-batch
+    // delta edges: stored×batch collisions via the index, plus intra-batch;
+    // both are read by the edge append and by the relabel below
     val cross = nearDupPairsIndexed(spark, bandTable, batch, minSigFrac)
       .select("doc_a", "doc_b").persist()
     val intra = minHashPairs(batch, minSigFrac).select("doc_a", "doc_b").persist()
-    // the REAL (uncontracted) delta edges are appended into the stored
-    // edge list first — [[purgeFromComponentsTable]]'s decremental solve
-    // needs the true graph, and the append also materializes the two
-    // persisted pair caches the contraction below reuses. Cross edges
-    // arrive (stored, batch)-oriented; normalize to the one-shot miner's
-    // doc_a < doc_b orientation (ADVICE r12) so the stored edge SET —
-    // not just its symmetric closure — matches a one-shot build's.
-    val crossNorm = cross.select(
-      least(col("doc_a"), col("doc_b")).as("doc_a"),
-      greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-    graft.sources.Formats.writeBucketedAppend(
-      crossNorm.unionByName(intra), compTable + "_edges")
-    val stored = spark.table(compTable)
-    val crossL = cross.join(stored, cross("doc_a") === stored("doc_id"))
-      .select(col("label").as("doc_a"), cross("doc_b")).distinct()
-    val edges = crossL.union(intra)
-    val verts = batch.select("doc_id")
-      .union(crossL.select(col("doc_a").as("doc_id"))).distinct()
-    val delta = componentsFromEdges(verts, edges, maxDriverEdges)
-    val batchIds = batch.select("doc_id")
-    val batchLabels = delta.join(batchIds, "doc_id").select("doc_id", "label")
-    val relabel = delta.join(batchIds, Seq("doc_id"), "left_anti")
-      .select(col("doc_id").as("old_label"), col("label").as("new_label"))
-      .filter(col("old_label") =!= col("new_label"))
-    graft.sources.Formats.rewriteBucketed(spark, compTable) { df =>
-      df.join(broadcast(relabel), df("label") === relabel("old_label"), "left")
-        .select(df("doc_id"),
-          coalesce(col("new_label"), df("label")).as("label"))
-        .unionByName(batchLabels)
-    }
-    delta.unpersist()
-    cross.unpersist()
-    intra.unpersist()
+    try {
+      // the REAL (uncontracted) delta edges are appended into the stored
+      // edge list first — [[purgeFromComponentsTable]]'s decremental solve
+      // needs the true graph, and the append also materializes the two
+      // persisted pair caches the contraction below reuses. Cross edges
+      // arrive (stored, batch)-oriented; normalize to the one-shot miner's
+      // doc_a < doc_b orientation so the stored edge SET —
+      // not just its symmetric closure — matches a one-shot build's.
+      val crossNorm = cross.select(
+        least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+      graft.sources.Formats.writeBucketedAppend(
+        crossNorm.unionByName(intra), compTable + "_edges")
+      val stored = spark.table(compTable)
+      val crossL = cross.join(stored, cross("doc_a") === stored("doc_id"))
+        .select(col("label").as("doc_a"), cross("doc_b")).distinct()
+      val edges = crossL.union(intra)
+      val verts = batch.select("doc_id")
+        .union(crossL.select(col("doc_a").as("doc_id"))).distinct()
+      val delta = componentsFromEdges(verts, edges, maxDriverEdges)
+      val batchIds = batch.select("doc_id")
+      val batchLabels = delta.join(batchIds, "doc_id").select("doc_id", "label")
+      val relabel = delta.join(batchIds, Seq("doc_id"), "left_anti")
+        .select(col("doc_id").as("old_label"), col("label").as("new_label"))
+        .filter(col("old_label") =!= col("new_label"))
+      graft.sources.Formats.rewriteBucketed(spark, compTable) { df =>
+        df.join(broadcast(relabel), df("label") === relabel("old_label"), "left")
+          .select(df("doc_id"),
+            coalesce(col("new_label"), df("label")).as("label"))
+          .unionByName(batchLabels)
+      }
+    } finally { cross.unpersist(); intra.unpersist() }
     StoredIndex.fold(spark, componentsTable(), compTable,
       graft.sources.Formats.corpusStamp(batch, "doc_id"))
     appendToBandIndex(batch, bandTable)
@@ -759,7 +764,6 @@ object Dedup {
         .join(broadcast(ids.select(col("doc_id").as("doc_b"))), Seq("doc_b"), "left_anti")
         .select("doc_a", "doc_b")
     })
-    delta.unpersist()
   }
 
   /** Resolve near-duplicate pairs into a deduplicated corpus: connected
@@ -768,15 +772,9 @@ object Dedup {
     * survivor of a min-labeled component is the label itself. */
   def nearDupSurvivors(docs: DataFrame, minSigFrac: Double = 0.5,
       maxDriverEdges: Long = 4_000_000L): DataFrame = {
-    val labels = nearDupComponents(docs, minSigFrac, maxDriverEdges)
-    // materialize the survivor set BEFORE dropping the labels it is
-    // computed from — otherwise an eviction would recompute through the
-    // full uncached LSH join. The small persisted result goes to the caller.
-    val out = labels.filter(col("doc_id") === col("label"))
-      .select(col("doc_id")).persist()
-    out.count()
-    labels.unpersist()
-    out
+    nearDupComponents(docs, minSigFrac, maxDriverEdges)
+      .filter(col("doc_id") === col("label"))
+      .select(col("doc_id"))
   }
 
   /** Quality-aware survivor policy: keep each component's BEST-scored
@@ -789,17 +787,12 @@ object Dedup {
     * `(doc_id, score)` of the survivors. */
   def nearDupSurvivorsBy(docs: DataFrame, score: Column, minSigFrac: Double = 0.5,
       maxDriverEdges: Long = 4_000_000L): DataFrame = {
-    val labels = nearDupComponents(docs, minSigFrac, maxDriverEdges)
-    val out = docs.select(col("doc_id"), score.cast("double").as("score"))
-      .join(labels, Seq("doc_id"))
+    docs.select(col("doc_id"), score.cast("double").as("score"))
+      .join(nearDupComponents(docs, minSigFrac, maxDriverEdges), Seq("doc_id"))
       .groupBy(col("label"))
       .agg(max(struct(col("score"), (-col("doc_id")).as("nid"))).as("best"))
       .select((-col("best.nid")).cast("long").as("doc_id"),
         col("best.score").as("score"))
-      .persist()
-    out.count()
-    labels.unpersist()
-    out
   }
 
   /** Streaming-compatible near-dup admission — the GREEDY one-pass twin of
@@ -816,10 +809,9 @@ object Dedup {
   def nearDupAdmit(docs: DataFrame): DataFrame = {
     // the banding (shingle explode + 4 md5 digests per shingle + 16-way
     // min-agg) feeds BOTH the owner aggregation and the join probe side;
-    // persist so it computes once (same caller-clears cache contract as
-    // the pair miners — at production scale this is the shared
-    // "checkpoint the signatures" step)
-    val banded = bandedMinHash(docs).persist()
+    // checkpointed so it computes once (at production scale this is the
+    // shared "checkpoint the signatures" step)
+    val banded = bandedMinHash(docs).localCheckpoint(eager = false)
     val owners = banded.groupBy("band_idx", "band_hash")
       .agg(min(col("doc_id")).as("owner"))
     banded.join(owners, Seq("band_idx", "band_hash"))
@@ -829,19 +821,6 @@ object Dedup {
       .select("doc_id")
   }
 
-  /** Exact repeated-span detection — the "exact substring dedup" signal
-    * for training-data curation (boilerplate, licenses, templated text):
-    * for each document, how many of its positional n-token spans also
-    * occur in at least one OTHER document. Unlike [[shingles]] this keeps
-    * every occurrence (no distinct): a span repeated 50 times inside one
-    * doc counts 50 spans, but only cross-document repetition marks them
-    * duplicated.
-    *
-    * Scale shape: one explode to 60-bit span hashes, one count-distinct
-    * per hash (partial-aggregated map-side, so a corpus-wide hot span
-    * costs one row per task), a semi-join back, two per-doc counts. The
-    * positional span table feeds three branches and is persisted (same
-    * caller-clears contract as the pair miners). */
   /** Positional n-token span hashes — the shared scan under every
     * span-level operator ([[duplicateSpans]], [[removeDuplicateSpans]],
     * [[contaminationStats]]): one row per (doc, position) with the span's
@@ -862,8 +841,21 @@ object Dedup {
         CrossHash.h60(array_join(slice(col("ws"), col("i"), lit(n)), " ")).as("sh")): _*)
   }
 
+  /** Exact repeated-span detection — the "exact substring dedup" signal
+    * for training-data curation (boilerplate, licenses, templated text):
+    * for each document, how many of its positional n-token spans also
+    * occur in at least one OTHER document. Unlike [[shingles]] this keeps
+    * every occurrence (no distinct): a span repeated 50 times inside one
+    * doc counts 50 spans, but only cross-document repetition marks them
+    * duplicated.
+    *
+    * Scale shape: one explode to 60-bit span hashes, one count-distinct
+    * per hash (partial-aggregated map-side, so a corpus-wide hot span
+    * costs one row per task), a semi-join back, two per-doc counts. The
+    * positional span table feeds three branches, so it is a lazy local
+    * checkpoint. */
   def duplicateSpans(docs: DataFrame, n: Int = 8): DataFrame = {
-    val sp = positionalSpans(docs, n).select("doc_id", "sh").persist()
+    val sp = positionalSpans(docs, n).select("doc_id", "sh").localCheckpoint(eager = false)
     val dupHashes = sp.groupBy("sh")
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2)
@@ -1007,11 +999,11 @@ object Dedup {
     * DUPLICATED subset (bounded by n rows per duplicate occurrence, never
     * the corpus); the rewrite itself is a per-document projection — the
     * drop-position set rides a doc_id-keyed join whose right side is one
-    * row per affected document. The span table feeds three branches and is
-    * persisted (caller-clears contract, as for the pair miners). */
+    * row per affected document. The span table feeds three branches, so it
+    * is a lazy local checkpoint. */
   def removeDuplicateSpans(docs: DataFrame, n: Int = 8): DataFrame = {
     val base = docs.select(col("doc_id"), SharedCorpus.wsOf(docs).as("ws"))
-    val sp = positionalSpans(docs, n).persist()
+    val sp = positionalSpans(docs, n).localCheckpoint(eager = false)
     val dupHashes = sp.groupBy("sh")
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2)
@@ -1145,7 +1137,7 @@ object Dedup {
         // Capped (scale) path: materialize the inverted index as POSTING
         // LISTS, then emit candidate pairs by exploding each list map-side.
         // No string-keyed self-join at all: the pair work is co-located with
-        // its shingle, per-task work is bounded by cap², and the persisted
+        // its shingle, per-task work is bounded by cap², and the checkpointed
         // index (one row per distinct shingle) feeds both the pair explode
         // and the per-doc cardinalities. Replacing the df-filter self-join
         // with this cut the sf0.1 bench time 3x.
@@ -1157,22 +1149,17 @@ object Dedup {
         // shingles reach collect_list. Filtering on size(ds) after the
         // collect would build the hot shingle's full multi-million-entry
         // list in a single aggregation buffer first — an OOM/straggler at
-        // scale (ADVICE r3). The collect_list aggregation reuses the
+        // scale. The collect_list aggregation reuses the
         // semi-join's hash partitioning on shingle, so the safety pass
         // costs one extra exchange of the shingle table.
-        val sh = shingles(docs, n).persist()
+        // the shingle table feeds both the df pass and the semi-join
+        val sh = shingles(docs, n).localCheckpoint(eager = false)
         val keep = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
           .filter(col("df") <= cap)
           .select("shingle")
         val lists = sh.join(keep, Seq("shingle"), "left_semi")
           .groupBy("shingle").agg(collect_list(col("doc_id")).as("ds"))
-          .persist()
-        // lists is the only consumer of sh: materialize it, then drop the
-        // corpus-scale shingle cache so callers don't carry TWO resident
-        // corpus-size tables until clearCache (ADVICE r4). The count() also
-        // pins lists before its source cache disappears.
-        lists.count()
-        sh.unpersist()
+          .localCheckpoint(eager = false)
         val i = lists
           .select(explode(col("ds")).as("doc_a"), col("ds"))
           .select(col("doc_a"), explode(col("ds")).as("doc_b"))
@@ -1186,7 +1173,7 @@ object Dedup {
         // inverted-index self-join — a corpus-wide shingle makes this
         // quadratic, but unlike a posting list it spills instead of
         // OOMing, which is the right failure mode for a verification run.
-        val sh = shingles(docs, n).persist()
+        val sh = shingles(docs, n).localCheckpoint(eager = false)
         val i = sh.as("a")
           .join(sh.as("b"),
             col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))

@@ -1739,14 +1739,20 @@ object Relational {
       .agg(sum((col("l_extendedprice").cast("decimal(18,2)") * 100)
         .cast("decimal(18,0)")).cast("long").as("rev_cents")), topN)
 
+  /** The ranking half of [[paretoParts]] over `(partkey, rev_cents)` with
+    * a unique `partkey`. Only the top `topN` parts are ranked: the limit
+    * plans as a per-partition top-k (`TakeOrderedAndProject`), so the
+    * single-partition window sees `topN` rows, never every part. The key
+    * is unique, so the frame has no ties and each running sum over the
+    * top rows equals the global prefix sum. The total comes from a
+    * one-row aggregate joined by broadcast. */
   def paretoOf(rev: DataFrame, topN: Int): DataFrame = {
-    val wOrd = Window.orderBy(col("rev_cents").desc, col("partkey"))
-    rev
+    val order = Seq(col("rev_cents").desc, col("partkey"))
+    val wOrd = Window.orderBy(order: _*)
+    rev.orderBy(order: _*).limit(topN)
       .withColumn("rnk", row_number().over(wOrd).cast("long"))
       .withColumn("cum_cents", sum("rev_cents").over(wOrd))
-      .withColumn("total_cents", sum("rev_cents").over(
-        Window.partitionBy()))
-      .filter(col("rnk") <= topN)
+      .crossJoin(broadcast(rev.agg(sum("rev_cents").as("total_cents"))))
       .select(col("rnk"), col("partkey"), col("rev_cents"), col("cum_cents"),
         (lit(5L) * col("cum_cents") <= lit(4L) * col("total_cents"))
           .cast("int").as("in_pareto_80"))

@@ -107,40 +107,14 @@ object Sampling {
     * the same labels via recursive-CTE closure and the same bucket rule).
     * Returns `(doc_id, label, split)`, UNSORTED — a 100 TB caller never
     * needs the global sort (the gate adds its own `orderBy` for the
-    * deterministic dump). The result is persisted+materialized (its
-    * lineage runs through the since-released component labels); callers
-    * that hold it should unpersist when done, and callers that cannot
-    * (the bench/verify harnesses evaluate returned frames without a
-    * release hook — ADVICE r17) are covered by the one-slot handoff:
-    * each call releases the PREVIOUS call's cached assignment, bounding
-    * leaked executor storage to one table regardless of run count. */
+    * deterministic dump). The result is a projection over the component
+    * labels' lazy local checkpoint, so nothing is left for the caller to
+    * release. */
   def splitAssignLeakFree(docs: DataFrame,
       splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
       salt: String = "split"): DataFrame =
-    handoff(splitAssignLeakFreeRaw(docs, splits, salt))
-
-  /** Caller-managed form of [[splitAssignLeakFree]] (no handoff): for
-    * internal composition that joins TWO live assignments — the handoff
-    * would release the first while the second still needs it. */
-  private def splitAssignLeakFreeRaw(docs: DataFrame,
-      splits: Seq[(String, Int)], salt: String): DataFrame = {
-    val labels = Dedup.nearDupComponents(docs)
-    val out = splitAssign(labels, "label", splits, salt)
+    splitAssign(Dedup.nearDupComponents(docs), "label", splits, salt)
       .select(col("doc_id"), col("label"), col("split"))
-      .persist()
-    out.count() // materialize before releasing the label table
-    labels.unpersist()
-    out
-  }
-
-  private val lastHandoff =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  private def handoff(df: DataFrame): DataFrame = {
-    val prev = lastHandoff.getAndSet(df)
-    if (prev != null) prev.unpersist() // no-op if a test already released it
-    df
-  }
 
   /** SPLIT-STABILITY audit for [[splitAssignLeakFree]] under corpus
     * growth — the operational question the component-keyed split raises
@@ -164,24 +138,16 @@ object Sampling {
     * oracle anchor; a daily pipeline uses the stored-lifecycle twin
     * [[splitDriftReportIndexed]], which reads yesterday's PUBLISHED
     * assignment and folds today's batch as a delta. The ≤|splits|²-row
-    * matrix is collected and rebuilt as a local frame, so nothing stays
-    * persisted after the call (ADVICE r17). */
+    * matrix is collected and rebuilt as a local frame. */
   def splitDriftReport(docsOld: DataFrame, docsNew: DataFrame,
       splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
-      salt: String = "split"): DataFrame = {
-    val a = splitAssignLeakFreeRaw(docsOld, splits, salt)
-    val b = splitAssignLeakFreeRaw(docsNew, splits, salt)
-    val out = transitionMatrix(
-      a.select(col("doc_id"), col("split").as("split_was")),
-      b.select(col("doc_id"), col("split").as("split_now")))
-    a.unpersist(); b.unpersist()
-    out
-  }
+      salt: String = "split"): DataFrame =
+    transitionMatrix(
+      splitAssignLeakFree(docsOld, splits, salt)
+        .select(col("doc_id"), col("split").as("split_was")),
+      splitAssignLeakFree(docsNew, splits, salt)
+        .select(col("doc_id"), col("split").as("split_now")))
 
-  /** The split transition matrix of two `(doc_id, split)` assignments
-    * joined on their common documents — shared by both drift forms. The
-    * result is at most |splits|² rows, so it is collected and returned as
-    * a LOCAL frame: no persisted state survives the call. */
   /** The distributed half of [[transitionMatrix]] as a PLAN (package-
     * visible so SamplingSpec can assert the stored-lifecycle form joins
     * the two bucketed tables without an exchange on either input). */
@@ -191,6 +157,10 @@ object Sampling {
       .agg(count(lit(1)).as("n_docs"),
         min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
 
+  /** The split transition matrix of two `(doc_id, split)` assignments
+    * joined on their common documents — shared by both drift forms. The
+    * result is at most |splits|² rows, so it is collected and returned as
+    * a LOCAL frame: no persisted state survives the call. */
   private def transitionMatrix(was: DataFrame, now: DataFrame): DataFrame = {
     val spark = was.sparkSession
     import spark.implicits._
@@ -206,9 +176,7 @@ object Sampling {
     * over the PUBLISHED components table that
     * [[Dedup.buildComponentsTable]] / [[Dedup.mergeComponentsIncr]] /
     * [[Dedup.purgeFromComponentsTable]] maintain — the corpus is never
-    * re-shingled, re-signed, or re-banded here (VERDICT r17 item 1: the
-    * from-scratch form was the only operator ignoring the engine's own
-    * publish-the-artifact discipline). Because a stored label IS its
+    * re-shingled, re-signed, or re-banded here. Because a stored label IS its
     * component's minimum and the incremental merge keeps the table
     * bit-identical to a one-shot clustering of the union corpus, this
     * projection equals [[splitAssignLeakFree]] over that corpus exactly —

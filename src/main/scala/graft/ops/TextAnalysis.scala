@@ -117,10 +117,10 @@ object TextAnalysis {
       (aggregate(transform(ws, t => length(t)), lit(0L), (a, x) => a + x)
         .cast("double") / size(ws)).as("mean_tok_len"))
   }
-  // NOTE (r18): final presentational `orderBy`s removed from the per-doc
+  // NOTE: no final presentational `orderBy` on the per-doc
   // projections and join-rooted stats in this file — the driver's gate
   // sorts rows before hashing, and on a zero-shuffle projection the range
-  // sort's bound-sampling pass re-executed the whole projection (~2x,
+  // sort's bound-sampling pass re-executes the whole projection (~2x,
   // guide §2.4; measured on ta_repetition: 1.94 s -> 0.87 s).
 
   /** Language identification via marker-word scoring: count each language's
@@ -175,7 +175,7 @@ object TextAnalysis {
     val toks = docs.select(
       col("doc_id"),
       explode(SharedCorpus.alnumOf(docs)).as("word"))
-    // tf materialized ONCE (r19): it feeds the score join AND the df
+    // tf materialized ONCE: it feeds the score join AND the df
     // aggregation — as a plan the tokenize + (doc, word) aggregation ran
     // twice per call. This is the posting table a real pipeline persists.
     val tf = toks.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
@@ -212,8 +212,8 @@ object TextAnalysis {
     val toks = docs.select(
       col("doc_id"),
       explode(SharedCorpus.alnumOf(docs)).as("word"))
-    // document length = size of the token ARRAY (r19, guide §2.3): the
-    // old explode + groupBy(doc_id) count shuffled and re-aggregated the
+    // document length = size of the token ARRAY (guide §2.3): an
+    // explode + groupBy(doc_id) count would shuffle and re-aggregate the
     // full token stream just to count it. `size` is the same number per
     // row with no explode and no aggregation; `dl > 0` reproduces
     // explode's semantics exactly (token-less docs emit no row).
@@ -275,11 +275,11 @@ object TextAnalysis {
   def hybridSearch(docs: DataFrame, terms: Seq[String], queryDocId: Long = 0L,
       k: Int = 20, candidates: Int = 100, kRrf: Int = 60): DataFrame = {
     val sparse = sparseRanking(bm25Search(docs, terms, candidates))
-    // embed ONCE (r19, guide §1.2): bruteForceTopK references its input
+    // embed ONCE (guide §1.2): bruteForceTopK references its input
     // twice (query panel + neighbor side), and as a plain plan each
     // reference re-ran the full corpus featurization — the physical plan
     // carried two identical corpus-wide hashEmbed subtrees. The
-    // checkpoint is ADVICE-r13-clean (ContextCleaner-reclaimed) and is
+    // checkpoint is ContextCleaner-reclaimed (no session-cache entry) and is
     // exactly the embed-once/serve-from-vectors shape of the indexed twin.
     val emb = hashEmbed(docs)
       .select(col("doc_id").as("vec_id"), col("embedding"))
@@ -355,7 +355,7 @@ object TextAnalysis {
     val words = queries.flatMap(_._2).distinct
     // dedupe the FLATTENED (qid, word) pairs, not per-entry: a workload
     // repeating a query_id across entries must not double-count a term's
-    // BM25 contribution (single-query isin() dedupes implicitly; ADVICE r9)
+    // BM25 contribution (single-query isin() dedupes implicitly)
     val qTerms = queries.flatMap { case (qid, ts) => ts.map((qid, _)) }
       .distinct.toDF("query_id", "word")
     val p = spark.table(table).filter(col("word").isin(words: _*))
@@ -579,7 +579,7 @@ object TextAnalysis {
     * aggregate; rounded to 6 places like tfidf for cross-engine stability. */
   def lmScore(docs: DataFrame): DataFrame = {
     val f = docs.select(col("doc_id"), SharedCorpus.alnumOf(docs).as("a"))
-    // bigrams materialized ONCE (r19, guide §1.2): as a plan, `bi` is
+    // bigrams materialized ONCE (guide §1.2): as a plan, `bi` is
     // referenced by the score join AND (via c12) the count tables, so the
     // corpus tokenize + bigram explode executed three times per call; c12
     // likewise feeds both the join and c1. At 100 TB the production path
@@ -740,9 +740,9 @@ object TextAnalysis {
     * runs on the vocab-sized node table and the unique-bigram-sized edge
     * table. Each iteration is one shuffle join of edges against ranks and
     * one map-side-combined integer sum — the textbook distributed
-    * PageRank step. Edge/node tables are persisted across the loop and
-    * released before return; the final rank table stays cached
-    * (caller-clears contract, as for the pair miners). */
+    * PageRank step. The edge and node tables are lazy local checkpoints
+    * that every round of the returned plan reads; nothing is left for the
+    * caller to release. */
   def textRank(docs: DataFrame, iters: Int = 8, damping: Double = 0.85,
       k: Int = 20): DataFrame = {
     val edges = textRankEdgeDeltas(docs)
@@ -774,8 +774,9 @@ object TextAnalysis {
     * mass, so dropping them would move every rank. */
   private def rankLoop(edges: DataFrame, nodes0: DataFrame, iters: Int,
       damping: Double, k: Int): DataFrame = {
-    val e = edges.join(edges.groupBy("src").agg(sum("w").as("wsrc")), "src").persist()
-    val nodes = nodes0.persist()
+    val e = edges.join(edges.groupBy("src").agg(sum("w").as("wsrc")), "src")
+      .localCheckpoint(eager = false)
+    val nodes = nodes0.localCheckpoint(eager = false)
     val n = nodes.count() // vocab count — the loop's only driver traffic
     val scale = 1e12
     val init = math.round(scale / n)
@@ -784,9 +785,9 @@ object TextAnalysis {
     // (ranks never leave the cluster), so the iterations compose LAZILY:
     // each round chains one join + one integer aggregation onto the plan
     // and a single action at the end runs the whole chain as one job. The
-    // edge/node tables are referenced by every round and stay persisted
-    // (caller-clears contract, as for the pair miners) — forcing a
-    // cache+count per round was 5x slower in fixed job overhead.
+    // edge/node tables are referenced by every round, so they are the
+    // checkpoints — forcing a cache+count per round was 5x slower in fixed
+    // job overhead.
     var r = nodes.withColumn("r", lit(init))
     for (_ <- 1 to iters) {
       val contrib = e.join(r.withColumnRenamed("word", "src"), "src")
@@ -875,13 +876,13 @@ object TextAnalysis {
     * `|approx − exact| <= max(16, 5·rsd·exact)` — five relative standard
     * deviations at rsd = 0.02, with an absolute floor for tiny sources —
     * so the DuckDB gate hash-checks the exact count AND the bound as
-    * deterministic values (VERDICT r10 item 8) instead of a rows-only
+    * deterministic values instead of a rows-only
     * pass. */
   def approxDistinctWords(docs: DataFrame): DataFrame = {
     val toks = docs.select(
       col("source"),
       explode(SharedCorpus.alnumOf(docs)).as("word"))
-    // Pre-reduce to the DISTINCT (source, word) pairs first (r19, guide
+    // Pre-reduce to the DISTINCT (source, word) pairs first (guide
     // §2.3): the one-aggregate form planned countDistinct +
     // approx_count_distinct as an Expand — the full token stream
     // duplicated 2x and shuffled. The distinct-pair aggregation partial-
@@ -1007,8 +1008,8 @@ object TextAnalysis {
     * frequencies): at 100 TB the per-partition CMS tables merge by
     * element-wise ADD (commutative, so the sketch is partition- and
     * order-invariant given a fixed seed) and frequency queries never
-    * rescan the corpus. The gate follows the sketch contract pattern
-    * (VERDICT r10 item 8): the top-k words and exact counts hash-compare,
+    * rescan the corpus. The gate follows the sketch contract pattern:
+    * the top-k words and exact counts hash-compare,
     * and the sketch's accuracy contract rides as deterministic booleans —
     * `ok_lower` (CMS never underestimates, a hard guarantee) and
     * `ok_upper` (estimate ≤ exact + 2·ε·N; Markov over the ~10
@@ -1035,7 +1036,7 @@ object TextAnalysis {
       .orderBy(col("cnt").desc, col("word"))
   }
 
-  // ---- stored COUNT-MIN SKETCH lifecycle (r15): the mergeable
+  // ---- stored COUNT-MIN SKETCH lifecycle: the mergeable
   // point-FREQUENCY artifact, completing the persisted-sketch trio
   // (HLL distinct counts above, the moments/profile artifacts in
   // Formats/events, and now CMS frequencies) ----
@@ -1043,7 +1044,7 @@ object TextAnalysis {
   /** Default CMS depth (independent hash rows). */
   val CmsDepth = 4
   /** Default CMS width (counter slots per row). Build parameters, not
-    * engine constants (VERDICT r15 missing #2): [[buildCmsIndex]] takes
+    * engine constants: [[buildCmsIndex]] takes
     * `depth`/`width`, persists them in the manifest, and every probe and
     * append reads them back from the ARTIFACT — at 100 TB vocabulary the
     * operator widens the sketch at build time (ε·N error scales with
@@ -1065,7 +1066,7 @@ object TextAnalysis {
   /** [[cmsSlotSql]] with the depth as a SQL expression (e.g. a `t.d`
     * column) instead of a literal — the single definition both the engine
     * and every DuckDB oracle share, so a change to the hash or the width
-    * cannot drift the two sides (ADVICE r15). `'cms' || CAST(d AS
+    * cannot drift the two sides. `'cms' || CAST(d AS
     * VARCHAR) || ':'` concatenates to exactly the literal `'cms$d:'`
     * prefix of the column form. */
   def cmsSlotSqlD(wordExpr: String, dExpr: String, width: Int = CmsWidth): String =
@@ -1334,12 +1335,12 @@ object TextAnalysis {
         frac(col("m2"), col("t2")).as("top_2gram_frac"),
         frac(col("t3") - col("d3"), col("t3")).as("dup_3gram_frac"))
   }
-  // ^ UNSORTED (r18): the final orderBy was presentational — the driver's
-  // gate sorts rows before hashing (see mapreduce_wordcount, green since r1
-  // with non-ORDER-BY row order) — and it was not free: a global sort on a
+  // ^ UNSORTED: a final orderBy would be presentational — the driver's
+  // gate sorts rows before hashing (mapreduce_wordcount passes with
+  // non-ORDER-BY row order) — and it is not free: a global sort on a
   // zero-shuffle operator adds a range exchange whose bound-sampling pass
   // re-executes the whole gram projection, i.e. ~2x the operator
-  // (guide §2.4, the ta_hash_embed r16 precedent). At 100 TB the sort also
+  // (guide §2.4, as for ta_hash_embed). At 100 TB the sort also
   // forces a corpus-wide range shuffle no caller of per-doc stats needs.
 
   /** Per-source curation funnel — the acceptance report a curation team

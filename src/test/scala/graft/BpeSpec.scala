@@ -26,7 +26,6 @@ class BpeSpec extends SparkTestBase {
     assert(segs("low") === "low")
     assert(segs("lower") === "lower")
     assert(segs("lowest") === "lowest")
-    state.unpersist()
   }
 
   test("greedy merge application: runs resolve left-to-right, boundaries respected") {
@@ -44,7 +43,6 @@ class BpeSpec extends SparkTestBase {
     assert(segs("aaa") === s"aa${Bpe.Sep}a")
     assert(segs("aaaaa") === s"aa${Bpe.Sep}aa${Bpe.Sep}a")
     assert(segs("aaaaaa") === s"aa${Bpe.Sep}aa${Bpe.Sep}aa")
-    state.unpersist()
   }
 
   test("tokenizeWithVocab: per-doc subword counts follow the learned segmentation") {
@@ -71,8 +69,7 @@ class BpeSpec extends SparkTestBase {
       Bpe.buildBpeModel(docs, "t_bpe_model_spec")
       // the stored sequence IS the training output, round-ordered
       val stored = Bpe.storedMerges(spark, "t_bpe_model_spec")
-      val (fresh, st) = Bpe.train(docs)
-      st.unpersist()
+      val fresh = Bpe.train(docs)._1
       assert(stored === fresh)
       // tokenizing under the stored model equals train-per-call
       val indexed = Bpe.tokenizeWithStoredVocab(spark, docs, "t_bpe_model_spec")

@@ -114,7 +114,6 @@ class DedupSpec extends SparkTestBase {
       .partitionBy(col("label")).orderBy(col("q").desc, col("doc_id"))
     val expected = scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).collect().map(_.getLong(0)).toSet
-    labels.unpersist()
     assert(byQuality === expected)
     // the two policies genuinely differ on this corpus (some component's
     // best-quality member is not its lowest id) — otherwise the gate
@@ -335,7 +334,6 @@ class DedupSpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1))).toMap
       val oneShot = Dedup.nearDupComponents(docs)
       val expected = oneShot.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      oneShot.unpersist()
       assert(merged === expected)
       val (n, fp, _, _) = graft.sources.Formats.readBuildMeta(spark, "graft_ci_tbl").get
       val full = graft.sources.Formats.corpusStamp(docs, "doc_id")
@@ -537,6 +535,7 @@ class DedupSpec extends SparkTestBase {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize",
       "spark.sql.shuffle.partitions")
       .map(k => k -> conf.getOption(k))
     try {
@@ -548,6 +547,11 @@ class DedupSpec extends SparkTestBase {
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1KB")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
       conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
+      // the signature table is a lazy local checkpoint whose partition
+      // count AQE coalescing picks; at the default 1 MB floor this toy
+      // corpus collapses to ONE map task, which no map-range split can cut
+      // (a 100 TB signature table is far above the floor)
+      conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1KB")
       // enough partitions that the saturated class's band buckets stand
       // out against the median partition (skew = max >> median, so the
       // hot class must NOT be the whole corpus)
@@ -570,6 +574,37 @@ class DedupSpec extends SparkTestBase {
         case (k, None)    => conf.unset(k)
       }
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  test("no operator leaves a session-cache entry behind") {
+    import graft.ops.{Curation, Sampling, TextAnalysis}
+    val old = docs.filter(col("doc_id") % 4 =!= 1)
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "minHashPairs" -> (() => Dedup.minHashPairs(docs)),
+      "crossCorpusNearDups" -> (() => Dedup.crossCorpusNearDups(old, docs)),
+      "simHashPairs" -> (() => Dedup.simHashPairs(docs)),
+      "simHashTopK" -> (() => Dedup.simHashTopK(docs, col("doc_id") % 10 === 0)),
+      "nearDupAdmit" -> (() => Dedup.nearDupAdmit(docs)),
+      "duplicateSpans" -> (() => Dedup.duplicateSpans(docs)),
+      "removeDuplicateSpans" -> (() => Dedup.removeDuplicateSpans(docs)),
+      "ngramJaccardPairs (df-capped)" -> (() => Dedup.ngramJaccardPairs(docs)),
+      "ngramJaccardPairs (maxDf = None)" -> (() => Dedup.ngramJaccardPairs(docs, maxDf = None)),
+      "nearDupComponents" -> (() => Dedup.nearDupComponents(docs)),
+      "nearDupSurvivors (driver)" -> (() => Dedup.nearDupSurvivors(docs)),
+      "nearDupSurvivors (distributed)" ->
+        (() => Dedup.nearDupSurvivors(docs, maxDriverEdges = -1L)),
+      "nearDupSurvivorsBy" ->
+        (() => Dedup.nearDupSurvivorsBy(docs, TextAnalysis.qualityCol)),
+      "Sampling.splitAssignLeakFree" -> (() => Sampling.splitAssignLeakFree(docs)),
+      "Sampling.splitDriftReport" -> (() => Sampling.splitDriftReport(old, docs)),
+      "Curation.corpusReport" -> (() => Curation.corpusReport(docs)),
+      "TextAnalysis.textRank" -> (() => TextAnalysis.textRank(docs)))
+    spark.catalog.clearCache()
+    cases.foreach { case (name, op) =>
+      op().collect()
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name left a session-cache entry behind")
     }
   }
 }

@@ -176,9 +176,11 @@ class PlanAuditSpec extends SparkTestBase {
       assert(shS <= rawS,
         s"shared mode grew sort-merge joins: raw=$rawS shared=$shS")
       // and the snapshot scan must column-prune: the miner names only
-      // doc_id+ws, so the pinned scan must not read `text`/`toks_alnum`
+      // doc_id+ws, so the pinned scan must not read `text`/`toks_alnum`.
+      // The scan sits in the signature plan, which the pair miner
+      // checkpoints (its own plan reads the checkpoint, not the scan).
       val sharedPlan = SharedCorpus.withMode(true) {
-        Dedup.minHashPairs(SharedCorpus.docsTok(spark, d))
+        Dedup.minHashSignatures(SharedCorpus.docsTok(spark, d))
           .queryExecution.executedPlan.toString
       }
       val scanSchemas = "ReadSchema: [^\n]+".r.findAllIn(sharedPlan).toList
@@ -205,5 +207,23 @@ class PlanAuditSpec extends SparkTestBase {
     // Q20's nested IN must be a semi join against the qualifying pairs
     val q20 = Relational.q20ExcessShare(spark, d).queryExecution.executedPlan.toString
     assert(q20.contains("LeftSemi"), s"Q20 IN must plan a semi join:\n$q20")
+  }
+
+  test("pareto ranks a top-k, never the whole parts aggregate in one window") {
+    import graft.ops.Relational
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    val h = new AdaptiveSparkPlanHelper {}
+    val df = Relational.paretoParts(spark, "/root/testdata/sf0.001")
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    def topK(p: org.apache.spark.sql.execution.SparkPlan) =
+      h.find(p)(_.isInstanceOf[TakeOrderedAndProjectExec]).isDefined
+    assert(topK(plan), s"pareto must take its top-N as a top-k:\n$plan")
+    val windows = h.collect(plan) { case w: WindowExec => w }
+    assert(windows.nonEmpty, s"pareto ranks with a window:\n$plan")
+    windows.foreach(w => assert(topK(w),
+      s"a pareto window reads the full parts aggregate:\n$plan"))
   }
 }

@@ -91,7 +91,6 @@ class SamplingSpec extends SparkTestBase {
     val same = Sampling.splitDriftReport(docs, docs)
     assert(same.filter(col("split_was") =!= col("split_now")).count() === 0)
     assert(same.agg(sum("n_docs")).head().getLong(0) === docs.count())
-    same.unpersist()
     // growth: every yesterday-doc appears exactly once in the matrix
     val old = docs.filter(col("doc_id") % 4 =!= 1)
     val drift = Sampling.splitDriftReport(old, docs)
@@ -106,7 +105,6 @@ class SamplingSpec extends SparkTestBase {
     val got = drift.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got === direct)
-    a.unpersist(); b.unpersist(); drift.unpersist()
   }
 
   test("stored-lifecycle split: indexed projection == from-scratch, the " +
@@ -125,13 +123,11 @@ class SamplingSpec extends SparkTestBase {
     val scratch = Sampling.splitAssignLeakFree(docs)
     assert(indexed.exceptAll(scratch).count() === 0 &&
       scratch.exceptAll(indexed).count() === 0)
-    scratch.unpersist()
     // published yesterday-assignment equals the from-scratch split of old
     val pubWas = spark.table("t_split_assign")
     val scratchOld = Sampling.splitAssignLeakFree(old)
     assert(pubWas.exceptAll(scratchOld).count() === 0 &&
       scratchOld.exceptAll(pubWas).count() === 0)
-    scratchOld.unpersist()
     // THE lifecycle contract: the serving projection reads only the
     // stored label table — no shingling, no signatures, no band mining
     val probePlan = indexed.queryExecution.executedPlan.toString
@@ -191,6 +187,5 @@ class SamplingSpec extends SparkTestBase {
     val plain = Sampling.splitAssign(
       out.select("doc_id", "label"), "label").select("doc_id", "split")
     assert(singles.select("doc_id", "split").exceptAll(plain).count() === 0)
-    out.unpersist()
   }
 }
