@@ -199,113 +199,68 @@ object SparkEntry {
       graft.ops.Classifier.train(SharedCorpus.docsTok(s, d)).last
     }
 
-  /** Index families the sweep-wide STAMP AUDIT covers (r15, VERDICT r14
-    * item 3): after the full gate sweep, `graft.Verify` runs
-    * [[graft.sources.Formats.stampAudit]] once per family that exists —
-    * manifest stamp vs a distinct-id recount of the stored rows, plus the
-    * non-distinct row-count cross-check where the layout stores a FIXED
-    * number of rows per id — and WITHHOLDS the family's gates on a
-    * failure, so the one silent-corruption case the manifest contract
-    * admits (an overlapping or duplicated append) is detectable
-    * engine-wide for the cost of one id-column scan per family.
+  /** Which gates each stored family vouches for, for the sweep-wide
+    * stamp audit: after the full gate sweep, `graft.Verify` runs
+    * [[graft.sources.Formats.stampAudit]] on every family the catalog
+    * holds ([[graft.sources.Formats.auditableFamilies]] — each manifest
+    * names its own id layout) and WITHHOLDS a failing family's gates, so
+    * the one silent-corruption case the manifest contract admits (an
+    * overlapping or duplicated append) is detectable engine-wide for the
+    * cost of one id-column scan per family.
     *
-    * Tuple: (family table, stored-id table, id column, fixed rows-per-id
-    * if the layout has one, gate-name PREFIXES the family vouches for).
-    * Sketch-delta families (HLL, LM counts, profile, TextRank edges)
-    * store per-batch AGGREGATES, not per-id rows — their manifest stamps
-    * cannot be recomputed from stored state by design, so they are out
-    * of audit scope (their disjointness contract is enforced upstream by
-    * the id-split batch derivations, like everything here). */
-  def auditFamilies: Seq[(String, String, String, Option[Long], Seq[String])] = {
-    val bands = Some(Similarity.SigBands.toLong)
-    val one = Some(1L)
-    Seq(
-      ("graft_lsh_idx", "graft_lsh_idx", "vec_id", bands,
-        Seq("ann_lsh_indexed", "ann_lsh_topk", "ann_recall_lsh",
-          "fmt_index_manifest", "fmt_stamp_audit", "sim_neardup_lsh")),
-      ("graft_lsh_incr", "graft_lsh_incr", "vec_id", bands,
-        Seq("ann_lsh_indexed_incr")),
-      ("graft_lsh_prg", "graft_lsh_prg", "vec_id", bands,
-        Seq("ann_lsh_purged")),
-      ("graft_hemb_lsh_idx", "graft_hemb_lsh_idx", "vec_id", bands,
-        Seq("ann_hash_embed_lsh", "ta_hybrid_indexed", "ta_hybrid_many")),
-      ("graft_sq_codes", "graft_sq_codes", "vec_id", one,
-        Seq("ann_sq_", "ann_recall_sq")),
-      ("graft_ivf_idx", "graft_ivf_idx", "vec_id", one,
-        Seq("ann_ivf_indexed", "ann_ivf_topk", "ann_recall_ivf",
-          "ann_cluster_sample_indexed", "dedup_semantic",
-          "ann_maxsim_indexed", "ann_recall_maxsim")),
-      ("graft_ivf_incr", "graft_ivf_incr", "vec_id", one,
-        Seq("ann_ivf_indexed_incr")),
-      ("graft_ivf_prg", "graft_ivf_prg", "vec_id", one,
-        Seq("ann_ivf_purged")),
-      ("graft_ivf64", "graft_ivf64", "vec_id", one,
-        Seq("ann_nprobe_cal")),
-      ("graft_pq_idx", "graft_pq_idx", "vec_id", one,
-        Seq("ann_pq_indexed")),
-      ("graft_pq_incr", "graft_pq_incr", "vec_id", one,
-        Seq("ann_pq_indexed_incr")),
-      ("graft_ivfpq_idx", "graft_ivfpq_idx", "vec_id", one,
-        Seq("ann_ivfpq_indexed", "ann_ivfpq_many", "ann_ivfpq_refine",
-          "ann_recall_ivfpq", "ann_recall_refine", "ann_nprobe_target")),
-      ("graft_ivfpq_incr", "graft_ivfpq_incr", "vec_id", one,
-        Seq("ann_ivfpq_indexed_incr")),
-      ("graft_ivfpq_prg", "graft_ivfpq_prg", "vec_id", one,
-        Seq("ann_ivfpq_purged")),
-      ("graft_vec_store", "graft_vec_store", "vec_id", one,
-        Seq("ann_ivfpq_refine", "ann_recall_refine",
-          "ann_maxsim_indexed", "ann_recall_maxsim")),
-      ("graft_bm25_idx", "graft_bm25_idx", "doc_id", None,
-        Seq("ta_bm25_indexed", "ta_bm25_many", "ta_hybrid_indexed",
-          "ta_hybrid_many", "ta_filter_funnel")),
-      ("graft_bm25_incr", "graft_bm25_incr", "doc_id", None,
-        Seq("ta_bm25_indexed_incr")),
-      ("graft_bm25_cpt", "graft_bm25_cpt", "doc_id", None,
-        Seq("ta_bm25_compacted")),
-      ("graft_bm25_prg", "graft_bm25_prg", "doc_id", None,
-        Seq("ta_bm25_purged")),
-      ("graft_band_idx", "graft_band_idx_sigs", "doc_id", one,
-        Seq("dedup_cross_indexed")),
-      ("graft_band_incr", "graft_band_incr_sigs", "doc_id", one,
-        Seq("dedup_cross_indexed_incr")),
-      ("graft_band_prg", "graft_band_prg_sigs", "doc_id", one,
-        Seq("dedup_cross_purged")),
-      ("graft_band_daily", "graft_band_daily_sigs", "doc_id", one,
-        Seq("pipeline_daily_batch", "pipeline_daily_bloom")),
-      ("graft_comp_band", "graft_comp_band_sigs", "doc_id", one,
-        Seq("dedup_components_incr")),
-      ("graft_comp_tbl", "graft_comp_tbl", "doc_id", one,
-        Seq("dedup_components_incr")),
-      ("graft_comp_prg", "graft_comp_prg", "doc_id", one,
-        Seq("dedup_components_purged", "sample_split_purged")),
-      ("graft_forget_band", "graft_forget_band_sigs", "doc_id", one,
-        Seq("curation_forget")),
-      ("graft_fuzzy_idx", "graft_fuzzy_idx", "id", None,
-        Seq("join_fuzzy_indexed")),
-      ("graft_fuzzy_incr", "graft_fuzzy_incr", "id", None,
-        Seq("join_fuzzy_indexed_incr")),
-      ("graft_fuzzy_prg", "graft_fuzzy_prg", "id", None,
-        Seq("join_fuzzy_purged")),
-      ("graft_phash_idx", "graft_phash_idx_codes", "doc_id", one,
-        Seq("mm_phash_indexed")),
-      ("graft_phash_incr", "graft_phash_incr_codes", "doc_id", one,
-        Seq("mm_phash_indexed_incr")),
-      ("graft_phash_prg", "graft_phash_prg_codes", "doc_id", one,
-        Seq("mm_phash_purged")),
-      // split-lifecycle families (r18): one-shot full clustering behind
-      // sample_split_indexed; yesterday-corpus band+components merged with
-      // the daily batch behind the incr/drift pair; the published
-      // assignment keeps yesterday's stamp (it is NOT republished by the
-      // gate — the drift audit reads it as the immutable prior)
-      ("graft_split_full", "graft_split_full", "doc_id", one,
-        Seq("sample_split_indexed")),
-      ("graft_split_band", "graft_split_band_sigs", "doc_id", one,
-        Seq("sample_split_incr", "sample_split_drift_indexed")),
-      ("graft_split_comp", "graft_split_comp", "doc_id", one,
-        Seq("sample_split_incr", "sample_split_drift_indexed")),
-      ("graft_split_assign", "graft_split_assign", "doc_id", one,
-        Seq("sample_split_drift_indexed")))
-  }
+    * Entry: (family table prefix, gate-name prefixes). A failing family
+    * that no entry names withholds every gate. */
+  def auditGates: Seq[(String, Seq[String])] = Seq(
+    "graft_lsh_idx" -> Seq("ann_lsh_indexed", "ann_lsh_topk", "ann_recall_lsh",
+      "fmt_index_manifest", "fmt_stamp_audit", "sim_neardup_lsh"),
+    "graft_lsh_incr" -> Seq("ann_lsh_indexed_incr"),
+    "graft_lsh_prg" -> Seq("ann_lsh_purged"),
+    "graft_hemb_lsh_idx" -> Seq("ann_hash_embed_lsh", "ta_hybrid_indexed", "ta_hybrid_many"),
+    "graft_sq_codes" -> Seq("ann_sq_", "ann_recall_sq"),
+    "graft_ivf_idx" -> Seq("ann_ivf_indexed", "ann_ivf_topk", "ann_recall_ivf",
+      "ann_cluster_sample_indexed", "dedup_semantic",
+      "ann_maxsim_indexed", "ann_recall_maxsim"),
+    "graft_ivf_incr" -> Seq("ann_ivf_indexed_incr"),
+    "graft_ivf_prg" -> Seq("ann_ivf_purged"),
+    "graft_ivf64" -> Seq("ann_nprobe_cal"),
+    "graft_pq_idx" -> Seq("ann_pq_indexed"),
+    "graft_pq_incr" -> Seq("ann_pq_indexed_incr"),
+    "graft_ivfpq_idx" -> Seq("ann_ivfpq_indexed", "ann_ivfpq_many", "ann_ivfpq_refine",
+      "ann_recall_ivfpq", "ann_recall_refine", "ann_nprobe_target"),
+    "graft_ivfpq_incr" -> Seq("ann_ivfpq_indexed_incr"),
+    "graft_ivfpq_prg" -> Seq("ann_ivfpq_purged"),
+    "graft_vec_store" -> Seq("ann_ivfpq_refine", "ann_recall_refine",
+      "ann_maxsim_indexed", "ann_recall_maxsim"),
+    "graft_bm25_idx" -> Seq("ta_bm25_indexed", "ta_bm25_many", "ta_hybrid_indexed",
+      "ta_hybrid_many", "ta_filter_funnel"),
+    "graft_bm25_incr" -> Seq("ta_bm25_indexed_incr"),
+    "graft_bm25_cpt" -> Seq("ta_bm25_compacted"),
+    "graft_bm25_prg" -> Seq("ta_bm25_purged"),
+    "graft_band_idx" -> Seq("dedup_cross_indexed"),
+    "graft_band_incr" -> Seq("dedup_cross_indexed_incr"),
+    "graft_band_prg" -> Seq("dedup_cross_purged"),
+    "graft_band_daily" -> Seq("pipeline_daily_batch", "pipeline_daily_bloom"),
+    "graft_sdaily_band_" -> Seq("stream_pipeline_daily"),
+    "graft_comp_band" -> Seq("dedup_components_incr"),
+    "graft_comp_tbl" -> Seq("dedup_components_incr"),
+    "graft_comp_prg" -> Seq("dedup_components_purged", "sample_split_purged"),
+    "graft_forget_band" -> Seq("curation_forget"),
+    "graft_fuzzy_idx" -> Seq("join_fuzzy_indexed"),
+    "graft_fuzzy_incr" -> Seq("join_fuzzy_indexed_incr"),
+    "graft_fuzzy_prg" -> Seq("join_fuzzy_purged"),
+    "graft_phash_idx" -> Seq("mm_phash_indexed"),
+    "graft_phash_incr" -> Seq("mm_phash_indexed_incr"),
+    "graft_phash_prg" -> Seq("mm_phash_purged"),
+    "graft_shard_plan" -> Seq("pack_epoch_indexed"),
+    // split lifecycle: one-shot full clustering behind
+    // sample_split_indexed; yesterday-corpus band+components merged with
+    // the daily batch behind the incr/drift pair; the published
+    // assignment keeps yesterday's stamp (it is NOT republished by the
+    // gate — the drift audit reads it as the immutable prior)
+    "graft_split_full" -> Seq("sample_split_indexed"),
+    "graft_split_band" -> Seq("sample_split_incr", "sample_split_drift_indexed"),
+    "graft_split_comp" -> Seq("sample_split_incr", "sample_split_drift_indexed"),
+    "graft_split_assign" -> Seq("sample_split_drift_indexed"))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1989,14 +1944,13 @@ object SparkEntry {
       import s.implicits._
       Seq((n, fp, appends, fresh)).toDF("corpus_n", "corpus_fp", "appends", "fresh")
     }),
-    // the xor-stamp DISJOINTNESS audit (r14, ADVICE r11): manifest stamp
-    // vs a distinct-id recount of the stored rows — the detector for the
+    // the xor-stamp DISJOINTNESS audit: manifest stamp vs a distinct-id
+    // recount of the stored rows — the detector for the
     // silently-corrupting overlapping append; on a healthy one-shot
     // build both sides equal the corpus stamp and the verdict is true
     "fmt_stamp_audit" -> ((s, d) => {
       buildOnce(s"lsh:$d") { Similarity.buildLshIndex(Tables.embeddings(s, d), "graft_lsh_idx") }
-      Formats.stampAudit(s, "graft_lsh_idx", s.table("graft_lsh_idx"), "vec_id",
-        rowsPerId = Some(Similarity.SigBands.toLong))
+      Formats.stampAudit(s, "graft_lsh_idx")
     }),
     "fmt_schema_evolution" -> ((s, d) => {
       val out = s"$scratchDir/cust_evolve"

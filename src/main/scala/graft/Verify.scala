@@ -16,33 +16,28 @@ object Verify {
     val spark = GraftSession.local(cpus.toInt, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Deployment modes under test (VERDICT r11 item 7 — BOTH serving
-    // modes driver-attested in ONE artifact): the default run pins the
+    // Both serving modes are attested in ONE artifact: the run pins the
     // shared token projection and writes each gate's PINNED-mode result
     // for the DuckDB compare; for every gate whose plan actually consults
     // the projection (the bench's touched probe) it ALSO executes the
     // raw-recompute path — the mode the bench's steady-state timings run
     // — and bit-compares the two row multisets in-process. On parity the
     // oracle hash vouches for both modes at once; on a mismatch the
-    // gate's parquet is withheld, so the driver's gate fails loudly
+    // gate's parquet is withheld, so the oracle compare fails loudly
     // instead of hashing one mode while the other silently diverged.
     // Per-gate outcomes land in `outDir/raw_parity.json`.
-    // SPARK_GRAFT_VERIFY_RAW=1 keeps the old single-mode escape hatch
-    // (skip the pin, dump raw-mode results only — no parity pass).
-    val rawMode = sys.env.get("SPARK_GRAFT_VERIFY_RAW").contains("1")
-    if (!rawMode)
-      try graft.ops.SharedCorpus.pin(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] SharedCorpus.pin failed: ${e.getMessage}")
-      }
+    try graft.ops.SharedCorpus.pin(spark, sfDir)
+    catch { case e: Throwable =>
+      System.err.println(s"[verify] SharedCorpus.pin failed: ${e.getMessage}")
+    }
     val parity = scala.collection.mutable.SortedMap.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try {
         graft.ops.SharedCorpus.resetTouched()
-        val primary = graft.ops.SharedCorpus.withMode(!rawMode)(fn(spark, sfDir))
-        if (!rawMode && graft.ops.SharedCorpus.wasTouched) {
+        val primary = graft.ops.SharedCorpus.withMode(true)(fn(spark, sfDir))
+        if (graft.ops.SharedCorpus.wasTouched) {
           // sorted-row-multiset compare, same tolerance as the driver's
           // hash (which sorts rows before hashing): gate ordering is part
           // of each oracle's ORDER BY, not of the mode-parity contract
@@ -82,41 +77,35 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // Stamp-audit sweep invariant (r15, VERDICT r14 item 3): after the
-    // sweep, every index family the run built gets its manifest stamp
-    // recomputed from the STORED ids (one id-column scan each) plus the
+    // Stamp-audit sweep invariant: after the sweep, every stored family
+    // the catalog holds gets its manifest stamp recomputed from the
+    // STORED ids its manifest names (one id-column scan each) plus the
     // fixed-rows-per-id cross-check — and a failing family WITHHOLDS its
-    // gates' parquet, so the driver's oracle compare fails loudly instead
-    // of hashing results served off a silently corrupted index (the same
+    // gates' parquet ([[SparkEntry.auditGates]]; every gate when no entry
+    // names the family), so the oracle compare fails loudly instead of
+    // hashing results served off a silently corrupted index (the same
     // enforcement shape as raw_parity). One row per audited family lands
     // in `audit_stamps.json`.
     val audits = scala.collection.mutable.SortedMap.empty[String, String]
-    SparkEntry.auditFamilies.foreach { case (fam, idTable, idCol, rowsPer, gates) =>
-      val auditable =
-        spark.catalog.tableExists(graft.sources.Formats.metaTable(fam)) &&
-          spark.catalog.tableExists(idTable)
-      if (auditable) {
+    graft.sources.Formats.auditableFamilies(spark).foreach { fam =>
+      val (ok, entry) =
         try {
-          val r = graft.sources.Formats
-            .stampAudit(spark, fam, spark.table(idTable), idCol, rowsPer).head()
+          val r = graft.sources.Formats.stampAudit(spark, fam).head()
           val ok = r.getBoolean(5) && r.getBoolean(6)
-          audits.put(fam,
-            s"""{"ok": $ok, "manifest_n": ${r.getLong(0)}, """ +
-              s""""stored_n": ${r.getLong(2)}, "stored_rows": ${r.getLong(4)}, """ +
-              s""""disjoint_ok": ${r.getBoolean(5)}, "rows_ok": ${r.getBoolean(6)}}""")
-          if (!ok) {
-            System.err.println(s"[verify] STAMP AUDIT FAILED for '$fam' " +
-              s"($r) - withholding gates ${gates.mkString(", ")}")
-            gates.foreach(prefix =>
-              SparkEntry.queries.keys.filter(_.startsWith(prefix)).foreach(g =>
-                org.apache.commons.io.FileUtils
-                  .deleteQuietly(new java.io.File(s"$outDir/$g"))))
-          }
+          (ok, s"""{"ok": $ok, "manifest_n": ${r.getLong(0)}, """ +
+            s""""stored_n": ${r.getLong(2)}, "stored_rows": ${r.getLong(4)}, """ +
+            s""""disjoint_ok": ${r.getBoolean(5)}, "rows_ok": ${r.getBoolean(6)}}""")
         } catch { case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          audits.put(fam, s"""{"ok": false, "err": ${q(msg)}}""")
-          System.err.println(s"[verify] stamp audit of '$fam' errored: $msg")
+          (false, s"""{"ok": false, "err": ${q(Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
         }
+      audits.put(fam, entry)
+      if (!ok) {
+        val gates = SparkEntry.auditGates.collect { case (t, gs) if fam.startsWith(t) => gs }.flatten
+        val withheld = SparkEntry.queries.keys.filter(g => gates.isEmpty || gates.exists(g.startsWith))
+        System.err.println(s"[verify] STAMP AUDIT FAILED for '$fam' $entry - withholding " +
+          (if (gates.isEmpty) "every gate" else withheld.toSeq.sorted.mkString("gates ", ", ", "")))
+        withheld.foreach(g =>
+          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$outDir/$g")))
       }
     }
     if (audits.nonEmpty) {

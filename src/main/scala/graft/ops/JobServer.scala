@@ -26,7 +26,7 @@ import org.apache.spark.sql.SparkSession
   *    "transitions", ...}` — the poll-while-running surface (reference
   *    clients poll `/jobs/job_<seq>/status`); terminal jobs add
   *    `distinct_keys` / `out_dir` / `error`;
-  *  - `GET /jobs` → summary list of every submitted job;
+  *  - `GET /jobs` → summary list of every job the registry holds;
   *  - `DELETE /jobs/<id>` → cancel: a queued job ends CANCELLED without
   *    ever running, a running one gets its Spark job group aborted (the
   *    reference master's queued-znode removal,
@@ -40,12 +40,19 @@ import org.apache.spark.sql.SparkSession
   * request is answered on its dispatcher thread, as no handler blocks) with
   * Jackson (already on Spark's classpath) for JSON. This facade binds
   * loopback only: it is a library/test surface, not a hardened public
-  * endpoint. */
+  * endpoint.
+  *
+  * The registry stays bounded under sustained submissions: it keeps every
+  * queued and running job and the newest [[JobServer.KeptTerminal]]
+  * terminal ones. Each POST and each `GET /jobs` evicts the oldest
+  * terminal jobs past that count, and an evicted id answers 404 like an
+  * unknown one. */
 final class JobServer(spark: SparkSession, outRoot: String, maxParallel: Int = 4) {
 
   private val om = new ObjectMapper()
   private val ids = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Engine.JobHandle]()
+  // id-ordered, so the oldest terminal jobs are evicted first
+  private val jobs = new java.util.concurrent.ConcurrentSkipListMap[Int, Engine.JobHandle]()
   private val queue = new Engine.JobQueue(spark, maxParallel)
   private val server = {
     // the JDK server writes a response's headers and body separately, so
@@ -79,7 +86,7 @@ final class JobServer(spark: SparkSession, outRoot: String, maxParallel: Int = 4
     node.put("progress", h.progress)
     val tr = node.putArray("transitions")
     h.transitions.foreach(tr.add)
-    if (status == "COMPLETED" || status == "FAILED" || status == "CANCELLED") {
+    if (JobServer.Terminal(status)) {
       val r = h.await()
       node.put("distinct_keys", r.distinctKeys)
       node.put("out_dir", r.outDir)
@@ -100,8 +107,9 @@ final class JobServer(spark: SparkSession, outRoot: String, maxParallel: Int = 4
       (ex.getRequestMethod, path) match {
         case ("POST", "/jobs") => submit(ex)
         case ("GET", "/jobs") =>
+          evictTerminal()
           val arr = om.createArrayNode()
-          jobs.asScala.toSeq.sortBy(_._1).foreach { case (id, h) =>
+          jobs.asScala.foreach { case (id, h) =>
             val n = arr.addObject()
             n.put("job_id", id)
             n.put("status", h.status)
@@ -131,6 +139,11 @@ final class JobServer(spark: SparkSession, outRoot: String, maxParallel: Int = 4
         catch { case _: Throwable => () }
     }
 
+  /** Drop the oldest terminal jobs past [[JobServer.KeptTerminal]]. */
+  private def evictTerminal(): Unit =
+    jobs.asScala.collect { case (id, h) if JobServer.Terminal(h.status) => id }
+      .toSeq.dropRight(JobServer.KeptTerminal).foreach(id => jobs.remove(id))
+
   private def submit(ex: HttpExchange): Unit = {
     val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
     val parsed =
@@ -149,10 +162,18 @@ final class JobServer(spark: SparkSession, outRoot: String, maxParallel: Int = 4
       case Some(spec) =>
         val id = ids.getAndIncrement()
         jobs.put(id, queue.submit(spec, s"$outRoot/job_$id", id))
+        evictTerminal()
         val node = om.createObjectNode()
         node.put("job_id", id)
         node.put("status", "CREATED")
         respond(ex, 200, om.writeValueAsString(node))
     }
   }
+}
+
+object JobServer {
+  /** Terminal jobs the registry keeps (the newest ones). */
+  val KeptTerminal = 128
+
+  private val Terminal = Set("COMPLETED", "FAILED", "CANCELLED")
 }

@@ -34,7 +34,7 @@ object Relational {
     val price = col("l_extendedprice").cast(money)
     val disc  = col("l_discount").cast(rate)
     val tax   = col("l_tax").cast(rate)
-    // quantity rides DECIMAL like the money columns (r15): a plain DOUBLE
+    // quantity rides DECIMAL like the money columns: a plain DOUBLE
     // sum is partial-order-dependent — identical through sf0.1, but at
     // sf1's ~6M rows/group the engines' different summation orders drift
     // the last bits (measured 7.6e-6 absolute). Exact decimal sum, ONE
@@ -116,7 +116,7 @@ object Relational {
     * Reference has no joins at all (SURVEY §2b) — users hand-rolled these in
     * Python reduce scripts. Direction chosen so the test corpus exercises
     * real rows: orders (1992–2001) all precede events (2024), so every
-    * event with an ordering user matches (ADVICE r1). */
+    * event with an ordering user matches. */
   def lastOrderAsOfEvent(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir).select("event_id", "user_id", "ts")
     val o = Tables.orders(s, dir).select("o_custkey", "o_orderdate")
@@ -1065,7 +1065,7 @@ object Relational {
     // by construction), but the sketch's accuracy CONTRACT is not: emit
     // `|approx − exact| <= eps` as 0/1 columns and let the oracle assert
     // literal 1s — the gate becomes deterministic hash pass/fail without
-    // comparing sketch internals (VERDICT r10 item 8). eps = 1.5 covers
+    // comparing sketch internals. eps = 1.5 covers
     // the exact quantile's interpolation step (adjacent l_quantity values
     // are 1 apart) plus the <= n/accuracy rank error of the KLL-style
     // sketch at every test SF (rank error ~60 rows vs ~4000 rows/value at
@@ -1086,7 +1086,7 @@ object Relational {
       .orderBy("l_returnflag")
   }
 
-  // ---- stored equi-width HISTOGRAM lifecycle (r15): the mergeable
+  // ---- stored equi-width HISTOGRAM lifecycle: the mergeable
   // QUANTILE artifact, completing the persisted-sketch trio next to the
   // HLL distinct counts and the CMS frequency counters (both in
   // TextAnalysis). percentile_approx above answers one query in one
@@ -1097,8 +1097,8 @@ object Relational {
   // replayable in DuckDB bucket for bucket. ----
 
   /** Default histogram bin width over `l_extendedprice` (~105 bins at
-    * TPC-H's price range). A BUILD parameter, not an engine constant
-    * (VERDICT r15 missing #2): [[buildHistIndex]] persists the chosen
+    * TPC-H's price range). A BUILD parameter, not an engine constant:
+    * [[buildHistIndex]] persists the chosen
     * width in the manifest and probes/appends read it back — estimate
     * error is one bin width, so a 100 TB build narrows the bins to its
     * error budget without recompiling. Deterministic cross-engine: IEEE
@@ -1253,7 +1253,7 @@ object Relational {
       dayofweek(col("o_orderdate")).cast("long").as("dow"))
 
   /** One masked key per character position: the string with position `i`
-    * DELETED (the concat drops the character; ADVICE r12 — under the
+    * DELETED (the concat drops the character — under the
     * pos-equality join below this is equivalent to substituting a
     * sentinel, because joining on (pos, deleted-form) pairs exactly the
     * strings that agree everywhere EXCEPT position pos, and equal lengths
@@ -1305,7 +1305,7 @@ object Relational {
       maxDist: Int = 1, n: Int = 3): DataFrame = {
     val cand =
       if (maxDist == 1) {
-        // SHUFFLE_HASH hint (r18, guide §3.1): the masked-key side is
+        // SHUFFLE_HASH hint: the masked-key side is
         // |corpus| × L rows — Catalyst sees only the pre-Generate scan
         // size and auto-broadcasts it (the sf0.1 plan collected 270k keys
         // into a BroadcastExchange). A corpus-scale masked-key table can
@@ -1447,10 +1447,10 @@ object Relational {
       _ => maskedKeys(df, idCol, strCol))
 
   /** The fuzzy index as a [[StoredIndex]] family: masked keys bucketed on
-    * the key, ids stored as `id`. */
+    * the key, ids stored as `id`, a variable number of key rows per id. */
   private def fuzzyIndex(numBuckets: Int = 8) = Family(
     n => s"kind=fuzzy_masked,maxdist=1,buckets=$n", "id", "",
-    Seq(Part("", Seq("k"), numBuckets)))
+    Seq(Part("", Seq("k"), numBuckets)), rowsPerId = None)
 
   /** Ingest half: the batch's masked keys appended — the stored rows are
     * neither read nor rewritten, and (no global model) the result is
@@ -1620,7 +1620,7 @@ object Relational {
       .select(col("part_a").as("u"), col("part_b").as("v")))
 
   def triangleCountsOf(edges: DataFrame): DataFrame = {
-    // Materialize the edge list ONCE (r18, guide §1.2/§3.3): `edges` is
+    // Materialize the edge list ONCE: `edges` is
     // referenced by the degree aggregation and by every leg of the wedge
     // join, and the oriented list `dirE` three times more — left as a
     // plan, the (expensive) edge-mining subtree was planned and executed
@@ -1629,7 +1629,7 @@ object Relational {
     // the lineage: mine once, join the small materialized list. This is
     // also the 100 TB shape — triangle counting always materializes the
     // oriented edge list before the wedge join.
-    // eager = false (ADVICE r18): materialize at first action, not at
+    // eager = false: materialize at first action, not at
     // DataFrame construction, so explain-only paths stay free.
     val edgesM = edges.localCheckpoint(eager = false)
     val deg = edgesM.select(explode(array(col("u"), col("v"))).as("x"))
@@ -1696,7 +1696,7 @@ object Relational {
         .cast("long").as("cents")))
 
   def winsorizedStatsOf(px: DataFrame): DataFrame = {
-    // histogram materialized once (r18): it feeds the bounds window AND
+    // histogram materialized once: it feeds the bounds window AND
     // the winsorized fold — as a plan, the corpus scan + two-level agg
     // executed twice per call
     val hist = px.groupBy("flag", "cents").agg(count(lit(1)).as("c"))
@@ -1879,7 +1879,7 @@ object Relational {
       Tables.lineitem(s, dir).select("l_orderkey", "l_partkey"), minOrders)
 
   def coPurchasePairsOf(lineitems: DataFrame, minOrders: Int): DataFrame = {
-    // Basket form (r18): ONE aggregation to per-order distinct part sets
+    // Basket form: ONE aggregation to per-order distinct part sets
     // (collect_set partial-aggregates map-side), then the i<j pairs
     // explode order-locally — the distinct + self-join form shuffled the
     // corpus twice more (the distinct's (order, part) exchange could not

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossHash
+import graft.sources.StoredIndex
+import graft.sources.StoredIndex.{Family, Part}
 
 /** Deterministic sampling for training-data pipelines — hash-based, not
   * `rand()`-based: a hash of a stable key gives the same sample on every
@@ -203,16 +205,20 @@ object Sampling {
       compTable: String, splitTable: String,
       splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
       salt: String = "split", numBuckets: Int = 8): Unit = {
-    val assign = splitAssignIndexed(spark, compTable, splits, salt)
-    graft.sources.Formats.writeBucketed(assign, splitTable, Seq("doc_id"), numBuckets)
-    val (n, fp) = graft.sources.Formats.readBuildMeta(spark, compTable)
-      .map(m => (m._1, m._2))
-      .getOrElse(throw new IllegalStateException(
-        s"components table '$compTable' has no build manifest — publish " +
-          "from a table built by buildComponentsTable"))
-    graft.sources.Formats.writeBuildMeta(spark, splitTable,
-      s"kind=split,salt=$salt,buckets=$numBuckets", n, fp)
+    StoredIndex.buildStamped(splitAssignment(salt, numBuckets), splitTable, spark,
+      graft.sources.Formats.readBuildMeta(spark, compTable)
+        .map(m => (m._1, m._2))
+        .getOrElse(throw new IllegalStateException(
+          s"components table '$compTable' has no build manifest — publish " +
+            "from a table built by buildComponentsTable"))
+    )(_ => splitAssignIndexed(spark, compTable, splits, salt))
   }
+
+  /** The published assignment as a [[StoredIndex]] family:
+    * one `(doc_id, label, split)` row per document, bucketed on `doc_id`. */
+  private def splitAssignment(salt: String, numBuckets: Int) = Family(
+    n => s"kind=split,salt=$salt,buckets=$n", "doc_id", "",
+    Seq(Part("", Seq("doc_id"), numBuckets)))
 
   /** STORED-LIFECYCLE drift audit — [[splitDriftReport]]'s production
     * twin, O(batch + flips) instead of two corpus re-clusterings:

@@ -99,7 +99,7 @@ object Similarity {
     * only join shape the non-equi `query_doc =!= neighbor_doc` predicate
     * admits without an index), so a corpus-scale panel would hit the 8 GB
     * broadcast cap / driver memory long before the join even starts
-    * (ADVICE r17). 1M rows × ~(4·dim + 24) B ≈ 150 MB at dim=32 —
+    * 1M rows × ~(4·dim + 24) B ≈ 150 MB at dim=32 —
     * comfortably broadcastable; anything larger is a workload for
     * [[maxSimTopKIndexed]], whose per-token cell probes are equi-joins
     * that never broadcast the corpus side. Enforced loudly (the
@@ -186,7 +186,7 @@ object Similarity {
       .select(col("dkey").as("query_doc"), col("vec_id").as("qtok"),
         col("embedding").as("qv"))
     // the probe panel (q × nprobe rows) broadcasts too — same loud bound
-    // as the exact tier (ADVICE r17); unlike there, the corpus side here
+    // as the exact tier; unlike there, the corpus side here
     // is equi-joined on cell, so only the panel size is at stake
     requireBroadcastablePanel(q, "maxSimTopKIndexed")
     // per-token probed cells off the stored pivots
@@ -243,7 +243,7 @@ object Similarity {
   /** Recall surface of the per-token probe ([[maxSimTopKIndexed]]) over
     * an (nprobe × shortlist) grid, against the exact MaxSim tier on the
     * SAME stored corpus — the late-interaction analogue of
-    * [[nprobeCalibration]] (VERDICT r17 item 4). The per-token probe's
+    * [[nprobeCalibration]]. The per-token probe's
     * recall behaves structurally unlike single-vector IVF, so the
     * single-axis monitors don't transfer: a document reaches the
     * shortlist if ANY of its tokens lands a strong partial hit in a
@@ -269,7 +269,7 @@ object Similarity {
     val emb = spark.table(ivfTable).select(col("vec_id"), col("embedding"))
     val exact = asQn(maxSimTopK(emb, samplePred, groupSize, k)).persist()
     // loud empty-sample contract, same cause-naming as calibrateNprobe
-    // (ADVICE r16): an empty grid sweep must not read as zero recall
+    // — an empty grid sweep must not read as zero recall
     require(exact.count() > 0,
       s"MaxSim calibration sample for '$ivfTable' is empty (predicate " +
         "selected no query docs with neighbors) — widen samplePred")
@@ -388,8 +388,7 @@ object Similarity {
       var selected = Vector.empty[(Long, Double)] // (vec_id, mmr)
       // a shortlist smaller than k (tiny corpus, isolated vector) emits
       // the partial selection — the fewer-than-k contract every top-k
-      // operator here shares — instead of maxBy on an empty set (ADVICE
-      // r12)
+      // operator here shares — instead of maxBy on an empty set
       var exhausted = false
       for (_ <- 1 to k if !exhausted) {
         val picked = selected.map(_._1).toSet
@@ -663,10 +662,11 @@ object Similarity {
   }
 
   /** The LSH index as a [[StoredIndex]] family: one band table bucketed
-    * on the probe key. */
+    * on the probe key, [[SigBands]] band rows per vector. */
   private def lshIndex(numBuckets: Int = 8) = Family(
     n => s"kind=lsh,buckets=$n", "vec_id", "",
-    Seq(Part("", Seq("band_idx", "band_val"), numBuckets)), bootstrap = true)
+    Seq(Part("", Seq("band_idx", "band_val"), numBuckets)), bootstrap = true,
+    rowsPerId = Some(SigBands))
 
   /** Incremental-ingest half of the LSH build/query split: band the NEW
     * batch's signatures and append them into the stored index layout.
@@ -887,7 +887,7 @@ object Similarity {
     * near-duplicates are invisible by construction — the documented
     * recall trade every IVF-bucketed miner in this engine makes.
     *
-    * Hot-cell guard (VERDICT r10 item 1): Σ|cell|² is the right TOTAL
+    * Hot-cell guard: Σ|cell|² is the right TOTAL
     * cost, but a duplicate-saturated crawl can put a large fraction of
     * the corpus into ONE cell — and a plain cell-key self-join would hand
     * that whole cell's quadratic pair enumeration to a single task. Each
@@ -1075,7 +1075,7 @@ object Similarity {
   val PqSubspaces = 16
   val PqSubDim: Int = Dim / PqSubspaces
 
-  /** Centroids per PQ subspace — 64 since r14 (was 16): the r14 recall
+  /** Centroids per PQ subspace — 64 (was 16): the recall
     * sweep (BASELINE.md, recall-vs-cost curve) measured the raw IVF×PQ
     * tier at 0.34→0.46 avg recall@5 for the 16→64 step at nprobe=4 with
     * ZERO stored-byte cost (codes stay [[PqSubspaces]] bytes/row; only
@@ -1085,7 +1085,7 @@ object Similarity {
   val PqIters = 2
 
   /** Serving defaults for the composed IVF×PQ probes, tuned against the
-    * r13 recall ladder on the shipped RANDOM-vector corpus — the
+    * recall ladder on the shipped RANDOM-vector corpus — the
     * documented worst case for cell pruning: iid vectors have no cluster
     * structure, so neighbor coverage grows ~linearly with
     * nprobe/kClusters (measured curve in BASELINE.md) instead of
@@ -1132,13 +1132,13 @@ object Similarity {
       subVectors(emb).localCheckpoint(eager = false), k, iters)
 
   /** [[trainPqCodebooks]] against a caller-materialized sub-vector table —
-    * the train/encode composition point (r19, guide §1.2): every Lloyd's
+    * the train/encode composition point: every Lloyd's
     * round AND the corpus encode consume the same `(vec_id, m, sv)`
     * projection, which as a plan re-derived the scan + 16-way slice
     * explode per job. Callers that both train and encode (pqTopK,
     * buildPqIndex, the IVF×PQ build) checkpoint it once and thread it
-    * through; the checkpoint is ADVICE-r13-clean (ContextCleaner-reclaimed,
-    * no session CacheManager entry). */
+    * through; the checkpoint is ContextCleaner-reclaimed (no session
+    * CacheManager entry). */
   private def trainPqCodebooksOn(emb: DataFrame, subs: DataFrame,
       k: Int = PqCodes, iters: Int = PqIters): DataFrame = {
     graft.functions.FloatDot.register(emb.sparkSession)
@@ -1190,7 +1190,7 @@ object Similarity {
     * round). The sub-vector rides along via `first` (it is functionally
     * dependent on the group key, so `first` is deterministic). */
   private def argminCell(subs: DataFrame, codebooks: DataFrame): DataFrame =
-    // self-dots hoisted out of the k-way candidate fan-out (r18, guide §4):
+    // self-dots hoisted out of the k-way candidate fan-out:
     // float_dot(sv,sv) is per (vector, subspace) and float_dot(cv,cv) per
     // centroid; inside the join they re-evaluated per CANDIDATE (k=64x).
     // The hoisted columns hold IDENTICAL values and d2 keeps sqDist's
@@ -1233,7 +1233,7 @@ object Similarity {
     * Recall vs the exact tier is measured in SimilaritySpec. */
   def pqTopK(emb: DataFrame, queryPred: Column, k: Int = 5): DataFrame = {
     graft.functions.FloatDot.register(emb.sparkSession)
-    // sub-vector projection materialized ONCE (r19): training's Lloyd's
+    // sub-vector projection materialized ONCE: training's Lloyd's
     // rounds and the corpus encode all consume it — as a plan it
     // re-derived the scan + slice explode per job
     val subs = subVectors(emb).localCheckpoint(eager = false)
@@ -1250,9 +1250,9 @@ object Similarity {
   private def pqReconstruct(codes: DataFrame, books: DataFrame): DataFrame =
     codes
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("cm", "code")))
-      // equi-join on BOTH keys (r19, guide §3.1): the old subspace-only
-      // join fanned every code row out to all k centroids of its subspace
-      // and filtered k-1 of them away — a k× row blow-up on the
+      // equi-join on BOTH keys: a subspace-only join would fan every code
+      // row out to all k centroids of its subspace and filter k-1 of them
+      // away — a k× row blow-up on the
       // corpus-scale code table. pid is unique per subspace, so the
       // two-key hash join emits exactly the same single match per row.
       .join(broadcast(books.select(
@@ -1413,9 +1413,8 @@ object Similarity {
     *
     * The code table is stored DIRECTORY-PARTITIONED on `cell`
     * ([[graft.sources.Formats.writePartitionedTable]]), so the probe is
-    * ONE plan with no driver round-trip (VERDICT r13 item 5 — previously
-    * the probed cell ids were collected into an `isin` literal for bucket
-    * pruning): the broadcast candidate join on `cell` triggers DYNAMIC
+    * ONE plan with no driver round-trip (no collect of the probed cell
+    * ids into an `isin` literal for bucket pruning): the broadcast candidate join on `cell` triggers DYNAMIC
     * PARTITION PRUNING, and unprobed cells are never read off disk —
     * SimilaritySpec asserts the scan's partition filter is the runtime
     * `dynamicpruning` expression. This is therefore the query-MANY
@@ -1449,14 +1448,14 @@ object Similarity {
     // no cell-id collect: the broadcast join below carries the prune to
     // the partitioned scan via dynamic partition pruning
     val pruned = idx
-    // MAP-SIDE reconstruction (VERDICT r10 item 4): the codebooks total
+    // MAP-SIDE reconstruction: the codebooks total
     // PqCodes×Dim floats (~4 KB) — the same driver-bounded k×dim gram
     // scale as the trainers — so they fold into the plan as a nested
     // ARRAY literal and each candidate's code array rebuilds via two
     // codegen'd element_at lookups per subspace, fully inside the scan's
-    // projection. The previous posexplode → codebook join →
-    // groupBy(collect_list) form shuffled the pruned candidates once just
-    // to reassemble them (the one blemish r10 flagged in this probe).
+    // projection. A posexplode → codebook join → groupBy(collect_list)
+    // form would shuffle the pruned candidates once just to reassemble
+    // them.
     val bookRows = books.select(col("m").cast("int"), col("pid").cast("int"), col("cv"))
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Float](2))).toMap
     val mMax = bookRows.keys.map(_._1).max + 1
@@ -1532,7 +1531,7 @@ object Similarity {
       .select("query_id", "neighbor_id", "rn", "cos_exact")
   }
 
-  /** RECALL-TARGET-driven probe width (VERDICT r14 item 5): the r14
+  /** RECALL-TARGET-driven probe width: the
     * recall-vs-cost curve showed IVF cell COVERAGE is the binding
     * constraint of the refine tier — so instead of a fixed default, pick
     * nprobe from the STORED index's own cell-occupancy stats. Model: a
@@ -1586,12 +1585,11 @@ object Similarity {
     rows.head.getLong(1).toInt
   }
 
-  /** OCCUPANCY-AWARE refinement of [[nprobePlanIndexed]] (r16, VERDICT
-    * r15 missing #3): the conservative coverage model guarantees its
+  /** OCCUPANCY-AWARE refinement of [[nprobePlanIndexed]]: the conservative coverage model guarantees its
     * target against ANY query, but it cannot prune a balanced many-cell
     * index — reaching 0.9 coverage from the SMALLEST cells up needs
     * ~90% of a balanced index's cells, however many there are (measured
-    * on the 256-cell index: 232/256 — BASELINE.md r16). Real queries
+    * on the 256-cell index: 232/256, BASELINE.md). Real queries
     * probe their NEAREST cells and true neighbors concentrate exactly
     * there, so the scalable estimator is EMPIRICAL: for a calibration
     * SAMPLE of indexed queries, find each exact top-`k` neighbor's cell
@@ -1679,7 +1677,7 @@ object Similarity {
     // the sample curve always reaches 1.0 at full width and the target is
     // capped at 1.0, so an empty result means an empty calibration SAMPLE
     // (the predicate selected no queries, or they have no true neighbors)
-    // — name that cause, not a phantom recall shortfall (ADVICE r16)
+    // — name that cause, not a phantom recall shortfall
     require(rows.nonEmpty,
       s"calibration sample for '$table' is empty (predicate selected no " +
         s"queries with neighbors) — cannot calibrate nprobe to " +
@@ -1766,7 +1764,7 @@ object Similarity {
     * probability at the threshold angle — SimilaritySpec measures it
     * against the exact variant.
     *
-    * Hot-bucket audit (VERDICT r10 item 1): a band bucket saturated by
+    * Hot-bucket audit: a band bucket saturated by
     * near-identical vectors makes the candidate set quadratic in the
     * bucket — semantically required output (those pairs all clear
     * `minCos`), and the per-task skew of enumerating it is handled by

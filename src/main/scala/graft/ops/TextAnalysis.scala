@@ -474,10 +474,11 @@ object TextAnalysis {
     )(_ => bm25Postings(docs))
 
   /** The BM25 index as a [[StoredIndex]] family: postings bucketed on
-    * `word`. The one-row `_stats` table is the family's own side table. */
+    * `word`, one row per (term, document) — a variable number per id.
+    * The one-row `_stats` table is the family's own side table. */
   private def bm25Index(numBuckets: Int = 8) = Family(
     n => s"kind=bm25,buckets=$n", "doc_id", "",
-    Seq(Part("", Seq("word"), numBuckets)))
+    Seq(Part("", Seq("word"), numBuckets)), rowsPerId = None)
 
   /** (n_docs, total_dl) over the distinct docs of a posting frame. */
   private def docStats(postings: DataFrame): DataFrame =

@@ -603,13 +603,27 @@ object Formats {
     (m("n").asInstanceOf[Long], Option(m("fp")).fold(0L)(_.asInstanceOf[Long]))
   }
 
-  /** Write the family's one-row manifest (build side). */
+  /** The stored rows that vouch for a family's stamp, as its manifest
+    * records them: column `idCol` of table `<table><idTable>` lists every
+    * stored id, `rowsPerId` physical rows each where the layout fixes that
+    * number (None: a variable count, as in postings). */
+  final case class IdLayout(idCol: String, idTable: String, rowsPerId: Option[Int])
+
+  /** Write the family's one-row manifest (build side). `layout` is the
+    * family's [[IdLayout]]; a models-only manifest, which stores no ids
+    * yet, has none until its first append folds one in. */
   def writeBuildMeta(spark: SparkSession, table: String, params: String,
-      corpusN: Long, corpusFp: Long): Unit = {
+      corpusN: Long, corpusFp: Long, layout: Option[IdLayout] = None): Unit =
+    writeMetaRow(spark, table, corpusN, corpusFp, params, 0L, layout)
+
+  private def writeMetaRow(spark: SparkSession, table: String, n: Long, fp: Long,
+      params: String, appends: Long, layout: Option[IdLayout]): Unit = {
     import spark.implicits._
     writeManaged(
-      Seq((corpusN, corpusFp, params, 0L, System.currentTimeMillis()))
-        .toDF("corpus_n", "corpus_fp", "params", "appends", "built_at_ms"),
+      Seq((n, fp, params, appends, System.currentTimeMillis(),
+        layout.map(_.idCol), layout.map(_.idTable), layout.flatMap(_.rowsPerId)))
+        .toDF("corpus_n", "corpus_fp", "params", "appends", "built_at_ms",
+          "id_col", "id_table", "rows_per_id"),
       metaTable(table))
   }
 
@@ -621,6 +635,18 @@ object Formats {
       .select("corpus_n", "corpus_fp", "params", "appends")
       .collect().headOption
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
+
+  /** The [[IdLayout]] the family's manifest records, if it records one. */
+  def idLayout(spark: SparkSession, table: String): Option[IdLayout] =
+    if (!spark.catalog.tableExists(metaTable(table))) None
+    else {
+      val m = spark.table(metaTable(table))
+      if (!m.columns.contains("id_col")) None
+      else m.select("id_col", "id_table", "rows_per_id").collect().headOption
+        .filter(r => !r.isNullAt(0))
+        .map(r => IdLayout(r.getString(0), r.getString(1),
+          if (r.isNullAt(2)) None else Some(r.getInt(2))))
+    }
 
   /** The build's `k=v` param fields as a map — how a probe or append
     * recovers the STORED sketch/index parameters (CMS depth×width,
@@ -681,9 +707,11 @@ object Formats {
     * whose derivation is stateless per row may START by appending, so the
     * append that created its tables also creates the manifest from
     * (0, 0). A missing manifest NEXT TO an existing table stays a loud
-    * failure (the partially-deleted / foreign-index case). */
+    * failure (the partially-deleted / foreign-index case). `layout` is
+    * written as for [[writeBuildMeta]]. */
   def foldBuildMeta(spark: SparkSession, table: String, params: String,
-      batchN: Long, batchFp: Long, bootstrap: Boolean = false): Unit = {
+      batchN: Long, batchFp: Long, layout: Option[IdLayout] = None,
+      bootstrap: Boolean = false): Unit = {
     val lock = metaLocks.computeIfAbsent(metaTable(table), _ => new Object)
     lock.synchronized {
       val (n, fp, built, appends) = readBuildMeta(spark, table).getOrElse {
@@ -695,11 +723,7 @@ object Formats {
       require(paramsCompatible(built, params),
         s"append params '$params' are incompatible with '$table' build params " +
           s"'$built' — appending with a different spec would silently corrupt the index")
-      import spark.implicits._
-      writeManaged(
-        Seq((n + batchN, fp ^ batchFp, built, appends + 1, System.currentTimeMillis()))
-          .toDF("corpus_n", "corpus_fp", "params", "appends", "built_at_ms"),
-        metaTable(table))
+      writeMetaRow(spark, table, n + batchN, fp ^ batchFp, built, appends + 1, layout)
     }
   }
 
@@ -709,16 +733,16 @@ object Formats {
     * the duplicate ids AWAY and the manifest can come to vouch for a
     * corpus it does not describe. This audit makes the violation
     * DETECTABLE after the fact: recompute the stamp over the DISTINCT
-    * ids actually stored (one scan of the id side-table every index
-    * family keeps — `_sigs`, `_codes`, the store itself) and compare to
-    * the manifest. Overlapping appends leave `manifest_n` counting the
-    * duplicate ids twice while the distinct recount does not (and the
-    * fps diverge because the cancelled ids reappear once), so
+    * ids actually stored (one scan of the id table the manifest's
+    * [[IdLayout]] names — `_sigs`, `_codes`, the store itself) and
+    * compare to the manifest. Overlapping appends leave `manifest_n`
+    * counting the duplicate ids twice while the distinct recount does not
+    * (and the fps diverge because the cancelled ids reappear once), so
     * `disjoint_ok=false` pinpoints exactly the silent-corruption case
     * the contract forbids — without this row the failure mode is
     * invisible until [[isStaleFor]] lies.
     *
-    * `rowsPerId` closes the one blind spot of the
+    * The layout's `rowsPerId` closes the one blind spot of the
     * distinct recount: an append whose DATA committed but whose meta
     * fold did not (the residual crash window inside every append*) gets
     * blindly RE-RUN by a pre-stamp replay, duplicating every physical
@@ -726,36 +750,51 @@ object Formats {
     * dedups the duplicates away, so `disjoint_ok` stays true. For
     * families whose physical layout stores a FIXED number of rows per
     * id (signatures: 1/doc, LSH bands: [[graft.ops.Similarity.SigBands]]
-    * per vec, …), passing that constant adds a NON-distinct row-count
-    * cross-check: `rows_ok = (stored physical rows == manifest_n ×
-    * rowsPerId)`, which the duplicated rows fail. Variable-rows-per-id
-    * families (postings, masked keys) pass None and `rows_ok` is
-    * vacuously true. One-row result: (manifest_n, manifest_fp,
-    * stored_n, stored_fp, stored_rows, disjoint_ok, rows_ok). */
-  def stampAudit(spark: SparkSession, table: String, storedIds: DataFrame,
-      idCol: String, rowsPerId: Option[Long] = None): DataFrame = {
+    * per vec, …) a NON-distinct row-count cross-check runs as well:
+    * `rows_ok = (stored physical rows == manifest_n × rowsPerId)`, which
+    * the duplicated rows fail. Variable-rows-per-id families (postings,
+    * masked keys) record none and `rows_ok` is vacuously true. One-row
+    * result: (manifest_n, manifest_fp, stored_n, stored_fp, stored_rows,
+    * disjoint_ok, rows_ok). */
+  def stampAudit(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     val (mn, mfp) = readBuildMeta(spark, table)
       .map(m => (m._1, m._2))
       .getOrElse(throw new IllegalStateException(
         s"index '$table' has no build manifest ('${metaTable(table)}') to audit"))
+    val layout = idLayout(spark, table).getOrElse(throw new IllegalStateException(
+      s"the manifest of '$table' names no id layout to audit"))
+    val id = col(layout.idCol)
     // one pass: per-id physical row counts (h is functional in id, so the
     // group key is still just the id), then the same count+xor fold as
     // [[corpusStamp]] over the distinct groups — bit-identical fp semantics
-    val r = storedIds
-      .select(col(idCol).as("id"),
-        graft.functions.CrossHash.h60(col(idCol).cast("string")).as("h"))
+    val r = spark.table(table + layout.idTable)
+      .select(id.as("id"), graft.functions.CrossHash.h60(id.cast("string")).as("h"))
       .groupBy("id", "h").agg(count(lit(1)).as("c"))
       .agg(coalesce(sum("c"), lit(0L)).as("rows"),
         count(lit(1)).as("n"), expr("bit_xor(h)").as("fp"))
       .head()
     val (rows, sn) = (r.getLong(0), r.getLong(1))
     val sfp = if (r.isNullAt(2)) 0L else r.getLong(2)
-    val rowsOk = rowsPerId.forall(f => rows == mn * f)
+    val rowsOk = layout.rowsPerId.forall(f => rows == mn * f)
     Seq((mn, mfp, sn, sfp, rows, mn == sn && mfp == sfp, rowsOk))
       .toDF("manifest_n", "manifest_fp", "stored_n", "stored_fp",
         "stored_rows", "disjoint_ok", "rows_ok")
   }
+
+  /** The families in the catalog [[stampAudit]] can check: a manifest
+    * whose recorded id table exists and carries the recorded id column.
+    * Sketch and delta families (HLL, CMS, LM, TextRank, profile,
+    * histogram, anomaly baseline) and trained models (BPE, classifier)
+    * store aggregates, not per-id rows, so their stamps cannot be
+    * recomputed from stored state and they stay out. */
+  def auditableFamilies(spark: SparkSession): Seq[String] =
+    spark.catalog.listTables().collect().toSeq.map(_.name)
+      .filter(_.endsWith("_meta")).map(_.stripSuffix("_meta"))
+      .filter(t => idLayout(spark, t).exists { l =>
+        spark.catalog.tableExists(t + l.idTable) &&
+          spark.table(t + l.idTable).columns.contains(l.idCol)
+      })
 
   /** Probe-side gate: the family must have a build manifest. A catalog
     * existence check only — no Spark job — so probes stay cheap; the

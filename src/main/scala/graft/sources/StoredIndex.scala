@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions.broadcast
 /** The ONE lifecycle every stored index/model family rides — build,
   * append, purge — so the protocol is stated once instead of per family
   * (the reference keeps all of its stored state behind one storage
-  * wrapper, `src/util/blob.h:12-31`). A family declares four things in a
-  * [[Family]]: its manifest params, its id column, its id table, and its
-  * [[Part]]s. This module then owns, for every family alike:
+  * wrapper, `src/util/blob.h:12-31`). A family declares in a [[Family]]
+  * its manifest params, its id layout (id column, id table, rows per id)
+  * and its [[Part]]s. This module then owns, for every family alike:
   *
   *  - the write order: data parts first (in declaration order), the
   *    family's own side tables next (`sides`), the manifest last;
@@ -18,7 +18,9 @@ import org.apache.spark.sql.functions.broadcast
   *    over-broad or re-issued forget requests fold nothing);
   *  - the manifest: written on build, folded on append and purge
   *    ([[Formats.foldBuildMeta]] — the `paramsCompatible` gate, the
-  *    per-table fold lock and the bootstrap rule);
+  *    per-table fold lock and the bootstrap rule), each time with the
+  *    family's [[Formats.IdLayout]], so [[Formats.stampAudit]] finds the
+  *    stored ids from the catalog alone;
   *  - the layout: a build writes the declared bucket counts; every later
   *    step reads the layout back from the catalog ([[Formats.bucketSpec]]),
   *    so no append, purge or compaction can re-hash a table another way.
@@ -50,24 +52,36 @@ object StoredIndex {
   /** A family's declaration. `params(n)` is the manifest params string for
     * a layout of `n` buckets (the first part's count); `idCol` is the id
     * column the corpus stamp hashes; `idTable` is the suffix of the part
-    * whose `idCol` lists every stored id (the purge stamp reads it);
-    * `parts` are written in order. `bootstrap`: the derivation is
-    * stateless per row, so a first append may create the family, manifest
-    * included — for any other family a missing manifest stays a loud
-    * failure. */
+    * whose `idCol` lists every stored id (the purge stamp and the stamp
+    * audit read it); `rowsPerId` is how many rows that part stores per id
+    * where the layout fixes it (None: a variable count); `parts` are
+    * written in order. `bootstrap`: the derivation is stateless per row,
+    * so a first append may create the family, manifest included — for any
+    * other family a missing manifest stays a loud failure. */
   final case class Family(params: Int => String, idCol: String, idTable: String,
-      parts: Seq[Part], bootstrap: Boolean = false)
+      parts: Seq[Part], bootstrap: Boolean = false, rowsPerId: Option[Int] = Some(1)) {
+    /** The id layout every manifest of the family records. */
+    def layout: Formats.IdLayout = Formats.IdLayout(idCol, idTable, rowsPerId)
+  }
 
   /** One-shot build: each part from `rows(suffix)` (called in part order,
     * so a later part may read an earlier one back), then `sides`, then the
     * manifest with the stamp of `input`. */
   def build(family: Family, table: String, input: DataFrame, sides: => Unit = ())(
-      rows: String => DataFrame): Unit = {
+      rows: String => DataFrame): Unit =
+    buildStamped(family, table, input.sparkSession,
+      Formats.corpusStamp(input, family.idCol), sides)(rows)
+
+  /** [[build]] with the stamp supplied by the caller, evaluated after the
+    * data steps and `sides` — for a family published from another one's
+    * generation (it carries that family's stamp). */
+  def buildStamped(family: Family, table: String, spark: SparkSession,
+      stamp: => (Long, Long), sides: => Unit = ())(rows: String => DataFrame): Unit = {
     family.parts.foreach(p => create(p, table + p.suffix, rows(p.suffix)))
     sides
-    val (n, fp) = Formats.corpusStamp(input, family.idCol)
-    Formats.writeBuildMeta(input.sparkSession, table,
-      family.params(family.parts.head.buckets), n, fp)
+    val (n, fp) = stamp
+    Formats.writeBuildMeta(spark, table, family.params(family.parts.head.buckets), n, fp,
+      Some(family.layout))
   }
 
   /** Incremental ingest: each part's batch rows appended in the stored
@@ -98,7 +112,7 @@ object StoredIndex {
     sides
     val (n, fp) = stamp
     Formats.foldBuildMeta(spark, table, family.params(buckets), n, fp,
-      bootstrap = fresh && family.bootstrap)
+      Some(family.layout), bootstrap = fresh && family.bootstrap)
   }
 
   /** Delete propagation: every part rewritten without `deleteIds`' rows
@@ -135,7 +149,8 @@ object StoredIndex {
 
   private def fold(spark: SparkSession, family: Family, table: String,
       stamp: (Long, Long), buckets: Int): Unit =
-    Formats.foldBuildMeta(spark, table, family.params(buckets), stamp._1, stamp._2)
+    Formats.foldBuildMeta(spark, table, family.params(buckets), stamp._1, stamp._2,
+      Some(family.layout))
 
   /** Create one part in its declared layout. */
   private def create(p: Part, t: String, df: DataFrame): Unit =

@@ -473,30 +473,30 @@ class FormatsSpec extends SparkTestBase {
 
   test("stampAudit detects an overlapping append; concurrent folds never lose a stamp") {
     import spark.implicits._
+    import graft.sources.StoredIndex
+    // one plain id table, one row per id; the second declaration records
+    // no fixed count, so its folds leave rows_ok vacuous
+    val fixed = StoredIndex.Family(_ => "kind=test", "vec_id", "",
+      Seq(StoredIndex.Part("", Nil, 0)))
+    val varying = fixed.copy(rowsPerId = None)
     val ids = (1L to 100L).toDF("vec_id")
     val batch = (101L to 150L).toDF("vec_id")
     val overlap = (140L to 160L).toDF("vec_id") // 11 ids already stored
     try {
       // build + disjoint append: manifest equals the distinct-id recount
-      Formats.writeManaged(ids, "t_audit_spec")
-      val (n0, fp0) = Formats.corpusStamp(ids, "vec_id")
-      Formats.writeBuildMeta(spark, "t_audit_spec", "kind=test", n0, fp0)
-      Formats.writeManaged(ids.unionByName(batch), "t_audit_spec")
-      val (bn, bfp) = Formats.corpusStamp(batch, "vec_id")
-      Formats.foldBuildMeta(spark, "t_audit_spec", "kind=test", bn, bfp)
-      val ok = Formats.stampAudit(spark, "t_audit_spec",
-        spark.table("t_audit_spec"), "vec_id", rowsPerId = Some(1L)).head()
+      StoredIndex.build(fixed, "t_audit_spec", ids)(_ => ids)
+      StoredIndex.append(fixed, "t_audit_spec", batch)(_ => batch)
+      val ok = Formats.stampAudit(spark, "t_audit_spec").head()
       assert(ok.getBoolean(5), s"disjoint appends must audit clean: $ok")
       assert(ok.getBoolean(6), s"1-row-per-id layout must pass rows_ok: $ok")
-      // the crash window the DISTINCT recount cannot see (ADVICE r14): an
-      // append whose data committed twice (pre-stamp replay after a crash
-      // between data append and meta fold) while the manifest folded once
-      // — every physical row of the batch duplicated, distinct ids and
-      // fps unchanged. Only the non-distinct row-count cross-check trips.
+      // the crash window the DISTINCT recount cannot see: an append whose
+      // data committed twice (pre-stamp replay after a crash between data
+      // append and meta fold) while the manifest folded once — every
+      // physical row of the batch duplicated, distinct ids and fps
+      // unchanged. Only the non-distinct row-count cross-check trips.
       Formats.writeManaged(
         ids.unionByName(batch).unionByName(batch), "t_audit_spec")
-      val dup = Formats.stampAudit(spark, "t_audit_spec",
-        spark.table("t_audit_spec"), "vec_id", rowsPerId = Some(1L)).head()
+      val dup = Formats.stampAudit(spark, "t_audit_spec").head()
       assert(dup.getBoolean(5),
         "the distinct recount is blind to duplicated physical rows by design")
       assert(!dup.getBoolean(6),
@@ -508,10 +508,8 @@ class FormatsSpec extends SparkTestBase {
       // the audit catches BOTH divergences
       Formats.writeManaged(
         ids.unionByName(batch).unionByName(overlap), "t_audit_spec")
-      val (on, ofp) = Formats.corpusStamp(overlap, "vec_id")
-      Formats.foldBuildMeta(spark, "t_audit_spec", "kind=test", on, ofp)
-      val bad = Formats.stampAudit(spark, "t_audit_spec",
-        spark.table("t_audit_spec"), "vec_id").head()
+      StoredIndex.fold(spark, varying, "t_audit_spec", Formats.corpusStamp(overlap, "vec_id"))
+      val bad = Formats.stampAudit(spark, "t_audit_spec").head()
       assert(!bad.getBoolean(5), "an overlapping append must fail the audit")
       assert(bad.getBoolean(6), "rows_ok is vacuous when no constant is declared")
       assert(bad.getLong(0) === bad.getLong(2) + 11,
@@ -552,6 +550,34 @@ class FormatsSpec extends SparkTestBase {
       assert(params === "kind=sq")
     } finally {
       Seq("t_meta_boot", "t_meta_boot_meta")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
+  test("each manifest names its id layout; the audit scope is what the catalog holds") {
+    import graft.ops.{Similarity, TextAnalysis}
+    val emb = Tables.embeddings(spark, sfDir)
+    val docs = Tables.documents(spark, sfDir)
+    try {
+      Similarity.buildLshIndex(emb.filter(col("vec_id") % 2 === 0), "t_layout_lsh")
+      Similarity.appendToLshIndex(emb.filter(col("vec_id") % 2 =!= 0), "t_layout_lsh")
+      TextAnalysis.buildBm25Index(docs, "t_layout_bm25")
+      TextAnalysis.buildHllIndex(docs, "t_layout_hll")
+      assert(Formats.idLayout(spark, "t_layout_lsh") ===
+        Some(Formats.IdLayout("vec_id", "", Some(Similarity.SigBands))))
+      assert(Formats.idLayout(spark, "t_layout_bm25") ===
+        Some(Formats.IdLayout("doc_id", "", None)))
+      // the sketch stores per-source aggregates: its table has no id
+      // column, so the catalog scan leaves it out
+      val scope = Formats.auditableFamilies(spark).toSet
+      assert(scope("t_layout_lsh") && scope("t_layout_bm25"), s"audit scope: $scope")
+      assert(!scope("t_layout_hll"), s"a sketch family is not auditable: $scope")
+      val r = Formats.stampAudit(spark, "t_layout_lsh").head()
+      assert(r.getBoolean(5) && r.getBoolean(6), s"appended LSH index audits clean: $r")
+      assert(r.getLong(4) === r.getLong(0) * Similarity.SigBands)
+    } finally {
+      Seq("t_layout_lsh", "t_layout_bm25", "t_layout_bm25_stats", "t_layout_hll")
+        .flatMap(t => Seq(t, t + "_meta"))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }

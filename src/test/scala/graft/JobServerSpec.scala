@@ -154,6 +154,36 @@ class JobServerSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
+  test("the job registry stays bounded: 200 fail-fast submissions keep the newest terminal jobs") {
+    val cap = 128
+    val srv = new JobServer(spark, Files.createTempDirectory("graft_http_out5").toString)
+    val base = s"http://127.0.0.1:${srv.start()}"
+    try {
+      val client = HttpClient.newHttpClient()
+      // a missing input fails each job at planning, so the soak runs no
+      // Spark job and the registry fills with terminal entries
+      val ids = (0 until 200).map { _ =>
+        val r = post(client, s"$base/jobs", """{"files": ["/nonexistent/soak.txt"]}""")
+        assert(r.statusCode() === 200)
+        "\"job_id\":(\\d+)".r.findFirstMatchIn(r.body()).get.group(1).toInt
+      }
+      val newest = ids.last
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (statusOf(get(client, s"$base/jobs/$newest").body()) != "FAILED" &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      val listed = "\"status\":\"(\\w+)\"".r
+        .findAllMatchIn(get(client, s"$base/jobs").body()).map(_.group(1)).toSeq
+      val inFlight = listed.count(st => st == "CREATED" || st == "RUNNING")
+      assert(listed.size <= cap + inFlight,
+        s"registry holds ${listed.size} jobs, $inFlight in flight")
+      val last = get(client, s"$base/jobs/$newest")
+      assert(last.statusCode() === 200 && statusOf(last.body()) === "FAILED",
+        s"the newest job must stay pollable: ${last.body()}")
+      assert(get(client, s"$base/jobs/${ids.head}").statusCode() === 404,
+        "the oldest terminal job must be evicted")
+    } finally srv.stop()
+  }
+
   test("facade rejects malformed submissions and unknown ids") {
     val outRoot = Files.createTempDirectory("graft_http_out2").toString
     val srv = new JobServer(spark, outRoot)

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.window.WindowExec
+
 /** Whole-surface physical-plan audit, run over every driver gate at the
   * smallest scale factor:
   *
@@ -225,5 +229,92 @@ class PlanAuditSpec extends SparkTestBase {
     assert(windows.nonEmpty, s"pareto ranks with a window:\n$plan")
     windows.foreach(w => assert(topK(w),
       s"a pareto window reads the full parts aggregate:\n$plan"))
+  }
+
+  private val planHelper =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** What each single-partition window of `df`'s executed plan reads:
+    * the operator under its stacked windows, sorts, exchanges (reused
+    * ones included), projections and stage wrappers. Runs `df` first, so
+    * AQE's final plan is the one inspected. */
+  private def globalWindowInputs(df: DataFrame): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    @scala.annotation.tailrec
+    def input(p: SparkPlan): SparkPlan = p match {
+      case w: WindowExec => input(w.child)
+      case s: SortExec => input(s.child)
+      case pr: ProjectExec => input(pr.child)
+      case e: ShuffleExchangeExec => input(e.child)
+      case e: ReusedExchangeExec => input(e.child)
+      case r: AQEShuffleReadExec => input(r.child)
+      case q: QueryStageExec => input(q.plan)
+      case c: WholeStageCodegenExec => input(c.child)
+      case i: InputAdapter => input(i.child)
+      case other => other
+    }
+    df.collect()
+    val ws = planHelper.collect(df.queryExecution.executedPlan) {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }
+    assert(ws.nonEmpty, s"expected a single-partition window:\n${df.queryExecution.executedPlan}")
+    ws.map(w => input(w.child))
+  }
+
+  /** An IVF index over the sf0.001 embeddings for the nprobe cases. */
+  private def withIvfIndex(body: String => Unit): Unit = {
+    val t = "graft_np_audit"
+    try {
+      graft.ops.Similarity.buildIvfIndex(
+        graft.sources.Tables.embeddings(spark, sfDir), t)
+      body(t)
+    } finally Seq(t, s"${t}_pivots", s"${t}_meta")
+      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+  }
+
+  test("nprobePlanIndexed windows only the per-cell histogram") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    withIvfIndex { t =>
+      val df = graft.ops.Similarity.nprobePlanIndexed(spark, t, Seq(0.5, 0.9))
+      globalWindowInputs(df).foreach {
+        case a: BaseAggregateExec =>
+          assert(a.groupingExpressions.map(_.references.map(_.name).mkString) === Seq("cell"),
+            s"the window must read the histogram keyed on cell:\n$a")
+        case other => fail(s"the window reads more than the per-cell histogram:\n$other")
+      }
+    }
+  }
+
+  test("nprobeCalibration windows only the sample's (query, neighbor) pairs") {
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    withIvfIndex { t =>
+      val df = graft.ops.Similarity.nprobeCalibration(spark, t,
+        org.apache.spark.sql.functions.col("vec_id") < 20, Seq(0.5, 0.9), k = 5)
+      globalWindowInputs(df).foreach {
+        // the pairs are the sample's exact top-k joined to its cell ranks:
+        // one side must be cut to k neighbors per query
+        case j: BaseJoinExec =>
+          val topK = j.children.exists(c => planHelper.find(c) {
+            case f: FilterExec => f.condition.references.exists(_.name == "rn")
+            case _ => false
+          }.isDefined)
+          assert(topK, s"the pairs must be cut to the top-k per sample query:\n$j")
+        case other => fail(s"the window reads more than the (query, neighbor) pairs:\n$other")
+      }
+    }
+  }
+
+  test("hybridSearch ranks only the limited BM25 candidate list in one window") {
+    import org.apache.spark.sql.execution.{GlobalLimitExec, TakeOrderedAndProjectExec}
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val df = graft.ops.TextAnalysis.hybridSearch(docs, Seq("data", "model"), candidates = 50)
+    globalWindowInputs(df).foreach {
+      case l: TakeOrderedAndProjectExec => assert(l.limit === 50, s"$l")
+      case l: GlobalLimitExec => assert(l.limit === 50, s"$l")
+      case other => fail(s"the sparse rank window reads more than the candidate list:\n$other")
+    }
   }
 }

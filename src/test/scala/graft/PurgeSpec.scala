@@ -22,6 +22,12 @@ class PurgeSpec extends SparkTestBase {
     (n, fp)
   }
 
+  /** The purged family's stamp still equals a recount of its stored ids. */
+  private def auditClean(table: String): Unit = {
+    val r = Formats.stampAudit(spark, table).head()
+    assert(r.getBoolean(5) && r.getBoolean(6), s"stamp audit of '$table' after purge: $r")
+  }
+
   test("band-index purge equals rebuild from the filtered corpus (tables + manifest + probe)") {
     val corpus = docs.filter(col("doc_id") % 3 =!= 0)
     val forget = corpus.filter(col("doc_id") % 7 === 3).select("doc_id")
@@ -43,6 +49,7 @@ class PurgeSpec extends SparkTestBase {
       assert(!Formats.isStaleFor(spark, "graft_prg_band", kept, "doc_id"))
       assert(Formats.isStaleFor(spark, "graft_prg_band", corpus, "doc_id"),
         "the purged index must no longer vouch for the unfiltered corpus")
+      auditClean("graft_prg_band")
       // probe parity with the fresh path over the filtered corpus
       val batch = docs.filter(col("doc_id") % 3 === 0)
       assert(Dedup.nearDupPairsIndexed(spark, "graft_prg_band", batch)
@@ -78,6 +85,7 @@ class PurgeSpec extends SparkTestBase {
       assert((p.getLong(0), p.getLong(1)) === ((r.getLong(0), r.getLong(1))),
         "stats must decrement by exact integer subtraction")
       assert(stamp("graft_prg_bm25") === stamp("graft_prg_bm25_ref"))
+      auditClean("graft_prg_bm25")
       assert(TextAnalysis.bm25SearchIndexed(spark, "graft_prg_bm25", terms)
         .collect().map(_.toString).sorted.toSeq ===
         TextAnalysis.bm25Search(kept, terms).collect().map(_.toString).sorted.toSeq,
@@ -100,6 +108,7 @@ class PurgeSpec extends SparkTestBase {
       assert(spark.table("graft_prg_ph_codes").collect().toSet ===
         spark.table("graft_prg_ph_ref_codes").collect().toSet)
       assert(stamp("graft_prg_ph") === stamp("graft_prg_ph_ref"))
+      auditClean("graft_prg_ph")
       val batch = blobs.filter(col("doc_id") % 3 === 0)
       assert(Multimodal.phashPairsIndexed(spark, "graft_prg_ph", batch)
         .collect().map(_.toString).sorted.toSeq ===
@@ -123,6 +132,7 @@ class PurgeSpec extends SparkTestBase {
       assert(spark.table("graft_prg_lsh").collect().toSet ===
         spark.table("graft_prg_lsh_ref").collect().toSet)
       assert(stamp("graft_prg_lsh") === stamp("graft_prg_lsh_ref"))
+      auditClean("graft_prg_lsh")
       assert(Similarity.lshTopKIndexed(spark, "graft_prg_lsh", col("vec_id") < 10)
         .collect().map(_.toString).sorted.toSeq ===
         Similarity.lshTopKIndexed(spark, "graft_prg_lsh_ref", col("vec_id") < 10)
@@ -148,6 +158,7 @@ class PurgeSpec extends SparkTestBase {
         "purged cells must equal the stored model applied to survivors")
       val keptStamp = Formats.corpusStamp(kept, "vec_id")
       assert(stamp("graft_prg_ivf") === keptStamp)
+      auditClean("graft_prg_ivf")
       // IVF×PQ: same contract over (cell, codes) rows, both models kept
       Similarity.buildIvfPqIndex(emb, "graft_prg_ivfpq")
       Similarity.purgeFromIvfPqIndex(spark, "graft_prg_ivfpq", forget)
@@ -160,6 +171,7 @@ class PurgeSpec extends SparkTestBase {
       assert(spark.table("graft_prg_ivfpq").select("vec_id", "cell", "codes")
         .collect().toSet === expectedCodes.collect().toSet)
       assert(stamp("graft_prg_ivfpq") === keptStamp)
+      auditClean("graft_prg_ivfpq")
       // vector store: plain id-keyed purge
       Similarity.buildVectorStore(emb, "graft_prg_store")
       Similarity.purgeFromVectorStore(spark, "graft_prg_store", forget)
@@ -167,6 +179,7 @@ class PurgeSpec extends SparkTestBase {
         .map(_.getLong(0)).toSet ===
         kept.select("vec_id").collect().map(_.getLong(0)).toSet)
       assert(stamp("graft_prg_store") === keptStamp)
+      auditClean("graft_prg_store")
     } finally drop("graft_prg_ivf", "graft_prg_ivf_pivots", "graft_prg_ivf_meta",
       "graft_prg_ivfpq", "graft_prg_ivfpq_pivots", "graft_prg_ivfpq_books",
       "graft_prg_ivfpq_meta", "graft_prg_store", "graft_prg_store_meta")
@@ -190,6 +203,7 @@ class PurgeSpec extends SparkTestBase {
         "purged index rows differ from a rebuild on survivors")
       assert(stamp("graft_fz_prg") === stamp("graft_fz_ref"),
         "purged manifest differs from the rebuild's")
+      auditClean("graft_fz_prg")
       // re-issued + over-broad request: nothing present folds, no-op
       Relational.purgeFromFuzzyIndex(spark, "graft_fz_prg",
         dead.union(spark.range(900000, 900005).select(col("id"))))
