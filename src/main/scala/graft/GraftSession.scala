@@ -17,11 +17,25 @@ import org.apache.spark.sql.SparkSession
   *    parquet TIMESTAMP(NANOS), which vanilla Spark rejects; reading nanos
   *    as long + explicit truncation to micros matches DuckDB.
   *  - `spark.sql.extensions` = [[GraftExtensions]] — native functions
-  *    (`float_dot`, `byte_stride`) available to every query and to plain
-  *    SQL without per-operator registration.
+  *    (`float_dot`, `byte_dot`, `byte_stride`, `nfc_normalize`) available
+  *    to every query and to plain SQL without per-operator registration.
+  *  - `spark.sql.artifact.isolation.enabled` = false — with isolation on,
+  *    every `newSession()` (each [[graft.ops.Engine.jobSession]], each
+  *    streaming clone) gets an artifact state and executor class loader of
+  *    its own, and Spark keys its generated-code cache by class loader, so
+  *    every word-count job recompiled the same classes and the JIT warmed
+  *    them up again. The engine adds no session artifacts (`PipedMapReduce`
+  *    ships its script with `SparkContext.addFile`, which is context-wide),
+  *    so isolation buys nothing.
+  *  - `spark.sql.codegen.cache.maxEntries` = 1000 (default 100) — one
+  *    streaming curation micro-batch uses more distinct generated classes
+  *    than 100, so at the default every batch recompiled most of them.
   *  - AQE (on by default in Spark 4) is deliberately left on: runtime
   *    partition coalescing and skew-join splitting are part of the 100 TB
   *    design.
+  *
+  * Isolation is read when a session is created and the cache size once per
+  * JVM, so both are set in the builder, not on a running session.
   */
 object GraftSession {
 
@@ -32,9 +46,9 @@ object GraftSession {
     val dir = s"/tmp/graft_warehouse_${ProcessHandle.current().pid()}"
     // registered with Hadoop's ShutdownHookManager at the lowest priority
     // (higher priorities run first), so the delete is sequenced AFTER
-    // Spark's and Hadoop FileSystem's own shutdown hooks instead of racing
-    // them (ADVICE r4: a plain JVM hook runs unordered relative to Spark's
-    // shutdown machinery, which may still touch the warehouse)
+    // Spark's and Hadoop FileSystem's own shutdown hooks: a plain JVM hook
+    // runs unordered relative to Spark's shutdown machinery, which may
+    // still touch the warehouse
     org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
       new Runnable {
         override def run(): Unit =
@@ -56,8 +70,10 @@ object GraftSession {
       // source tree (and of any default cwd a caller launches from), and
       // scope it PER PROCESS: a fixed shared path would let two concurrent
       // sessions (e.g. bench + verify on one machine) drop/delete each
-      // other's managed-table data mid-query (ADVICE r3)
+      // other's managed-table data mid-query
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
 }

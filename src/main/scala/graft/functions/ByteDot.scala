@@ -64,9 +64,8 @@ case class ByteDot(left: Expression, right: Expression)
 }
 
 object ByteDot {
-  /** Make `byte_dot(a, b)` callable from `expr(...)`/SQL on this session.
-    * Idempotent; same registration pattern as [[FloatDot]]. */
+  /** Make `byte_dot(a, b)` callable from `expr(...)`/SQL on this session;
+    * a no-op where it already is ([[registerIfAbsent]]). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_dot", exprs => ByteDot(exprs(0), exprs(1)), "built-in")
+    registerIfAbsent(spark, "byte_dot", exprs => ByteDot(exprs(0), exprs(1)))
 }

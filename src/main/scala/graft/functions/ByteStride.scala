@@ -56,8 +56,8 @@ case class ByteStride(left: Expression, right: Expression)
 }
 
 object ByteStride {
-  /** Make `byte_stride(bytes, n)` callable from `expr(...)`/SQL. */
+  /** Make `byte_stride(bytes, n)` callable from `expr(...)`/SQL; a no-op
+    * where it already is ([[registerIfAbsent]]). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_stride", exprs => ByteStride(exprs(0), exprs(1)), "built-in")
+    registerIfAbsent(spark, "byte_stride", exprs => ByteStride(exprs(0), exprs(1)))
 }

@@ -72,10 +72,8 @@ case class FloatDot(left: Expression, right: Expression)
 }
 
 object FloatDot {
-  /** Make `float_dot(a, b)` callable from `expr(...)`/SQL on this session.
-    * Idempotent; [[graft.GraftExtensions]] injects the same builder for
-    * sessions constructed with `spark.sql.extensions=graft.GraftExtensions`. */
+  /** Make `float_dot(a, b)` callable from `expr(...)`/SQL on this session;
+    * a no-op where it already is ([[registerIfAbsent]]). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", exprs => FloatDot(exprs(0), exprs(1)), "built-in")
+    registerIfAbsent(spark, "float_dot", exprs => FloatDot(exprs(0), exprs(1)))
 }

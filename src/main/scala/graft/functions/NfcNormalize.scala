@@ -59,9 +59,8 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 }
 
 object NfcNormalize {
-  /** Make `nfc_normalize(s)` callable from `expr(...)`/SQL on this session.
-    * Idempotent; [[graft.GraftExtensions]] injects the same builder. */
+  /** Make `nfc_normalize(s)` callable from `expr(...)`/SQL on this session;
+    * a no-op where it already is ([[registerIfAbsent]]). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs(0)), "built-in")
+    registerIfAbsent(spark, "nfc_normalize", exprs => NfcNormalize(exprs(0)))
 }

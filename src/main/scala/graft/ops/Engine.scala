@@ -219,7 +219,10 @@ object Engine {
     * count's aggregation exchange hash-partitions on `word` into exactly
     * the reducers, so it is the job's one shuffle. AQE partition
     * coalescing stays off here: it would merge the reducers of a small
-    * job into one task and write one file instead of `reducerCount`. */
+    * job into one task and write one file instead of `reducerCount`.
+    * Job sessions share compiled code: under [[graft.GraftSession.local]]
+    * a session has no class loader of its own, so a job whose generated
+    * code equals an earlier job's compiles nothing. */
   def jobSession(spark: SparkSession, spec: JobSpec): SparkSession = {
     val job = spark.newSession()
     job.conf.set("spark.sql.files.maxPartitionBytes", spec.shardSize)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -512,7 +513,9 @@ class CurationSpec extends SparkTestBase {
       }
       day(0) // batch 0 creates the ledgers; batch 1 is the steady state
       spark.sparkContext.addSparkListener(counter)
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       day(1)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       spark.sparkContext.setJobGroup("graft-budget-marker", "drain")
       try spark.sparkContext.parallelize(Seq(1)).count()
       finally spark.sparkContext.clearJobGroup()
@@ -524,6 +527,10 @@ class CurationSpec extends SparkTestBase {
       // SQL executions
       assert(counter.jobs.get <= 34 && counter.sqls.get <= 36,
         s"${counter.jobs.get} Spark jobs and ${counter.sqls.get} SQL executions in one micro-batch")
+      // the restarted stream plans batch 1 anew, and the classes batch 0
+      // generated serve it from the JVM's codegen cache: 59 compiled here
+      // (114 with per-session class loaders and the 100-entry default cache)
+      assert(compiled <= 64, s"$compiled classes compiled for one micro-batch")
     } finally {
       spark.sparkContext.removeSparkListener(counter)
       dropIdx("graft_sd_bud")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -67,6 +68,24 @@ class EngineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(Engine.submitWordCount(spark, spec, Files.createTempDirectory("graft_shard_out")
       .resolve("j").toString) === 1) // "xxx…x"
     assert(spark.conf.get(key) === callerSplit)
+  }
+
+  test("a second word-count job of the same shape compiles no generated code") {
+    // each job runs in a session of its own (jobSession); the classes the
+    // first job generated must serve the second from the JVM's codegen cache
+    val in = Files.createTempDirectory("graft_codegen")
+    def job(i: Int): Long = {
+      val f = in.resolve(s"$i.txt")
+      Files.writeString(f,
+        (0 until 500).map(w => s"a$i$w b$w c").grouped(8).map(_.mkString(" ")).mkString("\n"))
+      Engine.submitWordCount(spark, JobSpec(Seq(f.toString), reducerCount = 3),
+        in.resolve(s"out$i").toString)
+    }
+    assert(job(1) === 1001)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(job(2) === 1001)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0,
+      "classes compiled by the second job")
   }
 
   test("runQueue processes jobs in order, isolates failures (C1/C2 lifecycle)") {

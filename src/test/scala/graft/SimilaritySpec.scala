@@ -200,6 +200,18 @@ class SimilaritySpec extends SparkTestBase {
     assert(plan.contains("byte_dot"), s"plan must carry the native byte dot:\n$plan")
   }
 
+  test("a GraftSession session resolves byte_dot with no register call; register keeps it") {
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("byte_dot")
+    val injected = registry.lookupFunctionBuilder(id)
+    assert(injected.isDefined, "GraftExtensions must inject byte_dot")
+    assert(s.sql("SELECT byte_dot(array(1Y, 2Y), array(3Y, 4Y))").head().getLong(0) === 11L)
+    graft.functions.ByteDot.register(s)
+    assert(registry.lookupFunctionBuilder(id).get eq injected.get,
+      "register replaced the injected byte_dot")
+  }
+
   test("pqTopK: 16-byte codes, trained codebooks layout-invariant, recall beats chance hard") {
     // codes: one TINYINT per subspace, each in [0, PqCodes)
     val books = Similarity.trainPqCodebooks(emb)

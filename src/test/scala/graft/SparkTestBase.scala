@@ -3,21 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession across all suites (sbt runs suites in one JVM). */
+/** One shared local SparkSession across all suites (sbt runs suites in one
+  * JVM), built with the engine's own configuration. */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // per-process warehouse, same contract as GraftSession: a shared
-    // ./spark-warehouse leaks managed-table locations across test JVMs
-    // (a stale graft_*_incr dir from a previous run breaks this run's
-    // bucketed APPEND, which must create the table fresh)
-    .config("spark.sql.warehouse.dir", graft.GraftSession.warehouseDir)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4, "graft-test")
 }
 
 abstract class SparkTestBase extends AnyFunSuite {
