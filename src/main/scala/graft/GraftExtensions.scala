@@ -7,10 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{ByteDot, ByteStride, FloatDot, NfcNormalize}
 
 /** Session extension injecting graft's native Catalyst functions — the
-  * idiomatic deployment path for a cluster
-  * (`spark.sql.extensions=graft.GraftExtensions`); operators also call the
-  * companions' `register`, which adds a function only where it is missing,
-  * so plain sessions work too. */
+  * only way one reaches a session. [[GraftSession.local]] installs it in
+  * every session it builds, and `newSession()` and streaming clones
+  * inherit it; a cluster session needs
+  * `spark.sql.extensions=graft.GraftExtensions`. A plain session does not
+  * have the functions, and an operator that calls one there fails at
+  * analysis with Spark's unresolved-routine error. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place for the engine's session configuration — the settings every
-  * entry point (Verify, Bench, tests) needs, and the list a
-  * production deployment would port to its cluster conf.
+  * entry point (Verify, Bench, PlanCheck, SubmitWordCount, tests) needs,
+  * and the list a production deployment would port to its cluster conf.
   *
   * What is set and why:
   *  - `spark.sql.shuffle.partitions` = cores locally (not the 200 default:
@@ -18,7 +18,9 @@ import org.apache.spark.sql.SparkSession
   *    as long + explicit truncation to micros matches DuckDB.
   *  - `spark.sql.extensions` = [[GraftExtensions]] — native functions
   *    (`float_dot`, `byte_dot`, `byte_stride`, `nfc_normalize`) available
-  *    to every query and to plain SQL without per-operator registration.
+  *    to every query and to plain SQL. It is the only way they reach a
+  *    session: a session not built here needs the same setting, or the
+  *    operators that call them fail with an unresolved-routine error.
   *  - `spark.sql.artifact.isolation.enabled` = false — with isolation on,
   *    every `newSession()` (each [[graft.ops.Engine.jobSession]], each
   *    streaming clone) gets an artifact state and executor class loader of

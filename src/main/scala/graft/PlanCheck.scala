@@ -7,13 +7,13 @@ package graft
   *
   * Usage: runMain graft.PlanCheck [sfDir] [outDir|-] [query...]
   *  - outDir "-" (default) prints to stdout; otherwise one
-  *    `<outDir>/<query>.txt` per query (the plans/r18 evidence files).
+  *    `<outDir>/<query>.txt` per query (the evidence files under `plans/`).
   */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.drop(1).headOption.getOrElse("-")
-    // Guard the pre-r18 CLI shape `PlanCheck <sfDir> <query>`: a known query
+    // Guard the old CLI shape `PlanCheck <sfDir> <query>`: a known query
     // name in the outDir position is a caller mistake, not a directory.
     require(outDir == "-" || !SparkEntry.queries.contains(outDir),
       s"second arg '$outDir' is a query name; pass an outDir or '-' first " +
@@ -25,7 +25,6 @@ object PlanCheck {
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = GraftSession.local(cpus.toInt, "graft-plancheck")
-    spark.sparkContext.setLogLevel("ERROR")
     if (outDir != "-") new java.io.File(outDir).mkdirs()
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -14,7 +14,6 @@ object Verify {
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus.toInt, "graft-verify")
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Both serving modes are attested in ONE artifact: the run pins the
     // shared token projection and writes each gate's PINNED-mode result

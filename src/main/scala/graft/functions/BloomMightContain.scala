@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
@@ -48,16 +49,20 @@ case class BloomMightContain(child: Expression, bloom: BloomFilter)
 object BloomMightContain {
   private val seq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** `bloom.mightContainLong(c)` as a Column. The filter is not a SQL
-    * literal, so the expression reaches the plan through a fresh
-    * session-local temp function closing over it (the [[FloatDot]]
-    * registration pattern; a unique name per call keeps concurrent blooms
-    * in one session independent). */
-  def mightContain(spark: org.apache.spark.sql.SparkSession,
-      bloom: BloomFilter, c: Column): Column = {
+  /** `df` keeping the rows where `bloom.mightContainLong(c)`. The filter is
+    * not a SQL literal, so the expression enters the plan through a
+    * session-local temp function closing over it, under a name unique to
+    * this call (concurrent probes in one session stay independent). A
+    * classic Dataset is analyzed when it is built, so the returned plan
+    * already holds the resolved expression, and the function is dropped
+    * before this returns: the registry keeps neither an entry nor the
+    * filter. */
+  def filter(df: DataFrame, bloom: BloomFilter, c: Column): DataFrame = {
     val name = s"graft_bloom_mc_${seq.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    val registry = df.sparkSession.sessionState.functionRegistry
+    registry.createOrReplaceTempFunction(
       name, exprs => BloomMightContain(exprs(0), bloom), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
+    try df.filter(org.apache.spark.sql.functions.call_function(name, c))
+    finally registry.dropFunction(FunctionIdentifier(name))
   }
 }

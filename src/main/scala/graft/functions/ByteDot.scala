@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -61,11 +60,4 @@ case class ByteDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ByteDot =
     copy(left = newLeft, right = newRight)
-}
-
-object ByteDot {
-  /** Make `byte_dot(a, b)` callable from `expr(...)`/SQL on this session;
-    * a no-op where it already is ([[registerIfAbsent]]). */
-  def register(spark: SparkSession): Unit =
-    registerIfAbsent(spark, "byte_dot", exprs => ByteDot(exprs(0), exprs(1)))
 }

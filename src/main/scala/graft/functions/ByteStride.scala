@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -53,11 +52,4 @@ case class ByteStride(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ByteStride =
     copy(left = newLeft, right = newRight)
-}
-
-object ByteStride {
-  /** Make `byte_stride(bytes, n)` callable from `expr(...)`/SQL; a no-op
-    * where it already is ([[registerIfAbsent]]). */
-  def register(spark: SparkSession): Unit =
-    registerIfAbsent(spark, "byte_stride", exprs => ByteStride(exprs(0), exprs(1)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -69,11 +68,4 @@ case class FloatDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FloatDot =
     copy(left = newLeft, right = newRight)
-}
-
-object FloatDot {
-  /** Make `float_dot(a, b)` callable from `expr(...)`/SQL on this session;
-    * a no-op where it already is ([[registerIfAbsent]]). */
-  def register(spark: SparkSession): Unit =
-    registerIfAbsent(spark, "float_dot", exprs => FloatDot(exprs(0), exprs(1)))
 }

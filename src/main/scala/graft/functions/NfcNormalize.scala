@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -56,11 +55,4 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
     copy(child = newChild)
-}
-
-object NfcNormalize {
-  /** Make `nfc_normalize(s)` callable from `expr(...)`/SQL on this session;
-    * a no-op where it already is ([[registerIfAbsent]]). */
-  def register(spark: SparkSession): Unit =
-    registerIfAbsent(spark, "nfc_normalize", exprs => NfcNormalize(exprs(0)))
 }

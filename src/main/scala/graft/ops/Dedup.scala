@@ -916,6 +916,11 @@ object Dedup {
         (coalesce(col("c"), lit(0L)).cast("double") / col("n_spans")).as("contam_ratio"))
   }
 
+  /** False-positive rate of [[contaminationStatsBloom]]'s filter: about
+    * 1.2 bytes per benchmark hash, and the survivors it lets through die
+    * in the exact semi-join, so it sets cost, never the result. */
+  private val BloomFpp = 0.01
+
   /** [[contaminationStats]] with a scan-side Bloom pre-filter — the plan
     * for when the benchmark span set has outgrown the broadcast-join
     * threshold but its BITS still fit in memory (~1.2 bytes/hash at 1%
@@ -928,19 +933,17 @@ object Dedup {
     * IDENTICAL to the direct path (they share the dedup_contamination
     * oracle); the semi-join's shuffled input shrinks from every span in
     * the corpus to roughly the truly-tainted ones. */
-  def contaminationStatsBloom(train: DataFrame, benchmark: DataFrame, n: Int = 8,
-      fpp: Double = 0.01): DataFrame = {
+  def contaminationStatsBloom(train: DataFrame, benchmark: DataFrame,
+      n: Int = 8): DataFrame = {
     // distinct-hash checkpoint (materialized by the count): feeds the
     // count, the sketch aggregate, and the exactness join — a local
     // checkpoint, not a persist, so no session-cache entry outlives the call
     val benchHashes = benchSpanHashes(benchmark, n).localCheckpoint(eager = false)
     val bloom = benchHashes.stat.bloomFilter(
-      "sh", math.max(benchHashes.count(), 1L), fpp)
+      "sh", math.max(benchHashes.count(), 1L), BloomFpp)
     val sp = positionalSpans(train, n).select("doc_id", "sh")
       .localCheckpoint(eager = false)
-    val tainted = sp
-      .filter(graft.functions.BloomMightContain.mightContain(
-        train.sparkSession, bloom, col("sh")))
+    val tainted = graft.functions.BloomMightContain.filter(sp, bloom, col("sh"))
       .join(benchHashes, Seq("sh"), "left_semi")
     contaminationTail(sp, tainted)
   }
@@ -963,9 +966,9 @@ object Dedup {
     * to [[decontaminate]] (the stats are identical), at the Bloom path's
     * scan cost. */
   def decontaminateBloom(train: DataFrame, benchmark: DataFrame, n: Int = 8,
-      maxRatio: Double = 0.0, fpp: Double = 0.01): DataFrame =
+      maxRatio: Double = 0.0): DataFrame =
     train.join(
-      contaminationStatsBloom(train, benchmark, n, fpp)
+      contaminationStatsBloom(train, benchmark, n)
         .filter(col("contam_ratio") <= maxRatio)
         .select("doc_id"),
       Seq("doc_id"), "left_semi")

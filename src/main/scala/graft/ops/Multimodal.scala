@@ -111,7 +111,6 @@ object Multimodal {
     * [[graft.functions.ByteStride]] expression (no built-in subsamples
     * binary; an exploded byte array would allocate a row per byte). */
   def downsampleBytes(blobs: DataFrame, stride: Int): DataFrame = {
-    graft.functions.ByteStride.register(blobs.sparkSession)
     blobs.select(
       col("doc_id"),
       length(col("bytes")).cast("long").as("byte_len"),
@@ -134,7 +133,7 @@ object Multimodal {
     * pixel statistics WITHOUT a decoder — which is what lets the real
     * codec path ([[decodePng]]) sit under the DuckDB gate: the gate
     * round-trips encode→PNG→decode→stats against the formula. The
-    * per-document slope term `(doc_id mod 9 + 1)·x·y` (r12) makes the
+    * per-document slope term `(doc_id mod 9 + 1)·x·y` makes the
     * corpus perceptually DIVERSE — without it every image is the same
     * linear gradient shifted, and [[pHashPairs]] degenerates to ~22% of
     * all pairs being "near-duplicates" (the measured density with the
@@ -169,11 +168,11 @@ object Multimodal {
     }(enc).toDF()
   }
 
-  /** One-time per-JVM codec-state pin (r16, VERDICT r15 weak #1): by
+  /** One-time per-JVM codec-state pin: by
     * default `ImageIO.read(InputStream)` spools the stream through a
     * TEMP FILE on disk (`FileCacheImageInputStream`) — for byte-array
     * payloads that is pure overhead, and it couples every decode's
-    * latency to /tmp disk contention (the suspected cause of the r15
+    * latency to /tmp disk contention (the suspected cause of an earlier
     * mm_phash elevation once `decodeFeatures`' real decodes joined the
     * same JVM sweep). Pinning `useCache=false` makes every decode a
     * `MemoryCacheImageInputStream` — no filesystem touch. Executor-side:
@@ -245,7 +244,7 @@ object Multimodal {
   val DHashGrid = 8
 
   /** Perceptual difference-hash (dHash) over the DECODED pixel grid — the
-    * media half of the dedup story (VERDICT r11 missing 2): decode each
+    * media half of the dedup story: decode each
     * PNG with the real JVM codec, nearest-neighbor-sample an 8×8 grid
     * (`sx = gx·w div 8`, `sy = gy·h div 8` — exact integer arithmetic, so
     * a SQL oracle can replay the sampled pixels from the generating
@@ -364,8 +363,8 @@ object Multimodal {
     * decompose into sorted member BLOCKS of this size first (same-block +
     * cross-block pair streams, each re-distributed across tasks), so one
     * saturated code value can never serialize its whole quadratic pair
-    * stream onto a single task (VERDICT r13 watch: 100k identical blank
-    * thumbnails ≈ 8n² bytes through ONE task). Per-task pair volume is
+    * stream onto a single task (100k identical blank thumbnails would
+    * otherwise push ≈ 8n² bytes through ONE task). Per-task pair volume is
     * then bounded by ~BlockSize² ≈ 16M pairs regardless of class size. */
   val ClassBlockSize = 4096
 
@@ -383,8 +382,8 @@ object Multimodal {
     * verified) candidate code-pair list. N identical images thus
     * contribute ONE row to the band join instead of N — the previous
     * shape made N²/2 verified pairs *inside the shuffle join*, which AQE
-    * skew-split cannot shrink because it re-partitions input, not output
-    * (VERDICT r12 #1). Pair OUTPUT is still inherently quadratic in
+    * skew-split cannot shrink because it re-partitions input, not output.
+    * Pair OUTPUT is still inherently quadratic in
     * class size — that is the operator's contract — but it materializes
     * as distributed streamed explodes, never as join state and never
     * through one task (MultimodalSpec proves exactly-once enumeration +
@@ -392,7 +391,7 @@ object Multimodal {
   private[graft] def classPairs(codes: DataFrame, codeCol: String,
       bandsOf: DataFrame => DataFrame, maxHamming: Int,
       blockSize: Int = ClassBlockSize): DataFrame = {
-    // localCheckpoint, not persist (ADVICE r13): eagerly materialized once
+    // localCheckpoint, not persist: eagerly materialized once
     // (every consumer below needs it), blocks are ContextCleaner-reclaimed
     // when the frame is garbage-collected — repeated miner calls no longer
     // accumulate session-lifetime CacheManager entries
@@ -457,8 +456,9 @@ object Multimodal {
 
   /** The band rows of a DISTINCT-code frame (any other columns ride
     * along) — ONE banding scheme for the direct miner and the stored
-    * index, so they cannot drift. Since r13's class collapse, band rows
-    * carry the code value only, never per-document rows. */
+    * index, so they cannot drift. Documents are collapsed into code
+    * classes first, so band rows carry the code value only, never
+    * per-document rows. */
   private[graft] def phashBands(codes: DataFrame): DataFrame = {
     val bandBits = (DHashGrid - 1) * DHashGrid / PHashBands
     codes.select(
@@ -567,7 +567,7 @@ object Multimodal {
       maxHamming: Int = DefaultMaxHammingPx): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
     // localCheckpoint, not persist — same session-cache-leak rationale as
-    // classPairs (ADVICE r13)
+    // classPairs
     val classesB = codeClasses(dHash(newBlobs), "phash").localCheckpoint()
     val cand = spark.table(table).as("x")
       .join(phashBands(classesB.select("phash")).as("y"),
@@ -597,7 +597,7 @@ object Multimodal {
     * sample `i = ((doc_id*37 + i²*17 + (doc_id mod 13 + 1)·i) mod 65536)
     * - 32768`, length `doc_id mod 400 + 100` at 8 kHz. Pure integer
     * generating formula → the oracle replays expected sample statistics
-    * with no decoder. The quadratic + per-document-slope terms (r12) give
+    * with no decoder. The quadratic + per-document-slope terms give
     * each clip real envelope structure — the previous pure sawtooth made
     * every clip's windowed-mean profile IDENTICAL, collapsing [[aHash]]
     * to one code for the whole corpus (the same degeneracy the PNG
@@ -750,9 +750,9 @@ object Multimodal {
     StructField("mime", StringType),
     StructField("feature", ArrayType(DoubleType))))
 
-  /** REAL decode → feature-extract over a MIXED media corpus (r15,
-    * VERDICT r14 item 6 — this retires the engine's last stand-in,
-    * `decodeStub`'s deterministic fake features): one partition-batched
+  /** REAL decode → feature-extract over a MIXED media corpus (this
+    * retired the engine's last stand-in, `decodeStub`'s deterministic fake
+    * features): one partition-batched
     * pass that DISPATCHES per row on the `mime` column — `image/png`
     * decodes through `javax.imageio` and emits PIXEL moments,
     * `audio/wav` through `javax.sound.sampled` and emits SAMPLE moments.

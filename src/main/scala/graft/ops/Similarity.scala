@@ -53,7 +53,6 @@ object Similarity {
     * is broadcast; ties break on neighbor id for determinism. Norms are
     * computed once per side before the join. */
   def bruteForceTopK(emb: DataFrame, queryPred: Column, k: Int = 5): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     val q = emb.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         sqrt(dot("embedding", "embedding")).as("qnorm"))
@@ -124,7 +123,6 @@ object Similarity {
     * Same exactness contract: fixed-point `floor(cos·2^24)` LONG sums,
     * ties on neighbor id. */
   def maxSimTopKTokens(toks: DataFrame, queryPred: Column, k: Int = 5): DataFrame = {
-    graft.functions.FloatDot.register(toks.sparkSession)
     val q = toks.filter(queryPred)
       .select(col("dkey").as("query_doc"), col("tok_id").as("qtok"),
         col("embedding").as("qv"), sqrt(dot("embedding", "embedding")).as("qnorm"))
@@ -175,7 +173,6 @@ object Similarity {
       shortlist: Int = 20): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, ivfTable)
     graft.sources.Formats.requireBuilt(spark, vecTable)
-    graft.functions.FloatDot.register(spark)
     val piv = spark.table(s"${ivfTable}_pivots")
     val toks = spark.table(ivfTable)
       .select(expr(s"vec_id div $groupSize").as("dkey"), col("vec_id"),
@@ -326,7 +323,6 @@ object Similarity {
     * its recall oracle. */
   def hardNegatives(emb: DataFrame, queryPred: Column, positives: DataFrame,
       k: Int = 5): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     val q = emb.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         sqrt(dot("embedding", "embedding")).as("qnorm"))
@@ -366,7 +362,6 @@ object Similarity {
     * Scala's `1.0 - 0.7 = 0.30000000000000004` would hash-diverge. */
   def mmrTopK(emb: DataFrame, queryPred: Column, k: Int = 5,
       shortlist: Int = 20, lam: Double = 0.75): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     val top = bruteForceTopK(emb, queryPred, shortlist)
       .select(col("query_id"), col("neighbor_id").as("cand"), col("cos").as("rel"))
     val vecs = emb.select(col("vec_id"), col("embedding"),
@@ -423,7 +418,6 @@ object Similarity {
     * neighbor_id, the re-rank on exact cosine then neighbor_id. */
   def prefixRefineTopK(emb: DataFrame, queryPred: Column, prefDim: Int = 16,
       candidates: Int = 20, k: Int = 5): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     val pref = slice(col("embedding"), 1, prefDim)
     val q = emb.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
@@ -479,7 +473,6 @@ object Similarity {
     * the band join is the only viable plan, and keeping the cross product
     * out of the production path is the point. */
   def embeddingNearDupPairs(emb: DataFrame, minCos: Double = 0.4): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("va"),
       sqrt(dot("embedding", "embedding")).as("na"))
     val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("vb"),
@@ -518,7 +511,6 @@ object Similarity {
     * The scale story composes with the others: SQ is the in-memory
     * compression lever, LSH/IVF are the candidate-pruning levers. */
   def sqTopK(emb: DataFrame, queryPred: Column, k: Int = 5): DataFrame = {
-    graft.functions.ByteDot.register(emb.sparkSession)
     rankSq(quantizeInt8(emb), queryPred, k)
   }
 
@@ -546,7 +538,6 @@ object Similarity {
   def sqTopKIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
       queryPred: Column, k: Int = 5): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
-    graft.functions.ByteDot.register(spark)
     rankSq(spark.table(table), queryPred, k)
   }
 
@@ -643,7 +634,6 @@ object Similarity {
     * 4-bit band of the 16-bit signature, exact cosine re-ranks, top-k per
     * query. Recall vs [[bruteForceTopK]] is checked in SimilaritySpec. */
   def lshTopK(emb: DataFrame, queryPred: Column, k: Int = 5): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     val banded = bandedSignatures(emb)
     rankCandidates(probeJoin(queryBands(banded, queryPred), neighborBands(banded)), k)
   }
@@ -657,7 +647,6 @@ object Similarity {
     * the query side, and broadcast probes read the index with no exchange
     * at all (asserted in SimilaritySpec). */
   def buildLshIndex(emb: DataFrame, table: String, numBuckets: Int = 8): Unit = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     StoredIndex.build(lshIndex(numBuckets), table, emb)(_ => bandedSignatures(emb))
   }
 
@@ -676,7 +665,6 @@ object Similarity {
     * append; a two-batch build is bit-identical to a one-shot build of the
     * union (gated under the same oracle as [[lshTopKIndexed]]). */
   def appendToLshIndex(newEmb: DataFrame, table: String): Unit = {
-    graft.functions.FloatDot.register(newEmb.sparkSession)
     StoredIndex.append(lshIndex(), table, newEmb)(_ => bandedSignatures(newEmb))
   }
 
@@ -738,7 +726,6 @@ object Similarity {
   def lshTopKIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
       queryPred: Column, k: Int = 5): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
-    graft.functions.FloatDot.register(spark)
     rankCandidates(indexedProbeJoin(spark, table, queryPred), k)
   }
 
@@ -777,7 +764,6 @@ object Similarity {
     * [[bruteForceTopK]]. */
   def ivfTopKWith(emb: DataFrame, piv: DataFrame, queryPred: Column,
       k: Int = 5, nprobe: Int = 2): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     // per-side norms hoisted out of the pivot fan-out (bit-identical:
     // same sqrt(self-dot) values, computed once per row/pivot instead of
     // once per (row, pivot) candidate — the bruteForceTopK discipline)
@@ -818,7 +804,6 @@ object Similarity {
     * (`vec_id, embedding, cell`) — the corpus-scale half of an IVF index.
     * Same broadcast-argmax plan as [[ivfTopKWith]]'s cell stage. */
   def assignCells(emb: DataFrame, piv: DataFrame): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     emb.withColumn("enorm", sqrt(dot("embedding", "embedding")))
       .crossJoin(broadcast(piv.withColumn("pnorm", sqrt(dot("pv", "pv")))))
       .withColumn("pcos", dot("embedding", "pv") / (col("enorm") * col("pnorm")))
@@ -910,7 +895,6 @@ object Similarity {
   def semanticDedupIndexed(spark: org.apache.spark.sql.SparkSession,
       table: String, tau: Double = 0.4, maxCellShard: Int = 4096): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
-    graft.functions.FloatDot.register(spark)
     val idx = spark.table(table).select(col("vec_id"), col("embedding"), col("cell"))
     idx.select("vec_id", "cell")
       .join(semanticDominated(idx, tau, maxCellShard), Seq("vec_id"), "left_anti")
@@ -1044,7 +1028,6 @@ object Similarity {
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
       queryPred: Column, k: Int = 5, nprobe: Int = 2): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
-    graft.functions.FloatDot.register(spark)
     val piv = spark.table(s"${table}_pivots")
     val idx = spark.table(table)
     val wProbe = Window.partitionBy(col("vec_id")).orderBy(col("pcos").desc, col("pid"))
@@ -1141,7 +1124,6 @@ object Similarity {
     * CacheManager entry). */
   private def trainPqCodebooksOn(emb: DataFrame, subs: DataFrame,
       k: Int = PqCodes, iters: Int = PqIters): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val init: Array[Seq[Float]] = emb
@@ -1214,7 +1196,6 @@ object Similarity {
     pqEncodeOn(subVectors(emb), codebooks)
 
   private def pqEncodeOn(subs: DataFrame, codebooks: DataFrame): DataFrame = {
-    graft.functions.FloatDot.register(subs.sparkSession)
     argminCell(subs, codebooks)
       .groupBy("vec_id")
       .agg(expr("transform(array_sort(collect_list(struct(m, pid))), s -> CAST(s.pid AS TINYINT))")
@@ -1232,7 +1213,6 @@ object Similarity {
     * broadcast literal, and only the tiny query set touches floats.
     * Recall vs the exact tier is measured in SimilaritySpec. */
   def pqTopK(emb: DataFrame, queryPred: Column, k: Int = 5): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     // sub-vector projection materialized ONCE: training's Lloyd's
     // rounds and the corpus encode all consume it — as a plan it
     // re-derived the scan + slice explode per job
@@ -1331,7 +1311,6 @@ object Similarity {
   def pqTopKIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
       queries: DataFrame, k: Int = 5): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
-    graft.functions.FloatDot.register(spark)
     rankPq(
       queries.select(col("vec_id").as("query_id"), col("embedding").as("qv")),
       spark.table(table), spark.table(s"${table}_books"), k)
@@ -1433,7 +1412,6 @@ object Similarity {
   def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
       queries: DataFrame, k: Int = 5, nprobe: Int = IvfPqNprobe): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
-    graft.functions.FloatDot.register(spark)
     val piv = spark.table(s"${table}_pivots")
     val books = spark.table(s"${table}_books")
     val idx = spark.table(table)
@@ -1514,7 +1492,6 @@ object Similarity {
       candidates: Int = RefineShortlist, nprobe: Int = RefineNprobe,
       recallTarget: Option[Double] = None): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, vecTable)
-    graft.functions.FloatDot.register(spark)
     val np = recallTarget.map(pickNprobe(spark, pqTable, _)).getOrElse(nprobe)
     val cand = ivfPqTopKIndexed(spark, pqTable, queries, candidates, np)
       .select(col("query_id"), col("neighbor_id"))
@@ -1611,7 +1588,6 @@ object Similarity {
   def nprobeCalibration(spark: org.apache.spark.sql.SparkSession, table: String,
       samplePred: Column, targets: Seq[Double], k: Int = 5): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
-    graft.functions.FloatDot.register(spark)
     import spark.implicits._
     val idx = spark.table(table)
     val piv = spark.table(s"${table}_pivots")
@@ -1714,7 +1690,6 @@ object Similarity {
     * corpus — is collected; at 100 TB that is the textbook scalable
     * k-means shape (broadcast centroids down, k×dim grams up). */
   def trainPivots(emb: DataFrame, k: Int = NumPivots, iters: Int = KmeansIters): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val init: Array[Seq[Float]] = emb
@@ -1775,7 +1750,6 @@ object Similarity {
     * explicit sub-shard guard [[semanticDedupIndexed]] carries for its
     * cell joins is not warranted here. */
   def embeddingNearDupPairsLSH(emb: DataFrame, minCos: Double = 0.4): DataFrame = {
-    graft.functions.FloatDot.register(emb.sparkSession)
     val banded = bandedSignatures(emb)
     val a = banded.select(col("vec_id").as("id_a"), col("embedding").as("va"),
       col("band_idx"), col("band_val"))

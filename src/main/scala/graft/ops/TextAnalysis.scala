@@ -1275,7 +1275,6 @@ object TextAnalysis {
     * expression (a Scala UDF would break whole-stage codegen on the
     * corpus's hottest scan). Single projection, no shuffle. */
   def normalizeText(docs: DataFrame): DataFrame = {
-    graft.functions.NfcNormalize.register(docs.sparkSession)
     val norm = expr("nfc_normalize(text)")
     docs.select(
       col("doc_id"),

@@ -218,10 +218,16 @@ class DedupSpec extends SparkTestBase {
     val train = docs.filter(col("doc_id") % 7 =!= 0)
     val bench = docs.filter(col("doc_id") % 7 === 0)
     val direct = Dedup.contaminationStats(train, bench).collect().map(_.toString).sorted.toSeq
+    val registry = spark.sessionState.functionRegistry
+    val functionsBefore = registry.listFunction().toSet
     val bloomed = Dedup.contaminationStatsBloom(train, bench)
+    val functionsAfter = registry.listFunction().toSet
+    val changed = (functionsAfter diff functionsBefore) ++ (functionsBefore diff functionsAfter)
+    assert(changed.isEmpty,
+      s"the Bloom probe must leave the session's function registry as it was: ${changed.mkString(", ")}")
     // superset contract: bloom false positives die in the exact join,
     // false negatives are impossible — results must be identical
-    // (sorted-row compare: ops return unsorted since r18)
+    // (sorted-row compare: ops return unsorted rows)
     assert(bloomed.collect().map(_.toString).sorted.toSeq === direct)
     // the might_contain probe sits in the plan (scan-side, pre-join)
     val plan = bloomed.queryExecution.executedPlan.toString
@@ -234,8 +240,7 @@ class DedupSpec extends SparkTestBase {
     val benchHashes = Dedup.positionalSpans(bench, 8).select("sh").distinct()
     val bf = benchHashes.stat.bloomFilter("sh", benchHashes.count(), 0.01)
     val total = sp.count()
-    val kept = sp.filter(
-      graft.functions.BloomMightContain.mightContain(spark, bf, col("sh"))).count()
+    val kept = graft.functions.BloomMightContain.filter(sp, bf, col("sh")).count()
     val tainted = sp.join(benchHashes, Seq("sh"), "left_semi").count()
     assert(kept < total / 2, s"bloom must prune most spans: kept $kept of $total")
     assert(kept >= tainted, "bloom survivors must be a superset of true hits")
@@ -348,7 +353,7 @@ class DedupSpec extends SparkTestBase {
       // the band index stayed in sync: same stamp as the label table
       val (bn, bfp, _, _) = graft.sources.Formats.readBuildMeta(spark, "graft_ci_band").get
       assert((bn, bfp) === full)
-      // edge orientation (ADVICE r12): appended cross edges are
+      // edge orientation: appended cross edges are
       // normalized to doc_a < doc_b, so the stored edge SET — not just
       // its symmetric closure — equals a one-shot build's
       Dedup.buildComponentsTable(docs, "graft_ci_ref")
