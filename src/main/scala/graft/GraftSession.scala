@@ -34,7 +34,8 @@ import org.apache.spark.sql.SparkSession
   *    than 100, so at the default every batch recompiled most of them.
   *  - AQE (on by default in Spark 4) is deliberately left on: runtime
   *    partition coalescing and skew-join splitting are part of the 100 TB
-  *    design.
+  *    design. [[graft.ops.Engine.jobSession]] turns it off for the word
+  *    count's one-exchange plan, which neither rule can improve.
   *
   * Isolation is read when a session is created and the cache size once per
   * JVM, so both are set in the builder, not on a running session.

@@ -97,7 +97,7 @@ object Engine {
     }
 
     /** Monotone CAS update: concurrent readers race, and the denominator
-      * grows as the job's later actions submit stages, but observed
+      * grows as the job's later stages are submitted, but observed
       * progress must never decrease. */
     private def advanceProgress(p: Double): Unit = {
       val clamped = math.min(p, 1.0)
@@ -126,9 +126,9 @@ object Engine {
       * client reduced to "how far along is my job"
       * (`src/master/master.cpp:300-336`). Read on demand from Spark's
       * status tracker for this job's group, and capped at 0.95 until the
-      * job COMPLETEs, when it reads exactly 1.0: Spark only learns a job's
-      * total work as each of its actions plans, so between two actions
-      * every submitted task can be done while later work remains. */
+      * job COMPLETEs, when it reads exactly 1.0. A word-count job is one
+      * Spark job whose stages are all known when it is submitted; the cap
+      * covers the job commit that runs after its last task. */
     def progress: Double = {
       state.get match {
         case "COMPLETED" => advanceProgress(1.0)
@@ -217,9 +217,12 @@ object Engine {
     * Spark reads both when the query is planned, so concurrent jobs must
     * not share the conf. With `reducerCount` shuffle partitions the word
     * count's aggregation exchange hash-partitions on `word` into exactly
-    * the reducers, so it is the job's one shuffle. AQE partition
-    * coalescing stays off here: it would merge the reducers of a small
-    * job into one task and write one file instead of `reducerCount`.
+    * the reducers, so it is the job's one shuffle. AQE is off here: the
+    * plan has one exchange with a fixed partition count and no join, so
+    * the only rule that could act is coalescing, which would merge a small
+    * job's reducers into one file. With AQE on, the write ran as two Spark
+    * jobs, and each query stage started a thread on Spark's static stage
+    * pools that kept this session reachable for 60 s after the job.
     * Job sessions share compiled code: under [[graft.GraftSession.local]]
     * a session has no class loader of its own, so a job whose generated
     * code equals an earlier job's compiles nothing. */
@@ -227,7 +230,7 @@ object Engine {
     val job = spark.newSession()
     job.conf.set("spark.sql.files.maxPartitionBytes", spec.shardSize)
     job.conf.set("spark.sql.shuffle.partitions", spec.reducerCount.toLong)
-    job.conf.set("spark.sql.adaptive.coalescePartitions.enabled", false)
+    job.conf.set("spark.sql.adaptive.enabled", false)
     job
   }
 

@@ -2,10 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Observation
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.ops.Engine
 import graft.ops.Engine.JobSpec
@@ -45,13 +49,36 @@ class EngineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       (0 until 300).map(i => s"w$i w$i v$i").grouped(10).map(_.mkString(" ")).mkString("\n"))
     val spec = JobSpec(Seq(in.resolve("a.txt").toString), reducerCount = 4)
     val out = Files.createTempDirectory("graft_wc_once_out").resolve("j")
-    assert(Engine.submitWordCount(spark, spec, out.toString) === 600)
+    val sc = spark.sparkContext
+    def stageThreads: Set[Long] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("shuffle-exchange-") ||
+        t.getName.startsWith("ResultQueryStageExecution-"))
+      .map(_.getId).toSet
+    val threadsBefore = stageThreads
+    val group = "engine-spec-one-job"
+    sc.setJobGroup(group, "word count under test")
+    try assert(Engine.submitWordCount(spark, spec, out.toString) === 600)
+    finally sc.clearJobGroup()
+    // AQE materializes each query stage on a new thread of a static pool,
+    // and that thread keeps the job's session reachable while it idles
+    assert((stageThreads -- threadsBefore).isEmpty, "no AQE stage thread started")
+    // the status listener sees events in order: once a later job shows,
+    // every job of the word count has been counted
+    val marker = "engine-spec-marker"
+    sc.setJobGroup(marker, "listener drain")
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.clearJobGroup()
+    eventually(timeout(30.seconds)) {
+      assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
+    }
+    assert(sc.statusTracker.getJobIdsForGroup(group).length === 1, "one Spark job per job")
     val parts = Files.list(out).toArray.map(_.toString).filter(_.matches(".*part-.*\\.txt$"))
     assert(parts.length === 4, parts.mkString(", "))
     // the aggregation's exchange is the reducer shuffle: no second one
     val lines = Engine.wordCountLines(Engine.jobSession(spark, spec), spec, Observation())
     assert(lines.collect().length === 600)
     val plan = lines.queryExecution.executedPlan
+    assert(plan.find(_.isInstanceOf[AdaptiveSparkPlanExec]).isEmpty, plan.toString)
     assert(collect(plan) { case e: ShuffleExchangeExec => e }.size === 1, plan.toString)
     assert(lines.rdd.getNumPartitions === 4)
   }
@@ -61,13 +88,16 @@ class EngineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     Files.writeString(in.resolve("big.txt"), ("x" * 50 + "\n") * 100) // ~5.1 KB
     val spec = JobSpec(Seq(in.resolve("big.txt").toString), shardSize = 1024L)
     val key = "spark.sql.files.maxPartitionBytes"
+    val aqe = "spark.sql.adaptive.enabled"
     val callerSplit = spark.conf.get(key)
+    val callerAqe = spark.conf.get(aqe)
     val df = Engine.readText(Engine.jobSession(spark, spec), spec)
     assert(df.rdd.getNumPartitions >= 4) // ~5 KB / 1 KB shards
     assert(df.count() == 100)
     assert(Engine.submitWordCount(spark, spec, Files.createTempDirectory("graft_shard_out")
       .resolve("j").toString) === 1) // "xxx…x"
     assert(spark.conf.get(key) === callerSplit)
+    assert(spark.conf.get(aqe) === callerAqe)
   }
 
   test("a second word-count job of the same shape compiles no generated code") {
