@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.StoredIndex
-import graft.sources.StoredIndex.{Family, Part}
+import graft.sources.StoredIndex.{Buckets, Family, Part}
 
 /** Byte-pair-encoding vocabulary training — the subword tokenizer builder
   * every LLM data pipeline runs before token counting means anything
@@ -124,8 +124,8 @@ object Bpe {
     }
 
   /** The learned merge table — gate `ta_bpe_merges`. */
-  def mergeTable(docs: DataFrame, rounds: Int = DefaultRounds): DataFrame =
-    mergeTableOf(docs.sparkSession, train(docs, rounds)._1)
+  def mergeTable(docs: DataFrame): DataFrame =
+    mergeTableOf(docs.sparkSession, train(docs)._1)
 
   /** The merge table of an already-trained model. */
   def mergeTableOf(spark: org.apache.spark.sql.SparkSession,
@@ -151,16 +151,15 @@ object Bpe {
     * processes (the session memo in SparkEntry shares one training per
     * JVM; this is the artifact a production pipeline publishes): the
     * learned merge table stored with the training corpus's build
-    * manifest. The model is tiny (`rounds` rows), the training sweep is
-    * the expensive half — exactly the classifier/LM lifecycle. */
-  def buildBpeModel(docs: DataFrame, table: String,
-      rounds: Int = DefaultRounds): Unit = {
-    val merges = train(docs, rounds)._1
-    require(merges.size == rounds,
-      s"BPE training exhausted after ${merges.size} of $rounds rounds — " +
+    * manifest. The model is tiny ([[DefaultRounds]] rows), the training
+    * sweep is the expensive half — exactly the classifier/LM lifecycle. */
+  def buildBpeModel(docs: DataFrame, table: String): Unit = {
+    val merges = train(docs)._1
+    require(merges.size == DefaultRounds,
+      s"BPE training exhausted after ${merges.size} of $DefaultRounds rounds — " +
         "a fixed-round replay (the oracle's CTE chain) would diverge")
     StoredIndex.build(Family(
-        _ => s"kind=bpe,rounds=$rounds", "doc_id", "",
+        _ => s"kind=bpe,rounds=$DefaultRounds", "doc_id", "",
         Seq(Part("", Nil, 0))),
       table, docs)(_ => mergeTableOf(docs.sparkSession, merges))
   }
@@ -197,8 +196,8 @@ object Bpe {
 
   /** Final segmentations of the `k` most frequent words — gate
     * `ta_bpe_segments` (deterministic: frequency then word tiebreak). */
-  def segments(docs: DataFrame, rounds: Int = DefaultRounds, k: Int = 100): DataFrame =
-    segmentsOf(train(docs, rounds)._2, k)
+  def segments(docs: DataFrame, k: Int = 100): DataFrame =
+    segmentsOf(train(docs)._2, k)
 
   /** [[segments]] against an already-trained segmentation state. The
     * learned merges are embedded literals in the state plan, so evaluating

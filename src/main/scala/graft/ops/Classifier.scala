@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.StoredIndex
-import graft.sources.StoredIndex.{Family, Part}
+import graft.sources.StoredIndex.{Buckets, Family, Part}
 
 /** Trained quality classification — the learned curation filter every
   * large-scale pretraining pipeline runs (the GPT-3/WebText pattern: fit a
@@ -87,10 +87,10 @@ object Classifier {
 
   private def pCol(w: Seq[Long]): Column = lit(1.0) / (lit(1.0) + exp(-zCol(w)))
 
-  /** Run `iters` full-batch GD rounds from zero weights; returns the
-    * per-round fixed-point weight vectors (driver-sized: k longs each). */
-  def train(docs: DataFrame, iters: Int = DefaultIters,
-      lr: Double = DefaultLr): Seq[Seq[Long]] = {
+  /** Run `iters` full-batch GD rounds (step [[DefaultLr]]) from zero
+    * weights; returns the per-round fixed-point weight vectors
+    * (driver-sized: k longs each). */
+  def train(docs: DataFrame, iters: Int = DefaultIters): Seq[Seq[Long]] = {
     val f = features(docs).persist()
     val n = f.count()
     var w: Seq[Long] = Seq.fill(FeatureCols.size)(0L)
@@ -100,7 +100,7 @@ object Classifier {
       val g = f.select(FeatureCols.map(c =>
         sum(round(lit(Scale) * err * col(c)).cast("long")).as(s"g_$c")): _*)
         .collect()(0)
-      w = w.indices.map(j => w(j) - halfUp(lr * g.getLong(j) / n.toDouble))
+      w = w.indices.map(j => w(j) - halfUp(DefaultLr * g.getLong(j) / n.toDouble))
       hist += w
     }
     f.unpersist()
@@ -124,9 +124,8 @@ object Classifier {
     scoredFrame(docs, w)
 
   /** Train-then-score in one call — gate `ta_quality_classifier`. */
-  def qualityClassifier(docs: DataFrame, iters: Int = DefaultIters,
-      lr: Double = DefaultLr): DataFrame =
-    scores(docs, train(docs, iters, lr).last)
+  def qualityClassifier(docs: DataFrame): DataFrame =
+    scores(docs, train(docs).last)
 
   /** Build-once half of the classifier train/score split — the LM/BM25/
     * ANN lifecycle applied to the last trained-model family that lacked
@@ -136,13 +135,12 @@ object Classifier {
     * build manifest. At 100 TB training is a 32-pass corpus job you
     * schedule, not something a scorer re-runs; every downstream scorer
     * (batch or the streaming twin) then reads the published artifact. */
-  def buildClassifierModel(docs: DataFrame, table: String,
-      iters: Int = DefaultIters, lr: Double = DefaultLr): Unit = {
-    val w = train(docs, iters, lr).last
+  def buildClassifierModel(docs: DataFrame, table: String): Unit = {
+    val w = train(docs).last
     val spark = docs.sparkSession
     import spark.implicits._
     StoredIndex.build(Family(
-        _ => s"kind=clf,iters=$iters,lr=$lr", "doc_id", "",
+        _ => s"kind=clf,iters=$DefaultIters,lr=$DefaultLr", "doc_id", "",
         Seq(Part("", Nil, 0))),
       table, docs)(_ => w.zipWithIndex.map { case (v, j) => (j, v) }.toDF("j", "w"))
   }

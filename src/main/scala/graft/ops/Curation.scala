@@ -48,6 +48,14 @@ import graft.functions.CrossHash
   * copy per batch (see [[commitStreamDailyBatch]]). */
 object Curation {
 
+  /** The admission policy every curation decision applies: quality floor,
+    * language, repetition cap (dup-2 fraction) and the benchmark span
+    * length (tokens) of the decontamination stage. */
+  val MinQuality = 0.6
+  val Lang = "en"
+  val MaxDup2 = 0.05
+  val NSpan = 8
+
   /** Batch split used by the gate: documents with `doc_id % 4 == 1` play
     * today's crawl, the rest the accumulated corpus, and `doc_id % 7 == 0`
     * the benchmark suite (the decontamination convention of the
@@ -64,8 +72,7 @@ object Curation {
     * this filter feeding the band-taint admission
     * ([[graft.streaming.StreamOps.streamNearDupAdmitted]]), and batch
     * mode of that composition is gate `stream_curation_admit`. */
-  def qualityGate(docs: DataFrame, minQuality: Double = 0.6, lang: String = "en",
-      maxDup2: Double = 0.05): DataFrame = {
+  def qualityGate(docs: DataFrame): DataFrame = {
     // LET-BINDING against predicate-pushdown re-tokenization: pushdown
     // substitutes a projected column into the filter condition at EVERY
     // reference with no cost guard (CollapseProject has one, pushdown
@@ -83,9 +90,9 @@ object Curation {
       transform(array(struct(SharedCorpus.wsOf(docs).as("w"),
           SharedCorpus.alnumOf(docs).as("al"))), s => {
         val (a, al) = (s.getField("w"), s.getField("al"))
-        TextAnalysis.qualityColOf(a, al) >= minQuality &&
-          TextAnalysis.predLangColOf(a) === lang &&
-          TextAnalysis.dup2FracOf(a) <= maxDup2
+        TextAnalysis.qualityColOf(a, al) >= MinQuality &&
+          TextAnalysis.predLangColOf(a) === Lang &&
+          TextAnalysis.dup2FracOf(a) <= MaxDup2
       }), 1)
     docs.filter(verdict)
   }
@@ -104,36 +111,31 @@ object Curation {
     * and a production run materializes its decision ledger before packing
     * for exactly this reason. */
   def dailyBatch(spark: SparkSession, all: DataFrame, bandTable: String,
-      minQuality: Double = 0.6, lang: String = "en", maxDup2: Double = 0.05,
-      nSpan: Int = 8, bloomDecontam: Boolean = false): DataFrame =
-    decideBatch(spark, batchOf(all), benchOf(all), bandTable,
-      minQuality, lang, maxDup2, nSpan, bloomDecontam)
+      bloomDecontam: Boolean = false): DataFrame =
+    decideBatch(spark, batchOf(all), benchOf(all), bandTable, bloomDecontam)
 
   /** [[dailyBatch]]'s decision core over an EXPLICIT (batch, benchmark)
     * pair, so the streaming daily pipeline can run the byte-identical
     * decision per micro-batch ([[commitStreamDailyBatch]]); the batch
     * composite passes the %4/%7 corpus splits. */
   def decideBatch(spark: SparkSession, batch: DataFrame, benchmark: DataFrame,
-      bandTable: String, minQuality: Double = 0.6, lang: String = "en",
-      maxDup2: Double = 0.05, nSpan: Int = 8,
-      bloomDecontam: Boolean = false): DataFrame =
+      bandTable: String, bloomDecontam: Boolean = false): DataFrame =
     // decontamination stage: the direct broadcast semi-join by default, or
     // the Bloom-pruned scan for the broadcast-outgrown regime — RESULT-
     // IDENTICAL by the Bloom path's no-false-negatives contract, so both
     // composite forms share one oracle (same rule as the dedup_contamination
     // gate pair)
     decide(spark, batch, Dedup.minHashSignatures(batch).localCheckpoint(eager = false),
-      if (bloomDecontam) Dedup.contaminationStatsBloom(batch, benchmark, nSpan)
-      else Dedup.contaminationStats(batch, benchmark, nSpan),
-      bandTable, minQuality, lang, maxDup2)
+      if (bloomDecontam) Dedup.contaminationStatsBloom(batch, benchmark, NSpan)
+      else Dedup.contaminationStats(batch, benchmark, NSpan),
+      bandTable)
 
   /** The decision over facts the caller computed once: `sigs`, the
     * batch's [[Dedup.minHashSignatures]] (materialized, it also feeds the
     * survivors' band-index append), and `contamination`, the batch's
     * per-doc span-overlap stats against the benchmark. */
   private def decide(spark: SparkSession, batch: DataFrame, sigs: DataFrame,
-      contamination: DataFrame, bandTable: String, minQuality: Double,
-      lang: String, maxDup2: Double): DataFrame = {
+      contamination: DataFrame, bandTable: String): DataFrame = {
     val scored = batch
       .select(col("doc_id"), SharedCorpus.wsOf(batch).as("a"),
         SharedCorpus.alnumOf(batch).as("al"))
@@ -151,9 +153,9 @@ object Curation {
       .join(ndup, Seq("doc_id"), "left")
       .join(contam, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
-        (col("q") >= minQuality).as("q_ok"),
-        (col("l") === lang).as("lang_ok"),
-        (col("r") <= maxDup2).as("rep_ok"),
+        (col("q") >= MinQuality).as("q_ok"),
+        (col("l") === Lang).as("lang_ok"),
+        (col("r") <= MaxDup2).as("rep_ok"),
         col("nd").isNull.as("dedup_ok"),
         coalesce(col("cl"), lit(true)).as("clean_ok"))
       .withColumn("survived",
@@ -196,7 +198,7 @@ object Curation {
     * snapshot equality and the multi-batch sequential semantics).
     *
     * `benchHashes` is the benchmark already reduced to its distinct
-    * span-hash set ([[Dedup.benchSpanHashes]] with `nSpan`):
+    * span-hash set ([[Dedup.benchSpanHashes]] with [[NSpan]]):
     * [[startStreamDailyPipeline]] reduces it once per run, since the
     * benchmark is fixed while the stream runs.
     *
@@ -272,8 +274,7 @@ object Curation {
   def commitStreamDailyBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, benchHashes: DataFrame, bandTable: String,
       ledgerDir: String, snap0: String, snapPrefix: String,
-      minQuality: Double = 0.6, lang: String = "en", maxDup2: Double = 0.05,
-      nSpan: Int = 8, tombstones: Option[String] = None,
+      tombstones: Option[String] = None,
       retainSnapshots: Option[Int] = None): Unit = {
     import spark.implicits._
     val commitLedger = snapPrefix + "_ledger"
@@ -316,8 +317,8 @@ object Curation {
     val survObs = org.apache.spark.sql.Observation()
     if (!published) {
       val stamp = graft.sources.Formats.stampAggs("doc_id", col("survived"))
-      decide(spark, live, sigs, Dedup.contaminationStatsAgainst(live, benchHashes, nSpan),
-          bandTable, minQuality, lang, maxDup2)
+      decide(spark, live, sigs, Dedup.contaminationStatsAgainst(live, benchHashes, NSpan),
+          bandTable)
         .observe(survObs, stamp.head, stamp.tail: _*)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(decDir)
     }
@@ -587,7 +588,7 @@ object Curation {
       retainSnapshots: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     // the benchmark is fixed for the run: reduced to its span-hash set
     // once, materialized by the first batch that scans against it
-    val benchHashes = Dedup.benchSpanHashes(benchmark).localCheckpoint(eager = false)
+    val benchHashes = Dedup.benchSpanHashes(benchmark, NSpan).localCheckpoint(eager = false)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.CrossHash
 import graft.sources.StoredIndex
-import graft.sources.StoredIndex.{Family, Part}
+import graft.sources.StoredIndex.{Buckets, Family, Part}
 
 /** Deduplication operators for training-data curation at 100 TB
   * (north-star extensions — SURVEY §2c). The reference has no dedup at all;
@@ -106,7 +106,7 @@ object Dedup {
     * the split into the lambda body (CollapseProject) and re-tokenize the
     * document once per shingle position — O(tokens²), measured 7x slower
     * at sf0.1. */
-  def shingles(docs: DataFrame, n: Int = 3): DataFrame =
+  def shingles(docs: DataFrame, n: Int = ShingleN): DataFrame =
     docs.select(col("doc_id"), SharedCorpus.wsOf(docs).as("ws"))
       .select(col("doc_id"), col("ws"),
         explode(sequence(lit(1), greatest(size(col("ws")) - (n - 1), lit(1)))).as("i"))
@@ -142,6 +142,12 @@ object Dedup {
   val NumHashes = 16
   val BandRows  = 2 // 8 bands x 2 rows: P(candidate) = 1-(1-j^2)^8 — >99.9% at j>=0.8
   def NumBands: Int = NumHashes / BandRows
+  /** Tokens per shingle of the MinHash signatures and n-gram miners. */
+  val ShingleN = 3
+  /** Signature agreement a MinHash candidate pair must reach. */
+  val MinSigFrac = 0.5
+  /** Largest edge list the component solver resolves on the driver. */
+  val MaxDriverEdges = 4_000_000L
 
   /** Per-document MinHash signature: NumHashes independent min-hashes over
     * the shingle set. One explode + one hash-aggregation; each `min` is
@@ -153,8 +159,8 @@ object Dedup {
     * instead of 16, which roughly halved this operator's bench time. Each
     * chunk is an independent uniform 32-bit value, and the scheme has an
     * exact DuckDB mirror (substring offsets into the same md5 hex). */
-  def minHashSignatures(docs: DataFrame, n: Int = 3): DataFrame = {
-    val withDigests = shingles(docs, n).select(
+  def minHashSignatures(docs: DataFrame): DataFrame = {
+    val withDigests = shingles(docs).select(
       col("doc_id") +: (0 until NumHashes / 4).map(g =>
         md5(concat(lit(s"g$g:"), col("shingle"))).as(s"d$g")): _*)
     withDigests.groupBy("doc_id").agg(
@@ -208,7 +214,7 @@ object Dedup {
     * cell join gets an explicit sub-shard guard because its per-pair work
     * (float dot products) is orders heavier than this join's hash
     * equality. */
-  def minHashPairs(docs: DataFrame, minSigFrac: Double = 0.5): DataFrame = {
+  def minHashPairs(docs: DataFrame, minSigFrac: Double = MinSigFrac): DataFrame = {
     // The signature table is tiny (one 16-long row per doc) but feeds three
     // plan branches (banding + both verification sides); without a
     // checkpoint Spark recomputes the shingle explode + md5 aggregation per
@@ -256,8 +262,7 @@ object Dedup {
     * signature table is one 16-long row per document. When one side is a
     * small benchmark set its banded table broadcasts and the big side
     * never shuffles at all. */
-  def crossCorpusNearDups(a: DataFrame, b: DataFrame,
-      minSigFrac: Double = 0.5): DataFrame = {
+  def crossCorpusNearDups(a: DataFrame, b: DataFrame): DataFrame = {
     val sa = minHashSignatures(a).localCheckpoint(eager = false)
     val sb = minHashSignatures(b).localCheckpoint(eager = false)
     val candidates = bandedFromSignatures(sa).as("x")
@@ -266,7 +271,7 @@ object Dedup {
           col("x.band_hash") === col("y.band_hash"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    scoreCandidates(candidates, sa, sb, minSigFrac)
+    scoreCandidates(candidates, sa, sb, MinSigFrac)
   }
 
   /** Build-once half of the MinHash build/query split (the near-dup twin
@@ -280,13 +285,13 @@ object Dedup {
     * crawl; the stored layout is pre-hashed on the band key, so a new
     * batch's probe shuffles ONLY the batch side (or broadcasts it) and an
     * index⋈index self-mining join plans with zero exchanges. */
-  def buildBandIndex(docs: DataFrame, table: String, numBuckets: Int = 8): Unit =
+  def buildBandIndex(docs: DataFrame, table: String, numBuckets: Int = Buckets): Unit =
     withSignatureRows(minHashSignatures(docs))(
       StoredIndex.build(bandIndex(numBuckets), table, docs))
 
   /** The band index as a [[StoredIndex]] family: band rows bucketed on the
     * probe key, one signature row per doc in `_sigs` (the id table). */
-  private def bandIndex(numBuckets: Int = 8) = Family(
+  private def bandIndex(numBuckets: Int = Buckets) = Family(
     n => s"kind=minhash_bands,buckets=$n", "doc_id", "_sigs",
     Seq(Part("", Seq("band_idx", "band_hash"), numBuckets),
       Part("_sigs", Seq("doc_id"), numBuckets)),
@@ -359,19 +364,18 @@ object Dedup {
     * Candidate verification joins the (collision-sized) pair list against
     * the stored `_sigs` table on its bucketed key. */
   def nearDupPairsIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
-      newBatch: DataFrame, minSigFrac: Double = 0.5): DataFrame =
-    probeBandIndex(spark, table,
-      minHashSignatures(newBatch).localCheckpoint(eager = false), minSigFrac)
+      newBatch: DataFrame): DataFrame =
+    probeBandIndex(spark, table, minHashSignatures(newBatch).localCheckpoint(eager = false))
 
   /** [[nearDupPairsIndexed]] for a batch already signed: `sigs` is the
     * batch's [[minHashSignatures]] table. It feeds the banding and the
     * verification side, so pass it materialized (a lazy local checkpoint)
     * when its plan is not a cheap read. */
   def probeBandIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-      sigs: DataFrame, minSigFrac: Double = 0.5): DataFrame = {
+      sigs: DataFrame): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
     val candidates = indexedCandidateJoin(spark, table, bandedFromSignatures(sigs))
-    scoreCandidates(candidates, spark.table(table + "_sigs"), sigs, minSigFrac)
+    scoreCandidates(candidates, spark.table(table + "_sigs"), sigs, MinSigFrac)
   }
 
   /** Per-document 32-bit SimHash over whitespace tokens (with
@@ -428,7 +432,7 @@ object Dedup {
     * Queries are the `queryPred` subset of the corpus; for each, the
     * candidates sharing at least one of the 4 fingerprint byte-bands are
     * ranked by exact `bit_count` Hamming distance (ties by neighbor id)
-    * and the top `k` within `maxHamming` are kept.
+    * and the top `k` within [[DefaultMaxHamming]] are kept.
     *
     * At the default radius 3 < 4 bands the band join is LOSSLESS
     * (pigeonhole — see [[DefaultMaxHamming]]), so the result is exactly
@@ -439,8 +443,7 @@ object Dedup {
     * scales with the query count and band collision rate, never the
     * corpus square; the per-query top-k is one window over the (small)
     * verified-candidate set. */
-  def simHashTopK(docs: DataFrame, queryPred: Column, k: Int = 5,
-      maxHamming: Int = DefaultMaxHamming): DataFrame = {
+  def simHashTopK(docs: DataFrame, queryPred: Column, k: Int = 5): DataFrame = {
     // feeds the query and candidate sides
     val sh = simHash(docs).localCheckpoint(eager = false)
     val banded = sh.select(
@@ -459,7 +462,7 @@ object Dedup {
       .select(col("q.doc_id").as("query_id"), col("c.doc_id").as("neighbor_id"),
         bit_count(col("q.simhash").bitwiseXOR(col("c.simhash"))).cast("long").as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= DefaultMaxHamming)
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= k)
   }
@@ -472,7 +475,8 @@ object Dedup {
     *
     * Hybrid by edge-list size — the pair list is orders of magnitude
     * smaller than the corpus (it is the LSH collisions, not the documents):
-    *  - at or below `maxDriverEdges`, union-find on the driver and a
+    *  - at or below `maxDriverEdges` ([[MaxDriverEdges]] by default),
+    *    union-find on the driver and a
     *    broadcast label join. One pass over the edges, no iteration;
     *    edges stream to the driver one partition at a time (never the whole
     *    list at once), so resident driver state is the union-find map — a
@@ -489,10 +493,10 @@ object Dedup {
     * The returned labels are a lazy local checkpoint (reclaimed with the
     * plan that reads them); every internal working table is released
     * before the call returns, so the caller has nothing to release. */
-  def nearDupComponents(docs: DataFrame, minSigFrac: Double = 0.5,
-      maxDriverEdges: Long = 4_000_000L): DataFrame =
+  def nearDupComponents(docs: DataFrame,
+      maxDriverEdges: Long = MaxDriverEdges): DataFrame =
     componentsFromEdges(docs.select(col("doc_id")),
-      minHashPairs(docs, minSigFrac).select("doc_a", "doc_b"), maxDriverEdges)
+      minHashPairs(docs).select("doc_a", "doc_b"), maxDriverEdges)
 
   /** The graph-resolution core of [[nearDupComponents]], over an EXPLICIT
     * vertex + edge list (extracted so [[mergeComponentsIncr]] can solve
@@ -503,7 +507,7 @@ object Dedup {
     * `maxDriverEdges`, distributed min-label propagation with pointer
     * jumping above it. */
   private[graft] def componentsFromEdges(vertices: DataFrame, pairs0: DataFrame,
-      maxDriverEdges: Long = 4_000_000L): DataFrame = {
+      maxDriverEdges: Long = MaxDriverEdges): DataFrame = {
     // the pair list is read by the size gate and by the solve below; held
     // for this call only
     val pairs = pairs0.persist()
@@ -539,7 +543,7 @@ object Dedup {
     // shuffle.partitions pieces — 32 tiny round-trips (~1 s of pure
     // scheduling) for an edge list that is orders of magnitude under the
     // corpus. 4 partitions keeps the resident slice bounded at
-    // maxDriverEdges/4 rows while costing 4 round-trips; union-find's
+    // MaxDriverEdges/4 rows while costing 4 round-trips; union-find's
     // min-root-wins outcome is edge-order-independent, so the result is
     // unchanged.
     import scala.jdk.CollectionConverters._
@@ -608,8 +612,8 @@ object Dedup {
     * as a `(doc_id, label)` table bucketed on `doc_id`, with a build
     * manifest. Pairs with [[buildBandIndex]] over the SAME corpus —
     * [[mergeComponentsIncr]] consumes both and keeps both in sync. */
-  def buildComponentsTable(docs: DataFrame, table: String, numBuckets: Int = 8): Unit =
-    StoredIndex.build(componentsTable(numBuckets), table, docs) {
+  def buildComponentsTable(docs: DataFrame, table: String): Unit =
+    StoredIndex.build(componentsTable, table, docs) {
       case "_edges" => minHashPairs(docs).select("doc_a", "doc_b")
       case "" => componentsFromEdges(docs.select(col("doc_id")),
         docs.sparkSession.table(table + "_edges"))
@@ -622,9 +626,9 @@ object Dedup {
     * is LSH-collision-sized, orders of magnitude under the corpus. Edges
     * are written first, so the build solves the labels from the stored
     * edge list instead of mining the pairs twice. */
-  private def componentsTable(numBuckets: Int = 8) = Family(
+  private val componentsTable = Family(
     n => s"kind=components,buckets=$n", "doc_id", "",
-    Seq(Part("_edges", Seq("doc_a"), numBuckets), Part("", Seq("doc_id"), numBuckets)))
+    Seq(Part("_edges", Seq("doc_a"), Buckets), Part("", Seq("doc_id"), Buckets)))
 
   /** Incremental near-dup CLUSTERING — fold a new crawl batch into the
     * stored component assignment without re-clustering the corpus. The
@@ -661,9 +665,7 @@ object Dedup {
     * a rewrite of the 16-byte-per-doc label table; the text corpus is
     * never re-read. */
   def mergeComponentsIncr(spark: org.apache.spark.sql.SparkSession,
-      compTable: String, bandTable: String, newBatch: DataFrame,
-      minSigFrac: Double = 0.5,
-      maxDriverEdges: Long = 4_000_000L): Unit = {
+      compTable: String, bandTable: String, newBatch: DataFrame): Unit = {
     graft.sources.Formats.requireBuilt(spark, compTable)
     graft.sources.Formats.requireBuilt(spark, bandTable)
     val cMeta = graft.sources.Formats.readBuildMeta(spark, compTable).get
@@ -674,9 +676,9 @@ object Dedup {
     val batch = newBatch
     // delta edges: stored×batch collisions via the index, plus intra-batch;
     // both are read by the edge append and by the relabel below
-    val cross = nearDupPairsIndexed(spark, bandTable, batch, minSigFrac)
+    val cross = nearDupPairsIndexed(spark, bandTable, batch)
       .select("doc_a", "doc_b").persist()
-    val intra = minHashPairs(batch, minSigFrac).select("doc_a", "doc_b").persist()
+    val intra = minHashPairs(batch).select("doc_a", "doc_b").persist()
     try {
       // the REAL (uncontracted) delta edges are appended into the stored
       // edge list first — [[purgeFromComponentsTable]]'s decremental solve
@@ -696,7 +698,7 @@ object Dedup {
       val edges = crossL.union(intra)
       val verts = batch.select("doc_id")
         .union(crossL.select(col("doc_a").as("doc_id"))).distinct()
-      val delta = componentsFromEdges(verts, edges, maxDriverEdges)
+      val delta = componentsFromEdges(verts, edges)
       val batchIds = batch.select("doc_id")
       val batchLabels = delta.join(batchIds, "doc_id").select("doc_id", "label")
       val relabel = delta.join(batchIds, Seq("doc_id"), "left_anti")
@@ -709,7 +711,7 @@ object Dedup {
           .unionByName(batchLabels)
       }
     } finally { cross.unpersist(); intra.unpersist() }
-    StoredIndex.fold(spark, componentsTable(), compTable,
+    StoredIndex.fold(spark, componentsTable, compTable,
       graft.sources.Formats.corpusStamp(batch, "doc_id"))
     appendToBandIndex(batch, bandTable)
   }
@@ -739,8 +741,7 @@ object Dedup {
     * change. Stamp, write order and crash contract:
     * [[graft.sources.StoredIndex]]. */
   def purgeFromComponentsTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, deleteIds: DataFrame,
-      maxDriverEdges: Long = 4_000_000L): Unit = {
+      table: String, deleteIds: DataFrame): Unit = {
     graft.sources.Formats.requireBuilt(spark, table)
     val ids = deleteIds.select("doc_id").distinct()
     val stored = spark.table(table)
@@ -753,9 +754,9 @@ object Dedup {
       .join(broadcast(survivors.select(col("doc_id").as("doc_a"))), Seq("doc_a"), "left_semi")
       .join(broadcast(survivors.select(col("doc_id").as("doc_b"))), Seq("doc_b"), "left_semi")
       .select("doc_a", "doc_b")
-    val delta = componentsFromEdges(survivors, affEdges, maxDriverEdges)
+    val delta = componentsFromEdges(survivors, affEdges)
     val relabel = delta.select(col("doc_id"), col("label").as("new_label"))
-    StoredIndex.purge(spark, componentsTable(), table, ids, rewrite = {
+    StoredIndex.purge(spark, componentsTable, table, ids, rewrite = {
       case "" => _.join(broadcast(ids), Seq("doc_id"), "left_anti")
         .join(broadcast(relabel), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("new_label"), col("label")).as("label"))
@@ -770,9 +771,8 @@ object Dedup {
     * components, keep each component's LOWEST doc_id (the id-stable
     * policy). One [[nearDupComponents]] pass plus a free filter — the
     * survivor of a min-labeled component is the label itself. */
-  def nearDupSurvivors(docs: DataFrame, minSigFrac: Double = 0.5,
-      maxDriverEdges: Long = 4_000_000L): DataFrame = {
-    nearDupComponents(docs, minSigFrac, maxDriverEdges)
+  def nearDupSurvivors(docs: DataFrame, maxDriverEdges: Long = MaxDriverEdges): DataFrame = {
+    nearDupComponents(docs, maxDriverEdges)
       .filter(col("doc_id") === col("label"))
       .select(col("doc_id"))
   }
@@ -785,10 +785,10 @@ object Dedup {
     * max(struct) form partial-aggregates map-side, so the added shuffle
     * carries one row per document, pre-combined per partition. Returns
     * `(doc_id, score)` of the survivors. */
-  def nearDupSurvivorsBy(docs: DataFrame, score: Column, minSigFrac: Double = 0.5,
-      maxDriverEdges: Long = 4_000_000L): DataFrame = {
+  def nearDupSurvivorsBy(docs: DataFrame, score: Column,
+      maxDriverEdges: Long = MaxDriverEdges): DataFrame = {
     docs.select(col("doc_id"), score.cast("double").as("score"))
-      .join(nearDupComponents(docs, minSigFrac, maxDriverEdges), Seq("doc_id"))
+      .join(nearDupComponents(docs, maxDriverEdges), Seq("doc_id"))
       .groupBy(col("label"))
       .agg(max(struct(col("score"), (-col("doc_id")).as("nid"))).as("best"))
       .select((-col("best.nid")).cast("long").as("doc_id"),
@@ -854,7 +854,7 @@ object Dedup {
     * costs one row per task), a semi-join back, two per-doc counts. The
     * positional span table feeds three branches, so it is a lazy local
     * checkpoint. */
-  def duplicateSpans(docs: DataFrame, n: Int = 8): DataFrame = {
+  def duplicateSpans(docs: DataFrame, n: Int = SpanN): DataFrame = {
     val sp = positionalSpans(docs, n).select("doc_id", "sh").localCheckpoint(eager = false)
     val dupHashes = sp.groupBy("sh")
       .agg(countDistinct(col("doc_id")).as("nd"))
@@ -868,6 +868,9 @@ object Dedup {
         coalesce(col("dup"), lit(0L)).as("n_dup_spans"),
         (coalesce(col("dup"), lit(0L)).cast("double") / col("n_spans")).as("dup_ratio"))
   }
+
+  /** Tokens per span of the span miners and benchmark scanners. */
+  val SpanN = 8
 
   /** Benchmark decontamination — cross-DATASET exact n-gram overlap, the
     * eval-contamination scan every serious training-data pipeline runs
@@ -883,20 +886,20 @@ object Dedup {
     * broadcastable); the training side is the one [[positionalSpans]]
     * scan, a semi-join against the benchmark hashes, and two per-doc
     * counts, all map-side partial-aggregated. */
-  def contaminationStats(train: DataFrame, benchmark: DataFrame, n: Int = 8): DataFrame =
+  def contaminationStats(train: DataFrame, benchmark: DataFrame, n: Int = SpanN): DataFrame =
     contaminationStatsAgainst(train, benchSpanHashes(benchmark, n), n)
 
   /** The benchmark side of the decontamination scanners: the DISTINCT
     * n-token span hashes of `benchmark` (one column, `sh`). A caller that
     * scans many training batches against one benchmark reduces it once and
     * passes the set to [[contaminationStatsAgainst]]. */
-  def benchSpanHashes(benchmark: DataFrame, n: Int = 8): DataFrame =
+  def benchSpanHashes(benchmark: DataFrame, n: Int = SpanN): DataFrame =
     positionalSpans(benchmark, n).select("sh").distinct()
 
   /** [[contaminationStats]] against a benchmark already reduced to its
     * span-hash set ([[benchSpanHashes]] with the same `n`). */
   def contaminationStatsAgainst(train: DataFrame, benchHashes: DataFrame,
-      n: Int = 8): DataFrame = {
+      n: Int = SpanN): DataFrame = {
     // feeds both the total count and the contaminated count
     val sp = positionalSpans(train, n).select("doc_id", "sh")
       .localCheckpoint(eager = false)
@@ -934,7 +937,7 @@ object Dedup {
     * oracle); the semi-join's shuffled input shrinks from every span in
     * the corpus to roughly the truly-tainted ones. */
   def contaminationStatsBloom(train: DataFrame, benchmark: DataFrame,
-      n: Int = 8): DataFrame = {
+      n: Int = SpanN): DataFrame = {
     // distinct-hash checkpoint (materialized by the count): feeds the
     // count, the sketch aggregate, and the exactness join — a local
     // checkpoint, not a persist, so no session-cache entry outlives the call
@@ -949,27 +952,30 @@ object Dedup {
   }
 
   /** The actionable half of [[contaminationStats]]: the training corpus
-    * with contaminated documents dropped. `maxRatio = 0.0` (default) is
-    * the strict rule — any benchmark-overlapping span disqualifies the
+    * with contaminated documents dropped. `maxRatio` =
+    * [[MaxContamRatio]] (default) is the strict rule — any
+    * benchmark-overlapping [[SpanN]]-token span disqualifies the
     * document; a small positive ratio tolerates incidental short-phrase
     * collisions. Returns the surviving rows of `train` unchanged. */
-  def decontaminate(train: DataFrame, benchmark: DataFrame, n: Int = 8,
-      maxRatio: Double = 0.0): DataFrame =
+  def decontaminate(train: DataFrame, benchmark: DataFrame,
+      maxRatio: Double = MaxContamRatio): DataFrame =
     train.join(
-      contaminationStats(train, benchmark, n)
+      contaminationStats(train, benchmark)
         .filter(col("contam_ratio") <= maxRatio)
         .select("doc_id"),
       Seq("doc_id"), "left_semi")
+
+  /** The largest contaminated-span fraction a document may keep. */
+  val MaxContamRatio = 0.0
 
   /** [[decontaminate]] over the Bloom-pruned scan — the actionable
     * threshold filter for the broadcast-outgrown regime. Result-identical
     * to [[decontaminate]] (the stats are identical), at the Bloom path's
     * scan cost. */
-  def decontaminateBloom(train: DataFrame, benchmark: DataFrame, n: Int = 8,
-      maxRatio: Double = 0.0): DataFrame =
+  def decontaminateBloom(train: DataFrame, benchmark: DataFrame): DataFrame =
     train.join(
-      contaminationStatsBloom(train, benchmark, n)
-        .filter(col("contam_ratio") <= maxRatio)
+      contaminationStatsBloom(train, benchmark)
+        .filter(col("contam_ratio") <= MaxContamRatio)
         .select("doc_id"),
       Seq("doc_id"), "left_semi")
 
@@ -1004,7 +1010,7 @@ object Dedup {
     * drop-position set rides a doc_id-keyed join whose right side is one
     * row per affected document. The span table feeds three branches, so it
     * is a lazy local checkpoint. */
-  def removeDuplicateSpans(docs: DataFrame, n: Int = 8): DataFrame = {
+  def removeDuplicateSpans(docs: DataFrame, n: Int = SpanN): DataFrame = {
     val base = docs.select(col("doc_id"), SharedCorpus.wsOf(docs).as("ws"))
     val sp = positionalSpans(docs, n).localCheckpoint(eager = false)
     val dupHashes = sp.groupBy("sh")
@@ -1050,7 +1056,7 @@ object Dedup {
 
   /** Span-level decontamination REWRITE — the surgical alternative to
     * [[decontaminate]]'s document drop: excise every training-corpus token
-    * covered by a benchmark-overlapping n-token span and keep the rest of
+    * covered by a benchmark-overlapping [[SpanN]]-token span and keep the rest of
     * the document. This is what a pipeline runs when whole-document
     * removal is too lossy (one quoted benchmark sentence inside an
     * otherwise-clean long document): the GPT-3 appendix-C alternative of
@@ -1070,14 +1076,12 @@ object Dedup {
     * the rewrite tail touches only tainted documents. For a
     * benchmark-outgrown regime, compose the Bloom pre-filter exactly as
     * [[contaminationStatsBloom]] does. */
-  def exciseContaminatedSpans(train: DataFrame, benchmark: DataFrame,
-      n: Int = 8): DataFrame = {
+  def exciseContaminatedSpans(train: DataFrame, benchmark: DataFrame): DataFrame = {
     val base = train.select(col("doc_id"), SharedCorpus.wsOf(train).as("ws"))
-    val benchHashes = positionalSpans(benchmark, n).select("sh").distinct()
-    val occ = positionalSpans(train, n)
-      .join(benchHashes, Seq("sh"), "left_semi")
+    val occ = positionalSpans(train, SpanN)
+      .join(benchSpanHashes(benchmark), Seq("sh"), "left_semi")
       .select("doc_id", "i", "nt")
-    exciseOccurrences(base, occ, n)
+    exciseOccurrences(base, occ, SpanN)
   }
 
   /** n-gram Jaccard near-duplicate pairs via an inverted-index join:
@@ -1094,7 +1098,7 @@ object Dedup {
   val DefaultMaxDf = 1000
 
   def ngramJaccardPairs(docs: DataFrame, minJaccard: Double = 0.2,
-      n: Int = 3, maxDf: Option[Int] = Some(DefaultMaxDf)): DataFrame = {
+      n: Int = ShingleN, maxDf: Option[Int] = Some(DefaultMaxDf)): DataFrame = {
     val (inter, card) = intersectionAndCards(docs, n, maxDf)
     val ca = card.toDF("doc_a", "card_a")
     val cb = card.toDF("doc_b", "card_b")
@@ -1111,23 +1115,26 @@ object Dedup {
     * sub-document duplication detector — quotations, syndicated inserts,
     * a README pasted into a bigger page — the standard complement to
     * symmetric near-dup mining in web curation. Emits both directions'
-    * containment for pairs where either reaches `minContainment`.
+    * containment for pairs where either reaches [[MinContainment]], over
+    * [[ShingleN]]-token shingles capped at [[DefaultMaxDf]].
     *
     * Shares [[intersectionAndCards]] (and so the posting-list df-cap skew
     * guard) with the Jaccard miner — the only new math is the two
     * divisions. Cardinalities and intersections are both computed over
     * the capped shingle space, so each ratio stays self-consistent. */
-  def ngramContainmentPairs(docs: DataFrame, minContainment: Double = 0.7,
-      n: Int = 3, maxDf: Option[Int] = Some(DefaultMaxDf)): DataFrame = {
-    val (inter, card) = intersectionAndCards(docs, n, maxDf)
+  def ngramContainmentPairs(docs: DataFrame): DataFrame = {
+    val (inter, card) = intersectionAndCards(docs, ShingleN, Some(DefaultMaxDf))
     val ca = card.toDF("doc_a", "card_a")
     val cb = card.toDF("doc_b", "card_b")
     inter.join(ca, "doc_a").join(cb, "doc_b")
       .select(col("doc_a"), col("doc_b"),
         (col("i").cast("double") / col("card_a")).as("cont_a"),
         (col("i").cast("double") / col("card_b")).as("cont_b"))
-      .filter(greatest(col("cont_a"), col("cont_b")) >= minContainment)
+      .filter(greatest(col("cont_a"), col("cont_b")) >= MinContainment)
   }
+
+  /** The containment [[ngramContainmentPairs]] reports a pair at. */
+  val MinContainment = 0.7
 
   /** The shared inverted-index stage of the n-gram pair miners: distinct
     * per-doc shingle intersections `(doc_a, doc_b, i)` and per-doc

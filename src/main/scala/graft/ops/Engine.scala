@@ -247,7 +247,21 @@ object Engine {
     val keys = Observation()
     wordCountLines(jobSession(spark, spec), spec, keys)
       .write.mode(SaveMode.Overwrite).text(outDir)
+    fillEmptyReducers(spark, outDir, spec.reducerCount)
     keys.get("n").asInstanceOf[Long]
+  }
+
+  /** Spark writes no file for an empty partition other than partition 0,
+    * so a reducer that got no words would have no file. Give each such
+    * reducer `i` an empty `part-<i>.txt`: a file-system listing and
+    * creates, no Spark job. */
+  private def fillEmptyReducers(spark: SparkSession, outDir: String, reducers: Int): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(outDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val names = fs.listStatus(dir).map(_.getPath.getName)
+    (0 until reducers).map(i => f"part-$i%05d")
+      .filterNot(p => names.exists(_.startsWith(p + "-")))
+      .foreach(p => fs.create(new org.apache.hadoop.fs.Path(dir, p + ".txt"), false).close())
   }
 
   /** The job's output rows in `job` (a [[jobSession]]): one `word count`

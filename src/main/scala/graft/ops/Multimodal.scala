@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.StoredIndex
-import graft.sources.StoredIndex.{Family, Part}
+import graft.sources.StoredIndex.{Buckets, Family, Part}
 
 /** Multimodal column plumbing — north-star extension (SURVEY §2c): treat
   * image/audio/video payloads as opaque `BINARY` columns with typed
@@ -78,7 +78,7 @@ object Multimodal {
     * fixed-stride media (the video story: two clips count as near-dups
     * when they share sampled keyframes byte-identically): each blob's
     * [[sampleFrames]] windows are fingerprinted, and a pair is emitted
-    * per distinct (a, b) sharing at least `minShared` fingerprints.
+    * per distinct (a, b) sharing at least one fingerprint.
     *
     * Scale shape: an inverted-index join on the frame fingerprint — the
     * `ngramJaccardPairs` discipline applied to media, including its skew
@@ -86,9 +86,8 @@ object Multimodal {
     * all-black frame, a silence window) are dropped BY DEFAULT before the
     * self-join, because one corpus-wide hot frame contributes k²
     * candidate pairs. No decode anywhere — frames are byte slices. */
-  def framePairs(blobs: DataFrame, n: Int = 4, frameSize: Int = 16,
-      minShared: Int = 1, maxDf: Option[Int] = Some(1000)): DataFrame = {
-    val fp = sampleFrames(blobs, n, frameSize)
+  def framePairs(blobs: DataFrame, maxDf: Option[Int] = Some(1000)): DataFrame = {
+    val fp = sampleFrames(blobs)
       .select(col("doc_id"),
         graft.functions.CrossHash.h60(hex(col("frame_bytes"))).as("fp"))
       .distinct() // a frame repeated within one blob counts once
@@ -103,7 +102,7 @@ object Multimodal {
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+      .filter(col("n_shared") >= 1)
   }
 
   /** Fixed-stride byte downsample ("resize"): every `stride`-th byte of
@@ -426,8 +425,8 @@ object Multimodal {
     * collapse: no all-pairs product anywhere, the band join sees one row
     * per DISTINCT code, and a saturated code value (a corpus of flat
     * images) costs one class row, not a quadratic join bucket. */
-  def pHashPairs(blobs: DataFrame, maxHamming: Int = DefaultMaxHammingPx): DataFrame =
-    classPairs(dHash(blobs), "phash", phashBands, maxHamming)
+  def pHashPairs(blobs: DataFrame): DataFrame =
+    classPairs(dHash(blobs), "phash", phashBands, DefaultMaxHammingPx)
 
   /** Cross-modal near-duplicate decision table — the paired-data (LAION-
     * style image+caption) dedup composite: one row per document pair
@@ -479,9 +478,9 @@ object Multimodal {
     * normal case in crawls) collapses before it ever reaches the probe
     * join. At 100 TB the full-decode pass is the corpus-scale job you run
     * once; every new crawl batch probes the stored 8-byte codes. */
-  def buildPhashIndex(blobs: DataFrame, table: String, numBuckets: Int = 8): Unit = {
+  def buildPhashIndex(blobs: DataFrame, table: String): Unit = {
     val codes = dHash(blobs).persist()
-    try StoredIndex.build(phashIndex(numBuckets), table, blobs) {
+    try StoredIndex.build(phashIndex, table, blobs) {
       case "" => phashBands(codes.select("phash").distinct())
       case "_codes" => codes
     } finally codes.unpersist()
@@ -490,10 +489,10 @@ object Multimodal {
   /** The phash index as a [[StoredIndex]] family: band rows of distinct
     * codes bucketed on the probe key, one code row per image in `_codes`
     * (the id table). */
-  private def phashIndex(numBuckets: Int = 8) = Family(
+  private val phashIndex = Family(
     n => s"kind=phash_bands,buckets=$n", "doc_id", "_codes",
-    Seq(Part("", Seq("band_idx", "band_val"), numBuckets),
-      Part("_codes", Seq("doc_id"), numBuckets)),
+    Seq(Part("", Seq("band_idx", "band_val"), Buckets),
+      Part("_codes", Seq("doc_id"), Buckets)),
     bootstrap = true)
 
   /** Incremental-ingest half: the new batch decoded, its code rows
@@ -508,7 +507,7 @@ object Multimodal {
   def appendToPhashIndex(newBlobs: DataFrame, table: String): Unit = {
     val spark = newBlobs.sparkSession
     val codes = dHash(newBlobs).persist()
-    try StoredIndex.append(phashIndex(), table, newBlobs) {
+    try StoredIndex.append(phashIndex, table, newBlobs) {
       case "" =>
         val batchCodes = codes.select("phash").distinct()
         phashBands(
@@ -546,7 +545,7 @@ object Multimodal {
       .join(codesTbl.join(broadcast(del), Seq("doc_id"), "left_anti")
         .select("phash").distinct(), Seq("phash"), "left_anti")
       .as[Long].collect().toSeq.toDF("phash")
-    StoredIndex.purge(spark, phashIndex(), table, del, rewrite = {
+    StoredIndex.purge(spark, phashIndex, table, del, rewrite = {
       case "" => _.join(broadcast(orphans), Seq("phash"), "left_anti")
     })
   }
@@ -563,8 +562,7 @@ object Multimodal {
     * explode of the batch class members. N stored copies of a logo probed
     * by M new copies cost one band-join row and stream N×M output rows,
     * instead of mining N×M pairs inside the shuffle. */
-  def phashPairsIndexed(spark: SparkSession, table: String, newBlobs: DataFrame,
-      maxHamming: Int = DefaultMaxHammingPx): DataFrame = {
+  def phashPairsIndexed(spark: SparkSession, table: String, newBlobs: DataFrame): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
     // localCheckpoint, not persist — same session-cache-leak rationale as
     // classPairs
@@ -577,7 +575,7 @@ object Multimodal {
       .distinct()
       .withColumn("hamming",
         bit_count(col("ph_a").bitwiseXOR(col("ph_b"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= DefaultMaxHammingPx)
     spark.table(table + "_codes")
       .select(col("doc_id").as("doc_a"), col("phash").as("ph_a"))
       .join(broadcast(cand), "ph_a")
@@ -734,14 +732,14 @@ object Multimodal {
     * duplicate class collapse, same as the image miner: boilerplate audio
     * (N identical clips) costs one class row in the band join, with the
     * N²/2 Hamming-0 pairs emitted by membership arithmetic. */
-  def aHashPairs(blobs: DataFrame, maxHamming: Int = DefaultMaxHammingPx): DataFrame =
+  def aHashPairs(blobs: DataFrame): DataFrame =
     classPairs(aHash(blobs), "ahash", codes =>
       codes.select(
         col("*"),
         posexplode(array((0 until 4).map(b =>
           shiftright(col("ahash"), b * 8).bitwiseAND(255L).cast("long")): _*))
           .as(Seq("band_idx", "band_val"))),
-      maxHamming)
+      DefaultMaxHammingPx)
 
   /** Output schema of [[decodeFeatures]]. */
   val featureSchema: StructType = StructType(Seq(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.sources.{StoredIndex, Tables}
-import graft.sources.StoredIndex.{Family, Part}
+import graft.sources.StoredIndex.{Buckets, Family, Part}
 
 /** Relational completion operators (SURVEY.md §2b 🔶/❌ rows, §7.2 step 3).
   *
@@ -1029,6 +1029,8 @@ object Relational {
     }.reduce(_ unionAll _).orderBy("col_name")
   }
 
+  val HistBuckets = 8
+
   /** Exact per-group EQUI-DEPTH histogram — the data-profiling shape
     * ("show me the price distribution per return flag" with equal-count
     * buckets, where equi-WIDTH buckets collapse under skew): ntile over a
@@ -1038,14 +1040,15 @@ object Relational {
     * any engine, and NTILE's ceil-then-floor bucket sizing is standard
     * SQL. Scale shape: the sort is PER GROUP (partition-parallel, the
     * window family's usual contract), not global; for an ungrouped 100 TB
-    * profile, use the [[approxQuantilesQty]] sketch path instead. */
-  def equiDepthHistogram(s: SparkSession, dir: String, buckets: Int = 8): DataFrame = {
+    * profile, use the [[approxQuantilesQty]] sketch path instead. Each
+    * group gets [[HistBuckets]] buckets. */
+  def equiDepthHistogram(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("l_returnflag"))
       .orderBy(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
     Tables.lineitem(s, dir)
       .select(col("l_returnflag"), col("l_extendedprice"),
         col("l_orderkey"), col("l_linenumber"))
-      .withColumn("bucket", ntile(buckets).over(w).cast("long"))
+      .withColumn("bucket", ntile(HistBuckets).over(w).cast("long"))
       .groupBy("l_returnflag", "bucket")
       .agg(count(lit(1)).as("n"),
         min(col("l_extendedprice")).as("lo"),
@@ -1272,6 +1275,9 @@ object Relational {
           "concat(substring(s, 1, i - 1), '', substring(s, i + 1, length(s))))"))
         .as(Seq("pos", "k")))
 
+  /** Gram length of [[fuzzyJoinPairs]]' prefix filter (`maxDist` ≥ 2). */
+  val FuzzyGramN = 3
+
   /** FUZZY string self-join — the entity-resolution / data-cleaning
     * primitive (the same key re-entered with a typo, an id with one digit
     * off): all pairs within Levenshtein distance `maxDist`, WITHOUT the
@@ -1282,14 +1288,15 @@ object Relational {
     * bucket is a true dist≤1 neighborhood, so candidates ≈ output and the
     * cost is LINEAR in matches at any corpus size. This matters on
     * low-entropy keys: the classic rarest-q-gram prefix filter degenerates
-    * there — on zero-padded numeric ids the (maxDist·n+1)-th rarest gram
+    * there — on zero-padded numeric ids the (maxDist·3+1)-th rarest gram
     * still has corpus-scale df (measured: 105 s at sf0.1 from one ~7500-df
     * gram bucket, vs ~1 s masked), because padding leaves only ~3
     * discriminating gram positions.
     *
     * For `maxDist ≥ 2` the masked scheme would need C(L, maxDist) masks,
     * so candidates fall back to the positional-q-gram prefix filter (each
-    * string indexes its `maxDist·n+1` globally-rarest positional grams; by
+    * string indexes its `maxDist·n+1` globally-rarest positional
+    * [[FuzzyGramN]]-grams; by
     * the prefix-filter theorem two strings within `maxDist` substitutions
     * share a kept gram under any common total order), with the exact
     * `levenshtein` verify applied BEFORE the distinct so the dedup shuffle
@@ -1302,7 +1309,7 @@ object Relational {
     * need the cap-free gram join (the
     * [[graft.ops.Dedup.ngramJaccardPairs]] shape) instead. */
   def fuzzyJoinPairs(df: DataFrame, idCol: String, strCol: String,
-      maxDist: Int = 1, n: Int = 3): DataFrame = {
+      maxDist: Int = 1): DataFrame = {
     val cand =
       if (maxDist == 1) {
         // SHUFFLE_HASH hint: the masked-key side is
@@ -1317,13 +1324,13 @@ object Relational {
           col("x.k") === col("y.k") && col("x.pos") === col("y.pos") &&
             col("x.id") < col("y.id"))
       } else {
-        val grams = positionalGrams(df, idCol, strCol, n)
+        val grams = positionalGrams(df, idCol, strCol, FuzzyGramN)
         val rarity = grams.groupBy("g", "pos").agg(count(lit(1)).as("gdf"))
         val wR = Window.partitionBy(col("id"))
           .orderBy(col("gdf"), col("g"), col("pos"))
         val prefix = grams.join(rarity, Seq("g", "pos"))
           .withColumn("r", row_number().over(wR))
-          .filter(col("r") <= maxDist * n + 1)
+          .filter(col("r") <= maxDist * FuzzyGramN + 1)
         prefix.as("x").join(prefix.as("y"),
           col("x.g") === col("y.g") && col("x.pos") === col("y.pos") &&
             col("x.id") < col("y.id"))
@@ -1442,22 +1449,22 @@ object Relational {
     * join is output-sized at any corpus size — the property the gate's
     * brute-force oracle certifies. */
   def buildFuzzyIndex(df: DataFrame, idCol: String, strCol: String,
-      table: String, numBuckets: Int = 8): Unit =
-    StoredIndex.build(fuzzyIndex(numBuckets), table, df.select(col(idCol).as("id")))(
+      table: String): Unit =
+    StoredIndex.build(fuzzyIndex, table, df.select(col(idCol).as("id")))(
       _ => maskedKeys(df, idCol, strCol))
 
   /** The fuzzy index as a [[StoredIndex]] family: masked keys bucketed on
     * the key, ids stored as `id`, a variable number of key rows per id. */
-  private def fuzzyIndex(numBuckets: Int = 8) = Family(
+  private val fuzzyIndex = Family(
     n => s"kind=fuzzy_masked,maxdist=1,buckets=$n", "id", "",
-    Seq(Part("", Seq("k"), numBuckets)), rowsPerId = None)
+    Seq(Part("", Seq("k"), Buckets)), rowsPerId = None)
 
   /** Ingest half: the batch's masked keys appended — the stored rows are
     * neither read nor rewritten, and (no global model) the result is
     * row-identical to a one-shot build of the union. */
   def appendToFuzzyIndex(newDf: DataFrame, idCol: String, strCol: String,
       table: String): Unit =
-    StoredIndex.append(fuzzyIndex(), table, newDf.select(col(idCol).as("id")))(
+    StoredIndex.append(fuzzyIndex, table, newDf.select(col(idCol).as("id")))(
       _ => maskedKeys(newDf, idCol, strCol))
 
   /** FORGET half of the fuzzy-index lifecycle (the family-wide
@@ -1470,7 +1477,7 @@ object Relational {
     * exactly, row for row. */
   def purgeFromFuzzyIndex(spark: SparkSession, table: String,
       deleteIds: DataFrame): Unit =
-    StoredIndex.purge(spark, fuzzyIndex(), table, deleteIds)
+    StoredIndex.purge(spark, fuzzyIndex, table, deleteIds)
 
   /** Probe: all (probe, master) pairs within distance 1 — the batch's
     * masked keys join the stored index bucket-locally, exact
@@ -1536,12 +1543,15 @@ object Relational {
   private val profNumCols = Seq("o_orderkey", "o_custkey", "o_totalprice")
   private val profStrCols = Seq("o_orderstatus", "o_orderdate", "o_orderpriority")
 
-  private def profileBatchRows(t: DataFrame, lgK: Int): DataFrame = {
+  /** log2 of the stored profile's HLL register count. */
+  val ProfileLgK = 12
+
+  private def profileBatchRows(t: DataFrame): DataFrame = {
     val num = profNumCols.map { c =>
       t.agg(count(lit(1)).as("n"), count(col(c)).as("nn"),
         min(col(c).cast("decimal(18,2)")).as("min_num"),
         max(col(c).cast("decimal(18,2)")).as("max_num"),
-        expr(s"hll_sketch_agg(CAST(`$c` AS STRING), $lgK)").as("sketch"))
+        expr(s"hll_sketch_agg(CAST(`$c` AS STRING), $ProfileLgK)").as("sketch"))
         .select(lit(c).as("col_name"), col("n"),
           (col("n") - col("nn")).as("n_nulls"), col("min_num"), col("max_num"),
           lit(null).cast("string").as("min_str"),
@@ -1551,7 +1561,7 @@ object Relational {
       t.agg(count(lit(1)).as("n"), count(col(c)).as("nn"),
         min(col(c).cast("string")).as("min_str"),
         max(col(c).cast("string")).as("max_str"),
-        expr(s"hll_sketch_agg(CAST(`$c` AS STRING), $lgK)").as("sketch"))
+        expr(s"hll_sketch_agg(CAST(`$c` AS STRING), $ProfileLgK)").as("sketch"))
         .select(lit(c).as("col_name"), col("n"),
           (col("n") - col("nn")).as("n_nulls"),
           lit(null).cast("decimal(18,2)").as("min_num"),
@@ -1566,16 +1576,16 @@ object Relational {
     * (every statistic chosen to be MERGEABLE, which is the entire design:
     * profiling a 100 TB table that grows daily must scan only the new
     * batch and fold, never re-profile the accumulated corpus). */
-  def buildProfileIndex(t: DataFrame, table: String, lgK: Int = 12): Unit =
-    StoredIndex.build(profileIndex(lgK), table, t)(_ => profileBatchRows(t, lgK))
+  def buildProfileIndex(t: DataFrame, table: String): Unit =
+    StoredIndex.build(profileIndex, table, t)(_ => profileBatchRows(t))
 
   /** Ingest half: the batch's own profile rows appended as deltas. */
-  def appendToProfileIndex(newT: DataFrame, table: String, lgK: Int = 12): Unit =
-    StoredIndex.append(profileIndex(lgK), table, newT)(_ => profileBatchRows(newT, lgK))
+  def appendToProfileIndex(newT: DataFrame, table: String): Unit =
+    StoredIndex.append(profileIndex, table, newT)(_ => profileBatchRows(newT))
 
   /** The profile as a [[StoredIndex]] family (fixed 4 buckets). */
-  private def profileIndex(lgK: Int) = Family(
-    _ => s"kind=profile,lgk=$lgK", "o_orderkey", "", Seq(Part("", Seq("col_name"), 4)))
+  private val profileIndex = Family(
+    _ => s"kind=profile,lgk=$ProfileLgK", "o_orderkey", "", Seq(Part("", Seq("col_name"), 4)))
 
   /** Probe: the full-table profile folded from the stored batch rows —
     * columns-count-sized work, no corpus access. `exactFor` is scanned
@@ -1614,9 +1624,10 @@ object Relational {
     * exactly one source vertex and is found exactly once: wedge
     * (a→b, a→c) with b before c in the order, closed by the oriented
     * edge b→c. The per-node counts are orientation-INDEPENDENT, which
-    * is what the naive-formulation oracle checks. */
-  def triangleCounts(s: SparkSession, dir: String, minOrders: Int = 2): DataFrame =
-    triangleCountsOf(coPurchasePairs(s, dir, minOrders)
+    * is what the naive-formulation oracle checks. The graph is
+    * [[coPurchasePairs]]'. */
+  def triangleCounts(s: SparkSession, dir: String): DataFrame =
+    triangleCountsOf(coPurchasePairs(s, dir)
       .select(col("part_a").as("u"), col("part_b").as("v")))
 
   def triangleCountsOf(edges: DataFrame): DataFrame = {
@@ -1866,17 +1877,20 @@ object Relational {
       .orderBy("event_type", "day")
   }
 
+  /** Common orders a co-purchased pair needs. */
+  val MinOrders = 2
+
   /** Market-basket CO-PURCHASE mining — the "bought together" pair table:
-    * part pairs appearing in at least `minOrders` common orders. The
+    * part pairs appearing in at least [[MinOrders]] common orders. The
     * self-join is ORDER-LOCAL (equi-join on `l_orderkey`, `<` on the part
     * to emit each unordered pair once), so the blow-up is bounded by
     * (items per order)² per order — a basket-bounded shape that scales
     * with order count, never parts² — and the distinct() first makes a
     * part counted once per order however many lineitems repeat it. One
     * shuffle on the order key, one on the pair key. */
-  def coPurchasePairs(s: SparkSession, dir: String, minOrders: Int = 2): DataFrame =
+  def coPurchasePairs(s: SparkSession, dir: String): DataFrame =
     coPurchasePairsOf(
-      Tables.lineitem(s, dir).select("l_orderkey", "l_partkey"), minOrders)
+      Tables.lineitem(s, dir).select("l_orderkey", "l_partkey"), MinOrders)
 
   def coPurchasePairsOf(lineitems: DataFrame, minOrders: Int): DataFrame = {
     // Basket form: ONE aggregation to per-order distinct part sets

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.CrossHash
 import graft.sources.StoredIndex
-import graft.sources.StoredIndex.{Family, Part}
+import graft.sources.StoredIndex.{Buckets, Family, Part}
 
 /** Deterministic sampling for training-data pipelines — hash-based, not
   * `rand()`-based: a hash of a stable key gives the same sample on every
@@ -34,10 +34,10 @@ object Sampling {
 
   /** Stratified sample: per-stratum percentage rates (e.g. downsample the
     * dominant language, keep the rest) — the class-rebalancing primitive.
-    * Unlisted strata default to `defaultPct`. */
+    * Unlisted strata are kept whole. */
   def stratifiedHashSample(df: DataFrame, keyCol: String, strataCol: String,
-      rates: Map[String, Int], defaultPct: Int = 100): DataFrame = {
-    val rate = rates.foldLeft(lit(defaultPct).cast("long")) { case (acc, (k, v)) =>
+      rates: Map[String, Int]): DataFrame = {
+    val rate = rates.foldLeft(lit(100).cast("long")) { case (acc, (k, v)) =>
       when(col(strataCol) === k, v.toLong).otherwise(acc)
     }
     df.filter(bucket100(keyCol, "") < rate)
@@ -62,27 +62,30 @@ object Sampling {
     * carry — a `randomSplit` re-deals the corpus on every retry), and
     * (c) pure projection: no shuffle, no state. `splits` maps name →
     * percentage and must sum to 100 (fail loudly — a silent 95% split
-    * would leak 5% of documents out of every split). */
+    * would leak 5% of documents out of every split). Buckets are hashed
+    * with [[SplitSalt]]. */
   def splitAssign(df: DataFrame, keyCol: String,
-      splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
-      salt: String = "split"): DataFrame = {
+      splits: Seq[(String, Int)] = DefaultSplits): DataFrame = {
     require(splits.map(_._2).sum == 100,
       s"split percentages must sum to 100: $splits")
     val edges = splits.scanLeft(0) { case (acc, (_, p)) => acc + p }
-    val b = bucket100(keyCol, salt)
+    val b = bucket100(keyCol, SplitSalt)
     val assign = splits.zip(edges).foldLeft(lit(null).cast("string")) {
       case (acc, ((name, _), lo)) => when(b >= lo, name).otherwise(acc)
     }
     df.withColumn("split", assign)
   }
 
-  /** DuckDB mirror of [[splitAssign]]'s rule, for oracle authoring. */
-  def splitAssignSql(keyExpr: String,
-      splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
-      salt: String = "split"): String = {
-    val edges = splits.scanLeft(0) { case (acc, (_, p)) => acc + p }
-    val b = bucket100Sql(keyExpr, salt)
-    val cases = splits.zip(edges).reverse.map { case ((name, _), lo) =>
+  /** The train/val/test percentages and the hash salt of the splits. */
+  val DefaultSplits = Seq("train" -> 80, "val" -> 10, "test" -> 10)
+  val SplitSalt = "split"
+
+  /** DuckDB mirror of [[splitAssign]]'s rule at its defaults, for oracle
+    * authoring. */
+  def splitAssignSql(keyExpr: String): String = {
+    val edges = DefaultSplits.scanLeft(0) { case (acc, (_, p)) => acc + p }
+    val b = bucket100Sql(keyExpr, SplitSalt)
+    val cases = DefaultSplits.zip(edges).reverse.map { case ((name, _), lo) =>
       s"WHEN $b >= $lo THEN '$name'"
     }.mkString(" ")
     s"CASE $cases END"
@@ -112,10 +115,8 @@ object Sampling {
     * deterministic dump). The result is a projection over the component
     * labels' lazy local checkpoint, so nothing is left for the caller to
     * release. */
-  def splitAssignLeakFree(docs: DataFrame,
-      splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
-      salt: String = "split"): DataFrame =
-    splitAssign(Dedup.nearDupComponents(docs), "label", splits, salt)
+  def splitAssignLeakFree(docs: DataFrame): DataFrame =
+    splitAssign(Dedup.nearDupComponents(docs), "label")
       .select(col("doc_id"), col("label"), col("split"))
 
   /** SPLIT-STABILITY audit for [[splitAssignLeakFree]] under corpus
@@ -141,13 +142,11 @@ object Sampling {
     * [[splitDriftReportIndexed]], which reads yesterday's PUBLISHED
     * assignment and folds today's batch as a delta. The ≤|splits|²-row
     * matrix is collected and rebuilt as a local frame. */
-  def splitDriftReport(docsOld: DataFrame, docsNew: DataFrame,
-      splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
-      salt: String = "split"): DataFrame =
+  def splitDriftReport(docsOld: DataFrame, docsNew: DataFrame): DataFrame =
     transitionMatrix(
-      splitAssignLeakFree(docsOld, splits, salt)
+      splitAssignLeakFree(docsOld)
         .select(col("doc_id"), col("split").as("split_was")),
-      splitAssignLeakFree(docsNew, splits, salt)
+      splitAssignLeakFree(docsNew)
         .select(col("doc_id"), col("split").as("split_now")))
 
   /** The distributed half of [[transitionMatrix]] as a PLAN (package-
@@ -186,11 +185,9 @@ object Sampling {
     * oracle. Unsorted, unpersisted, shuffle-free: at 100 TB the daily
     * cost of the leak-free split is reading a 16-byte-per-doc table. */
   def splitAssignIndexed(spark: org.apache.spark.sql.SparkSession,
-      compTable: String,
-      splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
-      salt: String = "split"): DataFrame = {
+      compTable: String): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, compTable)
-    splitAssign(spark.table(compTable), "label", splits, salt)
+    splitAssign(spark.table(compTable), "label")
       .select(col("doc_id"), col("label"), col("split"))
   }
 
@@ -202,23 +199,21 @@ object Sampling {
     * (the same generation-alignment contract [[Dedup.mergeComponentsIncr]]
     * enforces between its two artifacts). */
   def publishSplitAssignment(spark: org.apache.spark.sql.SparkSession,
-      compTable: String, splitTable: String,
-      splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
-      salt: String = "split", numBuckets: Int = 8): Unit = {
-    StoredIndex.buildStamped(splitAssignment(salt, numBuckets), splitTable, spark,
+      compTable: String, splitTable: String): Unit = {
+    StoredIndex.buildStamped(splitAssignment, splitTable, spark,
       graft.sources.Formats.readBuildMeta(spark, compTable)
         .map(m => (m._1, m._2))
         .getOrElse(throw new IllegalStateException(
           s"components table '$compTable' has no build manifest — publish " +
             "from a table built by buildComponentsTable"))
-    )(_ => splitAssignIndexed(spark, compTable, splits, salt))
+    )(_ => splitAssignIndexed(spark, compTable))
   }
 
   /** The published assignment as a [[StoredIndex]] family:
     * one `(doc_id, label, split)` row per document, bucketed on `doc_id`. */
-  private def splitAssignment(salt: String, numBuckets: Int) = Family(
-    n => s"kind=split,salt=$salt,buckets=$n", "doc_id", "",
-    Seq(Part("", Seq("doc_id"), numBuckets)))
+  private val splitAssignment = Family(
+    n => s"kind=split,salt=$SplitSalt,buckets=$n", "doc_id", "",
+    Seq(Part("", Seq("doc_id"), Buckets)))
 
   /** STORED-LIFECYCLE drift audit — [[splitDriftReport]]'s production
     * twin, O(batch + flips) instead of two corpus re-clusterings:
@@ -236,14 +231,12 @@ object Sampling {
     * after the fact (yesterday's table is immutable until republished) —
     * the from-scratch form loses that the moment the corpus grows. */
   def splitDriftReportIndexed(spark: org.apache.spark.sql.SparkSession,
-      prevSplitTable: String, compTable: String,
-      splits: Seq[(String, Int)] = Seq("train" -> 80, "val" -> 10, "test" -> 10),
-      salt: String = "split"): DataFrame = {
+      prevSplitTable: String, compTable: String): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, prevSplitTable)
     transitionMatrix(
       spark.table(prevSplitTable)
         .select(col("doc_id"), col("split").as("split_was")),
-      splitAssignIndexed(spark, compTable, splits, salt)
+      splitAssignIndexed(spark, compTable)
         .select(col("doc_id"), col("split").as("split_now")))
   }
 

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   *     serves every caller a scan of that snapshot while the serving mode
   *     is on.
   *
-  * Why a parquet snapshot and not a persisted row RDD (VERDICT r11 §wrong
-  * 1 — the previous design): a `createDataFrame(rdd, schema)` pin plans as
+  * Why a parquet snapshot and not a persisted row RDD (the previous
+  * design): a `createDataFrame(rdd, schema)` pin plans as
   * a `LogicalRDD`, which (a) cannot column-prune — every consumer
   * deserializes full rows carrying `text` + both token arrays, and the
   * MinHash miners consume the corpus 3-4× per query — and (b) carries no
@@ -43,8 +43,8 @@ import org.apache.spark.sql.functions._
   * shared-projection deployment mode and the standalone recompute mode,
   * and SharedCorpusSpec pins the two bit-equal.
   *
-  * Lifecycle (ADVICE r11): the registry maps a weak session key to plain
-  * path strings — the value no longer references the session (the r11
+  * Lifecycle: the registry maps a weak session key to plain
+  * path strings — the value no longer references the session (an earlier
   * design's pinned DataFrame held its SparkSession, so no entry was ever
   * collectable and a session dropped without [[unpinAll]] leaked its
   * persisted RDD for the JVM lifetime). Now a dropped session's entry
@@ -60,8 +60,8 @@ object SharedCorpus {
   /** session → (dir → (snapshot parquet path, snapshot schema)). Weak
     * keys: the map must not be the thing that keeps a stopped SparkSession
     * alive — and the values are a plain string plus a session-free
-    * StructType, so they don't either (ADVICE r11: the r11 design's value
-    * was a DataFrame, whose session reference made every entry immortal).
+    * StructType, so they don't either (a DataFrame value's session
+    * reference would make every entry immortal).
     * The stored schema lets [[docsTok]] skip the per-call footer
     * schema-inference job. All access is under `pinned.synchronized`. */
   private val pinned =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.StoredIndex
-import graft.sources.StoredIndex.{Family, Part}
+import graft.sources.StoredIndex.{Buckets, Family, Part}
 
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`) — north-star
   * extension (SURVEY §2c). The reference has nothing comparable; this is
@@ -67,6 +67,10 @@ object Similarity {
       .select("query_id", "neighbor_id", "rn", "cos")
   }
 
+  /** Token vectors per MaxSim document: the stored-index probe groups
+    * `vec_id div MaxSimGroupSize`. */
+  val MaxSimGroupSize = 8
+
   /** LATE-INTERACTION (ColBERT-style MaxSim) retrieval — multi-vector
     * scoring for the serving stack: a "document" is a GROUP of token
     * vectors (here `vec_id div groupSize` over the embeddings table — the
@@ -86,7 +90,7 @@ object Similarity {
     * would depend on Spark's reduce order and could never be
     * oracle-replayed). Output `score` is the quantized long (BIGINT
     * outward per the outward-type rule); ties break on neighbor id. */
-  def maxSimTopK(emb: DataFrame, queryPred: Column, groupSize: Int = 8,
+  def maxSimTopK(emb: DataFrame, queryPred: Column, groupSize: Int = MaxSimGroupSize,
       k: Int = 5): DataFrame =
     maxSimTopKTokens(
       emb.select(expr(s"vec_id div $groupSize").as("dkey"),
@@ -155,9 +159,10 @@ object Similarity {
     *    like [[ivfTopKIndexed]]; per query doc the top `shortlist`
     *    candidate docs survive;
     *  - stage 2 (exact): a candidate doc's token ids are ARITHMETIC
-    *    (`dkey·groupSize + 0..groupSize−1` — the group layout is a key
-    *    range, not a lookup), so the exact re-rank fetches exactly those
-    *    rows from the id-bucketed full-precision vector store
+    *    (`dkey·MaxSimGroupSize + 0..MaxSimGroupSize−1` — the group
+    *    layout is a key range, not a lookup), so the exact re-rank
+    *    fetches exactly those rows from the id-bucketed full-precision
+    *    vector store
     *    ([[buildVectorStore]] — the same store the IVF×PQ refine tier
     *    reads; store side never shuffles) and recomputes [[maxSimTopK]]'s
     *    fixed-point score over ALL the candidate's tokens. Approximation
@@ -169,13 +174,12 @@ object Similarity {
     * across partition layouts and engines. */
   def maxSimTopKIndexed(spark: org.apache.spark.sql.SparkSession,
       ivfTable: String, vecTable: String, queryPred: Column,
-      groupSize: Int = 8, k: Int = 5, nprobe: Int = 2,
-      shortlist: Int = 20): DataFrame = {
+      k: Int = 5, nprobe: Int = 2, shortlist: Int = 20): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, ivfTable)
     graft.sources.Formats.requireBuilt(spark, vecTable)
     val piv = spark.table(s"${ivfTable}_pivots")
     val toks = spark.table(ivfTable)
-      .select(expr(s"vec_id div $groupSize").as("dkey"), col("vec_id"),
+      .select(expr(s"vec_id div $MaxSimGroupSize").as("dkey"), col("vec_id"),
         col("embedding"), col("cell"))
     def quantSum(m: Column): Column =
       sum(floor(m * lit(QuantScale.toDouble)).cast("long"))
@@ -213,9 +217,9 @@ object Similarity {
     // stage 2: exact fixed-point MaxSim over the candidates' FULL token
     // sets, fetched by arithmetic id range from the bucketed store
     val candToks = cand
-      .withColumn("i", explode(sequence(lit(0), lit(groupSize - 1))))
+      .withColumn("i", explode(sequence(lit(0), lit(MaxSimGroupSize - 1))))
       .select(col("query_doc"), col("neighbor_doc"),
-        (col("neighbor_doc") * groupSize + col("i")).as("vec_id"))
+        (col("neighbor_doc") * MaxSimGroupSize + col("i")).as("vec_id"))
     val store = spark.table(vecTable)
       .select(col("vec_id"), col("embedding").as("nv"))
     val w = Window.partitionBy(col("query_doc"))
@@ -247,32 +251,32 @@ object Similarity {
     * probed cell, and widening `shortlist` recovers docs whose partial
     * score under-ranks their exact score — a failure mode `nprobe` alone
     * cannot buy back. The two axes must be swept TOGETHER; returns one
-    * row per grid point `(nprobe, shortlist, sample_recall)` with the
-    * mean per-query recall@k over the sample.
+    * row per grid point of [[DefaultMaxSimGrid]]
+    * `(nprobe, shortlist, sample_recall)` with the mean per-query
+    * recall@k over the sample, at [[maxSimTopK]]'s default group size
+    * and k.
     *
     * Scale shape: the expensive exact ground truth runs ONCE over the
     * sample (the deployment pattern — recall audits run on a query
     * sample, not the workload) and each grid point is one bucket-pruned
     * probe; per-point driver traffic is a single averaged double. */
   def maxSimProbeCalibration(spark: org.apache.spark.sql.SparkSession,
-      ivfTable: String, vecTable: String, samplePred: Column,
-      grid: Seq[(Int, Int)] = DefaultMaxSimGrid,
-      groupSize: Int = 8, k: Int = 5): DataFrame = {
+      ivfTable: String, vecTable: String, samplePred: Column): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, ivfTable)
     import spark.implicits._
     def asQn(df: DataFrame): DataFrame = df
       .withColumnRenamed("query_doc", "query_id")
       .withColumnRenamed("neighbor_doc", "neighbor_id")
     val emb = spark.table(ivfTable).select(col("vec_id"), col("embedding"))
-    val exact = asQn(maxSimTopK(emb, samplePred, groupSize, k)).persist()
+    val exact = asQn(maxSimTopK(emb, samplePred)).persist()
     // loud empty-sample contract, same cause-naming as calibrateNprobe
     // — an empty grid sweep must not read as zero recall
     require(exact.count() > 0,
       s"MaxSim calibration sample for '$ivfTable' is empty (predicate " +
         "selected no query docs with neighbors) — widen samplePred")
-    val rows = grid.map { case (np, sl) =>
+    val rows = DefaultMaxSimGrid.map { case (np, sl) =>
       val approx = asQn(maxSimTopKIndexed(spark, ivfTable, vecTable,
-        samplePred, groupSize, k, np, sl))
+        samplePred, nprobe = np, shortlist = sl))
       val rec = recallAtK(approx, exact)
         .agg(avg("recall")).head().getDouble(0)
       (np, sl, rec)
@@ -282,27 +286,26 @@ object Similarity {
   }
 
   /** Scalar pick over [[maxSimProbeCalibration]]'s surface: the CHEAPEST
-    * grid point whose sample recall clears `recallTarget + margin`
-    * (margin cushions the sample estimate's binomial error exactly as
-    * [[calibrateNprobe]] documents). Cost order is `nprobe · shortlist`
-    * first (stage-1 probed-cell volume × stage-2 exact re-rank fetches —
+    * grid point of [[DefaultMaxSimGrid]] whose sample recall clears
+    * `recallTarget` + [[RecallMargin]] (the margin cushions the sample
+    * estimate's binomial error exactly as [[calibrateNprobe]] documents).
+    * Cost order is `nprobe · shortlist` first (stage-1 probed-cell volume
+    * × stage-2 exact re-rank fetches —
     * the two terms a serving deployment pays), then the narrower probe.
     * Loud when even the widest grid point misses the adjusted target on
     * the sample: that is an index-build/grid problem, not a default to
     * silently under-serve. */
   def calibrateMaxSimProbe(spark: org.apache.spark.sql.SparkSession,
       ivfTable: String, vecTable: String, samplePred: Column,
-      recallTarget: Double, grid: Seq[(Int, Int)] = DefaultMaxSimGrid,
-      groupSize: Int = 8, k: Int = 5, margin: Double = 0.05): (Int, Int) = {
-    val adjusted = math.min(recallTarget + margin, 1.0)
-    val surface = maxSimProbeCalibration(spark, ivfTable, vecTable,
-      samplePred, grid, groupSize, k)
+      recallTarget: Double): (Int, Int) = {
+    val adjusted = math.min(recallTarget + RecallMargin, 1.0)
+    val surface = maxSimProbeCalibration(spark, ivfTable, vecTable, samplePred)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     val met = surface.filter(_._3 >= adjusted)
     require(met.nonEmpty,
-      s"no (nprobe, shortlist) in grid ${grid.mkString(",")} reaches " +
+      s"no (nprobe, shortlist) in grid ${DefaultMaxSimGrid.mkString(",")} reaches " +
         s"margin-adjusted recall $adjusted (target $recallTarget + margin " +
-        s"$margin) on the sample for '$ivfTable' — best was " +
+        s"$RecallMargin) on the sample for '$ivfTable' — best was " +
         f"${surface.map(_._3).max}%.3f; widen the grid or retrain the index")
     val (np, sl, _) = met.minBy { case (n, s, _) => (n.toLong * s, n, s) }
     (np, sl)
@@ -405,10 +408,13 @@ object Similarity {
       .toDF("query_id", "step", "vec_id", "mmr_score")
   }
 
+  /** [[prefixRefineTopK]]'s prefix length, of [[Dim]] components. */
+  val PrefDim = 16
+
   /** Matryoshka-style PREFIX retrieval — dimension truncation as the
     * compression lever (MRL-trained embeddings concentrate information
     * in the leading components): stage 1 shortlists `candidates`
-    * neighbors by cosine over only the first `prefDim` components
+    * neighbors by cosine over only the first [[PrefDim]] components
     * (scanning 16 of 64 dims reads ¼ of the float bytes, the same
     * bytes-per-row lever PQ pulls with codes), stage 2 re-ranks the
     * shortlist by exact full-dimension cosine — the
@@ -416,9 +422,9 @@ object Similarity {
     * error affects which candidates make the shortlist, never their
     * final order. Deterministic throughout: prefix ties break on
     * neighbor_id, the re-rank on exact cosine then neighbor_id. */
-  def prefixRefineTopK(emb: DataFrame, queryPred: Column, prefDim: Int = 16,
+  def prefixRefineTopK(emb: DataFrame, queryPred: Column,
       candidates: Int = 20, k: Int = 5): DataFrame = {
-    val pref = slice(col("embedding"), 1, prefDim)
+    val pref = slice(col("embedding"), 1, PrefDim)
     val q = emb.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         pref.as("qp"))
@@ -646,15 +652,15 @@ object Similarity {
     * non-broadcast probes (or index⋈index self-mining) can shuffle ONLY
     * the query side, and broadcast probes read the index with no exchange
     * at all (asserted in SimilaritySpec). */
-  def buildLshIndex(emb: DataFrame, table: String, numBuckets: Int = 8): Unit = {
-    StoredIndex.build(lshIndex(numBuckets), table, emb)(_ => bandedSignatures(emb))
+  def buildLshIndex(emb: DataFrame, table: String): Unit = {
+    StoredIndex.build(lshIndex, table, emb)(_ => bandedSignatures(emb))
   }
 
   /** The LSH index as a [[StoredIndex]] family: one band table bucketed
     * on the probe key, [[SigBands]] band rows per vector. */
-  private def lshIndex(numBuckets: Int = 8) = Family(
+  private val lshIndex = Family(
     n => s"kind=lsh,buckets=$n", "vec_id", "",
-    Seq(Part("", Seq("band_idx", "band_val"), numBuckets)), bootstrap = true,
+    Seq(Part("", Seq("band_idx", "band_val"), Buckets)), bootstrap = true,
     rowsPerId = Some(SigBands))
 
   /** Incremental-ingest half of the LSH build/query split: band the NEW
@@ -665,7 +671,7 @@ object Similarity {
     * append; a two-batch build is bit-identical to a one-shot build of the
     * union (gated under the same oracle as [[lshTopKIndexed]]). */
   def appendToLshIndex(newEmb: DataFrame, table: String): Unit = {
-    StoredIndex.append(lshIndex(), table, newEmb)(_ => bandedSignatures(newEmb))
+    StoredIndex.append(lshIndex, table, newEmb)(_ => bandedSignatures(newEmb))
   }
 
   /** Delete propagation for the stored LSH index — the embedding twin of
@@ -678,7 +684,7 @@ object Similarity {
     * [[graft.sources.StoredIndex]]. */
   def purgeFromLshIndex(spark: org.apache.spark.sql.SparkSession, table: String,
       deleteIds: DataFrame): Unit =
-    StoredIndex.purge(spark, lshIndex(), table, deleteIds)
+    StoredIndex.purge(spark, lshIndex, table, deleteIds)
 
   /** Delete propagation for the stored IVF index: the deleted vectors'
     * cell-assignment rows are removed and the manifest folds their ids
@@ -708,7 +714,7 @@ object Similarity {
     * BOTH the compressed index and the re-rank store). */
   def purgeFromVectorStore(spark: org.apache.spark.sql.SparkSession, table: String,
       deleteIds: DataFrame): Unit =
-    StoredIndex.purge(spark, vectorStore(), table, deleteIds)
+    StoredIndex.purge(spark, vectorStore, table, deleteIds)
 
   /** The probe join of [[lshTopKIndexed]], exposed pre-rank so the spec
     * can assert its plan: both sides read the STORED index (no signature
@@ -730,28 +736,29 @@ object Similarity {
   }
 
   val NumPivots = 16
+  /** Cells an IVF query probes. */
+  val IvfNprobe = 2
 
   /** IVF-style ANN: the corpus is coarsely partitioned into [[NumPivots]]
     * cells (each vector lives in the cell of its nearest pivot), and a
-    * query searches only its `nprobe` nearest cells — the classic
+    * query searches only its [[IvfNprobe]] nearest cells — the classic
     * inverted-file index, with cells as the unit of pruning. Pivots here
     * are the deterministic `vec_id < NumPivots` sample — the zero-training
     * baseline; [[ivfTopKKmeans]] feeds the same plan k-means-trained
     * pivots, which only changes WHERE the pivots sit, not the plan. */
-  def ivfTopK(emb: DataFrame, queryPred: Column, k: Int = 5, nprobe: Int = 2): DataFrame =
+  def ivfTopK(emb: DataFrame, queryPred: Column, k: Int = 5): DataFrame =
     ivfTopKWith(emb,
       emb.filter(col("vec_id") < NumPivots)
         .select(col("vec_id").as("pid"), col("embedding").as("pv")),
-      queryPred, k, nprobe)
+      queryPred, k)
 
   /** IVF ANN over k-means-trained pivots: [[trainPivots]] then the same
     * probe plan as [[ivfTopK]]. Trained cells track the corpus's actual
     * density (a Lloyd's centroid is its cell's mean), so for a fixed
     * nprobe the probed region holds more of each query's true neighbors —
     * SimilaritySpec measures the recall lift over the id-pivot baseline. */
-  def ivfTopKKmeans(emb: DataFrame, queryPred: Column, k: Int = 5, nprobe: Int = 2,
-      kClusters: Int = NumPivots, iters: Int = KmeansIters): DataFrame =
-    ivfTopKWith(emb, trainPivots(emb, kClusters, iters), queryPred, k, nprobe)
+  def ivfTopKKmeans(emb: DataFrame, queryPred: Column, k: Int = 5): DataFrame =
+    ivfTopKWith(emb, trainPivots(emb), queryPred, k)
 
   /** The IVF probe plan over a caller-supplied pivot table `piv`
     * (`pid: LONG`, `pv: ARRAY<FLOAT>`). Pivots are tiny and broadcast, so
@@ -763,7 +770,7 @@ object Similarity {
     * unprobed cell), measured in SimilaritySpec against
     * [[bruteForceTopK]]. */
   def ivfTopKWith(emb: DataFrame, piv: DataFrame, queryPred: Column,
-      k: Int = 5, nprobe: Int = 2): DataFrame = {
+      k: Int = 5, nprobe: Int = IvfNprobe): DataFrame = {
     // per-side norms hoisted out of the pivot fan-out (bit-identical:
     // same sqrt(self-dot) values, computed once per row/pivot instead of
     // once per (row, pivot) candidate — the bruteForceTopK discipline)
@@ -838,8 +845,8 @@ object Similarity {
     * SimilaritySpec proves the prefix-equivalence. Output is integers
     * only, and the kept set is a pure function of the corpus (same
     * hash-prefix determinism as the token-budget sampler). */
-  def clusterBalancedSample(emb: DataFrame, perCell: Int = 10,
-      subCells: Int = 32): DataFrame =
+  def clusterBalancedSample(emb: DataFrame, perCell: Int = SamplePerCell,
+      subCells: Int = SampleSubCells): DataFrame =
     sampleCells(assignCells(emb, trainPivots(emb)), perCell, subCells)
 
   /** [[clusterBalancedSample]] semantics (same oracle) over a STORED
@@ -850,10 +857,15 @@ object Similarity {
     * entirely. Curation-by-sampling becomes one more consumer of the same
     * index the ANN probes use. */
   def clusterBalancedSampleIndexed(spark: org.apache.spark.sql.SparkSession,
-      table: String, perCell: Int = 10, subCells: Int = 32): DataFrame = {
+      table: String): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
-    sampleCells(spark.table(table).select("vec_id", "cell"), perCell, subCells)
+    sampleCells(spark.table(table).select("vec_id", "cell"), SamplePerCell, SampleSubCells)
   }
+
+  /** The cluster-balanced sample's size per cell, and the hash sub-cells
+    * a cell is ranked in. */
+  val SamplePerCell = 10
+  val SampleSubCells = 32
 
   /** SemDeDup semantic deduplication (Abbas et al. 2023) off the stored
     * IVF index: within each coarse cell, drop every vector that has a
@@ -877,28 +889,32 @@ object Similarity {
     * the corpus into ONE cell — and a plain cell-key self-join would hand
     * that whole cell's quadratic pair enumeration to a single task. Each
     * cell is therefore hash-split into `nsub = ceil(|cell| /
-    * maxCellShard)` sub-shards and the within-cell pairs are enumerated
+    * MaxCellShard)` sub-shards and the within-cell pairs are enumerated
     * block-by-block over unordered shard pairs {i, j}: both sides
     * replicate each row to its nsub blocks (`(min(sub,t), max(sub,t))`
     * for every t), the join runs on `(cell, blo, bhi)`, and the
     * same-shard orientation filter keeps diagonal pairs only in their own
     * {s, s} block so every pair is enumerated EXACTLY once. Per-task pair
-    * count is bounded by (2·maxCellShard)² regardless of cell size — the
+    * count is bounded by (2·MaxCellShard)² regardless of cell size — the
     * pathological cell becomes nsub·(nsub+1)/2 bounded tasks instead of
     * one quadratic straggler — while the replication overhead
-    * (×nsub rows shuffled) is a 1/maxCellShard fraction of the pair work
+    * (×nsub rows shuffled) is a 1/MaxCellShard fraction of the pair work
     * it unlocks. Cell sizes come from a k-row aggregate broadcast onto
     * the scan; for ordinary cells nsub = 1 and the plan degenerates to
     * the plain cell join. The kept set is a pure function of the corpus
     * — identical under any sharding (SimilaritySpec proves both the
     * bound and the equivalence). */
   def semanticDedupIndexed(spark: org.apache.spark.sql.SparkSession,
-      table: String, tau: Double = 0.4, maxCellShard: Int = 4096): DataFrame = {
+      table: String, tau: Double = 0.4): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
     val idx = spark.table(table).select(col("vec_id"), col("embedding"), col("cell"))
     idx.select("vec_id", "cell")
-      .join(semanticDominated(idx, tau, maxCellShard), Seq("vec_id"), "left_anti")
+      .join(semanticDominated(idx, tau, MaxCellShard), Seq("vec_id"), "left_anti")
   }
+
+  /** The largest cell sub-shard [[semanticDedupIndexed]] enumerates pairs
+    * in. */
+  val MaxCellShard = 4096
 
   /** The dominated set of [[semanticDedupIndexed]] — every vec_id with a
     * lower-id cell-mate at cosine >= tau — via the sub-sharded block
@@ -970,10 +986,9 @@ object Similarity {
     * stored cells must be argmax against the FINAL centroids (the
     * contract the oracle replays) — one extra corpus pass per index
     * build, the standard IVF build cost. */
-  def buildIvfIndex(emb: DataFrame, table: String, kClusters: Int = NumPivots,
-      iters: Int = KmeansIters, numBuckets: Int = 8): Unit = {
-    val piv = trainPivots(emb, kClusters, iters)
-    StoredIndex.build(ivfIndex(numBuckets, s",k=$kClusters,iters=$iters"), table, emb,
+  def buildIvfIndex(emb: DataFrame, table: String, kClusters: Int = NumPivots): Unit = {
+    val piv = trainPivots(emb, kClusters)
+    StoredIndex.build(ivfIndex(s",k=$kClusters,iters=$KmeansIters"), table, emb,
       graft.sources.Formats.writeBucketed(piv, s"${table}_pivots", Seq("pid"), 1)
     )(_ => assignCells(emb, piv))
   }
@@ -982,9 +997,9 @@ object Similarity {
     * bucketed on `cell`. The `_pivots` model table is the family's own
     * side table. `training` carries the build's `k`/`iters` fields into
     * the manifest; appends and purges do not restate them. */
-  private def ivfIndex(numBuckets: Int = 8, training: String = "") = Family(
+  private def ivfIndex(training: String = "") = Family(
     n => s"kind=ivf$training,buckets=$n", "vec_id", "",
-    Seq(Part("", Seq("cell"), numBuckets)))
+    Seq(Part("", Seq("cell"), Buckets)))
 
   /** Train and store ONLY the pivot half of the IVF index — the starting
     * point of the incremental-build path: pivots are trained once over the
@@ -993,14 +1008,12 @@ object Similarity {
     * Pivot drift under sustained ingest is handled by periodic retrain +
     * reassign (a fresh [[buildIvfIndex]]) — the standard IVF maintenance
     * contract, out of scope for the per-batch path. */
-  def buildIvfPivots(emb: DataFrame, table: String, kClusters: Int = NumPivots,
-      iters: Int = KmeansIters): Unit = {
-    graft.sources.Formats.writeBucketed(
-      trainPivots(emb, kClusters, iters), s"${table}_pivots", Seq("pid"), 1)
+  def buildIvfPivots(emb: DataFrame, table: String): Unit = {
+    graft.sources.Formats.writeBucketed(trainPivots(emb), s"${table}_pivots", Seq("pid"), 1)
     // models-only start of the incremental path: nothing indexed yet, so
     // the stamp is (0, 0) and every appended batch folds in from there
     graft.sources.Formats.writeBuildMeta(emb.sparkSession, table,
-      s"kind=ivf,k=$kClusters,iters=$iters", 0L, 0L)
+      s"kind=ivf,k=$NumPivots,iters=$KmeansIters", 0L, 0L)
   }
 
   /** Assign a NEW batch against the STORED pivots: reads `<table>_pivots`
@@ -1026,7 +1039,7 @@ object Similarity {
     * is read, not recomputed, and the candidate join streams the bucketed
     * index side with no shuffle. */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
-      queryPred: Column, k: Int = 5, nprobe: Int = 2): DataFrame = {
+      queryPred: Column, k: Int = 5, nprobe: Int = IvfNprobe): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
     val piv = spark.table(s"${table}_pivots")
     val idx = spark.table(table)
@@ -1110,9 +1123,8 @@ object Similarity {
     * subspace key. Init per subspace: the sub-vectors of the k
     * hash-smallest vec_ids (same seeded sample as [[trainPivots]]).
     * Returns `(m, pid, cv: ARRAY<FLOAT>)`. */
-  def trainPqCodebooks(emb: DataFrame, k: Int = PqCodes, iters: Int = PqIters): DataFrame =
-    trainPqCodebooksOn(emb,
-      subVectors(emb).localCheckpoint(eager = false), k, iters)
+  def trainPqCodebooks(emb: DataFrame): DataFrame =
+    trainPqCodebooksOn(emb, subVectors(emb).localCheckpoint(eager = false))
 
   /** [[trainPqCodebooks]] against a caller-materialized sub-vector table —
     * the train/encode composition point: every Lloyd's
@@ -1122,21 +1134,20 @@ object Similarity {
     * buildPqIndex, the IVF×PQ build) checkpoint it once and thread it
     * through; the checkpoint is ContextCleaner-reclaimed (no session
     * CacheManager entry). */
-  private def trainPqCodebooksOn(emb: DataFrame, subs: DataFrame,
-      k: Int = PqCodes, iters: Int = PqIters): DataFrame = {
+  private def trainPqCodebooksOn(emb: DataFrame, subs: DataFrame): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val init: Array[Seq[Float]] = emb
       .withColumn("hk", graft.functions.CrossHash.h32(col("vec_id").cast("string")))
       .orderBy(col("hk"), col("vec_id"))
-      .limit(k)
+      .limit(PqCodes)
       .select(col("embedding")).as[Seq[Float]]
       .collect()
     // codebooks(m)(pid) = centroid of subspace m, cell pid
-    var books: Array[Array[Seq[Float]]] = Array.tabulate(PqSubspaces, k) {
+    var books: Array[Array[Seq[Float]]] = Array.tabulate(PqSubspaces, PqCodes) {
       (m, pid) => init(pid).slice(m * PqSubDim, (m + 1) * PqSubDim)
     }
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to PqIters) {
       val assigned = argminCell(subs, codebookTable(spark, books))
         .select(col("m"), col("pid").as("cell"), col("sv"))
       val sums = assigned
@@ -1264,12 +1275,10 @@ object Similarity {
     * against the STORED books as they arrive ([[appendToPqIndex]]) without
     * retraining. Codebook drift under sustained ingest is handled by
     * periodic retrain + re-encode (a fresh [[buildPqIndex]]). */
-  def buildPqBooks(emb: DataFrame, table: String, k: Int = PqCodes,
-      iters: Int = PqIters): Unit = {
-    graft.sources.Formats.writeBucketed(
-      trainPqCodebooks(emb, k, iters), s"${table}_books", Seq("m"), 1)
+  def buildPqBooks(emb: DataFrame, table: String): Unit = {
+    graft.sources.Formats.writeBucketed(trainPqCodebooks(emb), s"${table}_books", Seq("m"), 1)
     graft.sources.Formats.writeBuildMeta(emb.sparkSession, table,
-      s"kind=pq,k=$k,iters=$iters", 0L, 0L)
+      s"kind=pq,k=$PqCodes,iters=$PqIters", 0L, 0L)
   }
 
   /** Build-once half of the PQ build/query split: train the codebooks and
@@ -1327,15 +1336,13 @@ object Similarity {
     * `<table>_books` (m, pid, cv) model tables. Training pays one k-means
     * sweep per tier plus one corpus-wide assignment + encode — the
     * standard IVF-PQ build cost, run exactly once here. */
-  def buildIvfPqIndex(emb: DataFrame, table: String, kClusters: Int = NumPivots,
-      iters: Int = KmeansIters, numBuckets: Int = 8,
-      pqCodes: Int = PqCodes, pqIters: Int = PqIters): Unit = {
-    val piv = trainPivots(emb, kClusters, iters)
+  def buildIvfPqIndex(emb: DataFrame, table: String): Unit = {
+    val piv = trainPivots(emb)
     val subs = subVectors(emb).localCheckpoint(eager = false)
-    val books = trainPqCodebooksOn(emb, subs, pqCodes, pqIters)
+    val books = trainPqCodebooksOn(emb, subs)
     graft.sources.Formats.writeBucketed(piv, s"${table}_pivots", Seq("pid"), 1)
     graft.sources.Formats.writeBucketed(books, s"${table}_books", Seq("m"), 1)
-    StoredIndex.build(ivfPqIndex(numBuckets, s",k=$kClusters,iters=$iters"), table, emb)(
+    StoredIndex.build(ivfPqIndex(s",k=$NumPivots,iters=$KmeansIters"), table, emb)(
       _ => assignCells(emb, piv).select(col("vec_id"), col("cell"))
         .join(pqEncodeOn(subs, books), Seq("vec_id"))
         .select(col("vec_id"), col("cell"), col("codes")))
@@ -1345,9 +1352,9 @@ object Similarity {
     * directory-partitioned on `cell`, so its task count lives in the
     * manifest's `buckets` field. `_pivots` and `_books` are the family's
     * own model tables; `training` as for [[ivfIndex]]. */
-  private def ivfPqIndex(numBuckets: Int = 8, training: String = "") = Family(
+  private def ivfPqIndex(training: String = "") = Family(
     n => s"kind=ivfpq$training,buckets=$n", "vec_id", "",
-    Seq(Part("", Seq("cell"), numBuckets, partitioned = true)))
+    Seq(Part("", Seq("cell"), Buckets, partitioned = true)))
 
   /** Train and store ONLY the two model tables of the IVF×PQ index — the
     * starting point of its incremental-ingest path, mirroring
@@ -1357,14 +1364,12 @@ object Similarity {
     * ([[appendToIvfPqIndex]]) without retraining either tier. Model drift
     * under sustained ingest is handled by periodic retrain + rebuild (a
     * fresh [[buildIvfPqIndex]]). */
-  def buildIvfPqModels(emb: DataFrame, table: String, kClusters: Int = NumPivots,
-      iters: Int = KmeansIters): Unit = {
-    graft.sources.Formats.writeBucketed(
-      trainPivots(emb, kClusters, iters), s"${table}_pivots", Seq("pid"), 1)
+  def buildIvfPqModels(emb: DataFrame, table: String): Unit = {
+    graft.sources.Formats.writeBucketed(trainPivots(emb), s"${table}_pivots", Seq("pid"), 1)
     graft.sources.Formats.writeBucketed(
       trainPqCodebooks(emb), s"${table}_books", Seq("m"), 1)
     graft.sources.Formats.writeBuildMeta(emb.sparkSession, table,
-      s"kind=ivfpq,k=$kClusters,iters=$iters", 0L, 0L)
+      s"kind=ivfpq,k=$NumPivots,iters=$KmeansIters", 0L, 0L)
   }
 
   /** Incremental-ingest half of the composed index: the new batch is
@@ -1462,18 +1467,18 @@ object Similarity {
     * Bucketing on the fetch key makes the candidate join bucket-local on
     * the store side (the big side never shuffles — only the
     * candidate-list side moves). */
-  def buildVectorStore(emb: DataFrame, table: String, numBuckets: Int = 8): Unit =
-    StoredIndex.build(vectorStore(numBuckets), table, emb)(
+  def buildVectorStore(emb: DataFrame, table: String): Unit =
+    StoredIndex.build(vectorStore, table, emb)(
       _ => emb.select(col("vec_id"), col("embedding")))
 
   /** The vector store as a [[StoredIndex]] family: bucketed on its own
     * fetch key. */
-  private def vectorStore(numBuckets: Int = 8) = Family(
+  private val vectorStore = Family(
     n => s"kind=vecstore,buckets=$n", "vec_id", "",
-    Seq(Part("", Seq("vec_id"), numBuckets)))
+    Seq(Part("", Seq("vec_id"), Buckets)))
 
   /** Two-stage retrieval — the production serving shape for compressed
-    * indexes: stage 1 ranks `candidates` approximate neighbors per query
+    * indexes: stage 1 ranks [[RefineShortlist]] approximate neighbors per query
     * through the composed IVF×PQ probe ([[ivfPqTopKIndexed]] — both
     * pruning levers, 16-byte codes); stage 2 fetches ONLY those
     * candidates' full vectors from the id-bucketed store and re-ranks by
@@ -1482,18 +1487,17 @@ object Similarity {
     * final order — recall at k is bounded below by the PQ-only probe's
     * (SimilaritySpec asserts it against exact ground truth).
     *
-    * Scale: stage 2's joins carry |queries|×candidates rows against the
+    * Scale: stage 2's joins carry |queries|×shortlist rows against the
     * bucketed store (store side shuffle-free) and a broadcast query set —
     * at 100 TB the full-precision corpus is read only at
-    * `candidates/corpus` selectivity, which is the whole point of
+    * `shortlist/corpus` selectivity, which is the whole point of
     * refine-after-compress. */
   def ivfPqRefineTopKIndexed(spark: org.apache.spark.sql.SparkSession,
       pqTable: String, vecTable: String, queries: DataFrame, k: Int = 5,
-      candidates: Int = RefineShortlist, nprobe: Int = RefineNprobe,
       recallTarget: Option[Double] = None): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, vecTable)
-    val np = recallTarget.map(pickNprobe(spark, pqTable, _)).getOrElse(nprobe)
-    val cand = ivfPqTopKIndexed(spark, pqTable, queries, candidates, np)
+    val np = recallTarget.map(pickNprobe(spark, pqTable, _)).getOrElse(RefineNprobe)
+    val cand = ivfPqTopKIndexed(spark, pqTable, queries, RefineShortlist, np)
       .select(col("query_id"), col("neighbor_id"))
     val vecs = spark.table(vecTable)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
@@ -1641,15 +1645,14 @@ object Similarity {
     * recall of |sample|·k pairs has binomial std ≈ √(t(1−t)/pairs)
     * (~0.02 at t=0.8 over 320 pairs), so held-out queries from the same
     * distribution can land that far below the sample curve; calibrating
-    * to `t + margin` (default ≈2σ for a 64-query sample) buys the
+    * to `t + margin` ([[RecallMargin]], ≈2σ for a 64-query sample) buys the
     * transfer back (measured in BASELINE.md's CELLS256 table).
     * Pass margin = 0 for the exact-on-sample minimal width. */
   def calibrateNprobe(spark: org.apache.spark.sql.SparkSession, table: String,
-      samplePred: Column, recallTarget: Double, k: Int = 5,
-      margin: Double = 0.05): Int = {
+      samplePred: Column, recallTarget: Double,
+      margin: Double = RecallMargin): Int = {
     val adjusted = math.min(recallTarget + margin, 1.0)
-    val rows = nprobeCalibration(spark, table, samplePred,
-      Seq(adjusted), k).collect()
+    val rows = nprobeCalibration(spark, table, samplePred, Seq(adjusted)).collect()
     // the sample curve always reaches 1.0 at full width and the target is
     // capped at 1.0, so an empty result means an empty calibration SAMPLE
     // (the predicate selected no queries, or they have no true neighbors)
@@ -1662,6 +1665,10 @@ object Similarity {
     rows.head.getLong(1).toInt
   }
 
+  /** The recall a probe calibration adds to its target, against the
+    * sample estimate's error. */
+  val RecallMargin = 0.05
+
   /** Fixed-point grid for centroid accumulation: component sums are taken
     * over `floor(x * 2^24)` LONGs, not doubles. Long addition is exact and
     * associative, so the trained centroids are bit-identical across
@@ -1672,8 +1679,9 @@ object Similarity {
     * at most one float ulp of centroid precision. */
   val QuantScale: Long = 1L << 24
 
-  /** Lloyd's k-means over the embedding corpus, returning a trained pivot
-    * table (`pid: LONG`, `pv: ARRAY<FLOAT>`) for [[ivfTopKWith]].
+  /** Lloyd's k-means ([[KmeansIters]] rounds) over the embedding corpus,
+    * returning a trained pivot table (`pid: LONG`, `pv: ARRAY<FLOAT>`) for
+    * [[ivfTopKWith]].
     *
     * Deterministic by construction, so the full training loop replays
     * bit-for-bit in the DuckDB oracle:
@@ -1689,7 +1697,7 @@ object Similarity {
     * (cell, dim) partial-aggregated sum) whose k×dim result — not the
     * corpus — is collected; at 100 TB that is the textbook scalable
     * k-means shape (broadcast centroids down, k×dim grams up). */
-  def trainPivots(emb: DataFrame, k: Int = NumPivots, iters: Int = KmeansIters): DataFrame = {
+  def trainPivots(emb: DataFrame, k: Int = NumPivots): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val init: Array[Seq[Float]] = emb
@@ -1700,7 +1708,7 @@ object Similarity {
       .select(col("embedding")).as[Seq[Float]]
       .collect()
     var centroids: Array[Seq[Float]] = init
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to KmeansIters) {
       val scored = emb
         .withColumn("enorm", sqrt(dot("embedding", "embedding")))
         .crossJoin(broadcast(

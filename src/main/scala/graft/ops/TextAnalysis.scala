@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.CrossHash
 import graft.sources.StoredIndex
-import graft.sources.StoredIndex.{Family, Part}
+import graft.sources.StoredIndex.{Buckets, Family, Part}
 
 /** Text-analysis operators for a large-scale training-data pipeline
   * (north-star extensions beyond the reference's word count — SURVEY §2c).
@@ -205,9 +205,9 @@ object TextAnalysis {
     * the same table an index build would persist); df and the N/avgdl
     * scalars ride broadcast joins. Top-k is a rounded-score sort with
     * doc_id tiebreak — same 6-decimal cross-engine quantization contract
-    * as [[tfIdf]]/[[lmScore]]. */
-  def bm25Search(docs: DataFrame, terms: Seq[String], k: Int = 20,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    * as [[tfIdf]]/[[lmScore]]. The formula's `k1` and `b` are [[Bm25K1]]
+    * and [[Bm25B]]. */
+  def bm25Search(docs: DataFrame, terms: Seq[String], k: Int = 20): DataFrame = {
     require(terms.nonEmpty, "bm25Search needs at least one query term")
     val toks = docs.select(
       col("doc_id"),
@@ -227,7 +227,7 @@ object TextAnalysis {
       tf.join(broadcast(dfreq), "word")
         .join(dl, "doc_id")
         .crossJoin(broadcast(bm25Stats(dl)))
-        .select(col("doc_id"), bm25ScoreCol(k1, b).as("s")), k)
+        .select(col("doc_id"), bm25ScoreCol.as("s")), k)
   }
 
   /** Exact phrase search — adjacency-exact multi-word matching, the
@@ -262,7 +262,7 @@ object TextAnalysis {
     * over a document store): the sparse ranking is [[bm25Search]]'s
     * term-query top-`candidates`, the dense ranking is exact cosine
     * against a query document's [[hashEmbed]] vector, and each document's
-    * fused score is `Σ 1/(kRrf + rank)` over the rankings that retrieved
+    * fused score is `Σ 1/(KRrf + rank)` over the rankings that retrieved
     * it (RRF, Cormack et al. — rank-based, so the two scorers' wildly
     * different score scales never need calibration).
     *
@@ -273,7 +273,7 @@ object TextAnalysis {
     * before the fusion join, so the full-outer join runs on two
     * `candidates`-sized tables regardless of corpus size. */
   def hybridSearch(docs: DataFrame, terms: Seq[String], queryDocId: Long = 0L,
-      k: Int = 20, candidates: Int = 100, kRrf: Int = 60): DataFrame = {
+      k: Int = 20, candidates: Int = RrfCandidates): DataFrame = {
     val sparse = sparseRanking(bm25Search(docs, terms, candidates))
     // embed ONCE (guide §1.2): bruteForceTopK references its input
     // twice (query panel + neighbor side), and as a plain plan each
@@ -287,7 +287,7 @@ object TextAnalysis {
     val dense = Similarity.bruteForceTopK(
       emb, col("vec_id") === queryDocId, candidates)
       .select(col("neighbor_id").as("doc_id"), col("rn").as("r_dense"))
-    rrfFuse(sparse, dense, k, kRrf)
+    rrfFuse(sparse, dense, k)
   }
 
   /** Query-MANY indexed hybrid retrieval — [[hybridSearchIndexed]] for a
@@ -305,23 +305,22 @@ object TextAnalysis {
     * vec_id), so the term filter pushes down as an `IN` literal. */
   def hybridSearchManyIndexed(spark: org.apache.spark.sql.SparkSession,
       bm25Table: String, lshTable: String, queries: Seq[(Long, Seq[String])],
-      k: Int = 20, candidates: Int = 100, kRrf: Int = 60,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      k: Int = 20): DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty),
       "hybridSearchManyIndexed needs at least one query, each with terms")
     import org.apache.spark.sql.expressions.Window
-    val sparse = rankBm25Many(spark, bm25Table, queries, candidates, k1, b)
+    val sparse = rankBm25Many(spark, bm25Table, queries, RrfCandidates)
       .select("query_id", "doc_id", "r_sparse")
     val dense = Similarity.lshTopKIndexed(spark, lshTable,
-        col("vec_id").isin(queries.map(_._1): _*), candidates)
+        col("vec_id").isin(queries.map(_._1): _*), RrfCandidates)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rn").as("r_dense"))
     val wF = Window.partitionBy(col("query_id"))
       .orderBy(col("rrf").desc, col("doc_id"))
     sparse.join(dense, Seq("query_id", "doc_id"), "full_outer")
       .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(kRrf.toDouble) + col("r_sparse")), lit(0.0)) +
-        coalesce(lit(1.0) / (lit(kRrf.toDouble) + col("r_dense")), lit(0.0)))
+        coalesce(lit(1.0) / (lit(KRrf.toDouble) + col("r_sparse")), lit(0.0)) +
+        coalesce(lit(1.0) / (lit(KRrf.toDouble) + col("r_dense")), lit(0.0)))
       .withColumn("fr", row_number().over(wF))
       .filter(col("fr") <= k)
       .select("query_id", "doc_id", "rrf", "r_sparse", "r_dense")
@@ -335,9 +334,8 @@ object TextAnalysis {
     * Each query's ranking is identical to its single-query
     * [[bm25SearchIndexed]] run. */
   def bm25SearchManyIndexed(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: Seq[(Long, Seq[String])], k: Int = 20,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    rankBm25Many(spark, table, queries, k, k1, b)
+      table: String, queries: Seq[(Long, Seq[String])], k: Int = 20): DataFrame =
+    rankBm25Many(spark, table, queries, k)
       .select("query_id", "doc_id", "score")
       .orderBy(col("query_id"), col("score").desc, col("doc_id"))
 
@@ -345,8 +343,7 @@ object TextAnalysis {
     * capped at `limit`, off one scan of the union of all query terms'
     * posting buckets. */
   private def rankBm25Many(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: Seq[(Long, Seq[String])], limit: Int,
-      k1: Double, b: Double): DataFrame = {
+      table: String, queries: Seq[(Long, Seq[String])], limit: Int): DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty),
       "a BM25 workload needs at least one query, each with terms")
     graft.sources.Formats.requireBuilt(spark, table)
@@ -368,7 +365,7 @@ object TextAnalysis {
     p.join(broadcast(qTerms), Seq("word"))
       .join(broadcast(dfq), Seq("word"))
       .crossJoin(broadcast(stats))
-      .select(col("query_id"), col("doc_id"), bm25ScoreCol(k1, b).as("s"))
+      .select(col("query_id"), col("doc_id"), bm25ScoreCol.as("s"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum("s"), 6).as("score"))
       .withColumn("r_sparse", row_number().over(wS).cast("long"))
@@ -387,15 +384,14 @@ object TextAnalysis {
 
   /** The shared RRF tail of the direct and indexed hybrid searches: fuse a
     * `(doc_id, r_sparse)` and a `(doc_id, r_dense)` ranking with
-    * `Σ 1/(kRrf + rank)`. One expression for both paths so they cannot
+    * `Σ 1/(KRrf + rank)`. One expression for both paths so they cannot
     * drift; both inputs are candidate-bounded, so the full-outer join runs
     * on two tiny tables regardless of corpus size. */
-  private[graft] def rrfFuse(sparse: DataFrame, dense: DataFrame, k: Int,
-      kRrf: Int): DataFrame =
+  private[graft] def rrfFuse(sparse: DataFrame, dense: DataFrame, k: Int): DataFrame =
     sparse.join(dense, Seq("doc_id"), "full_outer")
       .select(col("doc_id"),
-        (coalesce(lit(1.0) / (lit(kRrf.toDouble) + col("r_sparse")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(kRrf.toDouble) + col("r_dense")), lit(0.0))).as("rrf"),
+        (coalesce(lit(1.0) / (lit(KRrf.toDouble) + col("r_sparse")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(KRrf.toDouble) + col("r_dense")), lit(0.0))).as("rrf"),
         col("r_sparse"), col("r_dense"))
       .orderBy(col("rrf").desc, col("doc_id"))
       .limit(k)
@@ -414,23 +410,31 @@ object TextAnalysis {
     * the banding, not the brute-force scan. */
   def hybridSearchIndexed(spark: org.apache.spark.sql.SparkSession,
       bm25Table: String, lshTable: String, terms: Seq[String],
-      queryId: Long = 0L, k: Int = 20, candidates: Int = 100,
-      kRrf: Int = 60): DataFrame = {
-    val sparse = sparseRanking(bm25SearchIndexed(spark, bm25Table, terms, candidates))
+      queryId: Long = 0L, k: Int = 20): DataFrame = {
+    val sparse = sparseRanking(bm25SearchIndexed(spark, bm25Table, terms, RrfCandidates))
     val dense = Similarity.lshTopKIndexed(spark, lshTable,
-      col("vec_id") === queryId, candidates)
+      col("vec_id") === queryId, RrfCandidates)
       .select(col("neighbor_id").as("doc_id"), col("rn").as("r_dense"))
-    rrfFuse(sparse, dense, k, kRrf)
+    rrfFuse(sparse, dense, k)
   }
 
   /** The per-(doc, term) BM25 contribution over columns
     * (tf, df, dl, n_docs, avgdl) — ONE expression shared by the direct and
     * indexed search paths so their scores are bit-identical (both gates
     * share one oracle). */
-  private def bm25ScoreCol(k1: Double, b: Double): org.apache.spark.sql.Column =
+  private def bm25ScoreCol: org.apache.spark.sql.Column =
     log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-      (col("tf") * lit(k1 + 1.0)) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))
+      (col("tf") * lit(Bm25K1 + 1.0)) /
+      (col("tf") + lit(Bm25K1) * (lit(1.0 - Bm25B) + lit(Bm25B) * col("dl") / col("avgdl")))
+
+  /** BM25's term-frequency saturation (`k1`) and length normalization
+    * (`b`): the usual Okapi values. */
+  val Bm25K1 = 1.2
+  val Bm25B = 0.75
+  /** Hybrid retrieval: each ranking's candidate-list size, and the RRF
+    * rank offset. */
+  val RrfCandidates = 100
+  val KRrf = 60
 
   /** Corpus stats row (n_docs, avgdl) from the per-doc length table.
     * avgdl is the double quotient of exact longs (a doc length sum and a
@@ -467,7 +471,7 @@ object TextAnalysis {
     * df is NOT stored: a probe derives each query term's df by counting
     * that term's postings — the rows it already reads — so appends never
     * rewrite global state beyond the stats row. */
-  def buildBm25Index(docs: DataFrame, table: String, numBuckets: Int = 8): Unit =
+  def buildBm25Index(docs: DataFrame, table: String, numBuckets: Int = Buckets): Unit =
     StoredIndex.build(bm25Index(numBuckets), table, docs,
       graft.sources.Formats.writeManaged(
         docStats(docs.sparkSession.table(table)), table + "_stats")
@@ -476,7 +480,7 @@ object TextAnalysis {
   /** The BM25 index as a [[StoredIndex]] family: postings bucketed on
     * `word`, one row per (term, document) — a variable number per id.
     * The one-row `_stats` table is the family's own side table. */
-  private def bm25Index(numBuckets: Int = 8) = Family(
+  private def bm25Index(numBuckets: Int = Buckets) = Family(
     n => s"kind=bm25,buckets=$n", "doc_id", "",
     Seq(Part("", Seq("word"), numBuckets)), rowsPerId = None)
 
@@ -549,7 +553,7 @@ object TextAnalysis {
     * broadcasts df + the stats row — so query cost scales with the terms'
     * posting lists, never the corpus. */
   def bm25SearchIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
-      terms: Seq[String], k: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      terms: Seq[String], k: Int = 20): DataFrame = {
     require(terms.nonEmpty, "bm25SearchIndexed needs at least one query term")
     graft.sources.Formats.requireBuilt(spark, table)
     val p = spark.table(table).filter(col("word").isin(terms: _*))
@@ -560,7 +564,7 @@ object TextAnalysis {
     rankBm25(
       p.join(broadcast(dfq), "word")
         .crossJoin(broadcast(stats))
-        .select(col("doc_id"), bm25ScoreCol(k1, b).as("s")), k)
+        .select(col("doc_id"), bm25ScoreCol.as("s")), k)
   }
 
   /** Bigram language-model scoring — the CCNet-style perplexity-proxy
@@ -638,8 +642,8 @@ object TextAnalysis {
     * bit-for-bit. [[graft.sources.Formats.compactBucketed]]-style
     * maintenance (aggregate + rewrite) applies when the delta count
     * grows. */
-  def buildLmModel(docs: DataFrame, table: String, numBuckets: Int = 8): Unit =
-    StoredIndex.build(lmModel(numBuckets), table, docs) {
+  def buildLmModel(docs: DataFrame, table: String): Unit =
+    StoredIndex.build(lmModel, table, docs) {
       case "" => lmBigrams(docs).groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
       case "_c1" => c1Of(docs.sparkSession.table(table))
       case "_vocab" => vocabOf(docs, "w")
@@ -647,10 +651,10 @@ object TextAnalysis {
 
   /** The LM as a [[StoredIndex]] family: three delta tables, each
     * bucketed on its fold key. */
-  private def lmModel(numBuckets: Int = 8) = Family(
+  private val lmModel = Family(
     n => s"kind=lm2,buckets=$n", "doc_id", "",
-    Seq(Part("", Seq("w1"), numBuckets), Part("_c1", Seq("w1"), numBuckets),
-      Part("_vocab", Seq("w"), numBuckets)))
+    Seq(Part("", Seq("w1"), Buckets), Part("_c1", Seq("w1"), Buckets),
+      Part("_vocab", Seq("w"), Buckets)))
 
   private def c1Of(c12: DataFrame): DataFrame =
     c12.groupBy("w1").agg(sum("c12").as("c1"))
@@ -668,7 +672,7 @@ object TextAnalysis {
     * doc-disjoint, the family-wide append contract. */
   def appendToLmModel(newDocs: DataFrame, table: String): Unit = {
     val c12 = lmBigrams(newDocs).groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    StoredIndex.append(lmModel(), table, newDocs) {
+    StoredIndex.append(lmModel, table, newDocs) {
       case "" => c12
       case "_c1" => c1Of(c12)
       case "_vocab" => vocabOf(newDocs, "w")
@@ -723,14 +727,15 @@ object TextAnalysis {
   /** TextRank keyword extraction — PageRank over the corpus's word
     * co-occurrence graph (nodes = alnum words, undirected edges = adjacent
     * word pairs weighted by adjacency count, self-loops dropped), fixed
-    * `iters` damped iterations from a uniform start, top-k by final rank.
+    * `iters` damped iterations ([[Damping]]) from a uniform start, top-k
+    * by final rank.
     * The third deterministic training loop in the engine next to k-means
     * and BPE — and unlike those, its per-round state (the rank vector) is
     * FULLY distributed: nothing but a node count ever reaches the driver.
     *
     * Cross-engine determinism is the k-means trick re-applied: ranks live
     * as FIXED-POINT integers (scale 1e12). Each edge's contribution
-    * `damping * (w / W_src) * r_src` is one double expression rounded to
+    * `Damping * (w / W_src) * r_src` is one double expression rounded to
     * a long BEFORE the incoming-edge sum, so every aggregation is exact
     * integer addition — summation order (the thing that differs across
     * partitionings and engines) cannot move a single bit. The DuckDB
@@ -744,13 +749,17 @@ object TextAnalysis {
     * PageRank step. The edge and node tables are lazy local checkpoints
     * that every round of the returned plan reads; nothing is left for the
     * caller to release. */
-  def textRank(docs: DataFrame, iters: Int = 8, damping: Double = 0.85,
-      k: Int = 20): DataFrame = {
+  def textRank(docs: DataFrame, iters: Int = TextRankIters, k: Int = 20): DataFrame = {
     val edges = textRankEdgeDeltas(docs)
     val nodes = docs.select(SharedCorpus.alnumOf(docs).as("a"))
       .select(explode(col("a")).as("word")).distinct()
-    rankLoop(edges, nodes, iters, damping, k)
+    rankLoop(edges, nodes, iters, k)
   }
+
+  /** TextRank's damping factor, and the rounds the stored-graph rank
+    * runs. */
+  val Damping = 0.85
+  val TextRankIters = 8
 
   /** The undirected weighted co-occurrence edge counts of a corpus — the
     * corpus-scale half of [[textRank]], and the DELTA rows
@@ -774,14 +783,14 @@ object TextAnalysis {
     * carry teleport-only rank, and the vocab count n sets the teleport
     * mass, so dropping them would move every rank. */
   private def rankLoop(edges: DataFrame, nodes0: DataFrame, iters: Int,
-      damping: Double, k: Int): DataFrame = {
+      k: Int): DataFrame = {
     val e = edges.join(edges.groupBy("src").agg(sum("w").as("wsrc")), "src")
       .localCheckpoint(eager = false)
     val nodes = nodes0.localCheckpoint(eager = false)
     val n = nodes.count() // vocab count — the loop's only driver traffic
     val scale = 1e12
     val init = math.round(scale / n)
-    val teleport = math.round((1.0 - damping) * scale / n)
+    val teleport = math.round((1.0 - Damping) * scale / n)
     // Unlike the BPE/k-means loops there is NO per-round driver dependency
     // (ranks never leave the cluster), so the iterations compose LAZILY:
     // each round chains one join + one integer aggregation onto the plan
@@ -793,7 +802,7 @@ object TextAnalysis {
     for (_ <- 1 to iters) {
       val contrib = e.join(r.withColumnRenamed("word", "src"), "src")
         .select(col("dst").as("word"),
-          round(lit(damping) * (col("w").cast("double") / col("wsrc")) * col("r"))
+          round(lit(Damping) * (col("w").cast("double") / col("wsrc")) * col("r"))
             .cast("long").as("c"))
         .groupBy("word").agg(sum("c").as("cin"))
       r = nodes.join(contrib, Seq("word"), "left")
@@ -810,14 +819,14 @@ object TextAnalysis {
     * would not), stamped with the build manifest. The corpus-scale bigram
     * extraction runs here; ranking then iterates over the vocab-scale
     * graph without ever rescanning the corpus. */
-  def buildTextRankEdges(docs: DataFrame, table: String, numBuckets: Int = 8): Unit =
-    StoredIndex.build(textRankGraph(numBuckets), table, docs)(textRankRows(docs))
+  def buildTextRankEdges(docs: DataFrame, table: String): Unit =
+    StoredIndex.build(textRankGraph, table, docs)(textRankRows(docs))
 
   /** The TextRank graph as a [[StoredIndex]] family: edge deltas bucketed
     * on `src`, the node set on `word`. */
-  private def textRankGraph(numBuckets: Int = 8) = Family(
+  private val textRankGraph = Family(
     n => s"kind=textrank_edges,buckets=$n", "doc_id", "",
-    Seq(Part("", Seq("src"), numBuckets), Part("_nodes", Seq("word"), numBuckets)))
+    Seq(Part("", Seq("src"), Buckets), Part("_nodes", Seq("word"), Buckets)))
 
   private def textRankRows(docs: DataFrame): String => DataFrame = {
     case "" => textRankEdgeDeltas(docs)
@@ -830,7 +839,7 @@ object TextAnalysis {
     * batches, so N appended batches fold to the one-shot extraction
     * bit-for-bit (the gate shares [[textRank]]'s oracle). */
   def appendToTextRankEdges(newDocs: DataFrame, table: String): Unit =
-    StoredIndex.append(textRankGraph(), table, newDocs)(textRankRows(newDocs))
+    StoredIndex.append(textRankGraph, table, newDocs)(textRankRows(newDocs))
 
   /** Maintenance: fold the accumulated edge deltas back to one row per
     * (src, dst) and the node set to one row per word — same crash-safe
@@ -847,11 +856,11 @@ object TextAnalysis {
     * ingest costs vocab-scale work only. Bit-identical to [[textRank]]
     * over the same corpus (same oracle). */
   def textRankIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
-      iters: Int = 8, damping: Double = 0.85, k: Int = 20): DataFrame = {
+      k: Int = 20): DataFrame = {
     graft.sources.Formats.requireBuilt(spark, table)
     val edges = spark.table(table).groupBy("src", "dst").agg(sum("w").as("w"))
     val nodes = spark.table(s"${table}_nodes").select("word").distinct()
-    rankLoop(edges, nodes, iters, damping, k)
+    rankLoop(edges, nodes, TextRankIters, k)
   }
 
   /** Approximate distinct-term counts per source (HyperLogLog++) next to
@@ -866,10 +875,13 @@ object TextAnalysis {
     * merge across partitions (which is how Spark computes it). At 100 TB
     * this answers "how often does token X occur" without a word-keyed
     * shuffle — the sketch is the only thing that crosses the wire. */
-  def tokenCountSketch(docs: DataFrame, eps: Double = 1e-4,
-      confidence: Double = 0.99): org.apache.spark.util.sketch.CountMinSketch =
+  def tokenCountSketch(docs: DataFrame,
+      eps: Double = 1e-4): org.apache.spark.util.sketch.CountMinSketch =
     docs.select(explode(SharedCorpus.alnumOf(docs)).as("word"))
-      .stat.countMinSketch(col("word"), eps, confidence, 42)
+      .stat.countMinSketch(col("word"), eps, SketchConfidence, 42)
+
+  /** [[tokenCountSketch]]'s confidence (1 − δ). */
+  val SketchConfidence = 0.99
 
   /** Per-source distinct-word counts: HLL++ sketch next to the exact
     * count. The sketch VALUE is engine-specific (un-oracle-able by
@@ -954,17 +966,20 @@ object TextAnalysis {
     * SketchSpec pins union-of-batches == one-shot to the bit). That is
     * the only way a 100 TB pipeline tracks corpus-lifetime distinct
     * counts: the corpus is scanned once per batch, state is KB-sized. */
-  def buildHllIndex(docs: DataFrame, table: String, lgK: Int = 12): Unit =
-    StoredIndex.build(hllIndex(lgK), table, docs)(_ => hllRows(docs, lgK))
+  def buildHllIndex(docs: DataFrame, table: String): Unit =
+    StoredIndex.build(hllIndex, table, docs)(_ => hllRows(docs))
+
+  /** log2 of the stored HLL sketches' register count. */
+  val HllLgK = 12
 
   /** The HLL sketch table as a [[StoredIndex]] family (fixed 4 buckets). */
-  private def hllIndex(lgK: Int) = Family(
-    _ => s"kind=hll,lgk=$lgK", "doc_id", "", Seq(Part("", Seq("source"), 4)))
+  private val hllIndex = Family(
+    _ => s"kind=hll,lgk=$HllLgK", "doc_id", "", Seq(Part("", Seq("source"), 4)))
 
-  private def hllRows(docs: DataFrame, lgK: Int): DataFrame =
+  private def hllRows(docs: DataFrame): DataFrame =
     docs.select(col("source"), explode(SharedCorpus.alnumOf(docs)).as("word"))
       .groupBy("source")
-      .agg(expr(s"hll_sketch_agg(word, $lgK)").as("sketch"))
+      .agg(expr(s"hll_sketch_agg(word, $HllLgK)").as("sketch"))
 
   /** Ingest half: the batch's own sketch rows appended as DELTAS (same
     * delta-table discipline as the LM counts — the accumulated sketches
@@ -973,8 +988,8 @@ object TextAnalysis {
     * re-inserted values (register max), so overlapping batches stay
     * CORRECT for the estimate — only the manifest stamp keeps the
     * family-wide disjointness convention. */
-  def appendToHllIndex(newDocs: DataFrame, table: String, lgK: Int = 12): Unit =
-    StoredIndex.append(hllIndex(lgK), table, newDocs)(_ => hllRows(newDocs, lgK))
+  def appendToHllIndex(newDocs: DataFrame, table: String): Unit =
+    StoredIndex.append(hllIndex, table, newDocs)(_ => hllRows(newDocs))
 
   /** Probe: per-source estimate from the UNION of stored sketch rows —
     * KB-scale, no corpus access. */
@@ -1018,13 +1033,12 @@ object TextAnalysis {
     * 1e-6, vs the ~1% per word a 1·ε·N bound would gamble on a hash
     * gate). The driver holds only the sketch (depth×width counters) and
     * the k result rows. */
-  def heavyHittersCms(docs: DataFrame, k: Int = 50, eps: Double = 0.005,
-      conf: Double = 0.999, seed: Int = 42): DataFrame = {
+  def heavyHittersCms(docs: DataFrame, k: Int = 50): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val words = docs.select(explode(SharedCorpus.alnumOf(docs)).as("word"))
-    val sketch = words.stat.countMinSketch("word", eps, conf, seed)
-    val slack = math.ceil(2.0 * eps * sketch.totalCount).toLong
+    val sketch = words.stat.countMinSketch("word", HhEps, HhConf, HhSeed)
+    val slack = math.ceil(2.0 * HhEps * sketch.totalCount).toLong
     val top = words.groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("word")).limit(k)
       .collect() // k result rows — the output, not the corpus
@@ -1036,6 +1050,11 @@ object TextAnalysis {
     top.toSeq.toDF("word", "cnt", "ok_lower", "ok_upper")
       .orderBy(col("cnt").desc, col("word"))
   }
+
+  /** [[heavyHittersCms]]' sketch: relative error ε, confidence, hash seed. */
+  val HhEps = 0.005
+  val HhConf = 0.999
+  val HhSeed = 42
 
   // ---- stored COUNT-MIN SKETCH lifecycle: the mergeable
   // point-FREQUENCY artifact, completing the persisted-sketch trio
@@ -1061,8 +1080,8 @@ object TextAnalysis {
       lit(width.toLong))
 
   /** DuckDB equivalent of [[cmsSlot]], for oracle authoring. */
-  def cmsSlotSql(wordExpr: String, d: Int, width: Int = CmsWidth): String =
-    s"${graft.functions.CrossHash.h32Sql(s"'cms$d:' || $wordExpr")} % $width"
+  def cmsSlotSql(wordExpr: String, d: Int): String =
+    s"${graft.functions.CrossHash.h32Sql(s"'cms$d:' || $wordExpr")} % $CmsWidth"
 
   /** [[cmsSlotSql]] with the depth as a SQL expression (e.g. a `t.d`
     * column) instead of a literal — the single definition both the engine
@@ -1070,9 +1089,9 @@ object TextAnalysis {
     * cannot drift the two sides. `'cms' || CAST(d AS
     * VARCHAR) || ':'` concatenates to exactly the literal `'cms$d:'`
     * prefix of the column form. */
-  def cmsSlotSqlD(wordExpr: String, dExpr: String, width: Int = CmsWidth): String =
+  def cmsSlotSqlD(wordExpr: String, dExpr: String): String =
     s"${graft.functions.CrossHash.h32Sql(
-      s"'cms' || CAST($dExpr AS VARCHAR) || ':' || $wordExpr")} % $width"
+      s"'cms' || CAST($dExpr AS VARCHAR) || ':' || $wordExpr")} % $CmsWidth"
 
   /** The batch's sketch rows: `(d, slot, cnt)` counter increments.
     * Computed vocabulary-first (one word-keyed count, map-side combined),
@@ -1199,7 +1218,7 @@ object TextAnalysis {
     * metrics only exist after an action); returns the one-row counter
     * table the audit log would persist. The counters are exact integers,
     * so the oracle is a plain re-aggregation. */
-  def observedCurationCounters(docs: DataFrame, minQuality: Double = 0.6): DataFrame = {
+  def observedCurationCounters(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     val (ws, alnum) = (SharedCorpus.wsOf(docs), SharedCorpus.alnumOf(docs))
     val scored = docs.select(col("doc_id"),
@@ -1211,8 +1230,8 @@ object TextAnalysis {
     scored.observe(obs,
       count(lit(1)).as("n_in"),
       sum(col("n_tokens")).as("tokens_in"),
-      count(when(col("q") >= minQuality, 1)).as("n_kept"))
-      .filter(col("q") >= minQuality)
+      count(when(col("q") >= Curation.MinQuality, 1)).as("n_kept"))
+      .filter(col("q") >= Curation.MinQuality)
       .count()
     val m = obs.get
     import spark.implicits._
@@ -1380,8 +1399,10 @@ object TextAnalysis {
     when(t2 > 0, (t2 - d2).cast("double") / t2).otherwise(lit(0.0))
   }
 
-  def filterFunnel(docs: DataFrame, minQuality: Double = 0.6,
-      lang: String = "en", maxDup2: Double = 0.05): DataFrame = {
+  /** Per-source survivor counts after each stage of [[Curation]]'s
+    * admission policy: quality, then language, then repetition. */
+  def filterFunnel(docs: DataFrame): DataFrame = {
+    import Curation.{Lang, MaxDup2, MinQuality}
     val dup2 = dup2FracOfA
     docs
       .select(col("source"), SharedCorpus.wsOf(docs).as("a"),
@@ -1390,10 +1411,10 @@ object TextAnalysis {
         predLangColOf(col("a")).as("l"), dup2.as("r"))
       .groupBy("source").agg(
         count(lit(1)).as("n_docs"),
-        count(when(col("q") >= minQuality, 1)).as("n_quality"),
-        count(when(col("q") >= minQuality && col("l") === lang, 1)).as("n_lang"),
-        count(when(col("q") >= minQuality && col("l") === lang &&
-          col("r") <= maxDup2, 1)).as("n_clean"))
+        count(when(col("q") >= MinQuality, 1)).as("n_quality"),
+        count(when(col("q") >= MinQuality && col("l") === Lang, 1)).as("n_lang"),
+        count(when(col("q") >= MinQuality && col("l") === Lang &&
+          col("r") <= MaxDup2, 1)).as("n_clean"))
       .orderBy("source")
   }
 
@@ -1438,15 +1459,14 @@ object TextAnalysis {
 
   /** End-to-end curation pipeline — the composite a training-data run
     * actually executes: score quality + language + fingerprint in ONE scan
-    * of the corpus, keep documents clearing the quality bar in the target
-    * language, then drop near-identical texts (normalized-fingerprint
+    * of the corpus, keep documents clearing [[Curation.MinQuality]] in
+    * [[Curation.Lang]], then drop near-identical texts (normalized-fingerprint
     * dedup, lowest doc_id survives). Plan shape: one projection plus one
     * hash-shuffle on the 60-bit key — the keep-one is a `min(struct)`
     * argmin (the [[graft.ops.Dedup.nearDupSurvivorsBy]] pattern), so it
     * partial-aggregates map-side and never sorts within a key; unchanged
     * at 100 TB. */
-  def curationPipeline(docs: DataFrame, minQuality: Double = 0.6,
-      lang: String = "en"): DataFrame = {
+  def curationPipeline(docs: DataFrame): DataFrame = {
     val (ws, alnum) = (SharedCorpus.wsOf(docs), SharedCorpus.alnumOf(docs))
     val scored = docs.select(
       col("doc_id"),
@@ -1454,7 +1474,8 @@ object TextAnalysis {
       qualityColOf(ws, alnum).as("quality"),
       predLangColOf(ws).as("pred_lang"),
       fpNormCol.as("fp_norm"))
-    val kept = scored.filter(col("quality") >= minQuality && col("pred_lang") === lang)
+    val kept = scored.filter(
+      col("quality") >= Curation.MinQuality && col("pred_lang") === Curation.Lang)
     kept.groupBy(col("fp_norm"))
       .agg(min(struct(col("doc_id"), col("n_tokens"), col("quality"))).as("k"))
       .select(col("k.doc_id").as("doc_id"), col("k.n_tokens").as("n_tokens"),
@@ -1513,10 +1534,14 @@ object TextAnalysis {
             .otherwise(lit(0.0d)).cast("float")): _*).as("embedding"))
   }
 
+  /** [[hashEmbedWindows]]' window length (tokens) and windows per doc. */
+  val WinTokens = 8
+  val MaxWins = 4
+
   /** PER-TOKEN-WINDOW featurization — [[hashEmbed]] lifted from documents
-    * to consecutive `winTokens`-token windows of the alnum token stream:
+    * to consecutive [[WinTokens]]-token windows of the alnum token stream:
     * one L2-normalized signed-hash vector per (doc, window), capped at the
-    * first `maxWins` windows (the truncated-encoding convention every
+    * first [[MaxWins]] windows (the truncated-encoding convention every
     * late-interaction encoder applies — ColBERT truncates documents to a
     * fixed token budget). This is the corpus-derived multi-vector input
     * the MaxSim stack serves ([[graft.ops.Similarity.maxSimTopKTokens]]):
@@ -1530,14 +1555,13 @@ object TextAnalysis {
     * windows are dropped on both sides — a zero vector has no cosine and
     * would ride engine-specific NaN semantics into the ranking. Scale
     * shape: one explode + two hash-aggregations, map-side combinable,
-    * shuffle bounded by docs × maxWins × dim partial sums. Returns
+    * shuffle bounded by docs × MaxWins × dim partial sums. Returns
     * `(doc_id, win, embedding)`. */
-  def hashEmbedWindows(docs: DataFrame, dim: Int = Similarity.Dim,
-      winTokens: Int = 8, maxWins: Int = 4): DataFrame = {
+  def hashEmbedWindows(docs: DataFrame, dim: Int = Similarity.Dim): DataFrame = {
     val voted = docs
       .select(col("doc_id"), posexplode(SharedCorpus.alnumOf(docs)).as(Seq("pos", "tok")))
-      .withColumn("win", expr(s"pos div $winTokens"))
-      .filter(col("win") < maxWins)
+      .withColumn("win", expr(s"pos div $WinTokens"))
+      .filter(col("win") < MaxWins)
       .groupBy(col("doc_id"), col("win"),
         pmod(CrossHash.h60(concat(lit("he:"), col("tok"))), lit(dim.toLong)).as("idx"))
       .agg(sum(when(

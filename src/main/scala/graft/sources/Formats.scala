@@ -113,9 +113,14 @@ object Formats {
     * around `load()` would leave that window open). The
     * returned frame stays bound to the child session, which keeps the V2
     * resolution stable however late the caller executes it.
-    * FormatsSpec asserts `PushedAggregation` lands in the scan. */
+    * FormatsSpec asserts `PushedAggregation` lands in the scan. AQE is off
+    * in the child session: the plan's one exchange goes to a single
+    * partition, which no AQE rule can improve, and each AQE query stage
+    * would start a thread on Spark's static stage pools that keeps the
+    * child session reachable for 60 s. */
   def aggregateFromFooters(spark: SparkSession, path: String, keyCol: String): DataFrame = {
     val scoped = spark.newSession()
+    scoped.conf.set("spark.sql.adaptive.enabled", false)
     scoped.conf.set("spark.sql.parquet.aggregatePushdown", "true")
     val key = "spark.sql.sources.useV1SourceList"
     scoped.conf.set(key,
@@ -223,19 +228,25 @@ object Formats {
     * `numFiles` stands in for the file-count a real deployment derives
     * from table size / target file size (e.g. 1 GB files). */
   def writeZOrdered(df: DataFrame, table: String, colA: String, colB: String,
-      numFiles: Int = 8, bits: Int = 16): Unit = {
+      numFiles: Int = ZFiles): Unit = {
     dropForOverwrite(df.sparkSession, table)
-    zCluster(df, colA, colB, numFiles, bits)
+    zCluster(df, colA, colB, numFiles)
       .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
   }
+
+  /** Z-order layout: files of a full (re)write, files per appended batch,
+    * and the bits per column of the Morton key. */
+  val ZFiles = 8
+  val ZAppendFiles = 2
+  val ZBits = 16
 
   /** The Z-clustering transform shared by write/append/recluster: attach
     * the Morton key, range-partition on it, sort within each file, drop
     * the (derivable) key from the stored schema. */
   private def zCluster(df: DataFrame, colA: String, colB: String,
-      numFiles: Int, bits: Int): DataFrame =
+      numFiles: Int): DataFrame =
     df.withColumn("__z",
-        zOrderKey(col(colA).cast("long"), col(colB).cast("long"), bits))
+        zOrderKey(col(colA).cast("long"), col(colB).cast("long"), ZBits))
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
@@ -250,9 +261,8 @@ object Formats {
     * OPTIMIZE-ZORDER maintenance cadence of lakehouse tables. Results
     * are unaffected either way (layout changes what skips, never what a
     * query returns). */
-  def appendZOrdered(df: DataFrame, table: String, colA: String, colB: String,
-      numFiles: Int = 2, bits: Int = 16): Unit =
-    zCluster(df, colA, colB, numFiles, bits)
+  def appendZOrdered(df: DataFrame, table: String, colA: String, colB: String): Unit =
+    zCluster(df, colA, colB, ZAppendFiles)
       .write.mode(SaveMode.Append).format("parquet").saveAsTable(table)
 
   /** Maintenance half: rewrite the whole table as ONE Z-clustered
@@ -263,9 +273,9 @@ object Formats {
     * restores a consistent, fully-clustered table) carries over.
     * Single-writer, like every maintenance path. */
   def rezorderTable(spark: SparkSession, table: String, colA: String,
-      colB: String, numFiles: Int = 8, bits: Int = 16): Unit =
+      colB: String): Unit =
     pingPongRewrite(spark, table) { (oldPath, newPath, staging) =>
-      zCluster(spark.read.parquet(oldPath), colA, colB, numFiles, bits)
+      zCluster(spark.read.parquet(oldPath), colA, colB, ZFiles)
         .write.mode(SaveMode.Overwrite)
         .option("path", newPath) // external: drops never delete data
         .format("parquet")

@@ -41,6 +41,10 @@ import org.apache.spark.sql.functions.broadcast
   * atomic. [[Formats.stampAudit]] detects the torn state. */
 object StoredIndex {
 
+  /** The bucket count a family's tables are built with, unless its build
+    * takes another. */
+  val Buckets = 8
+
   /** One stored table of a family: `<table><suffix>`, bucketed + sorted on
     * `bucketCols` into `buckets` files at build. No bucket columns: a plain
     * managed table. `partitioned`: directory-partitioned on the single

@@ -26,16 +26,25 @@ object StreamOps {
 
   private val money = DecimalType(18, 2)
 
+  /** Event-time shapes of the windowed operators: window length, the
+    * sliding form's slide, the late data a window or interval join waits
+    * for, the interval join's gap, and the watermark horizon of the keyed
+    * state operators. */
+  val WindowDur = "1 hour"
+  val Slide = "30 minutes"
+  val WindowDelay = "30 minutes"
+  val MaxGap = "1 hour"
+  val StateHorizon = "1 hour"
+  /** The inactivity gap that closes a session. */
+  val SessionGapMs: Long = 30 * 60 * 1000L
+
   /** Tumbling-window counts + exact-decimal sums per event type, tolerant
-    * of `delay` late data. Works identically on batch and streaming input
-    * (on batch, the watermark is a no-op). */
-  def windowedEventCounts(
-      events: DataFrame,
-      windowDur: String = "1 hour",
-      delay: String = "30 minutes"): DataFrame =
+    * of [[WindowDelay]] late data. Works identically on batch and
+    * streaming input (on batch, the watermark is a no-op). */
+  def windowedEventCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", delay)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
+      .withWatermark("ts", WindowDelay)
+      .groupBy(window(col("ts"), WindowDur), col("event_type"))
       .agg(
         count(lit(1)).as("n"),
         sum(col("value").cast(money)).cast("double").as("sum_value"))
@@ -45,19 +54,15 @@ object StreamOps {
 
   /** [[windowedEventCounts]] with OVERLAPPING (sliding) windows — the
     * moving-aggregate monitoring shape (a 1-hour rate refreshed every 30
-    * minutes): each event lands in `windowDur / slide` windows, watermark
+    * minutes): each event lands in `WindowDur / Slide` windows, watermark
     * semantics unchanged. Same one-aggregate plan; the window explode is
     * Spark's own `window()` expansion, not a join. The DuckDB oracle
     * replays the window assignment arithmetic (each event belongs to the
     * slide-aligned starts in `(ts - dur, ts]`). */
-  def slidingEventCounts(
-      events: DataFrame,
-      windowDur: String = "1 hour",
-      slide: String = "30 minutes",
-      delay: String = "30 minutes"): DataFrame =
+  def slidingEventCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", delay)
-      .groupBy(window(col("ts"), windowDur, slide), col("event_type"))
+      .withWatermark("ts", WindowDelay)
+      .groupBy(window(col("ts"), WindowDur, Slide), col("event_type"))
       .agg(
         count(lit(1)).as("n"),
         sum(col("value").cast(money)).cast("double").as("sum_value"))
@@ -67,15 +72,15 @@ object StreamOps {
 
   /** Exactly-once event dedup for streaming ingestion: drop repeated
     * event_ids within the watermark horizon. State is one key per event id
-    * seen in the last `delay` of event time — bounded by the watermark,
+    * seen in the last [[StateHorizon]] of event time — bounded by the watermark,
     * which is what makes streaming dedup feasible at all (unbounded-key
     * dedup would grow state forever). Works on batch input too (plain
     * dropDuplicates). */
-  def dedupEvents(events: DataFrame, delay: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", delay).dropDuplicates("event_id")
+  def dedupEvents(events: DataFrame): DataFrame =
+    events.withWatermark("ts", StateHorizon).dropDuplicates("event_id")
 
   /** Stream-stream interval join: attribute each `rightType` event to the
-    * same user's `leftType` events in the preceding `maxGap` — the classic
+    * same user's `leftType` events in the preceding [[MaxGap]] — the classic
     * click→purchase attribution shape. Both sides carry watermarks and the
     * join condition is time-bounded on event time, which is exactly what
     * lets Structured Streaming expire join state (without the bound, both
@@ -87,21 +92,19 @@ object StreamOps {
   def intervalJoin(
       events: DataFrame,
       leftType: String = "click",
-      rightType: String = "purchase",
-      maxGap: String = "1 hour",
-      delay: String = "30 minutes"): DataFrame = {
+      rightType: String = "purchase"): DataFrame = {
     val l = events.filter(col("event_type") === leftType)
       .select(col("event_id").as("l_id"), col("user_id"),
         col("ts").as("l_ts"), col("value").as("l_value"))
-      .withWatermark("l_ts", delay)
+      .withWatermark("l_ts", WindowDelay)
     val r = events.filter(col("event_type") === rightType)
       .select(col("event_id").as("r_id"), col("user_id").as("r_user_id"),
         col("ts").as("r_ts"), col("value").as("r_value"))
-      .withWatermark("r_ts", delay)
+      .withWatermark("r_ts", WindowDelay)
     l.join(r,
         col("user_id") === col("r_user_id") &&
           col("r_ts") >= col("l_ts") &&
-          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $maxGap"))
+          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $MaxGap"))
       .select(col("user_id"), col("l_id"), col("r_id"),
         col("l_value").cast(money).cast("double").as("l_value"),
         col("r_value").cast(money).cast("double").as("r_value"))
@@ -176,7 +179,7 @@ object StreamOps {
   /** Staged `batch_id=N` dirs under `stagingDir`, by directory listing. A
     * non-numeric suffix (a stray `batch_id=tmp`, an editor artifact) is
     * skipped rather than thrown on — one junk dir must not brick the
-    * absorb/vacuum lifecycle forever (ADVICE r9). */
+    * absorb/vacuum lifecycle forever. */
   private def listStagedBatchIds(spark: SparkSession, stagingDir: String): Seq[Long] = {
     val root = new org.apache.hadoop.fs.Path(stagingDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -239,7 +242,7 @@ object StreamOps {
     * replacement for the reference's "arbitrary user reduce code" surface
     * when the reduce needs ordering + state rather than a commutative
     * fold. */
-  def sessionize(events: Dataset[Event], gapMs: Long = 30 * 60 * 1000L): Dataset[Session] = {
+  def sessionize(events: Dataset[Event], gapMs: Long = SessionGapMs): Dataset[Session] = {
     import events.sparkSession.implicits._
     val streaming = events.isStreaming // captured by value — the Dataset itself must not leak into the closure
 
@@ -307,7 +310,7 @@ object StreamOps {
     * State size: one long per active (key, window) — bounded by the
     * watermark horizon, the same feasibility argument as [[dedupEvents]]. */
   def rateLimit(events: Dataset[Event], n: Int = 3,
-      windowMs: Long = 3600000L, delay: String = "1 hour"): Dataset[Admitted] = {
+      windowMs: Long = 3600000L): Dataset[Admitted] = {
     import events.sparkSession.implicits._
     val streaming = events.isStreaming
 
@@ -319,9 +322,9 @@ object StreamOps {
       // belongs to a window whose quota state already timed out and was
       // evicted. Admitting it would restart the count at 0 and re-admit
       // up to n events — silently EXCEEDING the per-window quota this
-      // operator exists to enforce (ADVICE r13; the r12 guard skipped
-      // only the state write, after the admission loop had already
-      // emitted). Drop the whole group BEFORE admission — the
+      // operator exists to enforce (a guard that skips only the state
+      // write is too late: the admission loop has already emitted).
+      // Drop the whole group BEFORE admission — the
       // dropDuplicates late-input semantics — which also avoids the
       // below-watermark setTimeoutTimestamp that would fail the query.
       if (streaming && key._2 + windowMs <= state.getCurrentWatermarkMs())
@@ -342,7 +345,7 @@ object StreamOps {
     }
 
     events
-      .withWatermark("ts", delay)
+      .withWatermark("ts", StateHorizon)
       .groupByKey(e =>
         (e.user_id, e.ts.getTime - java.lang.Math.floorMod(e.ts.getTime, windowMs)))
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(fold)
@@ -392,7 +395,7 @@ object StreamOps {
     * DataFrame-construction time, and every other streaming query in the
     * session keeps the static guard (plus the runtime late-row drop
     * metrics, which always apply). */
-  def streamNearDupAdmitted(bands: Dataset[DocBand], delay: String = "1 hour",
+  def streamNearDupAdmitted(bands: Dataset[DocBand], delay: String = StateHorizon,
       ttlMs: Long = 3600000L): DataFrame = {
     import bands.sparkSession.implicits._
     val streaming = bands.isStreaming
@@ -440,11 +443,12 @@ object StreamOps {
   }
 
   /** Streaming benchmark DECONTAMINATION — admission control composed with
-    * [[graft.ops.Dedup.contaminationStats]]'s cross-dataset rule
-    * (VERDICT r6 stretch): a crawl document arriving on the stream is
-    * admitted iff the fraction of its positional n-token spans that occur
-    * anywhere in the static benchmark corpus stays <= `maxRatio`
-    * (default 0 — the strict any-overlap-disqualifies rule).
+    * [[graft.ops.Dedup.contaminationStats]]'s cross-dataset rule: a
+    * crawl document arriving on the stream is admitted iff the
+    * fraction of its positional [[graft.ops.Dedup.SpanN]]-token spans
+    * that occur anywhere in the static benchmark corpus stays <=
+    * [[graft.ops.Dedup.MaxContamRatio]] (0 — the strict
+    * any-overlap-disqualifies rule).
     *
     * `docs` needs (doc_id, ts, text); output is the admitted (doc_id, ts)
     * rows, emitted once the watermark passes their event time.
@@ -460,12 +464,12 @@ object StreamOps {
     * flip it: batch input runs the identical plan and equals
     * [[graft.ops.Dedup.decontaminate]]'s surviving id set exactly
     * (StreamOpsSpec proves the MemoryStream parity). */
-  def streamDecontaminated(docs: DataFrame, benchmark: DataFrame, n: Int = 8,
-      maxRatio: Double = 0.0, delay: String = "1 hour"): DataFrame = {
+  def streamDecontaminated(docs: DataFrame, benchmark: DataFrame,
+      delay: String = StateHorizon): DataFrame = {
     import graft.ops.Dedup
-    val benchHashes = Dedup.positionalSpans(benchmark, n)
+    val benchHashes = Dedup.positionalSpans(benchmark, Dedup.SpanN)
       .select("sh").distinct().withColumn("hit", lit(1L))
-    val marked = Dedup.positionalSpans(docs, n, carry = Seq("ts"))
+    val marked = Dedup.positionalSpans(docs, Dedup.SpanN, carry = Seq("ts"))
       .select(col("doc_id"), col("ts"), col("sh"))
       .join(benchHashes, Seq("sh"), "left")
     val wm = if (docs.isStreaming) marked.withWatermark("ts", delay) else marked
@@ -474,7 +478,7 @@ object StreamOps {
         sum(coalesce(col("hit"), lit(0L))).as("n_contam"))
       // same division form as contaminationStats so threshold rounding
       // can never disagree with the batch rule
-      .filter(col("n_contam").cast("double") / col("n_spans") <= lit(maxRatio))
+      .filter(col("n_contam").cast("double") / col("n_spans") <= lit(Dedup.MaxContamRatio))
       .select("doc_id", "ts")
   }
 
@@ -580,7 +584,7 @@ object StreamOps {
     * for running the sessionizer over historical data: gap-based windows by
     * cumulative sum of gap-break flags — pure declarative window functions,
     * no state API. */
-  def sessionizeBatch(events: DataFrame, gapMs: Long = 30 * 60 * 1000L): DataFrame = {
+  def sessionizeBatch(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     // explicit ROWS frame: the default RANGE frame treats order-key ties as
@@ -591,7 +595,8 @@ object StreamOps {
       .select(col("user_id"), col("event_id"), col("ts"), col("value"), tsMs)
       .withColumn("prev_ms", lag(col("ts_ms"), 1).over(byUser))
       .withColumn("new_session",
-        when(col("prev_ms").isNull || col("ts_ms") - col("prev_ms") > gapMs, 1L).otherwise(0L))
+        when(col("prev_ms").isNull || col("ts_ms") - col("prev_ms") > SessionGapMs, 1L)
+          .otherwise(0L))
       .withColumn("session_idx", sum(col("new_session")).over(runningByUser))
       .groupBy(col("user_id"), col("session_idx"))
       .agg(
@@ -617,12 +622,12 @@ object StreamOps {
     * session). The gate corpus has no exact-gap ties at any SF (checked),
     * and the shared oracle hash would surface one on any future regen
     * rather than letting the forms drift silently. */
-  def sessionizeNative(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
+  def sessionizeNative(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("start_ts"))
     events
       .select(col("user_id"), col("ts"), col("value"))
-      .groupBy(col("user_id"), session_window(col("ts"), s"$gapMinutes minutes"))
+      .groupBy(col("user_id"), session_window(col("ts"), s"${SessionGapMs / 60000} minutes"))
       .agg(
         min(col("ts")).as("start_ts"),
         max(col("ts")).as("end_ts"),

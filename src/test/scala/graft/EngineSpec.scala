@@ -55,10 +55,23 @@ class EngineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         t.getName.startsWith("ResultQueryStageExecution-"))
       .map(_.getId).toSet
     val threadsBefore = stageThreads
+    def inGroup[T](group: String)(job: => T): T = {
+      sc.setJobGroup(group, "word count under test")
+      try job finally sc.clearJobGroup()
+    }
     val group = "engine-spec-one-job"
-    sc.setJobGroup(group, "word count under test")
-    try assert(Engine.submitWordCount(spark, spec, out.toString) === 600)
-    finally sc.clearJobGroup()
+    inGroup(group)(assert(Engine.submitWordCount(spark, spec, out.toString) === 600))
+    // Spark writes no file for an empty partition but the first: one word
+    // leaves two of three reducers empty, an empty input all three
+    val small = Seq("hello" -> Seq("hello 1"), "" -> Nil).zipWithIndex.map {
+      case ((text, lines), i) =>
+        val f = in.resolve(s"small$i.txt")
+        Files.writeString(f, text)
+        val o = out.resolveSibling(s"small$i")
+        inGroup(s"engine-spec-small-$i")(assert(Engine.submitWordCount(spark,
+          JobSpec(Seq(f.toString), reducerCount = 3), o.toString) === lines.size))
+        (s"engine-spec-small-$i", o, lines)
+    }
     // AQE materializes each query stage on a new thread of a static pool,
     // and that thread keeps the job's session reachable while it idles
     assert((stageThreads -- threadsBefore).isEmpty, "no AQE stage thread started")
@@ -71,9 +84,16 @@ class EngineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     eventually(timeout(30.seconds)) {
       assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
     }
+    def parts(dir: java.nio.file.Path): Seq[String] =
+      Files.list(dir).toArray.map(_.toString).filter(_.matches(".*part-.*\\.txt$")).toSeq
     assert(sc.statusTracker.getJobIdsForGroup(group).length === 1, "one Spark job per job")
-    val parts = Files.list(out).toArray.map(_.toString).filter(_.matches(".*part-.*\\.txt$"))
-    assert(parts.length === 4, parts.mkString(", "))
+    assert(parts(out).length === 4, parts(out).mkString(", "))
+    for ((g, o, lines) <- small) {
+      assert(sc.statusTracker.getJobIdsForGroup(g).length === 1, s"one Spark job for $g")
+      assert(parts(o).length === 3, parts(o).mkString(", "))
+      assert(parts(o).flatMap(p => Files.readAllLines(java.nio.file.Paths.get(p)).asScala)
+        === lines)
+    }
     // the aggregation's exchange is the reducer shuffle: no second one
     val lines = Engine.wordCountLines(Engine.jobSession(spark, spec), spec, Observation())
     assert(lines.collect().length === 600)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Formats, Tables}
@@ -118,18 +120,30 @@ class FormatsSpec extends SparkTestBase {
 
   test("footer-statistics aggregate pushes COUNT/MIN/MAX into the scan") {
     val path = s"$sfDir/lineitem.parquet"
+    def stageThreads: Set[Long] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("shuffle-exchange-") ||
+        t.getName.startsWith("ResultQueryStageExecution-"))
+      .map(_.getId).toSet
+    val threadsBefore = stageThreads
     val agg = graft.sources.Formats.aggregateFromFooters(spark, path, "l_orderkey")
     // the V2 scan must carry the pushed aggregates — the row groups are
     // never read, only the file footers
-    val plan = agg.queryExecution.executedPlan.toString
+    val executed = agg.queryExecution.executedPlan
+    val plan = executed.toString
     assert(plan.contains("PushedAggregation"),
       s"aggregate must be pushed into the parquet scan:\n$plan")
+    // no AQE in the scoped session: an AQE query stage starts a thread on
+    // a static pool, and that thread keeps the session reachable for 60 s
+    assert(executed.find(
+      _.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]).isEmpty,
+      plan)
+    val meta = agg.collect()(0)
+    assert((stageThreads -- threadsBefore).isEmpty, "no AQE stage thread started")
     // and the metadata answer equals the full-scan answer
     val full = spark.read.parquet(path)
       .agg(org.apache.spark.sql.functions.count(lit(1)),
         org.apache.spark.sql.functions.min(col("l_orderkey")),
         org.apache.spark.sql.functions.max(col("l_orderkey"))).collect()(0)
-    val meta = agg.collect()(0)
     assert((meta.getLong(0), meta.getLong(1), meta.getLong(2)) ===
       ((full.getLong(0), full.getLong(1), full.getLong(2))))
     // the scoped V2 flip restored the session default (V1 everywhere else)
